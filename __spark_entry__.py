@@ -144,7 +144,7 @@ def q_cell_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 J1/J2: broadcast covering-index PIP join with burn-order
     overlap resolution (rasterize-centroid semantics)."""
-    joined = pip_join(_pages(spark, sf_dir), ZONE_LAYER, key_cols=["doc_id"])
+    joined = pip_join(_pages(spark, sf_dir), ZONE_LAYER)
     return _osort(joined.select("doc_id", "url", "zone_value"), "doc_id")
 
 
@@ -1205,8 +1205,8 @@ def q_pages_text_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_streaming_zonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming zonal stats: geotagged pages drained through a file
-    stream → stream-static PIP join (broadcast covering index, pure-JVM
-    'expr' refine — zero Python in the micro-batch) → running per-zone
+    stream → stream-static PIP join (broadcast covering index, the same
+    JVM ladder + Arrow refine plan as the batch path) → running per-zone
     count + integer sum. Must equal the batch/DuckDB zonal recompute
     exactly (streaming/batch unification)."""
     import tempfile

@@ -40,6 +40,10 @@ def test_pip_join_plan_zero_shuffles(spark, pages_parquet):
     for line in plan.splitlines():
         if "Exchange" in line and "BroadcastExchange" not in line:
             raise AssertionError(f"unexpected shuffle in PIP join plan: {line}")
+    # one physical path: a single Arrow refine pass over one scan, no
+    # interior/boundary union branches
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_zonal_pipeline_single_shuffle(spark, pages_parquet):

@@ -8,7 +8,7 @@ box:
    bit_xor). Any efficiency below 1.0 here is hardware (frequency
    scaling under load / hypervisor caps), not software.
 2. ``flagship`` — the real job (narrow-scan pages → PIP join → zonal)
-   at a given core count, with the refine mode under test.
+   at a given core count.
 3. ``gen``     — deterministic 320M-row narrow pages table (lat, lon,
    n_chars, cell) = the column-pruned shape a columnar store feeds the
    operator at scale; derived from the cached wide table.
@@ -16,8 +16,7 @@ box:
 Usage:
   python tools/bench_scaling_probes.py gen
   python tools/bench_scaling_probes.py alu <cores> [runs]
-  python tools/bench_scaling_probes.py flagship <cores> [runs] [mode]
-      mode ∈ udf | udf_split | expr_split     (default udf_split)
+  python tools/bench_scaling_probes.py flagship <cores> [runs]
 
 Each invocation is one clean JVM (scaling runs must be exclusive on the
 box); prints one JSON line. Efficiency for a pair (N, 4N) =
@@ -103,27 +102,22 @@ def cmd_alu(cores: int, runs: int):
                       "all": [round(t, 2) for t in ts]}))
 
 
-def cmd_flagship(cores: int, runs: int, mode: str):
+def cmd_flagship(cores: int, runs: int):
     from trefoil_spark.operators.pip_join import pip_join
     from trefoil_spark.operators.zonal import zonal_statistics
     from trefoil_spark.sources.zones import ZONE_LAYER
 
-    kw = {
-        "udf": {},
-        "udf_split": {"split_python": True},
-        "expr_split": {"refine": "expr", "split_python": True},
-    }[mode]
     spark = _spark("flag", cores)
     n = spark.read.parquet(NARROW).count()
 
     def job():
         slim = spark.read.parquet(NARROW).select("lat", "lon", "n_chars")
-        _force(zonal_statistics(pip_join(slim, ZONE_LAYER, **kw),
+        _force(zonal_statistics(pip_join(slim, ZONE_LAYER),
                                 "zone_value", "n_chars"))
 
     ts = _timed(job, runs)
     med = ts[len(ts) // 2]
-    print(json.dumps({"probe": "flagship", "mode": mode, "cores": cores,
+    print(json.dumps({"probe": "flagship", "cores": cores,
                       "rows": n, "med": round(med, 2),
                       "rows_per_sec": round(n / med, 1),
                       "all": [round(t, 2) for t in ts]}))
@@ -139,7 +133,6 @@ if __name__ == "__main__":
         cmd_flagship(
             int(sys.argv[2]),
             int(sys.argv[3]) if len(sys.argv) > 3 else 3,
-            sys.argv[4] if len(sys.argv) > 4 else "udf_split",
         )
     else:
         raise SystemExit(f"unknown probe {cmd}")

@@ -1,7 +1,7 @@
 """Distributed point-in-polygon join (SURVEY.md J1/J2; reference
 rasterize-centroid semantics at /root/reference/trefoil/cli/zones.py:136-144).
 
-Physical strategy (scale-first):
+Physical strategy (scale-first, one plan):
 
 1. **Two-level quadtree covering index** (driver, memoized): polygons →
    qcell covering at a coarse res; every cell is classified as
@@ -12,20 +12,20 @@ Physical strategy (scale-first):
    scales O(perimeter·cell_size), so the unresolved fraction shrinks
    quadratically with the fine res — this is what tames hot small
    polygons (dense urban cells) that would otherwise push their whole
-   point mass through Python.
+   point mass through the exact test.
 2. **Broadcast hash joins** on the cell keys (the point side computes the
    fine cell with pure Catalyst integer expressions and derives the
    coarse cell from it by bit-shift — whole-stage codegen, no shuffle).
-3. **Interior fast path**: rows in resolved cells (either level) get
-   their feature_id from the broadcast row — pure JVM.
-4. **Exact refine** for fine-boundary rows only (a few % of input):
-   Arrow-batched pandas UDF running the chunked vectorized even-odd
-   crossing test, burn order resolved in-UDF (highest feature_id wins =
-   GDAL rasterize overwrite order). With ``split_python=True`` those rows
-   are a separate union branch, so interior rows never even transit Arrow.
+3. **JVM resolution ladder**: rows in resolved cells (either level) get
+   their feature_id from the broadcast row.
+4. **Exact refine** in one Arrow-batched pandas UDF running the chunked
+   vectorized even-odd crossing test, burn order resolved in-UDF
+   (highest feature_id wins = GDAL rasterize overwrite order). Every row
+   rides the Arrow pipe, but only fine-boundary rows carry a cell; the
+   rest pass NULL and cost the UDF no math.
 
-Plan at 100 TB: Scan → codegen cell exprs → BHJ ×2 → [interior branch
-pure JVM] ∪ [boundary branch ArrowEvalPython]. Zero shuffles.
+Plan: Scan → codegen cell exprs → BHJ ×2 → ArrowEvalPython → ladder
+projection. Zero shuffles, one scan.
 """
 
 from __future__ import annotations
@@ -269,16 +269,6 @@ def _covering_dfs(spark: SparkSession, index: dict):
     return cov1, cov2
 
 
-def covering_index_df(
-    spark: SparkSession, polygons: list[Polygon], res: int = DEFAULT_RES
-) -> DataFrame:
-    """Coarse covering as a DataFrame (kept for tests/inspection)."""
-    idx = build_covering_index(polygons, res)
-    return spark.createDataFrame(
-        idx["coarse"], "cell bigint, fids array<bigint>, resolved_fid bigint"
-    )
-
-
 def _make_winner_udf(index: dict):
     """Vectorized pandas UDF: (lon, lat, fine_cell) -> feature_id|null.
 
@@ -346,56 +336,21 @@ def _make_winner_udf(index: dict):
     return winner.asNondeterministic()
 
 
-EXPR_REFINE_MAX_EDGES = 64
-
-
-def _expr_refine_feature(polygons: list[Polygon], lon_col: str, lat_col: str) -> Column:
-    """Boundary refine as a pure Catalyst CASE chain (burn order: highest
-    fid first). CASE short-circuits in codegen, so only boundary rows pay
-    the crossing tests — zero Python, zero Arrow traffic."""
-    from ..geometry import pip_sql_expr
-
-    expr = None
-    for fid in range(len(polygons) - 1, -1, -1):
-        cond = F.expr(pip_sql_expr(lon_col, lat_col, polygons[fid]))
-        expr = F.when(cond, F.lit(fid)) if expr is None else expr.when(cond, F.lit(fid))
-    return expr.otherwise(F.lit(None).cast("bigint"))
-
-
 def pip_join(
     points: DataFrame,
     polygons: list[Polygon],
-    key_cols: list[str] | None = None,  # kept for API compat; unused
     lon_col: str = "lon",
     lat_col: str = "lat",
     res: int = DEFAULT_RES,
     fine_res: int = DEFAULT_FINE_RES,
     how: str = "inner",
-    split_python: bool = False,
-    refine: str = "auto",
 ) -> DataFrame:
     """Join points to the polygon layer; adds ``feature_id`` + ``zone_value``.
 
     Zero-shuffle; interior cells resolve JVM-side at two index levels;
     only fine-boundary rows (measured 0.83% on the flagship layer) need
-    the exact test. ``refine`` picks its engine:
-    - 'expr' — Catalyst CASE chain of crossing tests (pure JVM; best for
-      small layers, total edges ≤ ~{EXPR_REFINE_MAX_EDGES});
-    - 'udf'  — Arrow-batched numpy (per-cell candidate pruning; scales to
-      arbitrarily complex layers);
-    - 'auto' — currently 'udf' (see the measured trade below).
-
-    ``split_python=True`` physically splits interior from boundary rows
-    so interior rows never touch the refine engine at all:
-    - with 'udf': interior rows skip the Arrow pipe entirely — the
-      fastest mode at every core count on pre-projected (narrow) inputs
-      and the best-scaling (BENCH/BASELINE.md round-2 table);
-    - with 'expr': the CASE chain runs in its own post-exchange stage
-      over boundary rows only (zero Python workers in the whole job) —
-      without the exchange the chain's codegen fallback would drop the
-      entire scan stage to interpreted execution.
-    Default False keeps the single-pass plan (one scan; right for wide
-    inputs where a second scan costs more than the Arrow pipe).
+    the exact test, which the Arrow-batched ``winner`` UDF runs with
+    per-candidate-list pruning (scales to arbitrarily complex layers).
 
     Points matching no polygon are dropped under ``how='inner'``
     (reference zone-raster fill semantics) or kept with nulls under 'left'.
@@ -433,87 +388,31 @@ def pip_join(
         & (F.col("r2").isNull() | (F.col("r2") == BOUNDARY))
     )
 
-    if refine == "auto":
-        # 'udf' wins on measured throughput (4.1M rows/s @16 cores vs
-        # 1.3M for 'expr' on the 40M-row flagship): the big CASE chain
-        # exceeds whole-stage-codegen size limits and falls back to
-        # interpreted evaluation, and Catalyst re-evaluates it under
-        # filter pushdown. 'expr' scales more linearly ((4,16) efficiency
-        # 0.84 vs 0.72) because it has no Python-worker contention —
-        # useful on clusters where Python workers are the constraint.
-        refine = "udf"
-
-    if refine == "expr":
-        if split_python:
-            # split_expr: interior rows take the pure-column JVM ladder;
-            # ONLY the ~1% boundary rows evaluate the big CASE chain.
-            # This keeps the whole job JVM-side (zero Python workers —
-            # nothing rides Arrow) without paying the chain's
-            # interpreted-evaluation cost on every row: measured at the
-            # hardware scaling ceiling on the 320M-row flagship
-            # (BENCH/BASELINE.md), the cluster-shaped plan of choice.
-            interior = joined.filter(~is_py).withColumn("feature_id", jvm_feature)
-            # the repartition is load-bearing: the big CASE chain exceeds
-            # codegen limits, which would otherwise drop the ENTIRE
-            # scan+join+filter stage to interpreted execution for every
-            # row. The exchange isolates the interpreted projection in
-            # its own post-shuffle stage that only ever sees the ~1%
-            # boundary rows (measured: 16.1s → ~2s on the 20M-row
-            # flagship).
-            boundary = (
-                joined.filter(is_py)
-                .repartition(max(joined.sparkSession.sparkContext.defaultParallelism, 1))
-                .withColumn(
-                    "feature_id", _expr_refine_feature(polygons, lon_col, lat_col)
-                )
-            )
-            joined = interior.unionByName(boundary)
-        else:
-            joined = joined.withColumn(
-                "feature_id",
-                F.when(~is_py, jvm_feature).otherwise(
-                    _expr_refine_feature(polygons, lon_col, lat_col)
-                ),
-            )
-        joined = joined.drop("fids", "r1", "r2", "_cf", "_cc")
-        value_map = F.create_map(
-            *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
-        )
-        joined = joined.withColumn("zone_value", value_map[F.col("feature_id")])
-        if how == "inner":
-            joined = joined.filter(F.col("feature_id").isNotNull())
-        return joined
-
+    # Single pass on purpose: every row rides the Arrow pipe, and
+    # non-boundary rows pass a NULL cell so the UDF does no math for them.
+    # Splitting boundary rows into their own union branch (interior rows
+    # never touch Arrow) measured slower on 2M-row zonal-pages
+    # (op_s.p50 3.42-3.99 s single-pass vs 3.66-4.51 s split) and on the
+    # interactive closed loop (1.11-1.26 s vs 1.51-1.83 s; perfbench on
+    # local[4], 14 s runs, seeds 101-103): the union's second pass over
+    # the input and through both broadcast joins costs more than the
+    # Arrow traffic it saves. The refine stays in Python rather than a
+    # Catalyst CASE chain of crossing tests: that chain exceeds
+    # whole-stage-codegen limits and drops the whole scan stage to
+    # interpreted evaluation.
     winner = _make_winner_udf(index)
     # the raw UDF output uses -1 for "no match"; the NULL translation is a
     # separate JVM step (the UDF is nondeterministic-marked, so Catalyst
     # cannot collapse/duplicate it into downstream expressions)
-    if split_python:
-        interior = joined.filter(~is_py).withColumn("feature_id", jvm_feature)
-        boundary = (
-            joined.filter(is_py)
-            .withColumn(
-                "_fid_raw", winner(F.col(lon_col), F.col(lat_col), F.col("_cf"))
-            )
-            .withColumn(
-                "feature_id", F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
-            )
-            .drop("_fid_raw")
-        )
-        joined = interior.unionByName(boundary)
-    else:
-        # single-pass: non-boundary rows pass NULL cell into the UDF so the
-        # Python side does zero math for them (they still ride the Arrow
-        # pipe — use split_python=True to avoid even that)
-        joined = joined.withColumn(
-            "_fid_raw",
-            winner(F.col(lon_col), F.col(lat_col), F.when(is_py, F.col("_cf"))),
-        ).withColumn(
-            "feature_id",
-            F.when(~is_py, jvm_feature).otherwise(
-                F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
-            ),
-        )
+    joined = joined.withColumn(
+        "_fid_raw",
+        winner(F.col(lon_col), F.col(lat_col), F.when(is_py, F.col("_cf"))),
+    ).withColumn(
+        "feature_id",
+        F.when(~is_py, jvm_feature).otherwise(
+            F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
+        ),
+    )
     joined = joined.drop("fids", "r1", "r2", "_cf", "_cc", "_fid_raw")
 
     value_map = F.create_map(

@@ -7,10 +7,10 @@ and maintain running per-zone statistics. The reference's zonal stats
 (`trefoil/cli/zones.py:269-304`) is a batch loop over files; Structured
 Streaming expresses the continuous version natively.
 
-`refine='expr'` keeps the whole micro-batch JVM-side (zero Python
-workers in the streaming hot path); integer-exact aggregates (count +
-bigint sum) make results order-independent and hash-comparable with the
-batch/DuckDB twin.
+Batch and stream share the one pip_join plan: the JVM resolution ladder
+plus the Arrow refine UDF for fine-boundary rows, evaluated per
+micro-batch. Integer-exact aggregates (count + bigint sum) make results
+order-independent and hash-comparable with the batch/DuckDB twin.
 """
 
 from __future__ import annotations
@@ -35,8 +35,7 @@ def streaming_zonal_stats(
     per-zone (count, integer sum). Complete-output aggregation (the zone
     cardinality is small and fixed — the state is bounded by the layer)."""
     stream = spark.readStream.schema(schema).parquet(source_dir)
-    joined = pip_join(stream, polygons, lon_col=lon_col, lat_col=lat_col,
-                      refine="expr")
+    joined = pip_join(stream, polygons, lon_col=lon_col, lat_col=lat_col)
     return joined.groupBy("zone_value").agg(
         F.count(F.lit(1)).cast("bigint").alias("count"),
         F.sum(F.col(value_col).cast("bigint")).cast("bigint").alias("value_sum"),
@@ -52,8 +51,7 @@ def batch_zonal_twin(
 ) -> DataFrame:
     """Batch twin with identical expressions (streaming/batch unification
     check in tests)."""
-    joined = pip_join(df, polygons, lon_col=lon_col, lat_col=lat_col,
-                      refine="expr")
+    joined = pip_join(df, polygons, lon_col=lon_col, lat_col=lat_col)
     return joined.groupBy("zone_value").agg(
         F.count(F.lit(1)).cast("bigint").alias("count"),
         F.sum(F.col(value_col).cast("bigint")).cast("bigint").alias("value_sum"),
