@@ -1288,8 +1288,9 @@ def q_streaming_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cf360_sql(epoch_col_sql: str) -> dict[str, str]:
     """Shared Spark/DuckDB fragments: epoch seconds → CF 360_day calendar
-    fields, 'days since 2024-01-01' (functions/cftime.py:68-80 integer
-    math — every month 30 days, year 360)."""
+    fields, 'days since 2024-01-01'. Every month has 30 days and every
+    year 360, so from d whole days: year = 2024 + floor(d / 360),
+    month = floor((d % 360) / 30) + 1, day = (d % 360) % 30 + 1."""
     days = f"CAST(FLOOR(({epoch_col_sql} - 1704067200) / 86400) AS BIGINT)"
     return {
         "days": days,

@@ -1,54 +1,12 @@
-"""CF time codec, packing, fill values, path parsing (F14-F17, F22)."""
-
-import datetime
+"""Packing, fill values, path parsing (F14-F15, F22), zonal CSV and ingest."""
 
 import pytest
 
-from trefoil_spark.functions.cftime import date2num, infer_unit, num2date, parse_units
 from trefoil_spark.functions.packing import (
     get_fill_value,
     get_pack_atts,
     resolve_dataset_variable,
 )
-
-
-def test_parse_units():
-    unit, epoch = parse_units("days since 1990-01-01")
-    assert unit == "day" and epoch == datetime.datetime(1990, 1, 1)
-    unit, epoch = parse_units("hours since 2000-06-15 12:00:00")
-    assert unit == "hour" and epoch.hour == 12
-
-
-def test_num2date_standard_roundtrip():
-    dates = num2date([0, 1, 365], "days since 1990-01-01", "standard")
-    assert dates[0] == datetime.datetime(1990, 1, 1)
-    assert dates[1] == datetime.datetime(1990, 1, 2)
-    assert dates[2] == datetime.datetime(1991, 1, 1)
-    nums = date2num(dates, "days since 1990-01-01")
-    assert nums == [0.0, 1.0, 365.0]
-
-
-def test_num2date_360day():
-    # 360-day calendar: every month is 30 days
-    out = num2date([0, 30, 359, 360], "days since 2000-01-01", "360_day")
-    assert out[0][:3] == (2000, 1, 1)
-    assert out[1][:3] == (2000, 2, 1)
-    assert out[2][:3] == (2000, 12, 30)
-    assert out[3][:3] == (2001, 1, 1)
-
-
-def test_num2date_noleap():
-    out = num2date([0, 59, 365], "days since 2000-01-01", "noleap")
-    assert out[0][:3] == (2000, 1, 1)
-    assert out[1][:3] == (2000, 3, 1)  # no Feb 29 in noleap
-    assert out[2][:3] == (2001, 1, 1)
-
-
-def test_infer_unit():
-    assert infer_unit([86400.0]) == "day"
-    assert infer_unit([3600.0]) == "hour"
-    assert infer_unit([60.0]) == "minute"
-    assert infer_unit([366 * 86400.0]) == "year"
 
 
 def test_pack_atts_reference_formula():

@@ -1,9 +1,6 @@
 """Crawl-ingestion sources (r6): WARC records (incl. per-record gzip
-members) and WebDataset tar shards, twin-built plus hand-mangled
-foreign layouts, then the distributed one-task-per-shard scans."""
-
-import io
-import tarfile
+members), twin-built plus hand-mangled foreign layouts, then the
+distributed one-task-per-shard scans."""
 
 import numpy as np
 import pytest
@@ -13,12 +10,6 @@ from trefoil_spark.sources.warc import (
     parse_http_response,
     warc_to_documents,
     write_warc,
-)
-from trefoil_spark.sources.webdataset import (
-    group_samples,
-    iter_tar_members,
-    webdataset_to_samples,
-    write_tar_shard,
 )
 
 RECS = [
@@ -66,33 +57,6 @@ def test_warc_malformed():
         )
 
 
-def test_tar_shard_roundtrip_and_foreign():
-    samples = {
-        "s/000": {"jpg": b"\xff\xd8fakejpeg", "txt": b"a caption",
-                  "json": b"{}"},
-        "s/001": {"jpg": b"\xff\xd8other", "txt": "café".encode()},
-    }
-    shard = write_tar_shard(samples)
-    got = group_samples(iter_tar_members(shard))
-    assert got == samples
-    # foreign shard built by the stdlib with GNU format + long name
-    buf = io.BytesIO()
-    longkey = "deep/" + "x" * 140  # >100 chars forces a GNU 'L' entry
-    with tarfile.open(fileobj=buf, mode="w", format=tarfile.GNU_FORMAT) as tf:
-        for name, payload in [
-            (longkey + ".txt", b"long-name payload"),
-            ("plain.txt", b"p"),
-        ]:
-            info = tarfile.TarInfo(name=name)
-            info.size = len(payload)
-            tf.addfile(info, io.BytesIO(payload))
-    members = dict(iter_tar_members(buf.getvalue()))
-    assert members[longkey + ".txt"] == b"long-name payload"
-    assert members["plain.txt"] == b"p"
-    # key split: only the LAST extension is the field
-    assert "a/b.c" in group_samples([("a/b.c.jpg", b"z")])
-
-
 def test_warc_to_documents_spark(spark, tmp_path):
     shards = []
     for s in range(3):
@@ -117,30 +81,6 @@ def test_warc_to_documents_spark(spark, tmp_path):
     # determinism across re-ingest (cluster-size independence stand-in)
     again = {r["doc_id"] for r in warc_to_documents(spark, shards).collect()}
     assert again == {r["doc_id"] for r in rows}
-
-
-def test_webdataset_to_samples_spark(spark, tmp_path):
-    rng = np.random.default_rng(9)
-    paths = []
-    for s in range(2):
-        samples = {
-            f"{s:03d}/{i:04d}": {
-                "jpg": rng.integers(0, 256, 64, dtype=np.uint8).tobytes(),
-                "txt": f"caption {s}-{i}".encode(),
-            }
-            for i in range(5)
-        }
-        if s == 0:  # one sample missing its caption: null field, no crash
-            del samples["000/0000"]["txt"]
-        p = tmp_path / f"wds-{s}.tar"
-        p.write_bytes(write_tar_shard(samples))
-        paths.append(str(p))
-    df = webdataset_to_samples(spark, paths, fields=("jpg", "txt"))
-    rows = {r["key"]: r for r in df.collect()}
-    assert len(rows) == 10
-    assert rows["001/0003"]["txt"] == b"caption 1-3"
-    assert rows["000/0000"]["txt"] is None
-    assert len(bytes(rows["000/0001"]["jpg"])) == 64
 
 
 def test_curate_from_warc_end_to_end(spark, tmp_path):

@@ -45,3 +45,14 @@ def test_raw_session_matches_engine_session(spark, sf_dir):
     assert lines, out.stdout[-1500:] + out.stderr[-1500:]
     got = json.loads(lines[-1][len("RESULT"):])
     assert got == want
+
+
+def test_build_pages_binds_to_calling_session(spark, sf_dir):
+    """build_pages memoizes its lazy plan; every newSession() shares the
+    applicationId, so a memo keyed on it handed one session's DataFrame
+    (and SQL conf) to another."""
+    from trefoil_spark.sources.pages import build_pages
+
+    other = spark.newSession()
+    for s in (spark, other, spark):
+        assert build_pages(s, sf_dir).sparkSession is s

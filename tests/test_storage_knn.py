@@ -1,42 +1,7 @@
-"""Bucketed tile storage (co-partitioned joins) + adaptive kNN."""
+"""Adaptive kNN + k-means."""
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    from trefoil_spark.grid.bbox import BBox
-    from trefoil_spark.raster.gridspec import GridSpec
-    from trefoil_spark.raster.rasterize import rasterize_zones
-    from trefoil_spark.raster.synth import synthetic_tiles
-    from trefoil_spark.sources.tiles_store import cokeyed_join, write_tiles_bucketed
-    from trefoil_spark.sources.zones import ZONE_LAYER
-
-    spec = GridSpec.from_bbox(BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 1024, 512)
-    tiles = synthetic_tiles(spark, spec)
-    ztiles = rasterize_zones(spark, spec, ZONE_LAYER).withColumnRenamed(
-        "zone_block", "block2"
-    )
-
-    import shutil
-
-    for t in ("t_values", "t_zones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-
-    write_tiles_bucketed(tiles, "t_values", n_buckets=4)
-    write_tiles_bucketed(
-        ztiles.select("ty", "tx", "block2", "h", "w").withColumn("cell", F.lit(0)),
-        "t_zones",
-        n_buckets=4,
-    )
-    joined = cokeyed_join(spark.table("t_values"), spark.table("t_zones"))
-    plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
-    # bucketed-on-join-key tables: no shuffle exchanges in the join
-    assert "Exchange hashpartitioning" not in plan, plan
-    assert joined.count() == 2 * 4  # all tiles matched
 
 
 def test_adaptive_knn_is_complete(spark, sf_dir):

@@ -482,12 +482,8 @@ def dequant_factors(qi: int, deltas) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _pred_block16(buf, y0, x0, mode, above_ok, left_ok):
-    """16x16 (and, with n=8, chroma 8x8) whole-block prediction."""
-    return _pred_block(buf, y0, x0, 16, mode, above_ok, left_ok)
-
-
 def _pred_block(buf, y0, x0, n, mode, above_ok, left_ok):
+    """n=16 luma 16x16 (or n=8 chroma 8x8) whole-block prediction."""
     above = buf[y0 - 1, x0:x0 + n]
     left = buf[y0:y0 + n, x0 - 1]
     p = int(buf[y0 - 1, x0 - 1])

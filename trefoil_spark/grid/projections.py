@@ -719,14 +719,6 @@ FAMILIES = {
 }
 
 
-def family_of(proj4: str) -> str | None:
-    p = parse_params(proj4)
-    fam = p.get("proj")
-    if fam == "utm":
-        return "utm"
-    return fam if fam in FAMILIES else None
-
-
 def constants_for(proj4: str) -> tuple[str, dict]:
     """(family, constants) for a supported projected proj4 string."""
     p = parse_params(proj4)

@@ -16,7 +16,7 @@ Two physical strategies:
 
 Distance: squared Euclidean in degrees (deterministic rational ops on
 exact inputs → bit-identical ranking in the DuckDB oracle; ties broken
-by neighbor id). Haversine available for real-distance use."""
+by neighbor id)."""
 
 from __future__ import annotations
 
@@ -32,16 +32,6 @@ def sq_dist(qlon, qlat, plon, plat) -> Column:
     dx = F.col(qlon) - F.col(plon)
     dy = F.col(qlat) - F.col(plat)
     return dx * dx + dy * dy
-
-
-def haversine_m(qlon, qlat, plon, plat) -> Column:
-    """Great-circle metres (spherical, R=6371008.8)."""
-    r = 6371008.8
-    lat1, lat2 = F.radians(F.col(qlat)), F.radians(F.col(plat))
-    dlat = lat2 - lat1
-    dlon = F.radians(F.col(plon)) - F.radians(F.col(qlon))
-    a = F.sin(dlat / 2) ** 2 + F.cos(lat1) * F.cos(lat2) * F.sin(dlon / 2) ** 2
-    return F.lit(2 * r) * F.asin(F.sqrt(a))
 
 
 def knn_join_bruteforce(

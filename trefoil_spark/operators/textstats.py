@@ -36,10 +36,6 @@ def tokens_col(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def token_count_col(text_col: str = "text") -> Column:
-    return F.size(tokens_col(text_col))
-
-
 def token_hash_expr(token_expr: str) -> str:
     """Portable token→int hash (Spark SQL dialect)."""
     return f"CAST(CONV(SUBSTR(MD5({token_expr}), 1, 15), 16, 10) AS BIGINT)"

@@ -1,4 +1,4 @@
-"""Zonal statistics (SURVEY.md A1-A4, A7) at row grain.
+"""Zonal statistics (SURVEY.md A1, A4, A7) at row grain.
 
 Reference semantics (/root/reference/trefoil/analysis/summary.py:116-173):
 - stats ∈ {mean, min, max, std, sum, count}; std is POPULATION std (numpy
@@ -66,39 +66,6 @@ def zonal_statistics(
         zone_cols = [zone_cols]
     filtered = df.filter(F.col(value_col).isNotNull())
     return filtered.groupBy(*zone_cols).agg(*zonal_stat_exprs(value_col, statistics))
-
-
-def zonal_stat_sql(stat: str, value_col: str) -> str:
-    """DuckDB-oracle twin of zonal_stat_exprs (same expression tree)."""
-    v = f"CAST({value_col} AS DOUBLE)"
-    if stat == "mean":
-        return f"SUM({v}) / COUNT({value_col})"
-    if stat == "std":
-        return (
-            f"SQRT(SUM({v} * {v}) / COUNT({value_col}) - "
-            f"(SUM({v}) / COUNT({value_col})) * (SUM({v}) / COUNT({value_col})))"
-        )
-    if stat == "count":
-        return f"COUNT({value_col})"
-    return f"{stat.upper()}({value_col})"
-
-
-def count_by_category(df: DataFrame, value_col: str) -> DataFrame:
-    """A2 (summary.py:8-26): tally per unique value, masked excluded."""
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(value_col)
-        .agg(F.count(F.lit(1)).alias("count"))
-    )
-
-
-def area_by_category(df: DataFrame, value_col: str, area_col: str) -> DataFrame:
-    """A3 (summary.py:37-54): total area per unique value."""
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .groupBy(value_col)
-        .agg(F.sum(area_col).alias("area"))
-    )
 
 
 def weighted_statistics(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:

@@ -16,15 +16,14 @@ Reference semantics:
   which is what the SQL twin uses (valid for the whole domain since
   negatives clip to 0 either way).
 
-Each operator exists in three equivalent forms: numpy block fn (tile UDFs),
-Spark Column expression (row grain, codegen), and SQL twin (DuckDB oracle).
+Each operator exists in two equivalent forms: numpy block fn (tile UDFs)
+and SQL twin (DuckDB oracle).
 """
 
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 # --- numpy block forms (bit-exact reference semantics) ---
@@ -51,23 +50,7 @@ def equal_interval_breaks(vmin: float, vmax: float, n: int) -> list[float]:
     return list(np.linspace(vmin + step, vmax, n))
 
 
-# --- Spark Column forms ---
-
-def classify_col(value_col: str, breaks) -> Column:
-    """#{breaks <= v} as a sum of comparisons (codegen-friendly)."""
-    v = F.col(value_col)
-    acc = F.lit(0)
-    for b in breaks:
-        acc = acc + F.when(v >= F.lit(float(b)), 1).otherwise(0)
-    return F.when(v.isNotNull(), acc)
-
-
-def stretch_col(value_col: str, vmin: float, vmax: float, ncolors: int) -> Column:
-    v = F.col(value_col)
-    factor = 1.0 if vmax == vmin else float(ncolors - 1) / float(vmax - vmin)
-    idx = F.floor((v - F.lit(float(vmin))) * F.lit(factor))
-    return F.when(v.isNotNull(), F.least(F.greatest(idx, F.lit(0)), F.lit(ncolors - 1)))
-
+# --- Spark DataFrame forms ---
 
 def quantile_breaks(df: DataFrame, value_col: str, n: int, relative_error: float = 0.0):
     """Quantile classification breaks (north_star F4). relative_error=0 →

@@ -8,11 +8,11 @@ downstream statistic and render
 /root/reference/trefoil/cli/utilities.py:118-142, nonzero = masked).
 
 Distributed shape: mask tiles are a tile table like any other variable;
-``apply_mask`` is a co-keyed (ty, tx) equi-join + one Arrow pass that
-NaNs out masked pixels. When both tables are bucketed on (ty, tx) (see
-sources/tiles_store.py) the join is shuffle-free; a small mask layer
-broadcasts instead. Everything downstream (zonal, classify, render,
-timeseries) is unchanged — NaN already means nodata engine-wide.
+``apply_mask`` is a (ty, tx) left join that broadcasts the mask table (one
+uint8 block per tile), so the value tiles never shuffle, + one Arrow pass
+that NaNs out masked pixels. Everything downstream (zonal,
+classify, render, timeseries) is unchanged — NaN already means nodata
+engine-wide.
 """
 
 from __future__ import annotations
@@ -62,11 +62,7 @@ def synthetic_mask_tiles(spark: SparkSession, spec: GridSpec) -> DataFrame:
     return idx.mapInPandas(gen, schema=MASK_TILE_SCHEMA)
 
 
-def apply_mask(
-    tiles: DataFrame,
-    mask_tiles: DataFrame,
-    broadcast_mask: bool = True,
-) -> DataFrame:
+def apply_mask(tiles: DataFrame, mask_tiles: DataFrame) -> DataFrame:
     """values ⨝ mask on (ty, tx); masked pixels → NaN (reference OR
     semantics: data nodata stays nodata, mask adds to it).
 
@@ -74,9 +70,7 @@ def apply_mask(
     with the reference's "no mask file given" path. Output schema ==
     input schema, so the operator composes anywhere in the pipeline.
     """
-    m = mask_tiles.select("ty", "tx", "mask_block")
-    if broadcast_mask:
-        m = F.broadcast(m)
+    m = F.broadcast(mask_tiles.select("ty", "tx", "mask_block"))
     joined = tiles.join(m, ["ty", "tx"], "left")
     out_cols = [c for c in tiles.columns]
     schema = ", ".join(

@@ -120,12 +120,8 @@ def _parse_dataspace(b: bytes) -> list[int]:
 
 
 # ---------------------------------------------------------------------------
-# object headers (v1 + v2)
+# object headers (v1 + v2); v2 metadata checksums are not verified on read
 # ---------------------------------------------------------------------------
-
-
-def _jenkins_ignore(_):  # v2 metadata checksums are not verified on read
-    return None
 
 
 def _messages(d: bytes, addr: int) -> list[tuple[int, int, int]]:

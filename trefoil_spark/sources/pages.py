@@ -139,7 +139,9 @@ def build_pages(
     itself caches file listings and catalog relations per session the
     same way); every action still computes from the parquet files.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, res, with_html)
+    # keyed on the session object: newSession()s share one applicationId
+    # but each has its own SQL conf and temp views
+    key = (spark, sf_dir, res, with_html)
     cached = _PAGES_PLAN_CACHE.get(key)
     if cached is not None:
         return cached
@@ -156,6 +158,6 @@ def build_pages(
                 "UTF-8",
             ),
         )
-    _PAGES_PLAN_CACHE.clear()  # drop dead-session plans; keep the live one
+    _PAGES_PLAN_CACHE.clear()  # keep only the latest session's plan
     _PAGES_PLAN_CACHE[key] = df
     return df
