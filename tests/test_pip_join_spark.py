@@ -7,7 +7,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from trefoil_spark.geometry import pip_sql_expr
-from trefoil_spark.operators.pip_join import cell_col, pip_join
+from trefoil_spark.operators.pip_join import (
+    BOUNDARY,
+    _covering_rows,
+    build_covering_index,
+    cell_col,
+    pip_join,
+)
 from trefoil_spark.operators.zonal import zonal_statistics
 from trefoil_spark.sources.pages import build_pages, pages_cte_sql
 from trefoil_spark.sources.zones import ZONE_LAYER
@@ -54,6 +60,29 @@ def test_cell_col_matches_sql_and_numpy(pages, duck):
     # and the Column-builder variant equals the SQL-text variant
     df2 = pages.withColumn("cell2", cell_col("lon", "lat", 7))
     assert df2.filter(F.col("cell") != F.col("cell2")).count() == 0
+
+
+def test_covering_rows_slot_arithmetic():
+    """Every fine child lands in its parent's array at slot
+    (c >> 5) & 1023, and every slot of every array is filled (no Spark)."""
+    index = build_covering_index(ZONE_LAYER)
+    rows = {c: (r1, fine) for c, r1, fine in _covering_rows(index)}
+    assert len(rows) == len(index["coarse"])
+    filled = {}
+    for c, r in index["fine"]:
+        parent = ((c >> 5) >> 10 << 5) + index["res"]
+        r1, fine = rows[parent]
+        assert r1 == BOUNDARY and len(fine) == 1024
+        slot = (c >> 5) & 1023
+        assert fine[slot] == (BOUNDARY if r is None else r)
+        filled.setdefault(parent, set()).add(slot)
+    for c, _, r in index["coarse"]:
+        r1, fine = rows[c]
+        if r is None:
+            assert filled[c] == set(range(1024))
+        else:
+            assert (r1, fine) == (r, None)
+    assert len(filled) == 94 and len(index["fine"]) == 94 * 1024
 
 
 @pytest.mark.parametrize("how", ["inner", "left"])

@@ -56,3 +56,21 @@ def test_build_pages_binds_to_calling_session(spark, sf_dir):
     other = spark.newSession()
     for s in (spark, other, spark):
         assert build_pages(s, sf_dir).sparkSession is s
+
+
+def test_pip_join_binds_to_calling_session(spark, sf_dir):
+    """pip_join memoizes its persisted covering table; keyed on the
+    applicationId, a newSession() joined against (and broadcast) the
+    first session's table."""
+    from trefoil_spark.operators.pip_join import build_covering_index, pip_join
+    from trefoil_spark.sources.pages import build_pages
+    from trefoil_spark.sources.zones import ZONE_LAYER
+
+    other = spark.newSession()
+    results = []
+    for s in (spark, other, spark):
+        pts = build_pages(s, sf_dir).select("doc_id", "lon", "lat")
+        joined = pip_join(pts, ZONE_LAYER, how="left")
+        results.append(sorted(joined.select("doc_id", "feature_id").collect()))
+        assert build_covering_index(ZONE_LAYER)["_session_df"][1].sparkSession is s
+    assert results[0] == results[1] == results[2]

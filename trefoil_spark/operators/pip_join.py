@@ -13,18 +13,20 @@ Physical strategy (scale-first, one plan):
    quadratically with the fine res — this is what tames hot small
    polygons (dense urban cells) that would otherwise push their whole
    point mass through the exact test.
-2. **Broadcast hash joins** on the cell keys (the point side computes the
-   fine cell with pure Catalyst integer expressions and derives the
-   coarse cell from it by bit-shift — whole-stage codegen, no shuffle).
+2. **One broadcast hash join** on the coarse cell: a coarse cell's fine
+   children are one block of 4^(fine_res−res) Morton codes, so a boundary
+   coarse row carries its fine level as one array. The point side derives
+   fine cell, coarse cell and array slot with pure Catalyst integer
+   expressions — whole-stage codegen, no shuffle.
 3. **JVM resolution ladder**: rows in resolved cells (either level) get
-   their feature_id from the broadcast row.
+   their feature_id from the broadcast row or its array slot.
 4. **Exact refine** in one Arrow-batched pandas UDF running the chunked
    vectorized even-odd crossing test, burn order resolved in-UDF
    (highest feature_id wins = GDAL rasterize overwrite order). Every row
    rides the Arrow pipe, but only fine-boundary rows carry a cell; the
    rest pass NULL and cost the UDF no math.
 
-Plan: Scan → codegen cell exprs → BHJ ×2 → ArrowEvalPython → ladder
+Plan: Scan → codegen cell exprs → BHJ → ArrowEvalPython → ladder
 projection. Zero shuffles, one scan.
 """
 
@@ -41,7 +43,8 @@ from ..grid import cells
 
 DEFAULT_RES = 9
 DEFAULT_FINE_RES = 14
-BOUNDARY = -2  # fine-index sentinel: cell needs the exact per-point test
+SLOTS = 4 ** (DEFAULT_FINE_RES - DEFAULT_RES)  # fine cells per coarse cell
+BOUNDARY = -2  # covering sentinel: cell needs the exact per-point test
 
 
 def cell_col(lon_col: str = "lon", lat_col: str = "lat", res: int = DEFAULT_RES) -> Column:
@@ -53,13 +56,6 @@ def cell_col(lon_col: str = "lon", lat_col: str = "lat", res: int = DEFAULT_RES)
     parity with the per-bit form asserted in tests/test_cells.py).
     """
     return F.expr(cells.cell_fast_sql(lon_col, lat_col, res))
-
-
-def parent_cell_col(cell: Column, res: int, parent_res: int) -> Column:
-    """Derive the ancestor cell id from a finer one (pure bit arithmetic)."""
-    steps = res - parent_res
-    morton = F.shiftrightunsigned(cell, 5)
-    return F.shiftleft(F.shiftrightunsigned(morton, 2 * steps), 5) + F.lit(parent_res)
 
 
 def _segments_intersect_boxes(rings, bx0, by0, bx1, by1) -> np.ndarray:
@@ -230,43 +226,52 @@ def build_covering_index(
     return out
 
 
-def _covering_dfs(spark: SparkSession, index: dict):
-    """(cov1, cov2) DataFrames for a covering index, memoized per session.
+def _covering_rows(index: dict) -> list[tuple]:
+    """(c1, r1, fine) rows of the broadcast covering table.
 
-    r8: the fine index is ~10^5 rows; uploading it (pandas→Arrow→JVM
-    createDataFrame) cost ~0.4 s of driver time and materializing it for
-    the broadcast build another ~0.2 s on EVERY pip query. The index is
-    a pure function of the polygon layer (same memoization contract as
-    ``_COVERING_CACHE`` — no input data involved), so the session-lived
-    DataFrames are built once and persisted (~1.5 MB) and each query's
-    broadcast build reads the cached blocks.
+    r1: winner, -1 (outside) or BOUNDARY. fine: None unless c1 is a
+    boundary cell; then slot ``(c >> 5) & (slots - 1)`` holds fine child
+    c's winner, -1 or BOUNDARY. Slots are placed by that arithmetic, not
+    by position: ``index["fine"]`` is enumerated y-outer, x-inner.
+    """
+    steps = index["fine_res"] - index["res"]
+    morton = np.array([c for c, _ in index["fine"]], dtype=np.int64) >> 5
+    parents, row = np.unique(((morton >> 2 * steps) << 5) + index["res"], return_inverse=True)
+    arrays = np.full((parents.size, 1 << 2 * steps), BOUNDARY, dtype=np.int32)
+    arrays[row, morton & ((1 << 2 * steps) - 1)] = [
+        BOUNDARY if r is None else r for _, r in index["fine"]
+    ]
+    fine = dict(zip(parents.tolist(), arrays.tolist()))
+    return [(c, BOUNDARY if r is None else r, fine.get(c)) for c, _, r in index["coarse"]]
 
-    Arrow path (pandas), not pickled tuples, for the upload. r2 uses an
-    INTEGER SENTINEL (-2 = boundary) instead of NULL: nullable columns
+
+def _covering_df(spark: SparkSession, index: dict) -> DataFrame:
+    """The covering table as a DataFrame, memoized per session.
+
+    The index is a pure function of the polygon layer, so the table is
+    uploaded and persisted once and each query's broadcast build reads
+    the cached block. Keyed on the session object: newSession()s share
+    one applicationId but each has its own SQL conf. The table a new
+    session evicts is unpersisted; a ~300-row re-upload is cheap.
+
+    r1 uses an INTEGER SENTINEL (BOUNDARY) instead of NULL: nullable ints
     round-tripped through pandas turn into DOUBLE NaN when the session
     has arrow.pyspark.enabled=false (NaN is not NULL → silently corrupts
-    the resolution ladder and then explodes under ANSI casts). Pure
-    int64 is representation-proof.
+    the resolution ladder and then explodes under ANSI casts), and NULL
+    keeps the one meaning the left join gives it: no covering cell.
     """
-    key = spark.sparkContext.applicationId
-    dfs = index.setdefault("_session_dfs", {})
-    cached = dfs.get(key)
-    if cached is not None:
-        return cached
-    # coalesce(1): the per-query broadcast build re-reads these from the
-    # block cache — one task instead of defaultParallelism near-empty
-    # tasks per build (they are ≤ ~10^5 rows by construction)
-    cov1 = spark.createDataFrame(
-        index["coarse"], "c1 bigint, fids array<bigint>, r1 bigint"
+    memo = index.get("_session_df")
+    if memo is not None:
+        if memo[0] is spark:
+            return memo[1]
+        if memo[0].sparkContext is spark.sparkContext:  # else already gone
+            memo[1].unpersist()
+    # coalesce(1): one task per broadcast build, not defaultParallelism
+    df = spark.createDataFrame(
+        _covering_rows(index), "c1 bigint, r1 bigint, fine array<int>"
     ).coalesce(1).persist()
-    fine_rows = [
-        (c, BOUNDARY if r is None else r) for c, r in (index["fine"] or [(-1, -1)])
-    ]
-    fine_pdf = pd.DataFrame(fine_rows, columns=["c2", "r2"]).astype("int64")
-    cov2 = spark.createDataFrame(fine_pdf).coalesce(1).persist()
-    dfs.clear()  # a dead session's persist handles are useless — drop them
-    dfs[key] = (cov1, cov2)
-    return cov1, cov2
+    index["_session_df"] = (spark, df)
+    return df
 
 
 def _make_winner_udf(index: dict):
@@ -341,8 +346,6 @@ def pip_join(
     polygons: list[Polygon],
     lon_col: str = "lon",
     lat_col: str = "lat",
-    res: int = DEFAULT_RES,
-    fine_res: int = DEFAULT_FINE_RES,
     how: str = "inner",
 ) -> DataFrame:
     """Join points to the polygon layer; adds ``feature_id`` + ``zone_value``.
@@ -355,38 +358,34 @@ def pip_join(
     Points matching no polygon are dropped under ``how='inner'``
     (reference zone-raster fill semantics) or kept with nulls under 'left'.
     """
-    spark = points.sparkSession
-    index = build_covering_index(polygons, res, fine_res)
-    cov1, cov2 = _covering_dfs(spark, index)
+    index = build_covering_index(polygons)
+    cov = _covering_df(points.sparkSession, index)
 
     # compute the integer coords ONCE as columns; the spread-bits morton
     # references them several times and CollapseProject declines to inline
     # non-cheap exprs used more than once, so the plan stays linear-sized
     # and codegen evaluates each coord once per row
     pts = points.withColumn(
-        "_qx", F.expr(cells.ix_sql_expr(lon_col, fine_res))
-    ).withColumn("_qy", F.expr(cells.iy_sql_expr(lat_col, fine_res)))
+        "_qx", F.expr(cells.ix_sql_expr(lon_col, DEFAULT_FINE_RES))
+    ).withColumn("_qy", F.expr(cells.iy_sql_expr(lat_col, DEFAULT_FINE_RES)))
     pts = pts.withColumn(
-        "_cf", F.expr(cells.morton_fast_sql("_qx", "_qy", fine_res))
+        "_cf", F.expr(cells.morton_fast_sql("_qx", "_qy", DEFAULT_FINE_RES))
     ).drop("_qx", "_qy")
-    pts = pts.withColumn("_cc", parent_cell_col(F.col("_cf"), fine_res, res))
-
+    # coarse cell and array slot: the high and low bits of the fine Morton code
+    morton = F.shiftrightunsigned(F.col("_cf"), 5)
+    coarse = F.shiftrightunsigned(morton, 2 * (DEFAULT_FINE_RES - DEFAULT_RES))
+    pts = pts.withColumn("_cc", F.shiftleft(coarse, 5) + DEFAULT_RES)
+    slot = morton.bitwiseAND(SLOTS - 1).cast("int") + 1
     joined = (
-        pts.join(F.broadcast(cov1), on=pts["_cc"] == cov1["c1"], how="left")
-        .drop("c1")
-        .join(F.broadcast(cov2), on=pts["_cf"] == cov2["c2"], how="left")
-        .drop("c2")
+        pts.join(F.broadcast(cov), on=pts["_cc"] == cov["c1"], how="left")
+        .withColumn("r2", F.element_at(F.col("fine"), slot))
+        .drop("c1", "fine")
     )
 
     # resolution ladder (pure JVM): coarse-resolved → fine-resolved → refine
-    jvm_feature = F.when(F.col("r1") >= 0, F.col("r1")).when(
-        F.col("r1").isNull() & (F.col("r2") >= 0), F.col("r2")
-    )
-    is_py = (
-        F.col("r1").isNull()
-        & F.col("fids").isNotNull()
-        & (F.col("r2").isNull() | (F.col("r2") == BOUNDARY))
-    )
+    # (r2 is non-NULL only in boundary coarse cells)
+    jvm_feature = F.when(F.col("r1") >= 0, F.col("r1")).when(F.col("r2") >= 0, F.col("r2"))
+    is_py = F.coalesce(F.col("r2") == BOUNDARY, F.lit(False))
 
     # Single pass on purpose: every row rides the Arrow pipe, and
     # non-boundary rows pass a NULL cell so the UDF does no math for them.
@@ -395,7 +394,7 @@ def pip_join(
     # (op_s.p50 3.42-3.99 s single-pass vs 3.66-4.51 s split) and on the
     # interactive closed loop (1.11-1.26 s vs 1.51-1.83 s; perfbench on
     # local[4], 14 s runs, seeds 101-103): the union's second pass over
-    # the input and through both broadcast joins costs more than the
+    # the input and through the broadcast join costs more than the
     # Arrow traffic it saves. The refine stays in Python rather than a
     # Catalyst CASE chain of crossing tests: that chain exceeds
     # whole-stage-codegen limits and drops the whole scan stage to
@@ -413,7 +412,7 @@ def pip_join(
             F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
         ),
     )
-    joined = joined.drop("fids", "r1", "r2", "_cf", "_cc", "_fid_raw")
+    joined = joined.drop("r1", "r2", "_cf", "_cc", "_fid_raw")
 
     value_map = F.create_map(
         *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
