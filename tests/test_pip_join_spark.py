@@ -13,9 +13,10 @@ from trefoil_spark.operators.pip_join import (
     build_covering_index,
     cell_col,
     pip_join,
+    pre_refine,
 )
 from trefoil_spark.operators.zonal import zonal_statistics
-from trefoil_spark.sources.pages import build_pages, pages_cte_sql
+from trefoil_spark.sources.pages import build_pages, build_pages_scaled, pages_cte_sql
 from trefoil_spark.sources.zones import ZONE_LAYER
 
 
@@ -167,6 +168,123 @@ def test_zonal_statistics_matches_oracle(pages, duck):
         """
     ).df()
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def _duck_scaled(duck, factor: int) -> str:
+    """DuckDB twin of build_pages_scaled: documents x range(factor)."""
+    duck.execute(
+        f"CREATE OR REPLACE VIEW documents_x{factor} AS "
+        f"SELECT doc_id * {factor} + rep AS doc_id, text, lang, source "
+        f"FROM documents, (SELECT range AS rep FROM range({factor}))"
+    )
+    duck.execute(
+        f"CREATE OR REPLACE VIEW pages_x{factor} AS {pages_cte_sql(f'documents_x{factor}')}"
+    )
+    return f"pages_x{factor}"
+
+
+@pytest.mark.parametrize("factor", [1, 3, 7])
+def test_build_pages_scaled_matches_oracle(spark, sf_dir, duck, factor):
+    """The explode expansion yields exactly the documents x range(factor)
+    pages, over min(factor, parallelism) partitions."""
+    par = spark.sparkContext.defaultParallelism
+    assert par == 4
+    pages = build_pages_scaled(spark, sf_dir, factor)
+    assert pages.rdd.getNumPartitions() == min(factor, par)
+    cols = ["doc_id", "url", "warc_epoch", "text", "lang", "lat", "lon", "cell"]
+    got = pages.select(*cols).orderBy("doc_id").toPandas()
+    want = duck.execute(
+        f"SELECT {', '.join(cols)} FROM {_duck_scaled(duck, factor)} ORDER BY doc_id"
+    ).df()
+    assert len(want) == factor * 500
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def _zone_case_sql() -> str:
+    """Burn order as a DuckDB CASE over the generated PIP SQL."""
+    cases = []
+    for fid in reversed(range(len(ZONE_LAYER))):
+        poly = ZONE_LAYER[fid]
+        cases.append(f"WHEN {pip_sql_expr('lon', 'lat', poly)} THEN '{poly.value}'")
+    return f"CASE {' '.join(cases)} END"
+
+
+def _refines_after_shuffle(df) -> bool:
+    """The aggregate-then-resolve plan: the refine UDF is printed above
+    (runs after) the shuffle."""
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    udf = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
+    shuffle = [i for i, l in enumerate(lines) if "Exchange" in l and "Broadcast" not in l]
+    return len(udf) == 1 and len(shuffle) == 1 and udf[0] < shuffle[0]
+
+
+def _fused_input(spark, sf_dir):
+    """3,500 scaled pages; every 11th page has NULL lon/lat, every 13th
+    a NULL value."""
+    pages = build_pages_scaled(spark, sf_dir, 7)
+    located = F.col("doc_id") % 11 != 0
+    return pages.select(
+        F.when(located, F.col("lat")).alias("lat"),
+        F.when(located, F.col("lon")).alias("lon"),
+        F.when(F.col("doc_id") % 13 != 0, F.length("text")).alias("n_chars"),
+    )
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_zonal_fused_matches_oracle(spark, sf_dir, duck, how):
+    """zonal_statistics straight over pip_join aggregates before the
+    refine UDF; its statistics equal the DuckDB burn-order aggregate bit
+    for bit, NULL values and NULL coordinates included."""
+    joined = pip_join(_fused_input(spark, sf_dir), ZONE_LAYER, how=how)
+    assert pre_refine(joined) is not None
+    stats = zonal_statistics(joined, "zone_value", "n_chars")
+    assert _refines_after_shuffle(stats)
+    got = stats.orderBy("zone_value").toPandas()
+
+    inner = "AND zone_value IS NOT NULL" if how == "inner" else ""
+    want = duck.execute(
+        f"""
+        WITH p AS (
+            SELECT CASE WHEN doc_id % 11 <> 0 THEN lon END AS lon,
+                   CASE WHEN doc_id % 11 <> 0 THEN lat END AS lat,
+                   CASE WHEN doc_id % 13 <> 0 THEN LENGTH(text) END AS n_chars
+            FROM {_duck_scaled(duck, 7)}
+        ), z AS (SELECT {_zone_case_sql()} AS zone_value, n_chars FROM p)
+        SELECT zone_value,
+               SUM(CAST(n_chars AS DOUBLE)) / COUNT(n_chars) AS mean,
+               MIN(n_chars) AS min, MAX(n_chars) AS max,
+               SQRT(SUM(CAST(n_chars AS DOUBLE) * CAST(n_chars AS DOUBLE)) / COUNT(n_chars)
+                    - (SUM(CAST(n_chars AS DOUBLE)) / COUNT(n_chars))
+                      * (SUM(CAST(n_chars AS DOUBLE)) / COUNT(n_chars))) AS std,
+               SUM(n_chars) AS sum, COUNT(n_chars) AS count
+        FROM z WHERE n_chars IS NOT NULL {inner}
+        GROUP BY zone_value ORDER BY zone_value NULLS FIRST
+        """
+    ).df()
+    assert want["zone_value"].isna().sum() == (how == "left")
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+    subset = zonal_statistics(joined, "zone_value", "n_chars", ["count", "max"])
+    pd.testing.assert_frame_equal(
+        subset.orderBy("zone_value").toPandas(),
+        want[["zone_value", "count", "max"]],
+        check_dtype=False,
+    )
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_zonal_fused_empty_inputs(spark, sf_dir, how):
+    """No rows, or no non-NULL value, give no zones (not a zone with
+    count 0). The predicates are ones Catalyst cannot fold away."""
+    slim = _fused_input(spark, sf_dir)
+    nowhere = F.col("lat") > 1000
+    for points in (
+        slim.filter(nowhere),
+        slim.withColumn("n_chars", F.when(nowhere, F.col("n_chars"))),
+    ):
+        stats = zonal_statistics(pip_join(points, ZONE_LAYER, how=how), "zone_value", "n_chars")
+        assert _refines_after_shuffle(stats)
+        assert stats.collect() == []
 
 
 def test_fast_cell_builders_match_per_bit_in_spark(spark):

@@ -58,6 +58,18 @@ def test_build_pages_binds_to_calling_session(spark, sf_dir):
         assert build_pages(s, sf_dir).sparkSession is s
 
 
+def test_build_pages_scaled_binds_to_calling_session(spark, sf_dir):
+    """build_pages_scaled memoizes its lazy plan like build_pages: each
+    session gets its own, and a repeated call returns the memoized one."""
+    from trefoil_spark.sources.pages import build_pages_scaled
+
+    other = spark.newSession()
+    for s in (spark, other, spark):
+        df = build_pages_scaled(s, sf_dir, 3)
+        assert df.sparkSession is s
+        assert build_pages_scaled(s, sf_dir, 3) is df
+
+
 def test_pip_join_binds_to_calling_session(spark, sf_dir):
     """pip_join memoizes its persisted covering table; keyed on the
     applicationId, a newSession() joined against (and broadcast) the

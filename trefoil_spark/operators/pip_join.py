@@ -23,14 +23,21 @@ Physical strategy (scale-first, one plan):
 4. **Exact refine** in one Arrow-batched pandas UDF running the chunked
    vectorized even-odd crossing test, burn order resolved in-UDF
    (highest feature_id wins = GDAL rasterize overwrite order). Every row
-   rides the Arrow pipe, but only fine-boundary rows carry a cell; the
-   rest pass NULL and cost the UDF no math.
+   of a pip_join result rides the Arrow pipe, but only fine-boundary rows
+   carry a cell; the rest pass NULL and cost the UDF no math.
+   ``zonal_statistics`` over a pip_join result skips that traffic: it
+   aggregates the pre-refine frame first and sends the UDF one row per
+   distinct boundary point plus one per resolved feature (see
+   operators/zonal.py).
 
 Plan: Scan → codegen cell exprs → BHJ → ArrowEvalPython → ladder
 projection. Zero shuffles, one scan.
 """
 
 from __future__ import annotations
+
+import weakref
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -245,14 +252,18 @@ def _covering_rows(index: dict) -> list[tuple]:
     return [(c, BOUNDARY if r is None else r, fine.get(c)) for c, _, r in index["coarse"]]
 
 
-def _covering_df(spark: SparkSession, index: dict) -> DataFrame:
-    """The covering table as a DataFrame, memoized per session.
+def _session_memo(spark: SparkSession, index: dict, polygons: list[Polygon]):
+    """(covering table, winner UDF, feature_id -> value map) for this
+    session, memoized.
 
-    The index is a pure function of the polygon layer, so the table is
-    uploaded and persisted once and each query's broadcast build reads
-    the cached block. Keyed on the session object: newSession()s share
-    one applicationId but each has its own SQL conf. The table a new
-    session evicts is unpersisted; a ~300-row re-upload is cheap.
+    The index is a pure function of the polygon layer (values included),
+    so the table is uploaded and persisted once and each query's
+    broadcast build reads the cached block; the UDF is built (and
+    pickled on first use) once, the map Column too.
+    Keyed on the session object: newSession()s share one applicationId
+    but each has its own SQL conf. The table a new session evicts is
+    unpersisted; a ~300-row re-upload is cheap. The UDF stays out of
+    ``_COVERING_CACHE``: its JVM function binds to the live SparkContext.
 
     r1 uses an INTEGER SENTINEL (BOUNDARY) instead of NULL: nullable ints
     round-tripped through pandas turn into DOUBLE NaN when the session
@@ -263,15 +274,19 @@ def _covering_df(spark: SparkSession, index: dict) -> DataFrame:
     memo = index.get("_session_df")
     if memo is not None:
         if memo[0] is spark:
-            return memo[1]
+            return memo[1:]
         if memo[0].sparkContext is spark.sparkContext:  # else already gone
             memo[1].unpersist()
     # coalesce(1): one task per broadcast build, not defaultParallelism
     df = spark.createDataFrame(
         _covering_rows(index), "c1 bigint, r1 bigint, fine array<int>"
     ).coalesce(1).persist()
-    index["_session_df"] = (spark, df)
-    return df
+    winner = _make_winner_udf(index)
+    value_map = F.create_map(
+        *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
+    )
+    index["_session_df"] = (spark, df, winner, value_map)
+    return df, winner, value_map
 
 
 def _make_winner_udf(index: dict):
@@ -341,6 +356,34 @@ def _make_winner_udf(index: dict):
     return winner.asNondeterministic()
 
 
+class Refine(NamedTuple):
+    """A pip_join result as it stands before its refine UDF."""
+
+    pre: DataFrame  # the point columns plus _cf, r1, r2 and join leftovers
+    winner: object  # the session's winner UDF
+    value_map: Column  # feature_id -> zone value
+    lon_col: str
+    lat_col: str
+    how: str
+
+
+# pip_join result -> its Refine; weak, so a dropped result frees its entry
+_PRE_REFINE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def pre_refine(df: DataFrame) -> Refine | None:
+    """The Refine of a DataFrame that pip_join returned, else None."""
+    return _PRE_REFINE.get(df)
+
+
+# the resolution ladder over a pre-refine frame, as SQL (one parse per
+# use instead of a py4j call per Column node): the feature the covering
+# table resolves (coarse level first; r2 is non-NULL only in boundary
+# coarse cells), and whether the row needs the exact test
+JVM_FEATURE = "CASE WHEN r1 >= 0 THEN r1 WHEN r2 >= 0 THEN r2 END"
+IS_PY = f"coalesce(r2 = {BOUNDARY}, false)"
+
+
 def pip_join(
     points: DataFrame,
     polygons: list[Polygon],
@@ -357,35 +400,27 @@ def pip_join(
 
     Points matching no polygon are dropped under ``how='inner'``
     (reference zone-raster fill semantics) or kept with nulls under 'left'.
+    The result is registered with its pre-refine frame (``pre_refine``)
+    so ``zonal_statistics`` can aggregate before the UDF runs.
     """
     index = build_covering_index(polygons)
-    cov = _covering_df(points.sparkSession, index)
+    cov, winner, value_map = _session_memo(points.sparkSession, index, polygons)
 
     # compute the integer coords ONCE as columns; the spread-bits morton
     # references them several times and CollapseProject declines to inline
     # non-cheap exprs used more than once, so the plan stays linear-sized
     # and codegen evaluates each coord once per row
-    pts = points.withColumn(
-        "_qx", F.expr(cells.ix_sql_expr(lon_col, DEFAULT_FINE_RES))
-    ).withColumn("_qy", F.expr(cells.iy_sql_expr(lat_col, DEFAULT_FINE_RES)))
-    pts = pts.withColumn(
-        "_cf", F.expr(cells.morton_fast_sql("_qx", "_qy", DEFAULT_FINE_RES))
-    ).drop("_qx", "_qy")
-    # coarse cell and array slot: the high and low bits of the fine Morton code
-    morton = F.shiftrightunsigned(F.col("_cf"), 5)
-    coarse = F.shiftrightunsigned(morton, 2 * (DEFAULT_FINE_RES - DEFAULT_RES))
-    pts = pts.withColumn("_cc", F.shiftleft(coarse, 5) + DEFAULT_RES)
-    slot = morton.bitwiseAND(SLOTS - 1).cast("int") + 1
-    joined = (
-        pts.join(F.broadcast(cov), on=pts["_cc"] == cov["c1"], how="left")
-        .withColumn("r2", F.element_at(F.col("fine"), slot))
-        .drop("c1", "fine")
-    )
-
-    # resolution ladder (pure JVM): coarse-resolved → fine-resolved → refine
-    # (r2 is non-NULL only in boundary coarse cells)
-    jvm_feature = F.when(F.col("r1") >= 0, F.col("r1")).when(F.col("r2") >= 0, F.col("r2"))
-    is_py = F.coalesce(F.col("r2") == BOUNDARY, F.lit(False))
+    pts = points.withColumns({
+        "_qx": F.expr(cells.ix_sql_expr(lon_col, DEFAULT_FINE_RES)),
+        "_qy": F.expr(cells.iy_sql_expr(lat_col, DEFAULT_FINE_RES)),
+    }).withColumn("_cf", F.expr(cells.morton_fast_sql("_qx", "_qy", DEFAULT_FINE_RES)))
+    # coarse cell (the join key) and array slot: the high and low bits of
+    # the fine Morton code (bits 5+ of a cell id; the low 5 hold its res)
+    coarse = f"shiftleft(shiftrightunsigned(_cf, {5 + 2 * (DEFAULT_FINE_RES - DEFAULT_RES)}), 5)"
+    slot = f"CAST(shiftrightunsigned(_cf, 5) & {SLOTS - 1} AS INT) + 1"
+    pre = pts.join(
+        F.broadcast(cov), on=F.expr(f"{coarse} + {DEFAULT_RES}") == cov["c1"], how="left"
+    ).withColumn("r2", F.expr(f"element_at(fine, {slot})"))
 
     # Single pass on purpose: every row rides the Arrow pipe, and
     # non-boundary rows pass a NULL cell so the UDF does no math for them.
@@ -395,29 +430,25 @@ def pip_join(
     # interactive closed loop (1.11-1.26 s vs 1.51-1.83 s; perfbench on
     # local[4], 14 s runs, seeds 101-103): the union's second pass over
     # the input and through the broadcast join costs more than the
-    # Arrow traffic it saves. The refine stays in Python rather than a
-    # Catalyst CASE chain of crossing tests: that chain exceeds
-    # whole-stage-codegen limits and drops the whole scan stage to
-    # interpreted evaluation.
-    winner = _make_winner_udf(index)
-    # the raw UDF output uses -1 for "no match"; the NULL translation is a
+    # Arrow traffic it saves. zonal_statistics avoids that traffic without
+    # a second pass: it aggregates ``pre`` and runs the UDF on the
+    # aggregated rows. The refine stays in Python rather than a Catalyst
+    # CASE chain of crossing tests: that chain exceeds whole-stage-codegen
+    # limits and drops the whole scan stage to interpreted evaluation.
+    # The raw UDF output uses -1 for "no match"; the NULL translation is a
     # separate JVM step (the UDF is nondeterministic-marked, so Catalyst
-    # cannot collapse/duplicate it into downstream expressions)
-    joined = joined.withColumn(
-        "_fid_raw",
-        winner(F.col(lon_col), F.col(lat_col), F.when(is_py, F.col("_cf"))),
-    ).withColumn(
-        "feature_id",
-        F.when(~is_py, jvm_feature).otherwise(
-            F.when(F.col("_fid_raw") >= 0, F.col("_fid_raw"))
-        ),
+    # cannot collapse/duplicate it into downstream expressions).
+    raw = pre.withColumn(
+        "_fid_raw", winner(lon_col, lat_col, F.expr(f"CASE WHEN {IS_PY} THEN _cf END"))
     )
-    joined = joined.drop("r1", "r2", "_cf", "_cc", "_fid_raw")
-
-    value_map = F.create_map(
-        *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
+    feature = F.expr(
+        f"CASE WHEN {IS_PY} THEN CASE WHEN _fid_raw >= 0 THEN _fid_raw END "
+        f"ELSE {JVM_FEATURE} END"
     )
-    joined = joined.withColumn("zone_value", value_map[F.col("feature_id")])
+    joined = raw.withColumns(
+        {"feature_id": feature, "zone_value": value_map[feature]}
+    ).drop("_qx", "_qy", "_cf", "c1", "r1", "fine", "r2", "_fid_raw")
     if how == "inner":
         joined = joined.filter(F.col("feature_id").isNotNull())
+    _PRE_REFINE[joined] = Refine(pre, winner, value_map, lon_col, lat_col, how)
     return joined

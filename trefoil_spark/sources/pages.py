@@ -98,33 +98,57 @@ def build_pages_scaled(
 ) -> DataFrame:
     """Deterministic scale-up of the pages table for benchmarks.
 
-    Cross-joins documents with ``range(factor)`` (page_id = doc_id * factor
-    + rep) and derives geotags from page_id, so every replica is a distinct
-    deterministic point — no external data, same formulas as build_pages.
-    text/lang ride along so shuffle volume is realistic. 5000 docs x 400 =
-    2M pages, the scale where local[8] vs local[32] is meaningful.
+    Every document expands into ``factor`` pages (page_id = doc_id *
+    factor + rep, rep in [0, factor)) whose geotags derive from page_id,
+    so every replica is a distinct deterministic point — no external
+    data, same formulas as build_pages. text/lang ride along so shuffle
+    volume is realistic. 5000 docs x 400 = 2M pages, the scale where
+    local[8] vs local[32] is meaningful. The lazy plan is memoized like
+    build_pages'.
+
+    The expansion is a cross join of the small documents side with one
+    row per partition, then ``explode(sequence(...))`` of that
+    partition's chunk of reps: the join emits 5000 x partitions rows and
+    the generator the rest, where a join against ``range(factor)`` built
+    all 2M rows in a broadcast nested-loop join (``sum(length(text))``
+    over 5000 docs x 400 on local[4]: 1.04-1.13 s → 0.37-0.38 s, median
+    of 6 warm runs).
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    # stream side = well-partitioned range; small docs side broadcast →
-    # the expansion parallelizes across range partitions, no repartition.
-    # r8: one partition per core (was par*4): the pipeline ends in an
-    # ArrowEvalPython refine whose per-TASK Python round-trip dominated
-    # at 4 tasks/core (measured 1.98 s → 0.92 s on the 2M-row bench
-    # shape); `defaultParallelism` tracks cluster size, so the choice
-    # stays scale-adaptive, and the map-side pre-aggregation keeps
-    # per-task state O(zones) regardless of rows per task.
-    par = spark.sparkContext.defaultParallelism
-    reps = spark.range(0, factor, numPartitions=min(factor, par)).withColumnRenamed(
-        "id", "rep"
-    )
-    wide = reps.join(F.broadcast(docs)).selectExpr(
-        f"doc_id * {factor} + rep AS doc_id", "text", "lang", "source"
-    )
-    wide.createOrReplaceTempView("_trefoil_documents_scaled")
-    return spark.sql(pages_cte_sql("_trefoil_documents_scaled", res))
+    def build():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        # r8: one partition per core (was par*4): the pipeline ends in an
+        # ArrowEvalPython refine whose per-TASK Python round-trip dominated
+        # at 4 tasks/core (measured 1.98 s → 0.92 s on the 2M-row bench
+        # shape); `defaultParallelism` tracks cluster size, so the choice
+        # stays scale-adaptive. Chunks of ceil(factor / par) reps make
+        # every partition's sequence non-empty and ascending.
+        par = min(factor, spark.sparkContext.defaultParallelism)
+        chunk = -(-factor // par)
+        nparts = -(-factor // chunk)
+        parts = spark.range(0, nparts, numPartitions=par)
+        lo, hi = f"id * {chunk}", f"least(id * {chunk} + {chunk}, {factor}) - 1"
+        wide = parts.join(F.broadcast(docs)).selectExpr(
+            f"explode(sequence(doc_id * {factor} + {lo}, doc_id * {factor} + {hi})) AS doc_id",
+            "text", "lang", "source",
+        )
+        wide.createOrReplaceTempView("_trefoil_documents_scaled")
+        return spark.sql(pages_cte_sql("_trefoil_documents_scaled", res))
+
+    return _memo_plan(("scaled", spark, sf_dir, res, factor), build)
 
 
 _PAGES_PLAN_CACHE: dict = {}
+
+
+def _memo_plan(key: tuple, build) -> DataFrame:
+    """The memoized lazy plan for ``key``, else ``build()``'s, which
+    replaces it: only the latest plan is kept."""
+    cached = _PAGES_PLAN_CACHE.get(key)
+    if cached is None:
+        cached = build()
+        _PAGES_PLAN_CACHE.clear()
+        _PAGES_PLAN_CACHE[key] = cached
+    return cached
 
 
 def build_pages(
@@ -141,23 +165,20 @@ def build_pages(
     """
     # keyed on the session object: newSession()s share one applicationId
     # but each has its own SQL conf and temp views
-    key = (spark, sf_dir, res, with_html)
-    cached = _PAGES_PLAN_CACHE.get(key)
-    if cached is not None:
-        return cached
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs.createOrReplaceTempView("_trefoil_documents")
-    df = spark.sql(pages_cte_sql("_trefoil_documents", res))
-    df = df.withColumn("warc_ts", F.timestamp_seconds(F.col("warc_epoch")))
-    if with_html:
-        # html embeds the text — byte-identity of text implies html identity
-        df = df.withColumn(
-            "html",
-            F.encode(
-                F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
-                "UTF-8",
-            ),
-        )
-    _PAGES_PLAN_CACHE.clear()  # keep only the latest session's plan
-    _PAGES_PLAN_CACHE[key] = df
-    return df
+    def build():
+        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+        docs.createOrReplaceTempView("_trefoil_documents")
+        df = spark.sql(pages_cte_sql("_trefoil_documents", res))
+        df = df.withColumn("warc_ts", F.timestamp_seconds(F.col("warc_epoch")))
+        if with_html:
+            # html embeds the text — byte-identity of text implies html identity
+            df = df.withColumn(
+                "html",
+                F.encode(
+                    F.concat(F.lit("<html><body>"), F.col("text"), F.lit("</body></html>")),
+                    "UTF-8",
+                ),
+            )
+        return df
+
+    return _memo_plan(("pages", spark, sf_dir, res, with_html), build)
