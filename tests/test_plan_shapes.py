@@ -65,39 +65,6 @@ def test_zonal_pipeline_single_shuffle(spark, pages_parquet):
     assert plan.count("HashAggregate") >= 2
 
 
-def _shuffles(plan: str) -> list[int]:
-    return [
-        i for i, l in enumerate(plan.splitlines())
-        if "Exchange" in l and "BroadcastExchange" not in l
-    ]
-
-
-def test_zonal_fused_plan_refines_after_the_shuffle(spark, pages_parquet):
-    """zonal_statistics over pip_join with an integral value aggregates
-    first: one ArrowEvalPython, printed above (run after) the single
-    shuffle, under a Coalesce 1 that keeps the zone aggregate local (the
-    covering table's own Coalesce 1 sits under its broadcast). A double
-    value keeps the one-aggregate plan (UDF below the shuffle)."""
-    from trefoil_spark.operators.pip_join import pip_join
-    from trefoil_spark.operators.zonal import zonal_statistics
-    from trefoil_spark.sources.zones import ZONE_LAYER
-
-    pages = spark.read.parquet(pages_parquet)
-    slim = pages.select("lat", "lon", F.length("text").alias("n_chars"))
-    plan = _plan(zonal_statistics(pip_join(slim, ZONE_LAYER), "zone_value", "n_chars"))
-    lines = plan.splitlines()
-    udf = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
-    coalesce = [i for i, l in enumerate(lines) if "Coalesce 1" in l]
-    assert len(udf) == 1 and len(_shuffles(plan)) == 1, plan
-    assert len(coalesce) == 2 and coalesce[0] < udf[0] < _shuffles(plan)[0], plan
-
-    dbl = slim.withColumn("n_chars", F.col("n_chars").cast("double"))
-    plan = _plan(zonal_statistics(pip_join(dbl, ZONE_LAYER), "zone_value", "n_chars"))
-    udf = [i for i, l in enumerate(plan.splitlines()) if "ArrowEvalPython" in l]
-    assert len(udf) == 1 and len(_shuffles(plan)) == 1, plan
-    assert _shuffles(plan)[0] < udf[0] and plan.count("Coalesce 1") == 1, plan
-
-
 def test_column_pruning_reaches_scan(spark, pages_parquet):
     from trefoil_spark.operators.pip_join import pip_join
     from trefoil_spark.sources.zones import ZONE_LAYER

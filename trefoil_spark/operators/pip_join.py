@@ -23,21 +23,14 @@ Physical strategy (scale-first, one plan):
 4. **Exact refine** in one Arrow-batched pandas UDF running the chunked
    vectorized even-odd crossing test, burn order resolved in-UDF
    (highest feature_id wins = GDAL rasterize overwrite order). Every row
-   of a pip_join result rides the Arrow pipe, but only fine-boundary rows
-   carry a cell; the rest pass NULL and cost the UDF no math.
-   ``zonal_statistics`` over a pip_join result skips that traffic: it
-   aggregates the pre-refine frame first and sends the UDF one row per
-   distinct boundary point plus one per resolved feature (see
-   operators/zonal.py).
+   rides the Arrow pipe, but only fine-boundary rows carry a cell; the
+   rest pass NULL and cost the UDF no math.
 
 Plan: Scan → codegen cell exprs → BHJ → ArrowEvalPython → ladder
 projection. Zero shuffles, one scan.
 """
 
 from __future__ import annotations
-
-import weakref
-from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -260,10 +253,11 @@ def _session_memo(spark: SparkSession, index: dict, polygons: list[Polygon]):
     so the table is uploaded and persisted once and each query's
     broadcast build reads the cached block; the UDF is built (and
     pickled on first use) once, the map Column too.
-    Keyed on the session object: newSession()s share one applicationId
-    but each has its own SQL conf. The table a new session evicts is
-    unpersisted; a ~300-row re-upload is cheap. The UDF stays out of
-    ``_COVERING_CACHE``: its JVM function binds to the live SparkContext.
+    The memo is the index's one per-session entry, keyed on the session
+    object: newSession()s share one applicationId but each has its own
+    SQL conf. A new session rebuilds all three (the UDF's JVM function
+    binds to the live SparkContext) and unpersists the table it evicts;
+    a ~300-row re-upload is cheap.
 
     r1 uses an INTEGER SENTINEL (BOUNDARY) instead of NULL: nullable ints
     round-tripped through pandas turn into DOUBLE NaN when the session
@@ -356,34 +350,6 @@ def _make_winner_udf(index: dict):
     return winner.asNondeterministic()
 
 
-class Refine(NamedTuple):
-    """A pip_join result as it stands before its refine UDF."""
-
-    pre: DataFrame  # the point columns plus _cf, r1, r2 and join leftovers
-    winner: object  # the session's winner UDF
-    value_map: Column  # feature_id -> zone value
-    lon_col: str
-    lat_col: str
-    how: str
-
-
-# pip_join result -> its Refine; weak, so a dropped result frees its entry
-_PRE_REFINE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
-
-
-def pre_refine(df: DataFrame) -> Refine | None:
-    """The Refine of a DataFrame that pip_join returned, else None."""
-    return _PRE_REFINE.get(df)
-
-
-# the resolution ladder over a pre-refine frame, as SQL (one parse per
-# use instead of a py4j call per Column node): the feature the covering
-# table resolves (coarse level first; r2 is non-NULL only in boundary
-# coarse cells), and whether the row needs the exact test
-JVM_FEATURE = "CASE WHEN r1 >= 0 THEN r1 WHEN r2 >= 0 THEN r2 END"
-IS_PY = f"coalesce(r2 = {BOUNDARY}, false)"
-
-
 def pip_join(
     points: DataFrame,
     polygons: list[Polygon],
@@ -400,8 +366,6 @@ def pip_join(
 
     Points matching no polygon are dropped under ``how='inner'``
     (reference zone-raster fill semantics) or kept with nulls under 'left'.
-    The result is registered with its pre-refine frame (``pre_refine``)
-    so ``zonal_statistics`` can aggregate before the UDF runs.
     """
     index = build_covering_index(polygons)
     cov, winner, value_map = _session_memo(points.sparkSession, index, polygons)
@@ -418,9 +382,15 @@ def pip_join(
     # the fine Morton code (bits 5+ of a cell id; the low 5 hold its res)
     coarse = f"shiftleft(shiftrightunsigned(_cf, {5 + 2 * (DEFAULT_FINE_RES - DEFAULT_RES)}), 5)"
     slot = f"CAST(shiftrightunsigned(_cf, 5) & {SLOTS - 1} AS INT) + 1"
-    pre = pts.join(
+    joined = pts.join(
         F.broadcast(cov), on=F.expr(f"{coarse} + {DEFAULT_RES}") == cov["c1"], how="left"
     ).withColumn("r2", F.expr(f"element_at(fine, {slot})"))
+
+    # resolution ladder (pure JVM; SQL text, one parse instead of a py4j
+    # call per Column node): coarse-resolved → fine-resolved → refine
+    # (r2 is non-NULL only in boundary coarse cells)
+    jvm_feature = "CASE WHEN r1 >= 0 THEN r1 WHEN r2 >= 0 THEN r2 END"
+    is_py = f"coalesce(r2 = {BOUNDARY}, false)"
 
     # Single pass on purpose: every row rides the Arrow pipe, and
     # non-boundary rows pass a NULL cell so the UDF does no math for them.
@@ -430,25 +400,23 @@ def pip_join(
     # interactive closed loop (1.11-1.26 s vs 1.51-1.83 s; perfbench on
     # local[4], 14 s runs, seeds 101-103): the union's second pass over
     # the input and through the broadcast join costs more than the
-    # Arrow traffic it saves. zonal_statistics avoids that traffic without
-    # a second pass: it aggregates ``pre`` and runs the UDF on the
-    # aggregated rows. The refine stays in Python rather than a Catalyst
-    # CASE chain of crossing tests: that chain exceeds whole-stage-codegen
-    # limits and drops the whole scan stage to interpreted evaluation.
+    # Arrow traffic it saves. The refine stays in Python rather than a
+    # Catalyst CASE chain of crossing tests: that chain exceeds
+    # whole-stage-codegen limits and drops the whole scan stage to
+    # interpreted evaluation.
     # The raw UDF output uses -1 for "no match"; the NULL translation is a
     # separate JVM step (the UDF is nondeterministic-marked, so Catalyst
     # cannot collapse/duplicate it into downstream expressions).
-    raw = pre.withColumn(
-        "_fid_raw", winner(lon_col, lat_col, F.expr(f"CASE WHEN {IS_PY} THEN _cf END"))
+    joined = joined.withColumn(
+        "_fid_raw", winner(lon_col, lat_col, F.expr(f"CASE WHEN {is_py} THEN _cf END"))
     )
     feature = F.expr(
-        f"CASE WHEN {IS_PY} THEN CASE WHEN _fid_raw >= 0 THEN _fid_raw END "
-        f"ELSE {JVM_FEATURE} END"
+        f"CASE WHEN {is_py} THEN CASE WHEN _fid_raw >= 0 THEN _fid_raw END "
+        f"ELSE {jvm_feature} END"
     )
-    joined = raw.withColumns(
+    joined = joined.withColumns(
         {"feature_id": feature, "zone_value": value_map[feature]}
     ).drop("_qx", "_qy", "_cf", "c1", "r1", "fine", "r2", "_fid_raw")
     if how == "inner":
         joined = joined.filter(F.col("feature_id").isNotNull())
-    _PRE_REFINE[joined] = Refine(pre, winner, value_map, lon_col, lat_col, how)
     return joined

@@ -12,45 +12,43 @@ partial+final pattern, zero custom code. ``std`` is computed explicitly as
 sqrt(sum_sq/n - mean^2) from exact partial sums rather than stddev_pop so
 the float expression tree is deterministic and engine-portable (matters
 for the DuckDB oracle hash-compare and for run-to-run stability at scale).
-
-Over a pip_join result (zone ``zone_value``, integral values) the
-aggregate runs BEFORE the join's refine UDF (aggregate-then-resolve, as
-GeoBlocks pre-aggregates interior cells and refines only boundary ones):
-rows the covering table resolves group by feature, rows that need the
-exact test group by point, and only those partial rows reach Python.
-The partials then regroup by zone on one partition. Integral values keep
-the re-added double partial sums exact (below 2^53), so every statistic
-equals the one-aggregate plan's bit for bit.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegralType
-
-from .pip_join import IS_PY, JVM_FEATURE, Refine, pre_refine
 
 VALID_ZONAL_STATISTICS = ("mean", "min", "max", "std", "sum", "count")
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _stat_exprs(statistics, n, s, sd, sd2, lo, hi) -> list[Column]:
-    """The statistics over SQL aggregates: n = count(v), s = sum(v), sd =
-    sum(double v), sd2 = sum(double v * double v), lo/hi = min/max(v)."""
-    sql = {
-        "mean": f"{sd} / {n}",
-        "min": lo,
-        "max": hi,
-        # population std from exact sums (deterministic expression tree)
-        "std": f"sqrt({sd2} / {n} - ({sd} / {n}) * ({sd} / {n}))",
-        "sum": s,
-        "count": n,
-    }
-    return [F.expr(f"{sql[stat]} AS {stat}") for stat in statistics]
+def zonal_stat_exprs(value_col: str, statistics=VALID_ZONAL_STATISTICS) -> list[Column]:
+    bad = set(statistics) - set(VALID_ZONAL_STATISTICS)
+    if bad:
+        raise ValueError(f"One or more statistics is not supported {sorted(bad)}")
+    v = F.col(value_col)
+    vd = v.cast("double")
+    exprs = []
+    for stat in statistics:
+        if stat == "mean":
+            exprs.append((F.sum(vd) / F.count(v)).alias("mean"))
+        elif stat == "min":
+            exprs.append(F.min(v).alias("min"))
+        elif stat == "max":
+            exprs.append(F.max(v).alias("max"))
+        elif stat == "std":
+            # population std from exact sums (deterministic expression tree)
+            exprs.append(
+                F.sqrt(
+                    F.sum(vd * vd) / F.count(v)
+                    - (F.sum(vd) / F.count(v)) * (F.sum(vd) / F.count(v))
+                ).alias("std")
+            )
+        elif stat == "sum":
+            exprs.append(F.sum(v).alias("sum"))
+        elif stat == "count":
+            exprs.append(F.count(v).alias("count"))
+    return exprs
 
 
 def zonal_statistics(
@@ -63,61 +61,11 @@ def zonal_statistics(
 
     NULL values in ``value_col`` are excluded (masked-pixel semantics);
     zones with zero unmasked values never appear (reference summary.py:160-162).
-    ``df`` straight from pip_join, grouped by ``zone_value`` over an
-    integral value column, takes the aggregate-then-resolve plan.
     """
     if isinstance(zone_cols, str):
         zone_cols = [zone_cols]
-    bad = set(statistics) - set(VALID_ZONAL_STATISTICS)
-    if bad:
-        raise ValueError(f"One or more statistics is not supported {sorted(bad)}")
-    r = pre_refine(df) if zone_cols == ["zone_value"] else None
-    if r is not None:
-        field = next((f for f in r.pre.schema.fields if f.name == value_col), None)
-        if field is not None and isinstance(field.dataType, IntegralType):
-            return _aggregate_then_resolve(r, value_col, statistics)
-    v = _quote(value_col)
-    vd = f"CAST({v} AS DOUBLE)"
-    exprs = _stat_exprs(
-        statistics, f"count({v})", f"sum({v})", f"sum({vd})", f"sum({vd} * {vd})",
-        f"min({v})", f"max({v})",
-    )
-    return df.filter(F.col(value_col).isNotNull()).groupBy(*zone_cols).agg(*exprs)
-
-
-def _aggregate_then_resolve(r: Refine, value_col: str, statistics) -> DataFrame:
-    """zonal_statistics of a pip_join result, aggregated before its refine.
-
-    Plan: Scan → BHJ → partial agg → Exchange → final agg →
-    ArrowEvalPython → Coalesce 1 → agg by zone. The first aggregate keys
-    resolved rows on their feature and exact-test rows on (lon, lat,
-    fine cell), so the UDF sees one row per distinct boundary point plus
-    one per resolved feature and one for the rest. coalesce(1) sits above the UDF because
-    ArrowEvalPython does not report its child's SinglePartition: below
-    it, the zone aggregate would add a second Exchange. Five DataFrame
-    calls over SQL-text columns: each call pays an analysis pass (10-30
-    ms on local[4]) and each Column node a py4j round trip.
-    """
-    v = _quote(value_col)
-    vd = f"CAST({v} AS DOUBLE)"
-    keys = {"_lon": _quote(r.lon_col), "_lat": _quote(r.lat_col), "_pcf": "_cf"}
-    part = r.pre.groupBy(
-        F.expr(f"CASE WHEN NOT {IS_PY} THEN {JVM_FEATURE} END AS _jf"),
-        *[F.expr(f"CASE WHEN {IS_PY} THEN {c} END AS {k}") for k, c in keys.items()],
-    ).agg(*[F.expr(e) for e in (
-        f"count({v}) AS _n", f"sum({v}) AS _s", f"sum({vd}) AS _sd",
-        f"sum({vd} * {vd}) AS _sd2", f"min({v}) AS _lo", f"max({v}) AS _hi",
-    )]).withColumn("_raw", r.winner(*keys))
-    feature = "coalesce(_jf, CASE WHEN _raw >= 0 THEN _raw END)"
-    keep = "_n > 0"  # a group whose values are all NULL adds nothing
-    if r.how == "inner":
-        keep += f" AND {feature} IS NOT NULL"
-    zones = part.filter(keep).coalesce(1).groupBy(
-        r.value_map[F.expr(feature)].alias("zone_value")
-    )
-    return zones.agg(*_stat_exprs(
-        statistics, "sum(_n)", "sum(_s)", "sum(_sd)", "sum(_sd2)", "min(_lo)", "max(_hi)"
-    ))
+    filtered = df.filter(F.col(value_col).isNotNull())
+    return filtered.groupBy(*zone_cols).agg(*zonal_stat_exprs(value_col, statistics))
 
 
 def weighted_statistics(df: DataFrame, value_col: str, weight_col: str) -> DataFrame:

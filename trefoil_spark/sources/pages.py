@@ -93,6 +93,16 @@ def pages_cte_sql(
     """
 
 
+# Reps per cross-joined row of build_pages_scaled. The nested-loop join
+# emits all documents x chunk rows of one streamed row in one codegen
+# call, and when the stage ends in a non-codegen operator (pip_join's
+# Arrow refine) each is copied into a buffer first. One chunk per
+# partition buffered the whole partition: on zonal-pages the driver
+# JVM's old generation grew to 1.15 GB and young GCs took 3.3 s per 35 s,
+# against 0.55 GB and 0.9 s with chunks of 10 (local[4], 2 GB heap).
+SCALE_CHUNK = 10
+
+
 def build_pages_scaled(
     spark: SparkSession, sf_dir: str, factor: int, res: int = DEFAULT_RES
 ) -> DataFrame:
@@ -107,12 +117,12 @@ def build_pages_scaled(
     build_pages'.
 
     The expansion is a cross join of the small documents side with one
-    row per partition, then ``explode(sequence(...))`` of that
-    partition's chunk of reps: the join emits 5000 x partitions rows and
-    the generator the rest, where a join against ``range(factor)`` built
-    all 2M rows in a broadcast nested-loop join (``sum(length(text))``
-    over 5000 docs x 400 on local[4]: 1.04-1.13 s → 0.37-0.38 s, median
-    of 6 warm runs).
+    row per chunk of at most ``SCALE_CHUNK`` reps, then
+    ``explode(sequence(...))`` of that chunk: the join emits 5000 x 40
+    rows and the generator the rest, where a join against
+    ``range(factor)`` built all 2M rows in a broadcast nested-loop join
+    (``sum(length(text))`` over 5000 docs x 400 on local[4], median of 6
+    warm runs: 0.97-1.13 s → 0.44 s).
     """
     def build():
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -120,10 +130,11 @@ def build_pages_scaled(
         # ArrowEvalPython refine whose per-TASK Python round-trip dominated
         # at 4 tasks/core (measured 1.98 s → 0.92 s on the 2M-row bench
         # shape); `defaultParallelism` tracks cluster size, so the choice
-        # stays scale-adaptive. Chunks of ceil(factor / par) reps make
-        # every partition's sequence non-empty and ascending.
+        # stays scale-adaptive. Chunks of at most ceil(factor / par) reps
+        # keep every partition busy and every sequence non-empty and
+        # ascending.
         par = min(factor, spark.sparkContext.defaultParallelism)
-        chunk = -(-factor // par)
+        chunk = min(-(-factor // par), SCALE_CHUNK)
         nparts = -(-factor // chunk)
         parts = spark.range(0, nparts, numPartitions=par)
         lo, hi = f"id * {chunk}", f"least(id * {chunk} + {chunk}, {factor}) - 1"
