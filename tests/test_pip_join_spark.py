@@ -11,7 +11,6 @@ from trefoil_spark.operators.pip_join import (
     BOUNDARY,
     _covering_rows,
     build_covering_index,
-    cell_col,
     pip_join,
 )
 from trefoil_spark.operators.zonal import zonal_statistics
@@ -57,9 +56,6 @@ def test_cell_col_matches_sql_and_numpy(pages, duck):
         got["lat"].to_numpy(), got["lon"].to_numpy(), 7
     )
     assert np.array_equal(got["cell"].to_numpy(), expected)
-    # and the Column-builder variant equals the SQL-text variant
-    df2 = pages.withColumn("cell2", cell_col("lon", "lat", 7))
-    assert df2.filter(F.col("cell") != F.col("cell2")).count() == 0
 
 
 def test_covering_rows_slot_arithmetic():

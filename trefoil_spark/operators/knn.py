@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..grid import cells as _cells
-from .pip_join import cell_col
 
 
 def sq_dist(qlon, qlat, plon, plat) -> Column:
@@ -146,7 +145,6 @@ def knn_join_adaptive(
     lat_col: str = "lat",
     res: int = 7,
     max_ring: int = 8,
-    timings: list | None = None,
     metrics: dict | None = None,
 ) -> DataFrame:
     """Complete grid kNN via ring EXPANSION (SURVEY.md §4.2 item 4).
@@ -168,7 +166,9 @@ def knn_join_adaptive(
     driver, so 10⁸-query workloads are fine. Per-iteration results are
     localCheckpoint-ed (eager) — that both materializes the ≤k·|remaining|
     rows once (each feeds two consumers) and truncates the iterative
-    lineage.
+    lineage. Each eager checkpoint runs its own Spark jobs, so the
+    per-job durations that ``tools/profile_layers.py`` prints split the
+    time ring by ring.
 
     ``metrics`` (optional dict, mutated in place) makes the operator
     report its own worst case — essential observability at 100 TB where
@@ -185,19 +185,13 @@ def knn_join_adaptive(
     cell_w_deg = 360.0 / n
     guarantee_unit = min(cell_h_deg, cell_w_deg)
 
-    import time as _time
-
     remaining = queries
     results = []
     ring = 1
     while True:
-        _t0 = _time.perf_counter()
         got = knn_join_cells(
             points, remaining, k, id_col, lon_col, lat_col, res, ring
         ).localCheckpoint(eager=True)
-        if timings is not None:  # probe hook (tools/bench_knn_rings.py)
-            timings.append(("ring_%d_knn" % ring, _time.perf_counter() - _t0))
-            _t0 = _time.perf_counter()
         if ring >= max_ring:
             results.append(got)
             if metrics is not None:
@@ -241,8 +235,6 @@ def knn_join_adaptive(
             remaining[id_col] == done_q["query_id"],
             "left_anti",
         ).localCheckpoint(eager=True)
-        if timings is not None:
-            timings.append(("ring_%d_guard" % ring, _time.perf_counter() - _t0))
         if metrics is not None:
             n_rem = remaining.count()
             metrics.setdefault("escalated_per_ring", {})[ring] = n_rem

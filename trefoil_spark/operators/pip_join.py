@@ -34,7 +34,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -45,17 +45,6 @@ DEFAULT_RES = 9
 DEFAULT_FINE_RES = 14
 SLOTS = 4 ** (DEFAULT_FINE_RES - DEFAULT_RES)  # fine cells per coarse cell
 BOUNDARY = -2  # covering sentinel: cell needs the exact per-point test
-
-
-def cell_col(lon_col: str = "lon", lat_col: str = "lat", res: int = DEFAULT_RES) -> Column:
-    """qcell id as a pure Catalyst expression (JVM-side, codegen-friendly).
-
-    r8: ONE spread-bits SQL expression instead of a 2·res-step Column
-    loop — the loop cost ~0.25 s of py4j round trips per plan build and
-    2× the per-row work (bench: 0.20 s → 0.11 s per 20M rows; value
-    parity with the per-bit form asserted in tests/test_cells.py).
-    """
-    return F.expr(cells.cell_fast_sql(lon_col, lat_col, res))
 
 
 def _segments_intersect_boxes(rings, bx0, by0, bx1, by1) -> np.ndarray:
