@@ -151,9 +151,9 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 A1: zonal statistics {mean,min,max,std,sum,count} over the
     PIP-join result — the flagship zonal-stats pipeline (one shuffle).
-    The wide text column is reduced to n_chars BEFORE the UDF-bearing
-    join: every column alive across an ArrowEvalPython node is buffered
-    JVM-side while awaiting Python results."""
+    The wide text column is reduced to n_chars BEFORE the join: every
+    column alive across pip_join's refine Project (which does not
+    codegen) is copied out of the scan stage per row."""
     slim = _pages(spark, sf_dir).select(
         "lat", "lon", F.length("text").cast("bigint").alias("n_chars")
     )

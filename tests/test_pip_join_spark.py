@@ -2,11 +2,13 @@
 cross-checked against DuckDB running the SAME generated SQL formulas."""
 
 import duckdb
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from trefoil_spark.geometry import pip_sql_expr
+from trefoil_spark.geometry import Polygon, pip_sql_expr, points_in_rings
+from trefoil_spark.operators import pip_join as pip_join_mod
 from trefoil_spark.operators.pip_join import (
     BOUNDARY,
     _covering_rows,
@@ -62,7 +64,7 @@ def test_covering_rows_slot_arithmetic():
     """Every fine child lands in its parent's array at slot
     (c >> 5) & 1023, and every slot of every array is filled (no Spark)."""
     index = build_covering_index(ZONE_LAYER)
-    rows = {c: (r1, fine) for c, r1, fine in _covering_rows(index)}
+    rows = {c: (r1, fine) for c, r1, fine, _ in _covering_rows(index)}
     assert len(rows) == len(index["coarse"])
     filled = {}
     for c, r in index["fine"]:
@@ -79,6 +81,116 @@ def test_covering_rows_slot_arithmetic():
         else:
             assert (r1, fine) == (r, None)
     assert len(filled) == 94 and len(index["fine"]) == 94 * 1024
+
+
+def _star_layer() -> list[Polygon]:
+    """A 500-vertex star with a rectangular hole and a few horizontal
+    edges, and a higher fid overlapping its east arms (burn order)."""
+    cx, cy = -100.1234567, 40.4567891
+    ang = np.arange(500) * (2 * np.pi / 500) + 0.0123
+    rad = np.where(np.arange(500) % 2 == 0, 2.01234, 1.20987)
+    x, y = cx + rad * np.cos(ang), cy + 0.8 * rad * np.sin(ang)
+    y[1:500:50] = y[0:500:50]  # ten horizontal edges
+    hole = [(cx - 0.31234, cy - 0.21234), (cx + 0.29876, cy - 0.21234),
+            (cx + 0.29876, cy + 0.18765), (cx - 0.31234, cy + 0.18765)]
+    over = [(cx + 0.51234, cy - 1.01234), (cx + 2.61234, cy - 1.01234),
+            (cx + 2.61234, cy + 0.71234), (cx + 1.31234, cy + 1.41234)]
+    return [
+        Polygon([np.column_stack([x, y]), hole], value="star"),
+        Polygon([over], value="over"),
+    ]
+
+
+def _star_points(layer):
+    """Every vertex, edge midpoint and quarter point of each horizontal
+    edge, NULL coordinates, and random points over the layer."""
+    xs, ys = [], []
+    for poly in layer:
+        for r in poly.rings:
+            nxt = np.roll(r, -1, axis=0)
+            flat = r[:, 1] == nxt[:, 1]
+            xs += [r[:, 0], (r[:, 0] + nxt[:, 0]) / 2]
+            ys += [r[:, 1], (r[:, 1] + nxt[:, 1]) / 2]
+            for t in (0.25, 0.75):
+                xs.append(r[flat, 0] + t * (nxt[flat, 0] - r[flat, 0]))
+                ys.append(r[flat, 1])
+    rng = np.random.default_rng(7)
+    xs.append(rng.uniform(-102.6, -97.2, 20000))
+    ys.append(rng.uniform(38.6, 42.3, 20000))
+    lon, lat = np.concatenate(xs), np.concatenate(ys)
+    # burn order, as the engine resolves it: the highest containing fid
+    want = np.full(lon.size, -1)
+    for fid in reversed(range(len(layer))):
+        hit = (want < 0) & points_in_rings(lon, lat, layer[fid].rings)
+        want[hit] = fid
+    rows = [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lon, lat))]
+    n = len(rows)
+    rows += [(n, None, 40.0), (n + 1, -100.0, None), (n + 2, None, None)]
+    want = [None if w < 0 else int(w) for w in want] + [None] * 3
+    return rows, want
+
+
+@pytest.fixture(scope="module")
+def star():
+    layer = _star_layer()
+    rows, want = _star_points(layer)
+    return layer, rows, want
+
+
+def _check_star(spark, layer, rows, want, how, lon="lon", lat="lat"):
+    points = spark.createDataFrame(rows, f"id bigint, {lon} double, {lat} double")
+    got = pip_join(points, layer, lon_col=lon, lat_col=lat, how=how)
+    got = got.select("id", "feature_id", "zone_value").orderBy("id").collect()
+    expect = [(i, w) for i, w in enumerate(want) if how == "left" or w is not None]
+    assert [(r.id, r.feature_id) for r in got] == expect
+    assert [r.zone_value for r in got] == [
+        None if w is None else layer[w].value for _, w in expect
+    ]
+
+
+@pytest.mark.parametrize("how", ["inner", "left"])
+def test_pip_join_exact_on_complex_layer(spark, star, how):
+    """Row by row equal to burn-order points_in_rings, with points on
+    vertices, edge midpoints and horizontal edges, under the session's
+    default ANSI setting."""
+    layer, rows, want = star
+    assert 0 < sum(w == 1 for w in want) < sum(w is not None for w in want)
+    _check_star(spark, layer, rows, want, how)
+
+
+def test_pip_join_coordinate_columns_named_like_lambda_variables(spark, star):
+    layer, rows, want = star
+    _check_star(spark, layer, rows, want, "left", lon="p", lat="s")
+
+
+def _edge_count(rows) -> int:
+    return sum(len(e) for *_, cand in rows if cand for _, e in cand)
+
+
+def test_edge_pruning_is_exact_and_shrinks_the_table(spark, star, monkeypatch):
+    """Pruning each boundary cell's edges to its latitude band gives the
+    same answers as carrying every edge, with several times fewer edges."""
+    layer, rows, want = star
+    index = build_covering_index(layer)
+    pruned = _edge_count(_covering_rows(index))
+    _check_star(spark, layer, rows, want, "left")
+    monkeypatch.setattr(
+        pip_join_mod, "_lat_band",
+        lambda c, res, fine_res: (np.full(len(c), -np.inf), np.full(len(c), np.inf)),
+    )
+    full = _edge_count(_covering_rows(index))
+    assert full >= 4 * pruned > 0, (full, pruned)
+
+    def evict():  # the next pip_join rebuilds the session's table
+        memo = index.pop("_session_df", None)
+        if memo is not None:
+            memo[1].unpersist()
+
+    evict()
+    try:
+        _check_star(spark, layer, rows, want, "left")
+    finally:
+        evict()
 
 
 @pytest.mark.parametrize("how", ["inner", "left"])

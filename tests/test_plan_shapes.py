@@ -7,6 +7,7 @@ map-side partial aggregation.
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,10 +42,23 @@ def test_pip_join_plan_zero_shuffles(spark, pages_parquet):
     for line in plan.splitlines():
         if "Exchange" in line and "BroadcastExchange" not in line:
             raise AssertionError(f"unexpected shuffle in PIP join plan: {line}")
-    # one physical path: a single Arrow refine pass over one scan, no
-    # interior/boundary union branches
-    assert plan.count("ArrowEvalPython") == 1, plan
+    # one physical path over one scan, no interior/boundary union
+    # branches, and the exact refine runs in the JVM
+    assert plan.count("ArrowEvalPython") == 0, plan
+    assert "BatchEvalPython" not in plan, plan
     assert "Union" not in plan, plan
+    lines = plan.splitlines()
+    refine = [i for i, l in enumerate(lines) if "Project" in l and "aggregate(" in l]
+    assert len(refine) == 1, plan
+    # the inner filter stays above the refine Project (not pushed below
+    # it, which would inline the slot read and the refine into the filter)
+    filters = [i for i, l in enumerate(lines) if "Filter isnotnull(feature_id#" in l]
+    assert len(filters) == 1 and filters[0] < refine[0], plan
+    # the refine Project's input (the next line) no longer carries the
+    # 1,024-slot fine array, only the slot read from it
+    child = lines[refine[0] + 1]
+    assert "Project" in child and " AS r2#" in child, plan
+    assert not re.search(r"(\[|, )fine#\d+(,|\])", child), child
 
 
 def test_zonal_pipeline_single_shuffle(spark, pages_parquet):

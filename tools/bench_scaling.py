@@ -61,9 +61,9 @@ spark.sparkContext.setLogLevel("ERROR")
 
 def flagship():
     pages = spark.read.parquet(path)
-    # project the expensive column BEFORE the UDF-bearing operator: every
-    # column alive across an ArrowEvalPython node is buffered JVM-side
-    # while awaiting Python results — carry 4 bytes, not 350
+    # project the expensive column BEFORE the join: every column alive
+    # across pip_join's refine Project (which does not codegen) is copied
+    # out of the scan stage per row — carry 4 bytes, not 350
     slim = pages.select("lat", "lon", F.length("text").alias("n_chars"))
     joined = pip_join(slim, ZONE_LAYER)
     return zonal_statistics(joined, "zone_value", "n_chars")

@@ -15,28 +15,29 @@ Physical strategy (scale-first, one plan):
    point mass through the exact test.
 2. **One broadcast hash join** on the coarse cell: a coarse cell's fine
    children are one block of 4^(fine_res−res) Morton codes, so a boundary
-   coarse row carries its fine level as one array. The point side derives
-   fine cell, coarse cell and array slot with pure Catalyst integer
-   expressions — whole-stage codegen, no shuffle.
+   coarse row carries its fine level as one array, and its candidate
+   polygons' ring edges as data. The point side derives fine cell, coarse
+   cell and array slot with pure Catalyst integer expressions —
+   whole-stage codegen, no shuffle.
 3. **JVM resolution ladder**: rows in resolved cells (either level) get
    their feature_id from the broadcast row or its array slot.
-4. **Exact refine** in one Arrow-batched pandas UDF running the chunked
-   vectorized even-odd crossing test, burn order resolved in-UDF
-   (highest feature_id wins = GDAL rasterize overwrite order). Every row
-   rides the Arrow pipe, but only fine-boundary rows carry a cell; the
-   rest pass NULL and cost the UDF no math.
+4. **Exact refine** in the JVM: one SQL ``aggregate`` over the cell's
+   candidates, highest feature_id first (= GDAL rasterize overwrite
+   order), with an inner ``aggregate`` of the even-odd crossing test over
+   each candidate's edges — the expression tree of ``points_in_rings``
+   and ``pip_sql_expr``, so membership is bit-identical. Only
+   fine-boundary rows evaluate it.
 
-Plan: Scan → codegen cell exprs → BHJ → ArrowEvalPython → ladder
-projection. Zero shuffles, one scan.
+Plan: Scan → codegen cell exprs → BHJ → codegen slot read → refine
+Project (interpreted: higher-order functions do not codegen) → ladder.
+Zero shuffles, one scan, no Python worker.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
 
 from ..geometry import Polygon, points_in_rings
 from ..grid import cells
@@ -123,23 +124,23 @@ def build_covering_index(
 
     ``fine_res`` must be strictly finer than ``res`` (an equal or coarser
     fine level would make the fine index empty, silently dropping every
-    boundary point), and ≤ 24: fine cell ids pass through a float64
-    na_value round-trip in the winner UDF, and 2·24+6 = 54 bits is the
-    last size exactly representable in a double's 53-bit mantissa.
+    boundary point), and ≤ 24: a fine cell there is 180°/2^24 ≈ 1e-5° of
+    latitude, and a finer covering resolves nothing that the exact refine
+    does not, while each boundary coarse cell carries 4^(fine_res − res)
+    slots.
 
     Returns dict with:
       coarse: [(cell, fids_desc, resolved|None)]   (None = boundary)
       fine:   [(cell, resolved|None)]              (children of boundary
                coarse cells at fine_res; None = still boundary)
-      fine_fids: {fine_cell: fids_desc} for boundary fine cells (UDF map)
       rings_by_fid: {fid: rings}
     """
     if not res < fine_res <= 24:
         raise ValueError(
             f"require res < fine_res <= 24 (got res={res}, fine_res={fine_res}): "
             "fine_res == res would produce an empty fine index (boundary "
-            "points silently unresolved); fine_res > 24 would corrupt cell "
-            "ids in the winner UDF's float64 round-trip"
+            "points silently unresolved); fine_res > 24 is finer than the "
+            "covering ever needs to be"
         )
     key = (
         res,
@@ -175,7 +176,6 @@ def build_covering_index(
     # subdivide boundary coarse cells to fine_res
     steps = fine_res - res
     fine: list[tuple[int, int | None]] = []
-    fine_fids: dict[int, list[int]] = {}
     b_idx = np.flatnonzero(is_boundary)
     if steps > 0 and b_idx.size:
         per = 1 << steps
@@ -192,21 +192,15 @@ def build_covering_index(
         parent_row = np.repeat(b_idx, per * per)
         f_cand = cand[:, parent_row]  # candidates inherited from parent
         f_resolved, f_boundary = _classify_cells(polygons, f_cells, f_cand)
-        for i, fc in enumerate(f_cells.tolist()):
-            if f_boundary[i]:
-                fine.append((fc, None))
-                parent_fids = sorted(
-                    np.flatnonzero(cand[:, parent_row[i]]).tolist(), reverse=True
-                )
-                fine_fids[fc] = parent_fids
-            else:
-                fine.append((fc, int(f_resolved[i])))
+        fine = [
+            (fc, None if b else int(r))
+            for fc, b, r in zip(f_cells.tolist(), f_boundary.tolist(), f_resolved.tolist())
+        ]
 
     rings_by_fid = {fid: [r.copy() for r in poly.rings] for fid, poly in enumerate(polygons)}
     out = {
         "coarse": coarse,
         "fine": fine,
-        "fine_fids": fine_fids,
         "rings_by_fid": rings_by_fid,
         "res": res,
         "fine_res": fine_res,
@@ -215,128 +209,124 @@ def build_covering_index(
     return out
 
 
-def _covering_rows(index: dict) -> list[tuple]:
-    """(c1, r1, fine) rows of the broadcast covering table.
+def _edges(rings) -> np.ndarray:
+    """(n, 4) x1, y1, x2, y2 of every non-horizontal ring edge.
 
-    r1: winner, -1 (outside) or BOUNDARY. fine: None unless c1 is a
-    boundary cell; then slot ``(c >> 5) & (slots - 1)`` holds fine child
-    c's winner, -1 or BOUNDARY. Slots are placed by that arithmetic, not
-    by position: ``index["fine"]`` is enumerated y-outer, x-inner.
+    A horizontal edge never straddles a point's latitude, and dropping
+    it keeps a zero ``y2 - y1`` (an ANSI division error) out of the
+    refine.
     """
-    steps = index["fine_res"] - index["res"]
+    e = np.vstack([np.hstack([r, np.roll(r, -1, axis=0)]) for r in rings])
+    return e[e[:, 1] != e[:, 3]]
+
+
+def _lat_band(cell_ids: np.ndarray, res: int, fine_res: int):
+    """(lo, hi) latitude band of each cell, widened by one fine cell.
+
+    Every point the ladder assigns to a cell lies in its band: the cell
+    arithmetic is off by float rounding at most, far below a fine cell.
+    The grid's first and last rows are open-ended, because latitudes
+    outside [-90, 90] (and ±inf) clamp into them.
+    """
+    lat0, _, dlat, _ = cells.cell_to_latlon(cell_ids)
+    _, iy = cells.cell_to_xy(cell_ids)
+    pad = 180.0 / (1 << fine_res)
+    lo = np.where(iy == 0, -np.inf, lat0 - pad)
+    hi = np.where(iy == (1 << res) - 1, np.inf, lat0 + dlat + pad)
+    return lo, hi
+
+
+def _covering_rows(index: dict) -> list[tuple]:
+    """(c1, r1, fine, cand) rows of the broadcast covering table.
+
+    r1: winner, -1 (outside) or BOUNDARY. fine and cand are None unless
+    c1 is a boundary cell. Then slot ``(c >> 5) & (slots - 1)`` of fine
+    holds fine child c's winner, -1 or BOUNDARY (slots are placed by that
+    arithmetic, not by position: ``index["fine"]`` is enumerated y-outer,
+    x-inner), and cand lists the cell's candidate polygons highest fid
+    first (burn order), each with the edges the refine tests: those of
+    ``_edges`` whose y-range meets the cell's ``_lat_band``. An edge
+    entirely above or below every point of the cell never straddles, so
+    the pruning is exact, and a candidate left with no edge is dropped.
+    """
+    res, fine_res = index["res"], index["fine_res"]
+    steps = fine_res - res
     morton = np.array([c for c, _ in index["fine"]], dtype=np.int64) >> 5
-    parents, row = np.unique(((morton >> 2 * steps) << 5) + index["res"], return_inverse=True)
+    parents, row = np.unique(((morton >> 2 * steps) << 5) + res, return_inverse=True)
     arrays = np.full((parents.size, 1 << 2 * steps), BOUNDARY, dtype=np.int32)
     arrays[row, morton & ((1 << 2 * steps) - 1)] = [
         BOUNDARY if r is None else r for _, r in index["fine"]
     ]
     fine = dict(zip(parents.tolist(), arrays.tolist()))
-    return [(c, BOUNDARY if r is None else r, fine.get(c)) for c, _, r in index["coarse"]]
+    band = dict(zip(parents.tolist(), zip(*_lat_band(parents, res, fine_res))))
+    edges = {fid: _edges(rings) for fid, rings in index["rings_by_fid"].items()}
+
+    rows = []
+    for c, fids, r in index["coarse"]:
+        if r is not None:
+            rows.append((c, r, None, None))
+            continue
+        lo, hi = band[c]
+        cand = []
+        for fid in fids:
+            e = edges[fid]
+            e = e[(np.maximum(e[:, 1], e[:, 3]) >= lo) & (np.minimum(e[:, 1], e[:, 3]) <= hi)]
+            if len(e):
+                cand.append((fid, e.tolist()))
+        rows.append((c, BOUNDARY, fine[c], cand))
+    return rows
+
+
+COVERING_SCHEMA = (
+    "c1 bigint, r1 bigint, fine array<int>, "
+    "cand array<struct<fid: bigint, e: array<struct<x1: double, y1: double, x2: double, y2: double>>>>"
+)
 
 
 def _session_memo(spark: SparkSession, index: dict, polygons: list[Polygon]):
-    """(covering table, winner UDF, feature_id -> value map) for this
+    """(broadcast covering table, feature_id -> value map) for this
     session, memoized.
 
     The index is a pure function of the polygon layer (values included),
     so the table is uploaded and persisted once and each query's
-    broadcast build reads the cached block; the UDF is built (and
-    pickled on first use) once, the map Column too.
-    The memo is the index's one per-session entry, keyed on the session
-    object: newSession()s share one applicationId but each has its own
-    SQL conf. A new session rebuilds all three (the UDF's JVM function
-    binds to the live SparkContext) and unpersists the table it evicts;
-    a ~300-row re-upload is cheap.
+    broadcast build reads the cached block; the broadcast hint and the
+    map Column are built once too. The memo is the index's one
+    per-session entry, keyed on the session object: newSession()s share
+    one applicationId but each has its own SQL conf. A new session
+    rebuilds the entry and unpersists the table it evicts; a ~300-row
+    re-upload is cheap.
 
-    r1 uses an INTEGER SENTINEL (BOUNDARY) instead of NULL: nullable ints
-    round-tripped through pandas turn into DOUBLE NaN when the session
-    has arrow.pyspark.enabled=false (NaN is not NULL → silently corrupts
-    the resolution ladder and then explodes under ANSI casts), and NULL
-    keeps the one meaning the left join gives it: no covering cell.
+    r1 uses an INTEGER SENTINEL (BOUNDARY) instead of NULL, so NULL keeps
+    the one meaning the left join gives it: no covering cell.
     """
     memo = index.get("_session_df")
     if memo is not None:
         if memo[0] is spark:
-            return memo[1:]
+            return memo[2:]
         if memo[0].sparkContext is spark.sparkContext:  # else already gone
             memo[1].unpersist()
     # coalesce(1): one task per broadcast build, not defaultParallelism
-    df = spark.createDataFrame(
-        _covering_rows(index), "c1 bigint, r1 bigint, fine array<int>"
-    ).coalesce(1).persist()
-    winner = _make_winner_udf(index)
+    df = spark.createDataFrame(_covering_rows(index), COVERING_SCHEMA).coalesce(1).persist()
     value_map = F.create_map(
         *[x for fid, poly in enumerate(polygons) for x in (F.lit(fid), F.lit(str(poly.value)))]
     )
-    index["_session_df"] = (spark, df, winner, value_map)
-    return df, winner, value_map
+    index["_session_df"] = (spark, df, F.broadcast(df), value_map)
+    return index["_session_df"][2:]
 
 
-def _make_winner_udf(index: dict):
-    """Vectorized pandas UDF: (lon, lat, fine_cell) -> feature_id|null.
-
-    r8: rows are grouped per distinct CANDIDATE FID LIST, not per
-    distinct fine cell. A point's exact tests depend only on its cell's
-    (burn-ordered) candidate list, and the number of distinct lists is
-    bounded by polygon-overlap combinations (a handful) while distinct
-    boundary cells number in the hundreds per batch — the per-cell loop
-    paid points_in_rings' fixed numpy setup ~800x per batch for ~500
-    boundary rows (measured 35-130 ms/batch; now ~#groups x #fids
-    calls). The cell -> group mapping is two sorted int64 arrays built
-    once per index (vectorized searchsorted lookup, no per-row Python);
-    per-point test order (descending fid burn order within the point's
-    list) is unchanged, so results are identical.
-    """
-    rings_by_fid = index["rings_by_fid"]
-    groups = index.get("_fid_groups")
-    if groups is None:
-        cell_fids = index["fine_fids"]
-        gid_by_list: dict[tuple, int] = {}
-        group_fids: list[tuple] = []
-        keys = np.empty(len(cell_fids), dtype=np.int64)
-        gids = np.empty(len(cell_fids), dtype=np.int64)
-        for i, (c, fids) in enumerate(cell_fids.items()):
-            t = tuple(fids)
-            g = gid_by_list.get(t)
-            if g is None:
-                g = gid_by_list[t] = len(group_fids)
-                group_fids.append(t)
-            keys[i] = c
-            gids[i] = g
-        order = np.argsort(keys)
-        groups = index["_fid_groups"] = (keys[order], gids[order], group_fids)
-    cell_keys, cell_gids, group_fids = groups
-
-    @F.pandas_udf(LongType())
-    def winner(lon: pd.Series, lat: pd.Series, cell: pd.Series) -> pd.Series:
-        cells_v = cell.to_numpy(dtype="float64", na_value=np.nan)
-        out = np.full(len(cells_v), -1, dtype=np.int64)
-        active = np.flatnonzero(~np.isnan(cells_v))
-        if active.size and cell_keys.size:
-            lon_v = lon.to_numpy(dtype=np.float64)
-            lat_v = lat.to_numpy(dtype=np.float64)
-            cells_i = cells_v[active].astype(np.int64)
-            pos = np.searchsorted(cell_keys, cells_i)
-            pos = np.clip(pos, 0, cell_keys.size - 1)
-            known = cell_keys[pos] == cells_i  # guard: unknown cell -> -1
-            g = np.where(known, cell_gids[pos], -1)
-            for gid in np.unique(g[g >= 0]).tolist():
-                idx = active[g == gid]
-                for fid in group_fids[gid]:  # descending = burn order
-                    if idx.size == 0:
-                        break
-                    inside = points_in_rings(lon_v[idx], lat_v[idx], rings_by_fid[fid])
-                    out[idx[inside]] = fid
-                    idx = idx[~inside]
-        # plain int64 with -1 = no match: an object series with Nones
-        # degrades to NaN doubles when the session runs the non-Arrow UDF
-        # serializer (arrow.pyspark.enabled=false), silently corrupting
-        # results — the NULL translation happens JVM-side instead
-        return pd.Series(out)
-
-    # deterministic in fact, but marked otherwise so Catalyst doesn't
-    # duplicate the (expensive) UDF when pushing filters through projects
-    return winner.asNondeterministic()
+# Exact refine over a boundary row's cand: the first candidate (highest
+# fid) with odd crossing parity wins, else NULL. The point rides in the
+# accumulator (p.x, p.y), so the lambdas reference no column and a lon or
+# lat column named like a lambda variable cannot be shadowed by it. The
+# crossing test is the tree of points_in_rings / pip_sql_expr.
+REFINE_SQL = (
+    "aggregate(cand, named_struct('x', {lon}, 'y', {lat}, 'fid', CAST(-1 AS BIGINT)), "
+    "(p, c) -> CASE WHEN p.fid < 0 AND aggregate(c.e, false, (odd, s) -> odd != ("
+    "((s.y1 > p.y) != (s.y2 > p.y)) "
+    "AND (p.x < (s.x2 - s.x1) * (p.y - s.y1) / (s.y2 - s.y1) + s.x1))) "
+    "THEN named_struct('x', p.x, 'y', p.y, 'fid', c.fid) ELSE p END, "
+    "p -> CASE WHEN p.fid >= 0 THEN p.fid END)"
+)
 
 
 def pip_join(
@@ -349,15 +339,16 @@ def pip_join(
     """Join points to the polygon layer; adds ``feature_id`` + ``zone_value``.
 
     Zero-shuffle; interior cells resolve JVM-side at two index levels;
-    only fine-boundary rows (measured 0.83% on the flagship layer) need
-    the exact test, which the Arrow-batched ``winner`` UDF runs with
-    per-candidate-list pruning (scales to arbitrarily complex layers).
+    only fine-boundary rows (measured 0.83% on the flagship layer) run
+    the exact test, against the candidate edges their covering row
+    carries (pruned to the cell's latitude band, so complex layers keep
+    a small broadcast).
 
     Points matching no polygon are dropped under ``how='inner'``
     (reference zone-raster fill semantics) or kept with nulls under 'left'.
     """
     index = build_covering_index(polygons)
-    cov, winner, value_map = _session_memo(points.sparkSession, index, polygons)
+    cov, value_map = _session_memo(points.sparkSession, index, polygons)
 
     # compute the integer coords ONCE as columns; the spread-bits morton
     # references them several times and CollapseProject declines to inline
@@ -370,42 +361,42 @@ def pip_join(
     # coarse cell (the join key) and array slot: the high and low bits of
     # the fine Morton code (bits 5+ of a cell id; the low 5 hold its res)
     coarse = f"shiftleft(shiftrightunsigned(_cf, {5 + 2 * (DEFAULT_FINE_RES - DEFAULT_RES)}), 5)"
-    slot = f"CAST(shiftrightunsigned(_cf, 5) & {SLOTS - 1} AS INT) + 1"
+    r2 = f"element_at(fine, CAST(shiftrightunsigned(_cf, 5) & {SLOTS - 1} AS INT) + 1)"
+    # Still in the scan stage (codegen): read the slot, and keep cand on
+    # boundary rows only. The refine Project below cannot codegen
+    # (higher-order functions), so every column it reads is copied out of
+    # this stage per row: it must see neither the 1,024-slot fine array
+    # nor the edges of rows that need no test.
     joined = pts.join(
-        F.broadcast(cov), on=F.expr(f"{coarse} + {DEFAULT_RES}") == cov["c1"], how="left"
-    ).withColumn("r2", F.expr(f"element_at(fine, {slot})"))
+        cov, on=F.expr(f"{coarse} + {DEFAULT_RES}") == cov["c1"], how="left"
+    ).withColumns({
+        "r2": F.expr(r2),
+        "cand": F.expr(f"CASE WHEN {r2} = {BOUNDARY} THEN cand END"),
+    })
 
-    # resolution ladder (pure JVM; SQL text, one parse instead of a py4j
-    # call per Column node): coarse-resolved → fine-resolved → refine
-    # (r2 is non-NULL only in boundary coarse cells)
-    jvm_feature = "CASE WHEN r1 >= 0 THEN r1 WHEN r2 >= 0 THEN r2 END"
-    is_py = f"coalesce(r2 = {BOUNDARY}, false)"
-
-    # Single pass on purpose: every row rides the Arrow pipe, and
-    # non-boundary rows pass a NULL cell so the UDF does no math for them.
-    # Splitting boundary rows into their own union branch (interior rows
-    # never touch Arrow) measured slower on 2M-row zonal-pages
-    # (op_s.p50 3.42-3.99 s single-pass vs 3.66-4.51 s split) and on the
-    # interactive closed loop (1.11-1.26 s vs 1.51-1.83 s; perfbench on
-    # local[4], 14 s runs, seeds 101-103): the union's second pass over
-    # the input and through the broadcast join costs more than the
-    # Arrow traffic it saves. The refine stays in Python rather than a
-    # Catalyst CASE chain of crossing tests: that chain exceeds
-    # whole-stage-codegen limits and drops the whole scan stage to
-    # interpreted evaluation.
-    # The raw UDF output uses -1 for "no match"; the NULL translation is a
-    # separate JVM step (the UDF is nondeterministic-marked, so Catalyst
-    # cannot collapse/duplicate it into downstream expressions).
-    joined = joined.withColumn(
-        "_fid_raw", winner(lon_col, lat_col, F.expr(f"CASE WHEN {is_py} THEN _cf END"))
+    # resolution ladder: coarse-resolved → fine-resolved → refine (cand
+    # is non-NULL exactly on boundary rows; CASE really short-circuits, so
+    # only they pay for the test, and a union branch for boundary rows,
+    # which measured slower when the refine was an Arrow UDF, would only
+    # add a second scan). spark_partition_id() makes the Project
+    # nondeterministic: a barrier that keeps the inner filter from being
+    # pushed below it, which would inline the slot read and the refine
+    # into a non-codegen Filter and drag fine out of the scan stage
+    # (without it, zonal-pages op_s.p50 0.96 → 3.4 s and peak_rss_mb
+    # 1.7 → 2.8 GB; perfbench seed 1, local[4]).
+    feature = (
+        "CASE WHEN r1 >= 0 THEN r1 WHEN r2 >= 0 THEN r2 "
+        "WHEN cand IS NOT NULL AND spark_partition_id() >= 0 THEN "
+        f"{REFINE_SQL.format(lon=lon_col, lat=lat_col)} END"
     )
-    feature = F.expr(
-        f"CASE WHEN {is_py} THEN CASE WHEN _fid_raw >= 0 THEN _fid_raw END "
-        f"ELSE {jvm_feature} END"
+    keep = [
+        F.col("`" + c.replace("`", "``") + "`")
+        for c in points.columns
+        if c not in ("feature_id", "zone_value")
+    ]
+    joined = joined.select(*keep, F.expr(feature).alias("feature_id")).withColumn(
+        "zone_value", value_map[F.col("feature_id")]
     )
-    joined = joined.withColumns(
-        {"feature_id": feature, "zone_value": value_map[feature]}
-    ).drop("_qx", "_qy", "_cf", "c1", "r1", "fine", "r2", "_fid_raw")
     if how == "inner":
-        joined = joined.filter(F.col("feature_id").isNotNull())
+        joined = joined.filter("feature_id IS NOT NULL")
     return joined

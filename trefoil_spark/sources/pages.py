@@ -96,10 +96,11 @@ def pages_cte_sql(
 # Reps per cross-joined row of build_pages_scaled. The nested-loop join
 # emits all documents x chunk rows of one streamed row in one codegen
 # call, and when the stage ends in a non-codegen operator (pip_join's
-# Arrow refine) each is copied into a buffer first. One chunk per
-# partition buffered the whole partition: on zonal-pages the driver
-# JVM's old generation grew to 1.15 GB and young GCs took 3.3 s per 35 s,
-# against 0.55 GB and 0.9 s with chunks of 10 (local[4], 2 GB heap).
+# refine; measured when it was an Arrow UDF) each is copied into a
+# buffer first. One chunk per partition buffered the whole partition:
+# on zonal-pages the driver JVM's old generation grew to 1.15 GB and
+# young GCs took 3.3 s per 35 s, against 0.55 GB and 0.9 s with chunks
+# of 10 (local[4], 2 GB heap).
 SCALE_CHUNK = 10
 
 
@@ -126,8 +127,8 @@ def build_pages_scaled(
     """
     def build():
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # r8: one partition per core (was par*4): the pipeline ends in an
-        # ArrowEvalPython refine whose per-TASK Python round-trip dominated
+        # r8: one partition per core (was par*4): the pipeline then ended
+        # in an Arrow refine UDF whose per-TASK Python round-trip dominated
         # at 4 tasks/core (measured 1.98 s → 0.92 s on the 2M-row bench
         # shape); `defaultParallelism` tracks cluster size, so the choice
         # stays scale-adaptive. Chunks of at most ceil(factor / par) reps

@@ -8,7 +8,7 @@ and maintain running per-zone statistics. The reference's zonal stats
 Streaming expresses the continuous version natively.
 
 Batch and stream share the one pip_join plan: the JVM resolution ladder
-plus the Arrow refine UDF for fine-boundary rows, evaluated per
+plus the JVM exact refine for fine-boundary rows, evaluated per
 micro-batch. Integer-exact aggregates (count + bigint sum) make results
 order-independent and hash-comparable with the batch/DuckDB twin.
 """
