@@ -1120,7 +1120,6 @@ def q_proj_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen all-points-converge contract: any broken inverse drops n_ok
     and breaks the hash."""
     from trefoil_spark.grid import projections as pj
-    from trefoil_spark.grid.proj import transform_cols
 
     fams = [
         ("aea", "+proj=aea +lat_1=29.5 +lat_2=45.5 +lat_0=37.5 +lon_0=-96 "
@@ -1136,22 +1135,16 @@ def q_proj_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("utm", "+proj=utm +zone=15 +ellps=GRS80", -95.8, 0.8, 22.0, 6.0),
         ("webmerc", "EPSG:3857", -170.0, 45.0, -60.0, 17.0),
     ]
+    be = pj.COL()
     parts = []
     for name, crs, lon0, dlon, lat0, dlat in fams:
         pts = spark.range(64).select(
             (F.lit(lon0) + (F.col("id") % 8) * F.lit(dlon)).alias("lon"),
             (F.lit(lat0) + (F.col("id") / 8).cast("int") * F.lit(dlat)).alias("lat"),
         )
-        if name in ("aea", "webmerc"):
-            dst = crs if name == "webmerc" else crs
-            x, y = transform_cols("EPSG:4326", dst, F.col("lon"), F.col("lat"))
-            pts = pts.withColumn("x", x).withColumn("y", y)
-            lo, la = transform_cols(dst, "EPSG:4326", F.col("x"), F.col("y"))
-        else:
-            be = pj.COL()
-            x, y = pj.forward(be, crs, F.col("lon"), F.col("lat"))
-            pts = pts.withColumn("x", x).withColumn("y", y)
-            lo, la = pj.inverse(be, crs, F.col("x"), F.col("y"))
+        x, y = pj.forward(be, crs, F.col("lon"), F.col("lat"))
+        pts = pts.withColumn("x", x).withColumn("y", y)
+        lo, la = pj.inverse(be, crs, F.col("x"), F.col("y"))
         err = F.greatest(F.abs(lo - F.col("lon")), F.abs(la - F.col("lat")))
         parts.append(
             pts.select(F.lit(name).alias("family"), err.alias("err")).groupBy(
@@ -3230,11 +3223,11 @@ def _albers_area_oracle() -> str:
     """Authalic per-pixel integer areas (same Snyder q, DuckDB libm —
     floor-level agreement with numpy asserted in tests), summed per
     rasterized zone."""
-    from trefoil_spark.grid import proj as _proj
+    from trefoil_spark.grid import projections as pj
 
-    e2 = _proj.WGS84_E2
+    e2 = pj.WGS84_E2
     e = float(e2 ** 0.5)
-    k = _proj.WGS84_A ** 2 / 2.0
+    k = pj.WGS84_A ** 2 / 2.0
 
     def q(lat):
         s = f"sin(radians({lat}))"

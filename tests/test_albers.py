@@ -2,8 +2,10 @@
 
 import duckdb
 import numpy as np
+import pytest
 
 from trefoil_spark.grid import proj
+from trefoil_spark.grid import projections as pj
 from trefoil_spark.grid.bbox import BBox
 from trefoil_spark.raster.gridspec import GridSpec
 from trefoil_spark.raster.zonal import authalic_row_areas_m2, zone_true_area
@@ -19,20 +21,33 @@ def test_aea_roundtrip():
     rng = np.random.default_rng(2)
     lon = rng.uniform(-126, -112, 1000)
     lat = rng.uniform(31, 39, 1000)
-    x, y = proj.aea_forward(P4, lon, lat)
-    lon2, lat2 = proj.aea_inverse(P4, x, y)
+    x, y = proj.transform("EPSG:4326", P4, lon, lat)
+    lon2, lat2 = proj.transform(P4, "EPSG:4326", x, y)
     assert np.abs(lon2 - lon).max() < 1e-11
     assert np.abs(lat2 - lat).max() < 1e-11
 
 
-def test_aea_true_scale_at_standard_parallels():
-    """Defining property: scale along the standard parallels is 1."""
+_CLRK66_A, _CLRK66_B = 6378206.4, 6356583.8
+
+
+@pytest.mark.parametrize(
+    "p4,a,e2",
+    [
+        (P4, pj.WGS84_A, pj.WGS84_E2),
+        (P4 + " +ellps=clrk66", _CLRK66_A, 1.0 - (_CLRK66_B / _CLRK66_A) ** 2),
+        (P4 + " +a=6370997 +b=6370997", 6370997.0, 0.0),
+    ],
+    ids=["WGS84", "clrk66", "sphere"],
+)
+def test_aea_true_scale_at_standard_parallels(p4, a, e2):
+    """Defining property: scale along the standard parallels is 1 — on
+    the ellipsoid the proj4 string names."""
     for sp in (33.0, 37.0):
         d = 1e-6
-        x1, _ = proj.aea_forward(P4, np.array([-119.0]), np.array([sp]))
-        x2, _ = proj.aea_forward(P4, np.array([-119.0 + d]), np.array([sp]))
+        x1, _ = proj.transform("EPSG:4326", p4, np.array([-119.0]), np.array([sp]))
+        x2, _ = proj.transform("EPSG:4326", p4, np.array([-119.0 + d]), np.array([sp]))
         s = np.sin(np.radians(sp))
-        n_rad = proj.WGS84_A / np.sqrt(1 - proj.WGS84_E2 * s * s)
+        n_rad = a / np.sqrt(1 - e2 * s * s)
         truth = np.radians(d) * n_rad * np.cos(np.radians(sp))
         assert abs(float(x2[0] - x1[0]) / truth - 1.0) < 1e-6
 
@@ -42,13 +57,13 @@ def test_aea_equal_area_property():
     identity the zonal area operator is built on)."""
     lat0, lat1 = 34.0, 34.0234375
     lon0, lon1 = -119.0, -118.9765625
-    x, y = proj.aea_forward(
-        P4, np.array([lon0, lon1, lon1, lon0]), np.array([lat0, lat0, lat1, lat1])
+    x, y = proj.transform(
+        "EPSG:4326", P4, np.array([lon0, lon1, lon1, lon0]), np.array([lat0, lat0, lat1, lat1])
     )
     shoe = 0.5 * abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1)))
-    q0 = proj._aea_q(np.sin(np.radians(lat0)))
-    q1 = proj._aea_q(np.sin(np.radians(lat1)))
-    band = proj.WGS84_A ** 2 / 2.0 * (q1 - q0) * np.radians(lon1 - lon0)
+    q0 = pj._q_be(pj.NP, np.radians(lat0), pj.WGS84_E2)
+    q1 = pj._q_be(pj.NP, np.radians(lat1), pj.WGS84_E2)
+    band = pj.WGS84_A ** 2 / 2.0 * (q1 - q0) * np.radians(lon1 - lon0)
     assert abs(shoe - band) / band < 1e-7  # quad edges are chords
 
 
@@ -62,7 +77,7 @@ def test_local_albers_pick_is_transformable():
     assert abs(float(lon) + 119.0) < 1e-11 and abs(float(lat) - 35.0) < 1e-11
     # aea ↔ 3857 routes via geographic
     X, Y = proj.transform(p4, "EPSG:3857", x, y)
-    mx, _ = proj.lonlat_to_webmercator(-119.0, 35.0)
+    mx, _ = proj.transform("EPSG:4326", "EPSG:3857", -119.0, 35.0)
     assert abs(float(X) - float(mx)) < 1e-6
 
 
@@ -71,9 +86,9 @@ def test_row_areas_match_duckdb_libm():
     on every row of the fixture grid (the property the driver oracle
     relies on)."""
     ours = authalic_row_areas_m2(SPEC)
-    e2 = proj.WGS84_E2
+    e2 = pj.WGS84_E2
     e = float(e2 ** 0.5)
-    k = proj.WGS84_A ** 2 / 2.0
+    k = pj.WGS84_A ** 2 / 2.0
 
     def q(lat):
         s = f"sin(radians({lat}))"

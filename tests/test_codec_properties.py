@@ -160,15 +160,9 @@ def test_projection_roundtrip_random_points(fam, fx, fy):
     (lo0, lo1), (la0, la1) = _DOMAIN[fam]
     lon = lo0 + fx * (lo1 - lo0)
     lat = la0 + fy * (la1 - la0)
-    if fam == "aea":  # ellipsoidal Albers lives in grid/proj.py
-        from trefoil_spark.grid.proj import transform
-
-        x, y = transform("EPSG:4326", _PROJ4[fam], np.float64(lon), np.float64(lat))
-        lo, la = transform(_PROJ4[fam], "EPSG:4326", x, y)
-    else:
-        be = pj._NumpyBackend()
-        x, y = pj.forward(be, _PROJ4[fam], np.float64(lon), np.float64(lat))
-        lo, la = pj.inverse(be, _PROJ4[fam], x, y)
+    be = pj._NumpyBackend()
+    x, y = pj.forward(be, _PROJ4[fam], np.float64(lon), np.float64(lat))
+    lo, la = pj.inverse(be, _PROJ4[fam], x, y)
     # ±180° is one meridian: compare longitudes on the circle
     dlon = abs((float(lo) - lon + 180.0) % 360.0 - 180.0)
     assert dlon < 1e-7 and abs(float(la) - lat) < 1e-7

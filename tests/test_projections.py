@@ -1,4 +1,4 @@
-"""F20 projection families (lcc/tmerc/utm/stere/laea): round-trips,
+"""F20 projection families (3857/aea/lcc/tmerc/utm/stere/laea): round-trips,
 known values, differential map properties (conformality / equal-area /
 standard-parallel scale), and three-backend agreement (numpy vs Catalyst
 vs SQL-text executed by DuckDB).
@@ -25,8 +25,11 @@ UTM19S = "+proj=utm +zone=19 +south +ellps=WGS84"
 STERE_N = "+proj=stere +lat_0=90 +lat_ts=70 +lon_0=-45 +x_0=2000000 +y_0=2000000 +ellps=WGS84"
 STERE_S = "+proj=stere +lat_0=-90 +lat_ts=-71 +lon_0=0 +ellps=WGS84"
 LAEA = "+proj=laea +lat_0=52 +lon_0=10 +x_0=4321000 +y_0=3210000 +ellps=GRS80"
+WEBMERC = "EPSG:3857"
+AEA = "+proj=aea +lat_1=29.5 +lat_2=45.5 +lat_0=37.5 +lon_0=-96 +x_0=1000 +y_0=-500 +ellps=GRS80"
+AEA_SPHERE = "+proj=aea +lat_1=29.5 +lat_2=45.5 +lon_0=-96 +a=6370997 +b=6370997"
 
-ALL = [LCC, LCC_1SP, TMERC, UTM31, UTM19S, STERE_N, STERE_S, LAEA]
+ALL = [LCC, LCC_1SP, TMERC, UTM31, UTM19S, STERE_N, STERE_S, LAEA, WEBMERC, AEA, AEA_SPHERE]
 
 
 def _grid(p4):
@@ -165,7 +168,7 @@ def test_composed_routes():
     assert abs(float(lo) - float(lo2)) < 1e-7 and abs(float(la) - float(la2)) < 1e-7
 
 
-@pytest.mark.parametrize("p4", [LCC, TMERC, UTM19S, STERE_N, STERE_S, LAEA])
+@pytest.mark.parametrize("p4", [LCC, TMERC, UTM19S, STERE_N, STERE_S, LAEA, WEBMERC])
 def test_sql_backend_matches_numpy_duckdb(p4):
     """The SQL-text backend executed by DuckDB reproduces the numpy
     forward AND inverse to float64 last-ulp levels — this is the parity
@@ -188,7 +191,7 @@ def test_sql_backend_matches_numpy_duckdb(p4):
     assert np.abs(got["lat"] - la_np).max() < 1e-10
 
 
-@pytest.mark.parametrize("p4", [LCC, UTM31, STERE_S, LAEA])
+@pytest.mark.parametrize("p4", [LCC, UTM31, STERE_S, LAEA, WEBMERC, AEA])
 def test_column_backend_matches_numpy(spark, p4):
     """The Catalyst twin (used by the distributed warp pair enumeration)
     agrees with the numpy kernel."""
@@ -213,6 +216,22 @@ def test_column_backend_matches_numpy(spark, p4):
     assert np.abs(np.array([r["lat"] for r in rows]) - la_np).max() < 1e-10
 
 
+def test_sql_backend_aea_forward_only():
+    """SQL text has no loop: the aea forward is closed-form and matches
+    numpy in DuckDB; the iterative inverse raises."""
+    lon, lat = _grid(AEA)
+    x_np, y_np = proj.transform("EPSG:4326", AEA, lon, lat)
+    fx, fy = proj.transform_sql("EPSG:4326", AEA, "lon", "lat")
+    con = duckdb.connect()
+    con.register("pts", __import__("pandas").DataFrame({"lon": lon, "lat": lat}))
+    got = con.execute(f"SELECT {fx} AS x, {fy} AS y FROM pts").fetchnumpy()
+    assert np.abs(got["x"] - x_np).max() < 1e-6
+    assert np.abs(got["y"] - y_np).max() < 1e-6
+    for dst in ("EPSG:4326", WEBMERC, LCC):
+        with pytest.raises(ValueError):
+            proj.transform_sql(AEA, dst, "x", "y")
+
+
 def test_spark_sql_text_parses(spark):
     """The same SQL text the DuckDB oracle runs is valid Spark SQL too
     (shared-fragment property the oracle pattern depends on)."""
@@ -229,7 +248,24 @@ def test_spark_sql_text_parses(spark):
 def test_unsupported_still_raise():
     with pytest.raises(ValueError):
         proj.normalize_crs("+proj=robin")
+    # the first token must match exactly; +proj=merc is Web Mercator only
+    # with Web Mercator's own parameters
+    for crs in ("EPSG:38571", "epsg:43260", "wgs84foo", "+proj=merc +lat_ts=45 +lon_0=10",
+                "+proj=merc", "+proj=EPSG:3857", "+proj=lccx +lat_1=33"):
+        with pytest.raises(ValueError):
+            proj.normalize_crs(crs)
     with pytest.raises(ValueError):
         pj.constants_for("+proj=stere +lat_0=45")  # oblique stere
     with pytest.raises(ValueError):
         pj.constants_for("+proj=laea +lat_0=90")  # polar laea
+
+
+def test_crs_aliases_normalize():
+    for crs in ("EPSG:4326", "epsg:4326", "WGS84", "latlong", "+proj=longlat",
+                "+proj=longlat +datum=WGS84 +no_defs", " EPSG:4326 "):
+        assert proj.normalize_crs(crs) == "EPSG:4326"
+    for crs in ("EPSG:3857", "epsg:900913", "web_mercator",
+                "+proj=merc +a=6378137 +b=6378137 +lat_ts=0 +lon_0=0 +x_0=0 +y_0=0 "
+                "+k=1 +units=m +nadgrids=@null +wktext +no_defs",
+                "+proj=merc +a=6378137 +b=6378137"):
+        assert proj.normalize_crs(crs) == "EPSG:3857"

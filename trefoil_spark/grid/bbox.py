@@ -1,8 +1,9 @@
 """Bounding box with CRS tag + densified-edge reprojection.
 
 Parity target: /root/reference/trefoil/geometry/bbox.py:9-129. pyproj is
-absent, so projection is a CRS *name* ('EPSG:4326' | 'EPSG:3857') and
-transforms use our closed forms in grid/proj.py.
+absent, so projection is a CRS *name* ('EPSG:4326', 'EPSG:3857' or a
+supported proj4 string) and transforms use our closed forms
+(grid/proj.py over grid/projections.py).
 """
 
 from __future__ import annotations
@@ -86,9 +87,9 @@ def get_local_albers_projection(bbox: BBox) -> str:
     """F25 (reference bbox.py:99-114): pick a local Albers equal-area
     projection for a bbox — standard parallels inset 1/6 of the height
     from each edge, central meridian at the bbox center. Returns the
-    proj4 string (transform math for aea is out of v1 scope; this is the
-    projection-PICK rule, validated against the reference's frozen test
-    value in tests)."""
+    proj4 string (the projection-PICK rule, validated against the
+    reference's frozen test value in tests); :mod:`.proj` transforms it
+    like any other supported CRS."""
     if not proj.is_latlong(bbox.projection or "EPSG:4326"):
         raise ValueError("bbox must be geographic (lat/long)")
     sixth = (bbox.ymax - bbox.ymin) / 6.0

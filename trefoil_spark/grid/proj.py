@@ -1,32 +1,25 @@
 """Closed-form coordinate transforms (pyproj absent — from scratch).
 
-Supported CRS (SURVEY.md F20): EPSG:4326 (lon/lat degrees, WGS84),
-EPSG:3857 (spherical Web Mercator), ellipsoidal Albers Equal-Area
-(+proj=aea, this module), and — via :mod:`.projections` (Snyder closed
-forms, three backends: numpy / Catalyst / SQL text) — Lambert Conformal
-Conic (+proj=lcc), Transverse Mercator (+proj=tmerc, +proj=utm), Polar
-Stereographic (+proj=stere), and Lambert Azimuthal Equal-Area
-(+proj=laea). This matches the reference's CRS family surface
+Supported CRS (SURVEY.md F20): EPSG:4326 (lon/lat degrees, WGS84) and
+every family of :mod:`.projections` — spherical Web Mercator
+(EPSG:3857), ellipsoidal Albers Equal-Area (+proj=aea), Lambert
+Conformal Conic (+proj=lcc), Transverse Mercator (+proj=tmerc,
++proj=utm), Polar Stereographic (+proj=stere), and Lambert Azimuthal
+Equal-Area (+proj=laea). This matches the reference's CRS family surface
 (/root/reference/trefoil/netcdf/crs.py:44-106); the full proj database
 stays out of scope.
 
 Any supported pair transforms: non-geographic↔non-geographic composes
-through EPSG:4326 (same route pyproj takes without datum shifts).
-
-All functions are numpy-vectorized and are used both driver-side (bbox
-math) and inside Arrow-batched pandas UDFs (warp gather), never per-row.
+through EPSG:4326 (same route pyproj takes without datum shifts). One
+dispatch serves the three evaluations of :mod:`.projections`: numpy
+(:func:`transform`, used driver-side and inside Arrow-batched pandas
+UDFs, never per-row), Catalyst (:func:`transform_cols`) and SQL text
+(:func:`transform_sql`).
 """
 
 from __future__ import annotations
 
-import numpy as np
-
 from . import projections as _pj
-
-EARTH_RADIUS = 6378137.0  # WGS84 semi-major, spherical mercator convention
-WEBMERC_MAX = np.pi * EARTH_RADIUS  # ±20037508.342789244
-# Web-Mercator latitude clamp (where |y| == WEBMERC_MAX)
-MAX_LAT = 85.05112877980659
 
 _ALIASES = {
     "epsg:4326": "EPSG:4326",
@@ -36,32 +29,39 @@ _ALIASES = {
     "epsg:3857": "EPSG:3857",
     "epsg:900913": "EPSG:3857",
     "web_mercator": "EPSG:3857",
-    "+proj=merc": "EPSG:3857",
 }
 
+# Web Mercator's own proj4 parameters: +proj=merc names EPSG:3857 only on
+# this sphere, unshifted; any other Mercator is a different projection
+_WEB_MERCATOR = _pj.parse_params(
+    "+proj=merc +a=6378137 +b=6378137 +lat_ts=0 +lon_0=0 +x_0=0 +y_0=0 +k=1 "
+    "+units=m +nadgrids=@null +wktext +no_defs"
+)
 
-_PROJ4_FAMILIES = ("aea", "lcc", "tmerc", "utm", "stere", "laea")
 
-
-def normalize_crs(crs: str) -> str:
-    key = crs.strip().lower()
-    for fam in _PROJ4_FAMILIES:
-        if key.startswith(f"+proj={fam}"):
-            return crs.strip()  # proj4 strings are their own canonical form
-    for alias, canon in _ALIASES.items():
-        if key.startswith(alias):
-            return canon
-    raise ValueError(
-        f"Unsupported CRS: {crs!r} (supported: EPSG:4326, EPSG:3857, "
-        f"and +proj={{{','.join(_PROJ4_FAMILIES)}}})"
+def _is_web_mercator(proj4: str) -> bool:
+    p = _pj.parse_params(proj4)
+    return p.get("a") == p.get("b") == _WEB_MERCATOR["a"] and all(
+        _WEB_MERCATOR.get(k) == v for k, v in p.items()
     )
 
 
-def _family(canon: str) -> str | None:
-    """Projection family of a canonical CRS string, None for 4326/3857."""
-    if canon.startswith("+proj="):
-        return canon.split()[0][len("+proj="):]
-    return None
+def normalize_crs(crs: str) -> str:
+    """Canonical CRS string: EPSG:4326, EPSG:3857, or the proj4 string
+    itself. Matches the first token exactly (no prefix matching)."""
+    s = crs.strip()
+    first = s.split(maxsplit=1)[0] if s else ""
+    if first.lower() in _ALIASES:
+        return _ALIASES[first.lower()]
+    if first == "+proj=merc" and _is_web_mercator(s):
+        return "EPSG:3857"
+    families = [f for f in _pj.FAMILIES if f != "EPSG:3857"] + ["utm"]
+    if first in [f"+proj={f}" for f in families]:
+        return s  # proj4 strings are their own canonical form
+    raise ValueError(
+        f"Unsupported CRS: {crs!r} (supported: EPSG:4326, EPSG:3857, "
+        f"and +proj={{{','.join(families)}}})"
+    )
 
 
 def same_crs(a: str, b: str) -> bool:
@@ -73,299 +73,33 @@ def is_latlong(crs: str) -> bool:
     return normalize_crs(crs) == "EPSG:4326"
 
 
-def lonlat_to_webmercator(lon, lat):
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.clip(np.asarray(lat, dtype=np.float64), -MAX_LAT, MAX_LAT)
-    x = np.radians(lon) * EARTH_RADIUS
-    y = np.log(np.tan(np.pi / 4.0 + np.radians(lat) / 2.0)) * EARTH_RADIUS
-    return x, y
-
-
-def webmercator_to_lonlat(x, y):
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    lon = np.degrees(x / EARTH_RADIUS)
-    lat = np.degrees(2.0 * np.arctan(np.exp(y / EARTH_RADIUS)) - np.pi / 2.0)
-    return lon, lat
-
-
-def _from_geographic(canon: str, lon, lat):
-    """(lon, lat) degrees → canonical CRS coords, numpy."""
-    if canon == "EPSG:4326":
-        return np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64)
-    if canon == "EPSG:3857":
-        return lonlat_to_webmercator(lon, lat)
-    if _family(canon) == "aea":
-        return aea_forward(canon, lon, lat)
-    return _pj.forward(_pj.NP, canon, lon, lat)
-
-
-def _to_geographic(canon: str, x, y):
-    """Canonical CRS coords → (lon, lat) degrees, numpy."""
-    if canon == "EPSG:4326":
-        return np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
-    if canon == "EPSG:3857":
-        return webmercator_to_lonlat(x, y)
-    if _family(canon) == "aea":
-        return aea_inverse(canon, x, y)
-    return _pj.inverse(_pj.NP, canon, x, y)
+def _transform(be, src_crs: str, dst_crs: str, x, y):
+    """src → dst on backend ``be``: EPSG:4326 is the identity, every other
+    CRS goes through its family's inverse/forward."""
+    s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
+    x, y = be.asval(x), be.asval(y)
+    if s == d:
+        return x, y
+    lon, lat = (x, y) if s == "EPSG:4326" else _pj.inverse(be, s, x, y)
+    return (lon, lat) if d == "EPSG:4326" else _pj.forward(be, d, lon, lat)
 
 
 def transform(src_crs: str, dst_crs: str, x, y):
-    """Vectorized transform between supported CRS (projected↔projected
-    composes through EPSG:4326)."""
-    s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
-    if s == d:
-        return np.asarray(x, dtype=np.float64), np.asarray(y, dtype=np.float64)
-    lon, lat = _to_geographic(s, x, y)
-    return _from_geographic(d, lon, lat)
+    """Vectorized numpy transform between supported CRS."""
+    return _transform(_pj.NP, src_crs, dst_crs, x, y)
 
 
 def transform_cols(src_crs: str, dst_crs: str, x, y):
-    """Catalyst-expression twin of :func:`transform` (same closed-form
-    math, JVM-side). Returns ``(x_col, y_col)``; used to generate
-    distributed grid math (e.g. warp tile-cover enumeration) without any
-    driver-side loops. Composes through EPSG:4326 like transform()."""
-    from pyspark.sql import functions as F
-
-    s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
-    x, y = F.col(x) if isinstance(x, str) else x, F.col(y) if isinstance(y, str) else y
-    if s == d:
-        return x.cast("double"), y.cast("double")
-
-    def to_geo(canon, cx, cy):
-        if canon == "EPSG:4326":
-            return cx.cast("double"), cy.cast("double")
-        if canon == "EPSG:3857":
-            return (
-                F.degrees(cx / F.lit(EARTH_RADIUS)),
-                F.degrees(F.atan(F.exp(cy / F.lit(EARTH_RADIUS))) * 2 - F.lit(np.pi / 2.0)),
-            )
-        if _family(canon) == "aea":
-            return aea_inverse_cols(canon, cx, cy)
-        return _pj.inverse(_pj.COL(), canon, cx, cy)
-
-    def from_geo(canon, lon, lat):
-        if canon == "EPSG:4326":
-            return lon, lat
-        if canon == "EPSG:3857":
-            lat_c = F.least(F.greatest(lat, F.lit(-MAX_LAT)), F.lit(MAX_LAT))
-            return (
-                F.radians(lon) * F.lit(EARTH_RADIUS),
-                F.log(F.tan(F.lit(np.pi / 4.0) + F.radians(lat_c) / 2))
-                * F.lit(EARTH_RADIUS),
-            )
-        if _family(canon) == "aea":
-            return aea_forward_cols(canon, lon, lat)
-        return _pj.forward(_pj.COL(), canon, lon, lat)
-
-    lon, lat = to_geo(s, x, y)
-    return from_geo(d, lon, lat)
+    """Catalyst-expression form of :func:`transform` (column names or
+    Columns in, ``(x_col, y_col)`` out) — distributed grid math such as
+    warp tile-cover enumeration, with no driver-side loops."""
+    return _transform(_pj.COL(), src_crs, dst_crs, x, y)
 
 
 def transform_sql(src_crs: str, dst_crs: str, x_sql: str, y_sql: str) -> tuple[str, str]:
-    """Engine-portable SQL-text twin of :func:`transform` (valid in both
-    Spark SQL and DuckDB) — used to generate correctness-oracle SQL for
-    warp queries in projected CRS. aea is not routed here (its oracles
-    use the dedicated authalic-area SQL)."""
-    s, d = normalize_crs(src_crs), normalize_crs(dst_crs)
-    be = _pj.SQL
-    xs, ys = be.asval(x_sql), be.asval(y_sql)
-    if s == d:
-        return str(xs), str(ys)
-
-    def to_geo(canon, cx, cy):
-        if canon == "EPSG:4326":
-            return cx, cy
-        if canon == "EPSG:3857":
-            R = be.lit(EARTH_RADIUS)
-            lon = (cx / R) * be.lit(180.0 / np.pi)
-            lat = (be.lit(2.0) * be.atan(_sql_exp(cy / R)) - be.lit(np.pi / 2.0)) * be.lit(180.0 / np.pi)
-            return lon, lat
-        if _family(canon) == "aea":
-            raise ValueError("transform_sql: aea not supported")
-        return _pj.inverse(be, canon, cx, cy)
-
-    def from_geo(canon, lon, lat):
-        if canon == "EPSG:4326":
-            return lon, lat
-        if canon == "EPSG:3857":
-            R = be.lit(EARTH_RADIUS)
-            rad = be.lit(np.pi / 180.0)
-            lat_c = be.where(
-                lat > be.lit(MAX_LAT), be.lit(MAX_LAT),
-                be.where(lat < be.lit(-MAX_LAT), be.lit(-MAX_LAT), lat),
-            )
-            x = lon * rad * R
-            y = be.log(be.tan(be.lit(np.pi / 4.0) + lat_c * rad / be.lit(2.0))) * R
-            return x, y
-        if _family(canon) == "aea":
-            raise ValueError("transform_sql: aea not supported")
-        return _pj.forward(be, canon, lon, lat)
-
-    lon, lat = to_geo(s, xs, ys)
-    ox, oy = from_geo(d, lon, lat)
+    """Engine-portable SQL-text form of :func:`transform` (valid in both
+    Spark SQL and DuckDB) — generates correctness-oracle SQL for warp
+    queries in projected CRS. Raises ``ValueError`` for an ellipsoidal
+    aea source: its inverse iterates, and SQL text has no loop."""
+    ox, oy = _transform(_pj.SQL, src_crs, dst_crs, x_sql, y_sql)
     return str(ox), str(oy)
-
-
-def _sql_exp(x):
-    from .projections import SqlE, _se
-
-    return SqlE(f"EXP({_se(x).s})")
-
-
-# ---------------------------------------------------------------------------
-# Albers Equal-Area Conic, ellipsoidal (WGS84) — Snyder, USGS PP 1395,
-# eqs. 14-1..14-21 (public formulas). Completes the reference's
-# "project-to-local-Albers for area-true stats" workflow
-# (reference zones.py --albers path; our pick rule: grid/bbox.py:85).
-# ---------------------------------------------------------------------------
-
-WGS84_A = 6378137.0
-WGS84_F = 1.0 / 298.257223563
-WGS84_E2 = WGS84_F * (2.0 - WGS84_F)
-_WGS84_E = np.sqrt(WGS84_E2)
-
-
-def parse_proj4_aea(proj4: str) -> dict:
-    """+proj=aea parameter dict (lat_1, lat_2, lat_0, lon_0, x_0, y_0)."""
-    toks = dict(
-        t.split("=", 1) for t in proj4.split() if t.startswith("+") and "=" in t
-    )
-    if toks.get("+proj") != "aea":
-        raise ValueError(f"not an aea proj4 string: {proj4!r}")
-    return {
-        k: float(toks.get(f"+{k}", 0.0))
-        for k in ("lat_1", "lat_2", "lat_0", "lon_0", "x_0", "y_0")
-    }
-
-
-def _aea_q(sin_phi):
-    """Snyder eq. 3-12: the equal-area auxiliary q."""
-    e = _WGS84_E
-    es = e * sin_phi
-    return (1.0 - WGS84_E2) * (
-        sin_phi / (1.0 - es * es)
-        - (1.0 / (2.0 * e)) * np.log((1.0 - es) / (1.0 + es))
-    )
-
-
-def _aea_m(sin_phi, cos_phi):
-    """Snyder eq. 14-15."""
-    return cos_phi / np.sqrt(1.0 - WGS84_E2 * sin_phi * sin_phi)
-
-
-def _aea_constants(p: dict):
-    phi1, phi2 = np.radians(p["lat_1"]), np.radians(p["lat_2"])
-    phi0 = np.radians(p["lat_0"])
-    m1 = _aea_m(np.sin(phi1), np.cos(phi1))
-    m2 = _aea_m(np.sin(phi2), np.cos(phi2))
-    q1, q2, q0 = _aea_q(np.sin(phi1)), _aea_q(np.sin(phi2)), _aea_q(np.sin(phi0))
-    if abs(phi1 - phi2) < 1e-12:
-        n = np.sin(phi1)
-    else:
-        n = (m1 * m1 - m2 * m2) / (q2 - q1)
-    C = m1 * m1 + n * q1
-    rho0 = WGS84_A * np.sqrt(C - n * q0) / n
-    return n, C, rho0
-
-
-def aea_forward(proj4: str, lon, lat):
-    """lon/lat degrees → aea x/y metres (vectorized)."""
-    p = parse_proj4_aea(proj4)
-    n, C, rho0 = _aea_constants(p)
-    lam = np.radians(np.asarray(lon, dtype=np.float64)) - np.radians(p["lon_0"])
-    phi = np.radians(np.asarray(lat, dtype=np.float64))
-    q = _aea_q(np.sin(phi))
-    rho = WGS84_A * np.sqrt(C - n * q) / n
-    theta = n * lam
-    x = rho * np.sin(theta) + p["x_0"]
-    y = rho0 - rho * np.cos(theta) + p["y_0"]
-    return x, y
-
-
-def aea_inverse(proj4: str, x, y, iters: int = 6):
-    """aea x/y metres → lon/lat degrees (Snyder iteration 3-16)."""
-    p = parse_proj4_aea(proj4)
-    n, C, rho0 = _aea_constants(p)
-    x = np.asarray(x, dtype=np.float64) - p["x_0"]
-    y = rho0 - (np.asarray(y, dtype=np.float64) - p["y_0"])
-    rho = np.hypot(x, y)
-    theta = np.arctan2(np.sign(n) * x, np.sign(n) * y)
-    q = (C - (rho * n / WGS84_A) ** 2) / n
-    lam = theta / n + np.radians(p["lon_0"])
-    # iterate phi from q
-    e = _WGS84_E
-    phi = np.arcsin(np.clip(q / 2.0, -1.0, 1.0))
-    for _ in range(iters):
-        s = np.sin(phi)
-        es = e * s
-        phi = phi + ((1.0 - es * es) ** 2 / (2.0 * np.cos(phi))) * (
-            q / (1.0 - WGS84_E2)
-            - s / (1.0 - es * es)
-            + (1.0 / (2.0 * e)) * np.log((1.0 - es) / (1.0 + es))
-        )
-    return np.degrees(lam), np.degrees(phi)
-
-
-def _aea_q_col(s, F):
-    """Catalyst twin of _aea_q (s = sin(phi) Column)."""
-    e = float(_WGS84_E)
-    e2 = float(WGS84_E2)
-    es = s * F.lit(e)
-    return F.lit(1.0 - e2) * (
-        s / (F.lit(1.0) - es * es)
-        - F.lit(1.0 / (2.0 * e)) * F.log((F.lit(1.0) - es) / (F.lit(1.0) + es))
-    )
-
-
-def aea_forward_cols(proj4: str, lon, lat):
-    """Catalyst twin of aea_forward (same closed-form math, JVM-side)."""
-    from pyspark.sql import functions as F
-
-    p = parse_proj4_aea(proj4)
-    n, C, rho0 = (float(v) for v in _aea_constants(p))
-    lam = F.radians(lon) - F.lit(float(np.radians(p["lon_0"])))
-    s = F.sin(F.radians(lat))
-    q = _aea_q_col(s, F)
-    rho = F.lit(WGS84_A) * F.sqrt(F.lit(C) - F.lit(n) * q) / F.lit(n)
-    theta = F.lit(n) * lam
-    x = rho * F.sin(theta) + F.lit(p["x_0"])
-    y = F.lit(rho0) - rho * F.cos(theta) + F.lit(p["y_0"])
-    return x, y
-
-
-def aea_inverse_cols(proj4: str, x, y, iters: int = 6):
-    """Catalyst twin of aea_inverse. The Snyder phi fixed-point runs as
-    ONE ``aggregate(sequence(...))`` higher-order lambda — written once,
-    evaluated iteratively — because naive unrolling multiplies the
-    expression tree ~10x per iteration and OOMs the analyzer."""
-    from pyspark.sql import functions as F
-
-    p = parse_proj4_aea(proj4)
-    n, C, rho0 = (float(v) for v in _aea_constants(p))
-    e = float(_WGS84_E)
-    e2 = float(WGS84_E2)
-    xs = x - F.lit(p["x_0"])
-    ys = F.lit(rho0) - (y - F.lit(p["y_0"]))
-    rho = F.sqrt(xs * xs + ys * ys)
-    sgn = F.lit(float(np.sign(n) or 1.0))
-    theta = F.atan2(sgn * xs, sgn * ys)
-    q = (F.lit(C) - (rho * F.lit(n) / F.lit(WGS84_A)) ** F.lit(2.0)) / F.lit(n)
-    lam = theta / F.lit(n) + F.lit(float(np.radians(p["lon_0"])))
-    phi0 = F.asin(F.least(F.greatest(q / F.lit(2.0), F.lit(-1.0)), F.lit(1.0)))
-
-    def step(acc, _i):
-        s = F.sin(acc)
-        es = s * F.lit(e)
-        one_m = F.lit(1.0) - es * es
-        return acc + (one_m * one_m / (F.lit(2.0) * F.cos(acc))) * (
-            q / F.lit(1.0 - e2)
-            - s / one_m
-            + F.lit(1.0 / (2.0 * e)) * F.log((F.lit(1.0) - es) / (F.lit(1.0) + es))
-        )
-
-    phi = F.aggregate(
-        F.sequence(F.lit(1), F.lit(iters)), phi0.cast("double"), step
-    )
-    return F.degrees(lam), F.degrees(phi)

@@ -1,14 +1,16 @@
-"""Projected-CRS transform math beyond 3857/aea (SURVEY.md F20 breadth).
+"""Projected-CRS transform math (SURVEY.md F20 breadth), one formula per CRS.
 
-Families: Lambert Conformal Conic (lcc, 1SP/2SP), Transverse Mercator
-(tmerc) + UTM, Polar Stereographic (stere, lat_0=±90), and Lambert
-Azimuthal Equal-Area (laea, oblique/equatorial). This matches the
+Families: spherical Web Mercator (EPSG:3857), ellipsoidal Albers
+Equal-Area (aea), Lambert Conformal Conic (lcc, 1SP/2SP), Transverse
+Mercator (tmerc) + UTM, Polar Stereographic (stere, lat_0=±90), and
+Lambert Azimuthal Equal-Area (laea, oblique/equatorial). This matches the
 reference's CF↔proj4 surface (/root/reference/trefoil/netcdf/crs.py:44-106,
 round-tripped by trefoil/netcdf/tests/test_crs.py) — the reference
 delegates the actual transforms to pyproj; pyproj is absent here, so the
 math is implemented from the public closed forms (Snyder, *Map
-Projections — A Working Manual*, USGS PP 1395: eqs. 3-5, 7-9, 8-9..8-25,
-14-15, 15-1..15-11, 21-33..21-41, 24-3..24-16, 3-18).
+Projections — A Working Manual*, USGS PP 1395: eqs. 3-5, 3-12, 3-16,
+7-1..7-4, 7-9, 8-9..8-25, 14-1..14-21, 15-1..15-11, 21-33..21-41,
+24-3..24-16, 3-18).
 
 Every projection is written ONCE against a tiny backend shim and then
 evaluated three ways:
@@ -18,16 +20,19 @@ evaluated three ways:
   corner math runs JVM-side, zero driver loops);
 - ``SQL`` — engine-portable SQL text (shared by Spark SQL and the DuckDB
   correctness oracles; float literals are emitted as CAST(x AS DOUBLE)
-  so both engines parse identical IEEE doubles).
+  so both engines parse identical IEEE doubles). SQL text has no loop,
+  so the iterative aea inverse raises ``ValueError`` there.
 
 Identical expression structure across backends keeps the three
 evaluations bit-comparable except for libm last-ulp differences, which
 only matter where a downstream FLOOR sits within 1 ulp of an integer
-(same accepted risk as the r1 web-mercator oracle).
+(same accepted risk as the r1 web-mercator oracle). ``hypot`` and
+``clip`` keep each backend's own form (numpy ``hypot``/``clip``,
+Catalyst ``sqrt(x²+y²)``/``least(greatest)``, SQL ``CASE``).
 
 All scalar per-CRS constants (n, F, ρ0, M0, series coefficients) are
-computed driver-side in python float64 and enter each backend as exact
-double literals.
+computed driver-side in float64 and enter each backend as exact double
+literals.
 """
 
 from __future__ import annotations
@@ -60,6 +65,8 @@ class _NumpyBackend:
     atan2 = staticmethod(np.arctan2)
     sqrt = staticmethod(np.sqrt)
     log = staticmethod(np.log)
+    exp = staticmethod(np.exp)
+    hypot = staticmethod(np.hypot)
     abs = staticmethod(np.abs)
 
     @staticmethod
@@ -73,8 +80,18 @@ class _NumpyBackend:
         return np.where(c, a, b)
 
     @staticmethod
+    def clip(x, lo: float, hi: float):
+        return np.clip(x, lo, hi)
+
+    @staticmethod
     def eq(a, b):
         return a == b
+
+    @staticmethod
+    def iterate(step, x0, n: int):
+        for _ in range(n):
+            x0 = step(x0)
+        return x0
 
 
 class _ColumnBackend:
@@ -121,6 +138,12 @@ class _ColumnBackend:
     def log(self, x):
         return self.F.log(x)
 
+    def exp(self, x):
+        return self.F.exp(x)
+
+    def hypot(self, x, y):
+        return self.F.sqrt(x * x + y * y)
+
     def abs(self, x):
         return self.F.abs(x)
 
@@ -133,14 +156,26 @@ class _ColumnBackend:
     def where(self, c, a, b):
         return self.F.when(c, a).otherwise(b)
 
+    def clip(self, x, lo: float, hi: float):
+        return self.F.least(self.F.greatest(x, self.lit(lo)), self.lit(hi))
+
     def eq(self, a, b):
         return a == b
+
+    def iterate(self, step, x0, n: int):
+        """ONE ``aggregate(sequence(...))`` higher-order lambda — written
+        once, evaluated iteratively — because unrolling multiplies the
+        expression tree per step and OOMs the analyzer."""
+        F = self.F
+        return F.aggregate(
+            F.sequence(F.lit(1), F.lit(n)), x0.cast("double"), lambda acc, _i: step(acc)
+        )
 
 
 class SqlE:
     """SQL expression fragment with overloaded arithmetic. Always fully
     parenthesized; emitted text is valid in BOTH Spark SQL and DuckDB
-    (SIN/COS/TAN/ASIN/ATAN/ATAN2/SQRT/LN/POWER/ABS/CASE only)."""
+    (SIN/COS/TAN/ASIN/ATAN/ATAN2/SQRT/LN/EXP/POWER/ABS/CASE only)."""
 
     __slots__ = ("s",)
 
@@ -221,6 +256,12 @@ class _SqlBackend:
     def log(self, x):
         return self._fn("LN", x)
 
+    def exp(self, x):
+        return self._fn("EXP", x)
+
+    def hypot(self, x, y):
+        return self.sqrt(x * x + y * y)
+
     def abs(self, x):
         return self._fn("ABS", x)
 
@@ -234,9 +275,16 @@ class _SqlBackend:
     def where(c, a, b):
         return SqlE(f"(CASE WHEN {_se(c).s} THEN {_se(a).s} ELSE {_se(b).s} END)")
 
+    def clip(self, x, lo: float, hi: float):
+        return self.where(x > _se(hi), _se(hi), self.where(x < _se(lo), _se(lo), x))
+
     @staticmethod
     def eq(a, b):
         return SqlE(f"({_se(a).s} = {_se(b).s})")
+
+    @staticmethod
+    def iterate(step, x0, n: int):
+        raise ValueError("SQL text has no loop: iterative inverses (aea) are unsupported")
 
 
 NP = _NumpyBackend()
@@ -312,6 +360,9 @@ def ellipsoid(params: dict) -> tuple[float, float]:
         f = 1.0 / rf
         e2 = f * (2.0 - f)
     return float(a), float(e2)
+
+
+WGS84_A, WGS84_E2 = ellipsoid({"ellps": "WGS84"})
 
 
 # ---------------------------------------------------------------------------
@@ -414,6 +465,102 @@ def _q_be(be, phi, e2: float):
         s / (be.lit(1.0) - es * es)
         - be.lit(1.0 / (2.0 * e)) * be.log((be.lit(1.0) - es) / (be.lit(1.0) + es))
     )
+
+
+# ---------------------------------------------------------------------------
+# Web Mercator (EPSG:3857) — spherical Mercator on the WGS84 semi-major
+# axis, Snyder eqs. 7-1..7-4 with R = a; latitudes clamp where |y| = πR
+# ---------------------------------------------------------------------------
+
+MAX_LAT = 85.05112877980659
+
+
+def webmerc_forward(be, c: dict, lon, lat):
+    R = be.lit(WGS84_A)
+    lat_c = be.clip(be.asval(lat), -MAX_LAT, MAX_LAT)
+    x = be.asval(lon) * be.lit(RAD) * R
+    y = be.log(be.tan(be.lit(math.pi / 4.0) + lat_c * be.lit(RAD) / be.lit(2.0))) * R
+    return x, y
+
+
+def webmerc_inverse(be, c: dict, x, y):
+    R = be.lit(WGS84_A)
+    lon = (be.asval(x) / R) * be.lit(DEG)
+    lat = (
+        be.lit(2.0) * be.atan(be.exp(be.asval(y) / R)) - be.lit(math.pi / 2.0)
+    ) * be.lit(DEG)
+    return lon, lat
+
+
+# ---------------------------------------------------------------------------
+# Albers Equal-Area Conic, ellipsoidal — Snyder eqs. 14-1..14-21, 3-16.
+# Completes the reference's "project-to-local-Albers for area-true stats"
+# workflow (reference zones.py --albers path; our pick rule: grid/bbox.py).
+# ---------------------------------------------------------------------------
+
+
+def aea_constants(params: dict) -> dict:
+    # numpy scalar math (not math.*): the constants the warp and area
+    # oracles were frozen against
+    a, e2 = ellipsoid(params)
+    phi1, phi2, phi0 = (
+        np.radians(float(params.get(k, 0.0))) for k in ("lat_1", "lat_2", "lat_0")
+    )
+    s1, s2 = np.sin(phi1), np.sin(phi2)
+    m1 = np.cos(phi1) / np.sqrt(1.0 - e2 * s1 * s1)  # Snyder 14-15
+    m2 = np.cos(phi2) / np.sqrt(1.0 - e2 * s2 * s2)
+    q1, q2, q0 = (_q_be(NP, phi, e2) for phi in (phi1, phi2, phi0))
+    if abs(phi1 - phi2) < 1e-12:
+        n = np.sin(phi1)
+    else:
+        n = (m1 * m1 - m2 * m2) / (q2 - q1)
+    C = m1 * m1 + n * q1
+    return {
+        "a": a, "e2": e2, "n": float(n), "C": float(C),
+        "rho0": float(a * np.sqrt(C - n * q0) / n),
+        "lam0": float(np.radians(float(params.get("lon_0", 0.0)))),
+        "x0": float(params.get("x_0", 0.0)),
+        "y0": float(params.get("y_0", 0.0)),
+    }
+
+
+def aea_forward(be, c: dict, lon, lat):
+    n = be.lit(c["n"])
+    lam = be.asval(lon) * be.lit(RAD) - be.lit(c["lam0"])
+    q = _q_be(be, be.asval(lat) * be.lit(RAD), c["e2"])
+    rho = be.lit(c["a"]) * be.sqrt(be.lit(c["C"]) - n * q) / n
+    theta = n * lam
+    x = rho * be.sin(theta) + be.lit(c["x0"])
+    y = be.lit(c["rho0"]) - rho * be.cos(theta) + be.lit(c["y0"])
+    return x, y
+
+
+def aea_inverse(be, c: dict, x, y):
+    n, e2 = c["n"], c["e2"]
+    sgn = be.lit(float(np.sign(n) or 1.0))
+    xs = be.asval(x) - be.lit(c["x0"])
+    ys = be.lit(c["rho0"]) - (be.asval(y) - be.lit(c["y0"]))
+    rho = be.hypot(xs, ys)
+    theta = be.atan2(sgn * xs, sgn * ys)
+    t = rho * be.lit(n) / be.lit(c["a"])
+    q = (be.lit(c["C"]) - t * t) / be.lit(n)
+    lam = theta / be.lit(n) + be.lit(c["lam0"])
+    phi = be.asin(be.clip(q / be.lit(2.0), -1.0, 1.0))  # exact on the sphere
+    if e2 > 0.0:
+        e = math.sqrt(e2)
+
+        def step(phi):  # Snyder 3-16 fixed point for φ from q
+            s = be.sin(phi)
+            es = be.lit(e) * s
+            one_m = be.lit(1.0) - es * es
+            return phi + (one_m * one_m / (be.lit(2.0) * be.cos(phi))) * (
+                q / be.lit(1.0 - e2)
+                - s / one_m
+                + be.lit(1.0 / (2.0 * e)) * be.log((be.lit(1.0) - es) / (be.lit(1.0) + es))
+            )
+
+        phi = be.iterate(step, phi, 6)
+    return lam * be.lit(DEG), phi * be.lit(DEG)
 
 
 # ---------------------------------------------------------------------------
@@ -712,6 +859,8 @@ def laea_inverse(be, c: dict, x, y):
 # ---------------------------------------------------------------------------
 
 FAMILIES = {
+    "EPSG:3857": (lambda params: {}, webmerc_forward, webmerc_inverse),
+    "aea": (aea_constants, aea_forward, aea_inverse),
     "lcc": (lcc_constants, lcc_forward, lcc_inverse),
     "tmerc": (tmerc_constants, tmerc_forward, tmerc_inverse),
     "stere": (stere_constants, stere_forward, stere_inverse),
@@ -719,22 +868,22 @@ FAMILIES = {
 }
 
 
-def constants_for(proj4: str) -> tuple[str, dict]:
-    """(family, constants) for a supported projected proj4 string."""
-    p = parse_params(proj4)
-    fam = p.get("proj")
+def constants_for(crs: str) -> tuple[str, dict]:
+    """(family, constants) for EPSG:3857 or a supported proj4 string."""
+    p = parse_params(crs)
+    fam = p.get("proj", crs)  # "EPSG:3857" has no +params: it is its own key
     if fam == "utm":
         p, fam = utm_params(p), "tmerc"
     if fam not in FAMILIES:
-        raise ValueError(f"unsupported projection family: {fam!r} in {proj4!r}")
+        raise ValueError(f"unsupported projection family: {fam!r} in {crs!r}")
     return fam, FAMILIES[fam][0](p)
 
 
-def forward(be, proj4: str, lon, lat):
-    fam, c = constants_for(proj4)
+def forward(be, crs: str, lon, lat):
+    fam, c = constants_for(crs)
     return FAMILIES[fam][1](be, c, lon, lat)
 
 
-def inverse(be, proj4: str, x, y):
-    fam, c = constants_for(proj4)
+def inverse(be, crs: str, x, y):
+    fam, c = constants_for(crs)
     return FAMILIES[fam][2](be, c, x, y)

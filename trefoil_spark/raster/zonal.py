@@ -107,7 +107,7 @@ def tile_zonal_statistics(
 def authalic_row_areas_m2(spec: GridSpec) -> np.ndarray:
     """Exact ellipsoid (WGS84) area of one pixel per grid row, floored to
     integer m² (int64). Uses the same authalic q function as the Albers
-    equal-area projection (grid/proj.py — Snyder eq. 3-12): the area of
+    equal-area projection (grid/projections.py — Snyder eq. 3-12): the area of
     the lat band slice is a²/2 · Δλ · (q(top) − q(bot)). This is the
     area-true computation behind the reference's --albers zonal workflow
     (reference zones.py projects to a local AEA before measuring areas;
@@ -117,15 +117,15 @@ def authalic_row_areas_m2(spec: GridSpec) -> np.ndarray:
     numpy's and DuckDB's libm agree on the floor at every row of the
     fixture grids (asserted in tests); a boundary flip would need the
     true area to sit within ~1 ulp of an integer."""
-    from ..grid import proj
+    from ..grid import projections as pj
 
     y = np.arange(spec.height, dtype=np.float64)
     lat_top = spec.y0 - y * spec.dy
     lat_bot = spec.y0 - (y + 1) * spec.dy
-    k = proj.WGS84_A ** 2 / 2.0 * np.radians(spec.dx)
+    k = pj.WGS84_A ** 2 / 2.0 * np.radians(spec.dx)
     return np.floor(
-        k * (proj._aea_q(np.sin(np.radians(lat_top)))
-             - proj._aea_q(np.sin(np.radians(lat_bot))))
+        k * (pj._q_be(pj.NP, np.radians(lat_top), pj.WGS84_E2)
+             - pj._q_be(pj.NP, np.radians(lat_bot), pj.WGS84_E2))
     ).astype(np.int64)
 
 
