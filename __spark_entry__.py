@@ -292,12 +292,12 @@ def q_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parameterized kNN join (SURVEY §2 J— north rule): ALL THREE
-    strategies in one driver row — 'adaptive' (ring-expansion grid kNN,
-    proven-complete DataFrame-only done/remaining split), 'brute' (the
-    declared exactness baseline), 'cells' (cell-neighborhood candidates,
-    the scale path; exact at this (res, ring) for the fixture density,
-    also asserted vs brute in tests). Each strategy is exact here, so
-    ONE brute-force SQL replicated per strategy label is the oracle."""
+    entry points in one driver row — 'adaptive' (the cell ring kernel at
+    the per-query ring a per-cell count table proves exact, one pass),
+    'brute' (the declared exactness baseline), 'cells' (the same kernel
+    at a fixed ring; exact at this (res, ring) for the fixture density,
+    also asserted vs brute in tests). Each is exact here, so ONE
+    brute-force SQL replicated per strategy label is the oracle."""
     from trefoil_spark.operators.knn import (
         knn_join_adaptive,
         knn_join_bruteforce,

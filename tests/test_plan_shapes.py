@@ -109,3 +109,19 @@ def test_knn_cells_plan_broadcasts_queries(spark, pages_parquet):
     assert "BroadcastHashJoin" in plan
     # ranking uses the partial top-k before the exchange
     assert "WindowGroupLimit" in plan
+
+
+def test_knn_cells_plan_size_does_not_grow_with_ring(spark, pages_parquet):
+    """The query side explodes a column range and a row range and
+    applies one Morton expression, so a wider ring is a different
+    literal, not (2·ring+1)² pasted Morton ladders."""
+    from trefoil_spark.operators.knn import knn_join_cells
+
+    pages = spark.read.parquet(pages_parquet).select("doc_id", "lon", "lat")
+    queries = pages.filter(F.col("doc_id") % 100 == 0)
+
+    def size(ring):
+        df = knn_join_cells(pages, queries, k=5, res=7, ring=ring)
+        return len(df._jdf.queryExecution().analyzed().toJSON())
+
+    assert size(8) <= 1.5 * size(1)

@@ -191,6 +191,30 @@ def test_sql_backend_matches_numpy_duckdb(p4):
     assert np.abs(got["lat"] - la_np).max() < 1e-10
 
 
+def test_webmerc_nan_latitude(spark):
+    """A NaN latitude is clamped to MAX_LAT by the Catalyst form, by the
+    SQL text in Spark and by the SQL text in DuckDB (NaN sorts above
+    every number in both engines), so all three return the top of the
+    square, y = 20037508.34; numpy's clip passes NaN through. The SQL
+    text is what the frozen warp oracles run, so it stays as it is."""
+    from pyspark.sql import functions as F
+
+    top = float(proj.transform("EPSG:4326", "EPSG:3857", 10.0, pj.MAX_LAT)[1])
+    assert round(top, 2) == 20037508.34
+    assert math.isnan(float(proj.transform("EPSG:4326", "EPSG:3857", 10.0, math.nan)[1]))
+
+    df = spark.createDataFrame([(10.0, math.nan)], "lon double, lat double")
+    _, cy = proj.transform_cols("EPSG:4326", "EPSG:3857", "lon", "lat")
+    _, fy = proj.transform_sql("EPSG:4326", "EPSG:3857", "lon", "lat")
+    row = df.select(cy.alias("col"), F.expr(fy).alias("sql")).collect()[0]
+    duck = duckdb.connect().execute(
+        f"SELECT {fy} FROM (SELECT CAST(10 AS DOUBLE) AS lon, CAST('NaN' AS DOUBLE) AS lat)"
+    ).fetchone()[0]
+    assert abs(row["col"] - top) < 1e-6
+    assert abs(row["sql"] - top) < 1e-6
+    assert abs(duck - top) < 1e-6
+
+
 @pytest.mark.parametrize("p4", [LCC, UTM31, STERE_S, LAEA, WEBMERC, AEA])
 def test_column_backend_matches_numpy(spark, p4):
     """The Catalyst twin (used by the distributed warp pair enumeration)
@@ -254,6 +278,14 @@ def test_unsupported_still_raise():
                 "+proj=merc", "+proj=EPSG:3857", "+proj=lccx +lat_1=33"):
         with pytest.raises(ValueError):
             proj.normalize_crs(crs)
+    # +proj=longlat is EPSG:4326 only on WGS84, unshifted, at Greenwich
+    for crs in ("+proj=longlat +ellps=clrk66 +lon_0=90", "+proj=longlat +datum=NAD27",
+                "+proj=longlat +datum=NAD83", "+proj=longlat +ellps=GRS80",
+                "+proj=longlat +a=6378137 +b=6378137", "+proj=longlat +towgs84=1,2,3",
+                "+proj=longlat +pm=paris", "+proj=longlat +pm=2.337229",
+                "+proj=longlat +lon_0=90"):
+        with pytest.raises(ValueError):
+            proj.normalize_crs(crs)
     with pytest.raises(ValueError):
         pj.constants_for("+proj=stere +lat_0=45")  # oblique stere
     with pytest.raises(ValueError):
@@ -262,7 +294,9 @@ def test_unsupported_still_raise():
 
 def test_crs_aliases_normalize():
     for crs in ("EPSG:4326", "epsg:4326", "WGS84", "latlong", "+proj=longlat",
-                "+proj=longlat +datum=WGS84 +no_defs", " EPSG:4326 "):
+                "+proj=longlat +datum=WGS84 +no_defs",
+                "+proj=longlat +ellps=WGS84 +towgs84=0,0,0 +pm=greenwich +lon_0=0",
+                " EPSG:4326 "):
         assert proj.normalize_crs(crs) == "EPSG:4326"
     for crs in ("EPSG:3857", "epsg:900913", "web_mercator",
                 "+proj=merc +a=6378137 +b=6378137 +lat_ts=0 +lon_0=0 +x_0=0 +y_0=0 "

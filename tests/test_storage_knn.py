@@ -1,6 +1,8 @@
 """Adaptive kNN + k-means."""
 
+import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -27,15 +29,13 @@ def test_adaptive_knn_is_complete(spark, sf_dir):
 
 
 def test_adaptive_knn_metrics_report_escalation_and_cap(spark):
-    """The adaptive loop's metrics hook reports ring depth, per-ring
-    escalation counts and the number of queries emitted at max_ring
-    without the completeness guarantee (VERDICT r5 item 9).
+    """A query whose second neighbour sits two cell rows away still gets
+    it, both with the proven ring and when ``max_ring`` cuts the ring.
 
-    Fixture forces escalation at res=7 (cells 2.8125° lon × 1.40625°
-    lat, guarantee unit 1.40625°): one near neighbor plus one 3° away,
-    k=2 — ring 1 can't see the far point, ring 2 sees it but its
-    distance (9 deg²) exceeds the ring-2 guarantee (7.91 deg²), ring 4
-    proves it."""
+    Fixture at res=7 (cells 2.8125° lon × 1.40625° lat): one near
+    neighbor plus one 3° away, k=2. The count table needs a 2-ring box
+    to hold k+1 points, which proves ring 7; ``max_ring=2`` cuts it to
+    2, which still reaches the far point's row."""
     from trefoil_spark.operators.knn import knn_join_adaptive
 
     points = spark.createDataFrame(
@@ -44,24 +44,127 @@ def test_adaptive_knn_metrics_report_escalation_and_cap(spark):
     )
     queries = points.filter(F.col("doc_id") == 10)
 
-    metrics = {}
-    got = knn_join_adaptive(
-        points, queries, k=2, res=7, max_ring=8, metrics=metrics
-    ).collect()
+    got = knn_join_adaptive(points, queries, k=2, res=7, max_ring=8).collect()
     assert {(r["neighbor_id"], r["rank"]) for r in got} == {(1, 1), (2, 2)}
-    assert metrics["rings_used"] == 4
-    assert metrics["escalated_per_ring"] == {1: 1, 2: 1, 4: 0}
-    assert metrics["cap_queries"] == 0
 
-    # cap hit: same fixture, max_ring=2 — the query is emitted unproven
-    m2 = {}
-    got2 = knn_join_adaptive(
-        points, queries, k=2, res=7, max_ring=2, metrics=m2
-    ).collect()
+    got2 = knn_join_adaptive(points, queries, k=2, res=7, max_ring=2).collect()
     assert {(r["neighbor_id"], r["rank"]) for r in got2} == {(1, 1), (2, 2)}
-    assert m2["rings_used"] == 2
-    assert m2["escalated_per_ring"] == {1: 1}
-    assert m2["cap_queries"] == 1
+
+
+def _numpy_knn(points, queries, k):
+    """Brute-force kNN in numpy: squared degrees, ties by neighbor id,
+    the query's own id excluded; rows without coordinates never match."""
+    located = [(i, x, y) for i, x, y in points if x is not None and y is not None]
+    ids = np.array([i for i, _, _ in located], dtype=np.int64)
+    lon = np.array([x for _, x, _ in located], dtype=np.float64)
+    lat = np.array([y for _, _, y in located], dtype=np.float64)
+    out = set()
+    for qid, qx, qy in queries:
+        if qx is None or qy is None:
+            continue
+        other = ids != qid
+        dx, dy = qx - lon[other], qy - lat[other]
+        d = dx * dx + dy * dy
+        for rank, j in enumerate(np.lexsort((ids[other], d))[:k], start=1):
+            out.add((qid, int(ids[other][j]), rank))
+    return out
+
+
+def _layout(name):
+    """(points, queries) as lists of (id, lon, lat); ids >= 10_000 are
+    queries that are not points."""
+    rng = np.random.default_rng(7)
+    if name == "pocket":
+        # one dense pocket, a thin scatter far away, empty elsewhere
+        pocket = rng.uniform([10.0, 10.0], [10.5, 10.4], size=(300, 2))
+        scatter = rng.uniform([-120.0, -60.0], [-60.0, -20.0], size=(12, 2))
+        xy = np.vstack([pocket, scatter])
+        points = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+        queries = points[::25] + [(10_000, 150.0, 70.0), (10_001, -170.0, -85.0),
+                                  (10_002, 12.0, 10.2)]
+    elif name == "poles_antimeridian":
+        xy = [(180.0, 0.0), (-180.0, 0.0), (179.9, 1.0), (-179.9, -1.0), (179.5, 0.5),
+              (-179.5, -0.5), (0.0, 90.0), (90.0, 90.0), (-90.0, 90.0), (0.0, -90.0),
+              (45.0, -90.0), (179.99, 89.99), (-179.99, -89.99), (0.0, 89.5),
+              (181.0, 0.2)]  # outside the domain: clamped into the last column
+        points = [(i, x, y) for i, (x, y) in enumerate(xy)]
+        queries = points + [(10_000, 179.95, 0.0), (10_001, -179.95, 0.0),
+                            (10_002, 0.0, 90.0), (10_003, 180.0, -90.0),
+                            (10_004, 185.0, 0.0), (10_005, 0.0, 95.0)]
+    elif name == "duplicates":
+        xy = [(5.0, 5.0)] * 9 + [(5.0, 5.5)] * 4 + [(-40.0, 30.0)] * 3
+        points = [(i, x, y) for i, (x, y) in enumerate(xy)]
+        queries = points + [(10_000, 5.0, 5.0), (10_001, -40.0, 31.0)]
+    elif name == "tight_bound":
+        # at res 5 (cells 11.25° × 5.625°): query 0 sits at the top-left
+        # corner of a cell whose other 4 points sit at the bottom-right,
+        # so the cell alone holds k+1 and D = hypot(11.25, 5.625); point
+        # 5, three rows up, is nearer than all of them and lies outside
+        # ring floor(D / 5.625) = 2. Query 10's cell holds only k points,
+        # itself included; its 4th neighbour, point 14, is 7 rows up.
+        xy = [(0.01, 5.62), (11.2, 0.01), (11.21, 0.02), (11.22, 0.03), (11.23, 0.04),
+              (0.01, 16.88), (-150.0, 1.0), (-150.1, 1.1), (-150.2, 1.2), (-150.3, 1.3),
+              (-150.0, 40.0)]
+        points = [(i if i < 6 else i + 4, x, y) for i, (x, y) in enumerate(xy)]
+        queries = points
+    elif name == "fewer_than_k":
+        points = [(0, -100.0, 40.0), (1, 120.0, -30.0), (2, 0.0, 0.0)]
+        queries = points + [(10_000, 60.0, 60.0)]
+    elif name == "null_coords":
+        xy = rng.uniform([-30.0, -30.0], [30.0, 30.0], size=(40, 2))
+        points = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+        points += [(40, None, 1.0), (41, 2.0, None), (42, None, None)]
+        queries = points[::5] + [(40, None, 1.0), (10_000, 0.5, None)]
+    return points, queries
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["pocket", "poles_antimeridian", "duplicates", "tight_bound", "fewer_than_k", "null_coords"],
+)
+def test_adaptive_knn_exact_on_adversarial_layouts(spark, name):
+    """The per-cell count bound is exact against numpy brute force on
+    layouts built to break a grid kNN: empty regions around one dense
+    pocket, points on the poles and both sides of the antimeridian,
+    duplicate coordinates, neighbours just outside a too-small ring,
+    fewer than k+1 points, NULL coordinates."""
+    from trefoil_spark.operators.knn import knn_join_adaptive
+
+    points, queries = _layout(name)
+    schema = "doc_id bigint, lon double, lat double"
+    got = knn_join_adaptive(
+        spark.createDataFrame(points, schema), spark.createDataFrame(queries, schema),
+        k=4, res=5, max_ring=64,
+    ).collect()
+    assert {(r["query_id"], r["neighbor_id"], r["rank"]) for r in got} == _numpy_knn(
+        points, queries, 4
+    )
+
+
+def test_adaptive_knn_job_count_is_fixed(spark):
+    """One pass: the same number of Spark jobs whether every query finds
+    its neighbours in its own cell or needs a wide ring."""
+    from trefoil_spark.operators.knn import knn_join_adaptive
+
+    rng = np.random.default_rng(3)
+    schema = "doc_id bigint, lon double, lat double"
+
+    def jobs(xy, group):
+        pts = spark.createDataFrame(
+            [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)], schema
+        )
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "knn job count")
+        try:
+            rows = knn_join_adaptive(pts, pts.filter("doc_id % 10 = 0"), k=3, res=6).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    dense = rng.uniform([0.0, 0.0], [1.0, 1.0], size=(500, 2))
+    sparse = rng.uniform([-180.0, -90.0], [180.0, 90.0], size=(40, 2))
+    assert jobs(dense, "knn-dense") == jobs(sparse, "knn-sparse")
 
 
 def test_kmeans_lloyd_quantized_matches_numpy(spark, sf_dir):

@@ -252,18 +252,6 @@ def morton_fast_sql(ix_col: str, iy_col: str, res: int) -> str:
     )
 
 
-def morton_fn_sql(ix_col: str, iy_col: str, res: int) -> str:
-    """Per-bit morton (same value as :func:`morton_sql_expr`) with
-    function-form shifts, for contexts where the `>>` operator does not
-    parse (inside `array(...)` argument lists). Spark-side only."""
-    terms = []
-    for b in range(res):
-        terms.append(f"((shiftright({ix_col}, {b}) & 1) * {1 << (2 * b + 5)})")
-        terms.append(f"((shiftright({iy_col}, {b}) & 1) * {1 << (2 * b + 6)})")
-    morton = " + ".join(terms) if terms else "0"
-    return f"({morton} + {res})"
-
-
 def cell_fast_sql(lon_col: str, lat_col: str, res: int) -> str:
     """One-shot Spark-side cell id (bit-trick morton over inlined coords).
 

@@ -25,7 +25,6 @@ _ALIASES = {
     "epsg:4326": "EPSG:4326",
     "wgs84": "EPSG:4326",
     "latlong": "EPSG:4326",
-    "+proj=longlat": "EPSG:4326",
     "epsg:3857": "EPSG:3857",
     "epsg:900913": "EPSG:3857",
     "web_mercator": "EPSG:3857",
@@ -46,6 +45,19 @@ def _is_web_mercator(proj4: str) -> bool:
     )
 
 
+def _is_wgs84_longlat(proj4: str) -> bool:
+    """+proj=longlat names EPSG:4326 only on the WGS84 datum and
+    ellipsoid, unshifted, on the Greenwich meridian."""
+    p = _pj.parse_params(proj4)
+    return (
+        p.get("datum", "WGS84") == "WGS84"
+        and _pj.ellipsoid(p) == (_pj.WGS84_A, _pj.WGS84_E2)
+        and all(float(v) == 0 for v in str(p.get("towgs84", 0)).split(","))
+        and p.get("pm", 0) in (0, "greenwich")
+        and p.get("lon_0", 0) == 0
+    )
+
+
 def normalize_crs(crs: str) -> str:
     """Canonical CRS string: EPSG:4326, EPSG:3857, or the proj4 string
     itself. Matches the first token exactly (no prefix matching)."""
@@ -53,6 +65,8 @@ def normalize_crs(crs: str) -> str:
     first = s.split(maxsplit=1)[0] if s else ""
     if first.lower() in _ALIASES:
         return _ALIASES[first.lower()]
+    if first == "+proj=longlat" and _is_wgs84_longlat(s):
+        return "EPSG:4326"
     if first == "+proj=merc" and _is_web_mercator(s):
         return "EPSG:3857"
     families = [f for f in _pj.FAMILIES if f != "EPSG:3857"] + ["utm"]
@@ -100,6 +114,11 @@ def transform_sql(src_crs: str, dst_crs: str, x_sql: str, y_sql: str) -> tuple[s
     """Engine-portable SQL-text form of :func:`transform` (valid in both
     Spark SQL and DuckDB) — generates correctness-oracle SQL for warp
     queries in projected CRS. Raises ``ValueError`` for an ellipsoidal
-    aea source: its inverse iterates, and SQL text has no loop."""
+    aea source: its inverse iterates, and SQL text has no loop.
+
+    The EPSG:3857 latitude clamp is a ``CASE WHEN lat > MAX_LAT``, which
+    is true for NaN in DuckDB (NaN sorts above every number), so a NaN
+    latitude gives y = 20037508.34 there, as in Catalyst, where numpy
+    returns NaN. The frozen warp oracles run this text, so it stays."""
     ox, oy = _transform(_pj.SQL, src_crs, dst_crs, x_sql, y_sql)
     return str(ox), str(oy)

@@ -1,18 +1,20 @@
 """kNN join on geotagged records (north-rule operator; SURVEY.md §2.3 "—").
 
-Two physical strategies:
+Two physical strategies, the second with two ways to size its ring:
 
 - **Brute force** (exactness baseline): queries broadcast against all
   points, ranking window per query. WindowGroupLimit gives partial top-k
   before the exchange, so the shuffle carries ≤ k rows per (query,
   partition) — correct at any scale, O(N·Q) distance evaluations.
-- **Cell-bucketed ring join** (the scale path): both sides keyed by
-  qcell at ``res``; candidates = points in the query's cell + its ring-R
-  neighborhood (driver-enumerated neighbor offsets exploded on the SMALL
-  query side, broadcast, equi-join on cell). Exact iff the true k-th
-  neighbor lies within the ring — guaranteed when ring_radius·cell_size
-  ≥ the k-th-neighbor distance bound; callers pick (res, ring) from
-  point density, the classic grid-kNN trade.
+- **Cell ring join** (the scale path): both sides keyed by qcell at
+  ``res``; each query row carries its ring ``_R`` and explodes one range
+  of columns (wrapped in longitude) and one range of rows (clipped to the
+  grid), so its (2·_R+1)² neighbourhood is one Morton expression over two
+  columns, whatever the ring. The neighbourhood rows are broadcast and
+  equi-joined on cell against the big point side, which computes one
+  cell id and is never shuffled. :func:`knn_join_cells` gives every
+  query the caller's ring; :func:`knn_join_adaptive` gives each query
+  the ring a per-cell count table proves exact.
 
 Distance: squared Euclidean in degrees (deterministic rational ops on
 exact inputs → bit-identical ranking in the DuckDB oracle; ties broken
@@ -20,6 +22,10 @@ by neighbor id)."""
 
 from __future__ import annotations
 
+import json
+import math
+
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -33,6 +39,33 @@ def sq_dist(qlon, qlat, plon, plat) -> Column:
     return dx * dx + dy * dy
 
 
+def _rank(cand: DataFrame, k: int) -> DataFrame:
+    w = W.partitionBy("query_id").orderBy(
+        sq_dist("_qlon", "_qlat", "_plon", "_plat"), F.col("neighbor_id")
+    )
+    return (
+        cand.filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", F.row_number().over(w).alias("rank"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _points(points: DataFrame, id_col: str, lon_col: str, lat_col: str) -> DataFrame:
+    return points.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(lon_col).alias("_plon"),
+        F.col(lat_col).alias("_plat"),
+    )
+
+
+def _queries(queries: DataFrame, id_col: str, lon_col: str, lat_col: str) -> DataFrame:
+    return queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(lon_col).alias("_qlon"),
+        F.col(lat_col).alias("_qlat"),
+    )
+
+
 def knn_join_bruteforce(
     points: DataFrame,
     queries: DataFrame,
@@ -41,65 +74,34 @@ def knn_join_bruteforce(
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(lon_col).alias("_qlon"),
-        F.col(lat_col).alias("_qlat"),
-    )
-    p = points.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(lon_col).alias("_plon"),
-        F.col(lat_col).alias("_plat"),
-    )
-    cand = p.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id"))
-    scored = cand.withColumn("_d", sq_dist("_qlon", "_qlat", "_plon", "_plat"))
-    w = W.partitionBy("query_id").orderBy(F.col("_d"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    q = _queries(queries, id_col, lon_col, lat_col)
+    return _rank(_points(points, id_col, lon_col, lat_col).crossJoin(F.broadcast(q)), k)
 
 
-def knn_join_cells(
-    points: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-    res: int = 7,
-    ring: int = 1,
-) -> DataFrame:
-    """Grid kNN: equi-join on the qcell neighborhood instead of cross join.
+def _ring_join(p: DataFrame, q: DataFrame, k: int, res: int) -> DataFrame:
+    """The candidate kernel: ``p`` is :func:`_points`; ``q`` holds
+    query_id, _qlon, _qlat, the query's cell coords _ix/_iy and its
+    ring _R.
 
-    The query side explodes its cell's (2·ring+1)² neighborhood (pure
-    integer cell arithmetic via ix/iy offsets) and broadcasts; the big
-    point side computes one cell id — no shuffle of points, candidates
-    shrink from N to N·(ring²·cellarea/worldarea)."""
+    Columns wrap in longitude and rows clip to the grid, the same cell
+    set as wrapping and clamping every (dx, dy) offset. When 2·_R+1 ≥ n
+    the column range stops after n columns, so the exploded cells are
+    distinct without an ``array_distinct``."""
     n = 1 << res
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(lon_col).alias("_qlon"),
-        F.col(lat_col).alias("_qlat"),
-    )
-    # neighborhood cells via ix/iy offsets (clamp lat, wrap lon) — built
-    # as ONE SQL expression string (r8): the former per-offset Column-op
-    # loop cost ~0.9 s of py4j round trips per plan build
-    q = q.withColumn(
-        "_ix", F.expr(_cells.ix_sql_expr("_qlon", res))
-    ).withColumn("_iy", F.expr(_cells.iy_sql_expr("_qlat", res)))
-    offsets = [(dx, dy) for dx in range(-ring, ring + 1) for dy in range(-ring, ring + 1)]
-    elems = ", ".join(
-        _cells.morton_fn_sql(
-            f"pmod(_ix + {dx}, {n})",
-            f"least(greatest(_iy + {dy}, 0), {n - 1})",
-            res,
+    q_exp = (
+        q.withColumn(
+            "_x",
+            F.explode(F.expr(
+                f"transform(sequence(-_R, least(_R, {n - 1} - _R)), d -> pmod(_ix + d, {n}))"
+            )),
         )
-        for dx, dy in offsets
+        .withColumn(
+            "_y",
+            F.explode(F.expr(f"sequence(greatest(_iy - _R, 0), least(_iy + _R, {n - 1}))")),
+        )
+        .select("query_id", "_qlon", "_qlat",
+                F.expr(_cells.morton_fast_sql("_x", "_y", res)).alias("_cell"))
     )
-    cells_arr = F.expr(f"array_distinct(array({elems}))")
-    q_exp = q.withColumn("_cell", F.explode(cells_arr)).drop("_ix", "_iy")
 
     # NOTE (r8, measured and rejected): a conditional round-robin
     # repartition of a 1-partition points side DID distribute the
@@ -112,28 +114,78 @@ def knn_join_cells(
     # spread-bits ladder references its input ~32x textually, so the
     # coord expressions must be attributes (cheap re-reads), not inlined
     # trees — same shape as pip_join's _qx/_qy
-    p = points.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(lon_col).alias("_plon"),
-        F.col(lat_col).alias("_plat"),
-    ).withColumn(
-        "_px", F.expr(_cells.ix_sql_expr("_plon", res))
-    ).withColumn(
-        "_py", F.expr(_cells.iy_sql_expr("_plat", res))
-    ).withColumn(
-        "_pcell", F.expr(_cells.morton_fast_sql("_px", "_py", res))
-    ).drop("_px", "_py")
+    p = p.withColumns({
+        "_px": F.expr(_cells.ix_sql_expr("_plon", res)),
+        "_py": F.expr(_cells.iy_sql_expr("_plat", res)),
+    }).withColumn("_pcell", F.expr(_cells.morton_fast_sql("_px", "_py", res)))
 
-    cand = p.join(F.broadcast(q_exp), F.col("_pcell") == F.col("_cell")).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = cand.withColumn("_d", sq_dist("_qlon", "_qlat", "_plon", "_plat"))
-    w = W.partitionBy("query_id").orderBy(F.col("_d"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank(p.join(F.broadcast(q_exp), F.col("_pcell") == F.col("_cell")), k)
+
+
+def _cell_queries(
+    queries: DataFrame, id_col: str, lon_col: str, lat_col: str, res: int
+) -> DataFrame:
+    """Queries with located coordinates and their cell coords _ix/_iy."""
+    return _queries(queries, id_col, lon_col, lat_col).filter(
+        F.col("_qlon").isNotNull() & F.col("_qlat").isNotNull()
+    ).withColumns({
+        "_ix": F.expr(_cells.ix_sql_expr("_qlon", res)),
+        "_iy": F.expr(_cells.iy_sql_expr("_qlat", res)),
+    })
+
+
+def knn_join_cells(
+    points: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str = "doc_id",
+    lon_col: str = "lon",
+    lat_col: str = "lat",
+    res: int = 7,
+    ring: int = 1,
+) -> DataFrame:
+    """Grid kNN at a fixed ring: every query's candidates are the points
+    in its cell's (2·ring+1)² neighbourhood. Exact only when that
+    neighbourhood holds each query's true k nearest; for a proven-exact
+    ring per query use :func:`knn_join_adaptive`."""
+    q = _cell_queries(queries, id_col, lon_col, lat_col, res).withColumn("_R", F.lit(ring))
+    return _ring_join(_points(points, id_col, lon_col, lat_col), q, k, res)
+
+
+def _exact_rings(counts: np.ndarray, k: int, max_ring: int) -> np.ndarray:
+    """Per-cell ring that provably holds the k nearest neighbours.
+
+    ``counts[iy, ix]`` are the located points per cell of the n×n grid.
+    A summed-area table gives each cell the smallest r whose (2r+1)² box
+    (not wrapped) holds ≥ k+1 points — the +1 because the query may be
+    one of them. Then the k-th neighbour of any query in the cell lies
+    within D = (r+1)·hypot(cell_w, cell_h), and every point outside the
+    query's ring R is more than R·min(cell_w, cell_h) away: strictly,
+    so a same-distance point outside the ring can never displace a
+    returned neighbour on an id tie-break. R is the smallest integer
+    with R·min(cell_w, cell_h) > D. Rings are capped at n−1, which
+    covers the whole grid from any cell (so a grid holding fewer than
+    k+1 points is exact too), and at ``max_ring``, beyond which there is
+    no guarantee."""
+    n = counts.shape[0]
+    sat = np.zeros((n + 1, n + 1), dtype=np.int64)
+    sat[1:, 1:] = counts.cumsum(0).cumsum(1)
+    i = np.arange(n)
+
+    def box(r):
+        x0, x1 = np.clip(i[None, :] - r, 0, n), np.clip(i[None, :] + r + 1, 0, n)
+        y0, y1 = np.clip(i[:, None] - r, 0, n), np.clip(i[:, None] + r + 1, 0, n)
+        return sat[y1, x1] - sat[y0, x1] - sat[y1, x0] + sat[y0, x0]
+
+    # bitwise binary search for the largest r whose box holds ≤ k points
+    # (box(r) grows with r); one more is the smallest that holds k+1
+    r = np.full((n, n), -1)
+    for b in reversed(range(n.bit_length() - 1)):
+        step = r + (1 << b)
+        r = np.where(box(step) <= k, step, r)
+    w, h = 360.0 / n, 180.0 / n
+    ring = np.floor((r + 2) * math.hypot(w, h) / min(w, h)).astype(np.int64) + 1
+    return np.minimum(ring, min(n - 1, max_ring))
 
 
 def knn_join_adaptive(
@@ -145,111 +197,45 @@ def knn_join_adaptive(
     lat_col: str = "lat",
     res: int = 7,
     max_ring: int = 8,
-    metrics: dict | None = None,
 ) -> DataFrame:
-    """Complete grid kNN via ring EXPANSION (SURVEY.md §4.2 item 4).
+    """Complete grid kNN in one pass (SURVEY.md §4.2 item 4): each query
+    runs the cell ring kernel at the ring :func:`_exact_rings` proves
+    exact for its cell.
 
-    A ring-R result for a query is PROVEN complete when its k-th neighbor
-    distance is strictly inside R cells' guaranteed reach: any point
-    outside the (2R+1)² neighborhood is at least R·min(cell_w, cell_h)
-    away (in the same-latitude band approximation used by the
-    squared-degree metric) — strict inequality, so a same-distance point
-    just outside the ring can never displace a returned neighbor on an
-    id tie-break. Queries failing the guarantee (or finding < k
-    candidates) re-run at ring 2R; the loop doubles until max_ring. Each
-    iteration is a broadcast equi-join — the big point table is never
-    shuffled, and the fraction of re-run queries drops geometrically for
-    non-adversarial densities.
-
-    The done/remaining split stays DataFrame-only (left_semi/left_anti
-    on the guard flag): nothing O(queries) is ever collected to the
-    driver, so 10⁸-query workloads are fine. Per-iteration results are
-    localCheckpoint-ed (eager) — that both materializes the ≤k·|remaining|
-    rows once (each feeds two consumers) and truncates the iterative
-    lineage. Each eager checkpoint runs its own Spark jobs, so the
-    per-job durations that ``tools/profile_layers.py`` prints split the
-    time ring by ring.
-
-    ``metrics`` (optional dict, mutated in place) makes the operator
-    report its own worst case — essential observability at 100 TB where
-    a single adversarial density pocket can silently quadruple ring
-    work.  Keys written: ``rings_used`` (deepest ring executed),
-    ``escalated_per_ring`` ({ring: queries still unproven after that
-    ring's guard}), ``cap_queries`` (queries emitted at ``max_ring``
-    WITHOUT the completeness guarantee — 0 unless the cap was hit).
-    Costs one count() job per iteration on the checkpointed remaining
-    set (replacing the isEmpty probe), driver memory O(#rings).
-    """
+    Three steps, a fixed number of Spark jobs whatever the density:
+    one aggregate of in-range point counts per cell (the driver holds
+    the n×n count grid, O(4^res), never O(points) or O(queries)); a
+    numpy summed-area table turning counts into a ring per cell; and
+    the kernel, with the 4^res rings riding in the plan as one constant
+    array that each query indexes by its cell. Points outside
+    lon [-180, 180] / lat [-90, 90] are not counted, because their
+    clamped cell does not bound their distance; a query out there gets
+    the ring covering the whole grid. Rings above ``max_ring`` are cut
+    to it without the completeness guarantee."""
     n = 1 << res
-    cell_h_deg = 180.0 / n
-    cell_w_deg = 360.0 / n
-    guarantee_unit = min(cell_h_deg, cell_w_deg)
-
-    remaining = queries
-    results = []
-    ring = 1
-    while True:
-        got = knn_join_cells(
-            points, remaining, k, id_col, lon_col, lat_col, res, ring
-        ).localCheckpoint(eager=True)
-        if ring >= max_ring:
-            results.append(got)
-            if metrics is not None:
-                metrics["rings_used"] = ring
-                # ring == 1 means max_ring == 1: nothing ever escalated,
-                # but the guard never ran either, so every query is
-                # unproven; count the full remaining set in both cases
-                metrics["cap_queries"] = remaining.count()
-            break
-        # completeness per query: found k candidates AND the k-th distance
-        # is STRICTLY within the ring guarantee radius
-        guard = (ring * guarantee_unit) ** 2
-        kth_d = (
-            got.filter(F.col("rank") == k)
-            .join(
-                remaining.select(
-                    F.col(id_col).alias("query_id"),
-                    F.col(lon_col).alias("_qlon"),
-                    F.col(lat_col).alias("_qlat"),
-                ),
-                "query_id",
-            )
-            .join(
-                points.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(lon_col).alias("_plon"),
-                    F.col(lat_col).alias("_plat"),
-                ),
-                "neighbor_id",
-            )
-            .withColumn("_d", sq_dist("_qlon", "_qlat", "_plon", "_plat"))
+    in_range = "({lon} BETWEEN -180 AND 180) AND ({lat} BETWEEN -90 AND 90)"
+    p = _points(points, id_col, lon_col, lat_col)
+    counts = np.zeros((n, n), dtype=np.int64)
+    for r in (
+        p.filter(F.expr(in_range.format(lon="_plon", lat="_plat")))
+        .groupBy(
+            F.expr(_cells.ix_sql_expr("_plon", res)).alias("ix"),
+            F.expr(_cells.iy_sql_expr("_plat", res)).alias("iy"),
         )
-        done_q = (
-            kth_d.filter(F.col("_d") < F.lit(guard))
-            .select("query_id")
-            .localCheckpoint(eager=True)
-        )
-        results.append(got.join(done_q, "query_id", "left_semi"))
-        remaining = remaining.join(
-            done_q,
-            remaining[id_col] == done_q["query_id"],
-            "left_anti",
-        ).localCheckpoint(eager=True)
-        if metrics is not None:
-            n_rem = remaining.count()
-            metrics.setdefault("escalated_per_ring", {})[ring] = n_rem
-            metrics["rings_used"] = ring
-            metrics.setdefault("cap_queries", 0)
-            empty = n_rem == 0
-        else:
-            empty = remaining.isEmpty()
-        if empty:
-            break
-        ring *= 2
-
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
-
-
+        .count()
+        .collect()
+    ):
+        counts[r["iy"], r["ix"]] = r["count"]
+    # one constant array: Catalyst folds the parse away, so no join,
+    # broadcast or job carries the rings (a one-row broadcast table cost
+    # a job and a nested-loop join, 0.2 s per query at sf0.1)
+    rings = F.from_json(F.lit(json.dumps(_exact_rings(counts, k, max_ring).ravel().tolist())),
+                        "array<int>")
+    q = _cell_queries(queries, id_col, lon_col, lat_col, res).withColumn(
+        "_R",
+        F.when(
+            F.expr(in_range.format(lon="_qlon", lat="_qlat")),
+            F.element_at(rings, F.expr(f"CAST(_iy * {n} + _ix + 1 AS INT)")),
+        ).otherwise(min(n - 1, max_ring)),
+    )
+    return _ring_join(p, q, k, res)
