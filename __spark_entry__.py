@@ -1020,10 +1020,8 @@ def _nc_ingest_oracle() -> str:
 def q_quantile_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §2 F4 (north-star quantile classification; absent in the
     reference — TODO at render_netcdf.py:181): rank-based quartile classes
-    over event values (deterministic tie-break) + per-class stats.
-    The engine also exposes sketch-based breaks via
-    raster/classify.py::quantile_breaks (approxQuantile) for the
-    scale path; the checked query uses exact ntile semantics."""
+    over event values (deterministic tie-break) + per-class stats, with
+    exact ntile semantics."""
     from pyspark.sql.window import Window as W
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(

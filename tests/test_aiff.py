@@ -118,7 +118,7 @@ def _aifc_container(comm_tail, body, ch=1, n=None, bits=16, rate=8000):
 @pytest.mark.parametrize("comp", [b"sowt", b"raw ", b"fl32", b"fl64",
                                   b"NONE"])
 def test_aifc_twin_roundtrip(comp):
-    from trefoil_spark.functions.aiff import encode_aifc
+    from tests.reference import encode_aifc
 
     rng = np.random.default_rng(7)
     if comp == b"raw ":
@@ -193,7 +193,7 @@ def test_aifc_unknown_compression():
 def test_aifc_sowt_vs_none_byte_order():
     """The same int16 wave stored sowt and NONE decodes identically
     even though the payload bytes are swapped."""
-    from trefoil_spark.functions.aiff import encode_aifc
+    from tests.reference import encode_aifc
 
     wave = np.array([[1], [-2], [300], [-30000]], np.int64)
     a = encode_aifc(wave, 8000, b"sowt")

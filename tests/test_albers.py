@@ -138,7 +138,8 @@ def test_warp_tiles_to_local_albers(spark):
     cover and the Catalyst aea transforms)."""
     from trefoil_spark.grid.bbox import get_local_albers_projection
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = SPEC
     p4 = get_local_albers_projection(src_spec.bbox)

@@ -6,7 +6,6 @@ import zlib
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from trefoil_spark.functions.png import (
     _SIGNATURE,
@@ -104,24 +103,3 @@ def test_frame_region_bounds_checked():
             + ctl + dat + _chunk(b"IEND", b""))
     with pytest.raises(ValueError, match="outside canvas"):
         decode_apng_frames(data)
-
-
-def test_frame_sample_real_apng(spark):
-    from trefoil_spark.operators.multimodal import frame_sample, synth_image
-
-    frames = [synth_image(d) for d in range(3)]
-    data = encode_apng(frames)
-    docs = spark.createDataFrame([(1,)], "doc_id bigint")
-    media = docs.select(
-        "doc_id", F.lit(bytearray(data)).alias("media"),
-        F.struct(
-            F.lit("video").alias("kind"), F.lit(16).alias("width"),
-            F.lit(16).alias("height"), F.lit(3).alias("n_frames"),
-            F.lit(0).alias("sample_rate"),
-        ).alias("media_meta"),
-    )
-    rows = frame_sample(media, every_n=2, decoder="real").collect()
-    idx = sorted(r["frame_idx"] for r in rows)
-    assert idx == [0, 2]
-    f2 = next(r for r in rows if r["frame_idx"] == 2)
-    assert bytes(f2["frame"]) == synth_image(2).tobytes()

@@ -3,10 +3,8 @@ parity."""
 import duckdb
 import pytest
 
-from trefoil_spark.operators.cleaning import (
-    boilerplate_sql_duckdb,
-    remove_host_boilerplate,
-)
+from tests.reference import boilerplate_sql_duckdb
+from trefoil_spark.operators.cleaning import remove_host_boilerplate
 
 NAV = "home | products | about us"
 FOOT = "copyright example corp all rights reserved"

@@ -90,14 +90,14 @@ def test_sql_twin_matches_numpy():
 
 
 def test_fast_morton_matches_numpy():
-    """r8: the Spark-side spread-bits morton builder (cells.cell_fast_sql)
-    is value-identical to the numpy encode (== the fingerprint-frozen
-    per-bit SQL form, by test_sql_twin_matches_numpy) at every resolution
-    the engine uses (6 = knn grid, 7 = pages key, 9/14 = pip_join
-    coarse/fine, 24 = max fine). Evaluated through Spark in
+    """r8: the Spark-side spread-bits morton builder (cells.morton_fast_sql
+    over coordinate columns) is value-identical to the numpy encode (== the
+    fingerprint-frozen per-bit SQL form, by test_sql_twin_matches_numpy) at
+    every resolution the engine uses (6 = knn grid, 7 = pages key, 9/14 =
+    pip_join coarse/fine, 24 = max fine). Evaluated through Spark in
     tests/test_pip_join_spark.py; here the pure-python builder is checked
     for well-formedness."""
     for res in (6, 7, 9, 14, 24):
-        fast = cells.cell_fast_sql("lon", "lat", res)
+        fast = cells.morton_fast_sql("_qx", "_qy", res)
         assert fast.count("(") == fast.count(")")
         assert f"* 32 + {res})" in fast

@@ -5,11 +5,8 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from trefoil_spark.operators.classifier import (
-    nb_sql_duckdb,
-    score_nb_quality,
-    train_nb_quality,
-)
+from tests.reference import nb_sql_duckdb
+from trefoil_spark.operators.classifier import score_nb_quality, train_nb_quality
 
 
 def _prose(i, topic):

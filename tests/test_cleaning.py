@@ -75,6 +75,37 @@ def test_c4_matches_duckdb_twin(spark):
     assert got["page_pass"].tolist() == want["page_pass"].tolist()
 
 
+def test_c4_null_text_dropped_by_both_filters(spark):
+    """NULL text: the page rule is FALSE in both engines, so both filters
+    drop the row; the cleaned text itself differs (Spark NULL, the DuckDB
+    twin '' through its coalesce) but never survives the page rule."""
+    twins = c4_sql_duckdb()
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(
+        {"doc_id": [0, 1], "text": [None, C4_DOCS[0]]}
+    ))
+    want = con.execute(
+        f"SELECT doc_id, {twins['cleaned']} AS cleaned, "
+        f"{twins['page_pass']} AS page_pass FROM docs ORDER BY doc_id"
+    ).fetchall()
+    assert want[0] == (0, "", False)
+    kept = con.execute(
+        f"SELECT doc_id FROM docs WHERE {twins['page_pass']}"
+    ).fetchall()
+    assert kept == [(1,)]
+
+    df = spark.createDataFrame(
+        [(0, None), (1, C4_DOCS[0])], "doc_id bigint, text string"
+    )
+    got = df.select(
+        "doc_id",
+        c4_clean_col().alias("cleaned"),
+        c4_page_pass_col().alias("page_pass"),
+    ).orderBy("doc_id").collect()
+    assert (got[0]["cleaned"], got[0]["page_pass"]) == (None, False)
+    assert [r["doc_id"] for r in c4_clean(df).collect()] == [1]
+
+
 def test_c4_semantics(spark):
     df = spark.createDataFrame(
         [(i, d) for i, d in enumerate(C4_DOCS)], "doc_id bigint, text string"
@@ -189,151 +220,6 @@ def test_dedup_paragraphs_within_doc(spark):
     assert out == "same para\n\nmiddle bit"
 
 
-def _lines(prefix, n, start=0):
-    # "the"/"and" in every line satisfy Gopher's >=2-stopword rule (r7)
-    return [
-        f"{prefix}{i}a the {prefix}{i}b and {prefix}{i}c {prefix}{i}d "
-        f"{prefix}{i}e {prefix}{i}f." for i in range(start, start + n)
-    ]
-
-
-def test_curate_training_corpus_end_to_end(spark):
-    """extract → Gopher → C4 → PII → exact dedup → line dedup →
-    decontamination, one composition: the clean doc survives once, the
-    PII-variant duplicate collapses onto it, the overlapping doc loses
-    its shared lines, the contaminated doc and the spam doc drop."""
-    from trefoil_spark.operators.curation import curate_training_corpus
-
-    base = _lines("alpha", 9)
-    base.insert(2, "Contact alphamail at jane@ex.com for details today.")
-    dup = list(base)
-    dup[2] = "Contact alphamail at bob@other.org for details today."
-    overlap = base[:2] + _lines("omega", 8)
-    contaminated = _lines("sigma", 10)
-    spam = "\n".join(["- buy now"] * 12)
-    page = "<html><head><title>t</title></head><body>{}</body></html>"
-    docs = spark.createDataFrame(
-        [
-            (0, "http://ex.com/keep", page.format("\n".join(base))),
-            (1, "http://ex.com/dup", page.format("\n".join(dup))),
-            (2, "http://ex.com/overlap", page.format("\n".join(overlap))),
-            (3, "http://ex.com/contam", page.format("\n".join(contaminated))),
-            (4, "http://ex.com/spam", page.format(spam)),
-        ],
-        "doc_id bigint, url string, html string",
-    )
-    # eval doc shares one 5-gram with doc 3's first line (tokens keep
-    # their punctuation, so the terminal period rides along)
-    eval_df = spark.createDataFrame(
-        [(100, "filler and sigma0c sigma0d sigma0e sigma0f. tail")],
-        "doc_id bigint, text string",
-    )
-    out = {
-        r["doc_id"]: r
-        for r in curate_training_corpus(
-            docs, eval_df=eval_df, ngram_n=5
-        ).collect()
-    }
-    assert sorted(out) == [0, 2]
-    # doc 0: all ten lines, email redacted
-    keep_lines = out[0]["text"].split("\n")
-    assert len(keep_lines) == 10
-    assert keep_lines[2] == "Contact alphamail at <EMAIL> for details today."
-    assert out[0]["n_chars"] == len(out[0]["text"])
-    # doc 2: the two lines shared with doc 0 are gone (first occurrence
-    # wins), its own eight remain
-    ov_lines = out[2]["text"].split("\n")
-    assert len(ov_lines) == 8
-    assert all(l.startswith("omega") for l in ov_lines)
-    assert out[2]["url"] == "http://ex.com/overlap"
-
-
-# ---------------------------------------------------------------------------
-# Exact-substring dedup (r6)
-# ---------------------------------------------------------------------------
-
-def _py_covered(a, b, k):
-    """Independent oracle: brute-force window set intersection."""
-    wins = {a[i:i + k] for i in range(len(a) - k + 1)}
-    covered = [False] * len(b)
-    for j in range(len(b) - k + 1):
-        if b[j:j + k] in wins:
-            for t in range(j, j + k):
-                covered[t] = True
-    return "".join(c for c, cov in zip(b, covered) if not cov)
-
-
-def test_covered_spans_matches_bruteforce():
-    import random
-
-    from trefoil_spark.operators.dedup import (
-        _covered_spans,
-        _remove_spans,
-    )
-
-    rng = random.Random(5)
-    alphabet = "ab"
-    for _ in range(60):
-        a = "".join(rng.choice(alphabet) for _ in range(80))
-        b = "".join(rng.choice(alphabet) for _ in range(80))
-        # plant a shared run to make hits likely
-        if rng.random() < 0.7:
-            run = a[10:30]
-            p = rng.randrange(0, 50)
-            b = b[:p] + run + b[p + len(run):]
-        for k in (4, 7, 13):
-            got = _remove_spans(b, _covered_spans(a, b, k))
-            assert got == _py_covered(a, b, k), (a, b, k)
-
-
-def test_dedup_substrings_spark(spark):
-    from trefoil_spark.operators.dedup import dedup_substrings
-
-    shared = ("the quick brown fox jumps over the lazy dog while "
-              "seventy sailors sing sea shanties by the shore")
-    docs = [
-        (0, f"intro zero {shared} outro zero"),
-        (1, f"intro one {shared} outro one"),
-        (2, "a completely different document with its own words"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    out = {
-        r["doc_id"]: r["text"]
-        for r in dedup_substrings(
-            df, min_len=30, num_hashes=16, bands=4, rows_per_band=4
-        ).collect()
-    }
-    assert sorted(out) == [0, 1, 2]
-    # first occurrence untouched
-    assert out[0] == docs[0][1]
-    # the shared span is gone from doc 1 (coverage extends into the
-    # shared " outro " context that follows it in both docs)
-    assert shared not in out[1]
-    assert out[1].startswith("intro one")
-    # expected exactly: remove covered chars per the window rule
-    assert out[1] == _py_covered(docs[0][1], docs[1][1], 30)
-    # untouched doc passes through bit-identical
-    assert out[2] == docs[2][1]
-
-
-def test_dedup_incremental(spark):
-    from trefoil_spark.operators.cleaning import dedup_incremental
-
-    seen = spark.createDataFrame(
-        [("old content",)], "text string"
-    ).select(F.md5(F.encode("text", "UTF-8")).alias("digest"))
-    new = spark.createDataFrame(
-        [(10, "old content"),      # already in corpus: dropped
-         (11, "fresh content"),
-         (12, "fresh content"),    # in-batch dup: loses to 11
-         (13, "other fresh")],
-        "doc_id bigint, text string",
-    )
-    kept = sorted(r["doc_id"]
-                  for r in dedup_incremental(new, seen).collect())
-    assert kept == [11, 13]
-
-
 def test_sample_deterministic(spark):
     from trefoil_spark.operators.cleaning import sample_deterministic
 
@@ -363,59 +249,3 @@ def test_sample_deterministic(spark):
     a2 = sorted(r["doc_id"]
                 for r in sample_deterministic(df, 0.25).collect())
     assert a2 == a
-
-
-def test_substring_recall_banding_resistant(spark):
-    """VERDICT r6 item 5: LSH bands recall candidates by whole-document
-    similarity, so a long shared span inside otherwise-DISJOINT
-    documents can miss every band — quantify that, and verify the r7
-    winnowing-anchor channel recovers it (guarantee: any shared run of
-    >= k + w - 1 = 9 whole tokens yields a candidate pair)."""
-    import random
-
-    from trefoil_spark.operators.dedup import (
-        anchor_candidate_pairs,
-        dedup_substrings,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    rng = random.Random(11)
-    shared = " ".join(f"sharedtok{i}" for i in range(12))  # 12 tokens, >100 chars
-    pairs_planted = []
-    docs = []
-    for p in range(8):
-        # two docs per pair: disjoint vocabularies outside the span
-        a_words = [f"avoc{p}w{i}" for i in range(40)]
-        b_words = [f"bvoc{p}w{i}" for i in range(40)]
-        rng.shuffle(a_words), rng.shuffle(b_words)
-        a = " ".join(a_words[:20]) + " " + shared + " " + " ".join(a_words[20:])
-        b = " ".join(b_words[:20]) + " " + shared + " " + " ".join(b_words[20:])
-        docs += [(2 * p, a), (2 * p + 1, b)]
-        pairs_planted.append((2 * p, 2 * p + 1))
-    # NOTE: all pairs share the SAME span, so cross-pair candidates are
-    # expected too; recall is about the planted pairs being found.
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-
-    lsh = {(r["id_a"], r["id_b"]) for r in
-           lsh_candidate_pairs(minhash_signatures(df)).collect()}
-    anchor = {(r["id_a"], r["id_b"]) for r in
-              anchor_candidate_pairs(df).collect()}
-    lsh_recall = sum(p in lsh for p in pairs_planted) / len(pairs_planted)
-    anchor_recall = sum(p in anchor for p in pairs_planted) / len(pairs_planted)
-    # the guarantee: winnowing catches every planted pair
-    assert anchor_recall == 1.0
-    # the measured gap this channel exists for (don't pin the exact
-    # value — minhash params could change — but it must not be perfect
-    # on banding-resistant docs, else the fixture isn't adversarial)
-    assert lsh_recall < 1.0
-    print(f"recall: lsh={lsh_recall:.2f} anchor={anchor_recall:.2f}")
-
-    # end-to-end: the span is removed from the later doc of each pair
-    out = {r["doc_id"]: r["text"]
-           for r in dedup_substrings(df, min_len=50).collect()}
-    keeper = min(i for i, _ in docs)
-    for a_id, b_id in pairs_planted:
-        if a_id == keeper:
-            assert shared in out[a_id]
-        assert shared not in out[b_id]

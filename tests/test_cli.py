@@ -225,7 +225,7 @@ def test_render_tif(spark, workspace):
 
 
 def test_render_classified_json(spark, workspace):
-    from trefoil_spark.functions.png import decode_palette_png
+    from tests.reference import decode_palette_png
 
     outdir = os.path.join(workspace["dir"], "img_cls")
     cfg = '{"type": "classified", "colors": [[30, "#0000ff"], [97, "#ff0000"]]}'
@@ -357,7 +357,7 @@ def test_cli_curate_parquet_roundtrip(tmp_path, spark):
 def test_cli_curate_warc_mode(tmp_path, spark):
     """`curate` straight off WARC shards (ingest → extract → Gopher →
     C4 → PII → line dedup)."""
-    from trefoil_spark.sources.warc import write_warc
+    from tests.reference import write_warc
 
     lines = [
         f"Alpha{i} bravo{i} the charlie{i} and delta{i} echo{i} foxtrot{i}."

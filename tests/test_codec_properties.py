@@ -7,8 +7,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from trefoil_spark.functions.jpeg import decode_jpeg, encode_jpeg
+from tests.reference import decode_palette_png
 from trefoil_spark.functions.png import (
-    decode_palette_png,
     decode_rgb_png,
     encode_palette_png,
     encode_rgb_png,

@@ -3,10 +3,8 @@ the DuckDB QUALIFY-row_number twin, tie handling, schema identity."""
 
 import duckdb
 
-from trefoil_spark.operators.dedup import (
-    dedup_latest,
-    dedup_latest_sql_duckdb,
-)
+from tests.reference import dedup_latest_sql_duckdb
+from trefoil_spark.operators.dedup import dedup_latest
 
 ROWS = [
     # (doc_id, url, warc_ts, text) — url A captured 3x, B 2x (with a

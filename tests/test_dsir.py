@@ -7,12 +7,12 @@ import duckdb
 import pytest
 import pyspark.sql.functions as F
 
+from tests.reference import dsir_sql_duckdb
 from trefoil_spark.operators.dsir import (
     featurize_dsir,
     resample_dsir,
     score_dsir,
     train_dsir,
-    dsir_sql_duckdb,
 )
 
 # target distribution: clean English prose about weather

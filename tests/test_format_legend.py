@@ -1,4 +1,4 @@
-"""F13 PrecisionFormatter parity + F12 legend elements/strip."""
+"""F13 PrecisionFormatter parity + F12 legend elements and image."""
 
 import numpy as np
 
@@ -7,9 +7,7 @@ from trefoil_spark.functions.format import (
     PrecisionFormatter,
     format_labels,
     legend_elements,
-    legend_strip_png,
 )
-from trefoil_spark.functions.png import decode_palette_png
 from trefoil_spark.raster.render import ClassifiedRenderer, UniqueValuesRenderer
 
 
@@ -54,7 +52,7 @@ def test_precision_cap():
     assert format_labels([2.50, 5.00]) == ["2.5", "5"]
 
 
-def test_legend_elements_and_strip():
+def test_legend_elements():
     r = UniqueValuesRenderer(
         [(1, Color(255, 0, 0)), (2, Color(0, 255, 0)), (3, Color(0, 0, 255))],
         labels=["low", "mid", "high"],
@@ -67,11 +65,6 @@ def test_legend_elements_and_strip():
     els2 = legend_elements(c)
     assert [e["label"] for e in els2] == ["10", "20.5"]
 
-    png = legend_strip_png(r, width=8, patch_height=4)
-    idx, palette, _ = decode_palette_png(png)
-    assert idx.shape == (12, 8)
-    assert list(idx[:, 0]) == [0] * 4 + [1] * 4 + [2] * 4
-
 
 def test_font_and_legend_image():
     """F12 end-to-end: patches, ticks, and rasterized labels land in the
@@ -80,7 +73,7 @@ def test_font_and_legend_image():
 
     from trefoil_spark.functions.font5x7 import glyph, render_text
     from trefoil_spark.functions.format import legend_image_png
-    from trefoil_spark.functions.png import decode_palette_png
+    from tests.reference import decode_palette_png
     from trefoil_spark.raster.render import UniqueValuesRenderer
 
     # font sanity: every glyph is 7x5; '1' has its stem in the middle col

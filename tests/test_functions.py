@@ -1,4 +1,5 @@
-"""Packing, fill values, path parsing (F14-F15, F22), zonal CSV and ingest."""
+"""Packing, fill values, path parsing (F14-F15, F22) and the geo-dims
+heuristic (F21)."""
 
 import pytest
 
@@ -33,29 +34,9 @@ def test_resolve_dataset_variable():
     assert resolve_dataset_variable("/a/b.nc:v2") == ("/a/b.nc", "v2")
 
 
-def test_zonal_csv_layout(spark, tmp_path, sf_dir):
-    from pyspark.sql import functions as F
-
-    from trefoil_spark.operators.zonal import write_zonal_csv, zonal_statistics
-
-    df = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.lit("file0").alias("filename"),
-        F.lit("qty").alias("variable"),
-        F.col("l_returnflag").alias("zone"),
-        F.col("l_quantity").alias("v"),
-    )
-    stats = zonal_statistics(df, ["filename", "variable", "zone"], "v")
-    out = str(tmp_path / "zonal_csv")
-    write_zonal_csv(stats, out, has_time=False)
-    back = spark.read.option("header", True).csv(out)
-    # reference layout: filename, variable, zone lead the stat columns
-    assert back.columns[:3] == ["filename", "variable", "zone"]
-    assert back.count() == stats.count()
-
-
-def test_detect_geo_dims_and_interval():
-    """F21 heuristic parity (reference describe.py:10-26,95-105)."""
-    from trefoil_spark.sources.ingest import detect_geo_dims, get_interval
+def test_detect_geo_dims():
+    """F21 heuristic parity (reference describe.py:10-16,95-105)."""
+    from trefoil_spark.sources.ingest import detect_geo_dims
 
     # bare common names
     d = detect_geo_dims(["time", "lat", "lon"], dim_sizes={"time": 12})
@@ -71,8 +52,3 @@ def test_detect_geo_dims_and_interval():
     # single-step time is NOT a time dimension (reference :104)
     d = detect_geo_dims(["time", "y", "x"], dim_sizes={"time": 1})
     assert d["time"] is None and d["x"] == "x" and d["y"] == "y"
-
-    assert get_interval([0.0, 0.5, 1.0, 1.5]) == 0.5
-    assert get_interval([3.0, 2.0, 1.0]) == 1.0  # descending → abs
-    assert get_interval([0.0, 1.0, 3.0]) is None
-    assert get_interval([7.0]) is None

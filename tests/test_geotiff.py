@@ -13,7 +13,6 @@ from trefoil_spark.sources.geotiff import (
     _lzw_decode,
     geotiff_to_tiles,
     read_geotiff,
-    save_window_geotiff,
     write_geotiff,
 )
 
@@ -56,9 +55,15 @@ def test_window_export_and_reingest(spark, tmp_path):
     tiles = synthetic_tiles(spark, SPEC)
     bbox = BBox((-122.3, 33.1, -115.7, 36.9), "EPSG:4326")
     p = str(tmp_path / "win.tif")
-    meta = save_window_geotiff(p, tiles, SPEC, bbox)
+    # export: distributed window stitch, NaN → nodata, GeoTIFF writer
+    from trefoil_spark.raster.window_ops import stitch_window
 
     w = SPEC.window_for_bbox(bbox)
+    arr = stitch_window(tiles, SPEC, bbox)
+    x0 = SPEC.x0 + w.x_slice.start * SPEC.dx
+    y0 = SPEC.y0 - w.y_slice.start * SPEC.dy
+    write_geotiff(p, np.where(np.isnan(arr), np.float32(-9999.0), arr),
+                  x0, y0, SPEC.dx, SPEC.dy, crs=SPEC.crs, nodata=-9999.0)
     full = np.full((SPEC.height, SPEC.width), np.nan, dtype=np.float32)
     for ty in range(SPEC.ntiles_y):
         for tx in range(SPEC.ntiles_x):
@@ -68,7 +73,7 @@ def test_window_export_and_reingest(spark, tmp_path):
 
     spec2, tiles2 = geotiff_to_tiles(spark, p, tile=64)
     assert (spec2.height, spec2.width) == want.shape
-    assert spec2.x0 == meta["x0"] and spec2.crs == "EPSG:4326"
+    assert spec2.x0 == x0 and spec2.crs == "EPSG:4326"
     got = np.full(want.shape, np.nan, dtype=np.float32)
     for r in tiles2.collect():
         blk = np.frombuffer(r["block"], dtype=np.float32).reshape(r["h"], r["w"])

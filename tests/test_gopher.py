@@ -7,8 +7,8 @@ import pytest
 
 from trefoil_spark.operators.textstats import (
     gopher_exprs,
+    gopher_pass_col,
     gopher_sql_duckdb,
-    gopher_stats,
 )
 
 DOCS = [
@@ -40,6 +40,16 @@ def expected():
     return con.execute(
         f"SELECT doc_id, {cols} FROM docs ORDER BY doc_id"
     ).fetchdf()
+
+
+def gopher_stats(df):
+    """Every Gopher feature plus the verdict, as the engine's filter
+    composes them."""
+    e = gopher_exprs("text")
+    return df.select(
+        "*", *[c.alias(n) for n, c in e.items()],
+        gopher_pass_col("text").alias("gopher_pass"),
+    )
 
 
 def test_gopher_matches_duckdb_twins(spark, expected):

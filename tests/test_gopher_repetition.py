@@ -15,7 +15,6 @@ from trefoil_spark.operators.textstats import (
     gopher_repetition_pass_col,
     gopher_repetition_pass_sql_duckdb,
     gopher_repetition_sql_duckdb,
-    gopher_repetition_stats,
 )
 
 DOCS = [
@@ -172,7 +171,11 @@ def test_gate_selection():
 
 def test_stats_frame(frames):
     sdf, _ = frames
-    out = gopher_repetition_stats(sdf.filter(F.col("doc_id") == 0))
+    e = gopher_repetition_exprs("text")
+    out = sdf.filter(F.col("doc_id") == 0).select(
+        "*", *[c.alias(n) for n, c in e.items()],
+        gopher_repetition_pass_col("text").alias("gopher_repetition_pass"),
+    )
     row = out.collect()[0]
     assert row.gopher_repetition_pass is False
     assert set(FEATURES) <= set(out.columns)

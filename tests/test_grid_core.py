@@ -6,7 +6,6 @@ import numpy as np
 import pytest
 
 from trefoil_spark.grid import BBox, CoordinateVariable, SpatialCoordinates, Window, union_bbox
-from trefoil_spark.grid.window import union_windows
 
 
 def test_range_functions():
@@ -112,7 +111,6 @@ def test_window_clip():
     with pytest.raises(ValueError):
         w.clip(arr3, slices=[slice(0, 1), slice(0, 1)])
     assert w.shape == (2, 3)
-    assert union_windows([w, Window((0, 2), (4, 6))]) == Window((0, 3), (2, 6))
 
 
 def test_window_tile_range():

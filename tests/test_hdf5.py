@@ -17,7 +17,7 @@ import struct
 import numpy as np
 import pytest
 
-from trefoil_spark.sources.hdf5 import H5File, NC4File, is_hdf5
+from trefoil_spark.sources.hdf5 import H5File, NC4File
 
 TMIN = "/root/repo/tests/data/tmin.nc"
 CA_RU = "/root/repo/tests/data/ca_ru_1km.nc"
@@ -102,7 +102,6 @@ def test_read_header_dispatch():
 
     nc = read_header(TMIN)  # HDF5 magic → NC4File
     assert nc.version == 4 and "tmin" in nc.variables
-    assert is_hdf5(TMIN) and not is_hdf5(__file__)
 
 
 # ---------------------------------------------------------------------------

@@ -1,43 +1,30 @@
-"""Raster ingestion (S2/S4/S11/S12) + describe (F23/A8)."""
-
-import os
+"""Dataset describe (F23/A8) over a tile table."""
 
 import numpy as np
 
 from trefoil_spark.grid.bbox import BBox
 from trefoil_spark.raster.gridspec import GridSpec
+from trefoil_spark.raster.synth import TILE_SCHEMA
 
 SPEC = GridSpec.from_bbox(BBox((0.0, 0.0, 8.0, 4.0), "EPSG:4326"), 512, 256)
 
 
-def test_ingest_npy_stack(spark, tmp_path):
-    from trefoil_spark.sources.ingest import concat_variables, describe_tiles, ingest_npy
+def test_describe_tiles(spark):
+    from trefoil_spark.sources.ingest import describe_tiles
 
     rng = np.random.default_rng(3)
-    arrays = {}
-    # out-of-order filenames: t must follow the PARSED date order (S11)
-    for date in ("2020-03-01", "2020-01-01", "2020-02-01"):
-        a = rng.uniform(0, 100, (256, 512)).astype(np.float32)
-        np.save(tmp_path / f"tmin_{date}.npy", a)
-        arrays[date] = a
+    rows = []
+    # two variables, three timesteps, 1x2 tiles each
+    for var in ("tmin", "tmax"):
+        for t in range(3):
+            a = rng.uniform(0, 100, (256, 512)).astype(np.float32)
+            for tx in range(2):
+                blk = np.ascontiguousarray(a[:, tx * 256:(tx + 1) * 256])
+                rows.append((var, t, 0, tx, 0, blk.tobytes(), 256, 256))
+    tiles = spark.createDataFrame(rows, TILE_SCHEMA)
 
-    tiles = ingest_npy(spark, str(tmp_path / "*.npy"), SPEC, var="tmin")
-    rows = {(r["t"], r["ty"], r["tx"]): r for r in tiles.collect()}
-    assert len(rows) == 3 * 1 * 2  # 3 timesteps x (1x2 tiles)
-
-    # t=0 must be the EARLIEST date regardless of listing order
-    got0 = np.frombuffer(rows[(0, 0, 0)]["block"], dtype=np.float32).reshape(256, 256)
-    assert np.array_equal(got0, arrays["2020-01-01"][:, :256])
-    got2 = np.frombuffer(rows[(2, 0, 1)]["block"], dtype=np.float32).reshape(256, 256)
-    assert np.array_equal(got2, arrays["2020-03-01"][:, 256:])
-
-    # S12: concat along the variable dimension
-    tiles2 = ingest_npy(spark, str(tmp_path / "*.npy"), SPEC, var="tmax")
-    both = concat_variables(tiles, tiles2)
-    assert both.select("var").distinct().count() == 2
-
-    # F23/A8 describe
-    d = describe_tiles(both, SPEC)
+    d = describe_tiles(tiles, SPEC)
+    assert set(d) == {"tmin", "tmax", "_grid"}
     assert d["tmin"]["t_range"] == (0, 2)
     assert d["tmin"]["valid_pixels"] == 3 * 256 * 512
     assert 0 <= d["tmin"]["min"] <= d["tmin"]["max"] <= 100

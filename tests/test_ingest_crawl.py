@@ -5,11 +5,11 @@ distributed one-task-per-shard scans."""
 import numpy as np
 import pytest
 
+from tests.reference import write_warc
 from trefoil_spark.sources.warc import (
     iter_warc_records,
     parse_http_response,
     warc_to_documents,
-    write_warc,
 )
 
 RECS = [
@@ -232,7 +232,7 @@ def test_probe_warc_media_routes_without_decoding(spark, tmp_path):
     records never enter the stage."""
     import numpy as np
 
-    from trefoil_spark.functions.mediainfo import build_mp3, mux_mp4
+    from tests.reference import build_mp3, mux_mp4
     from trefoil_spark.functions.png import encode_rgb_png
     from trefoil_spark.functions.vp8 import encode_webp_lossy
     from trefoil_spark.functions.wav import encode_wav

@@ -4,9 +4,9 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from tests.reference import ppl_bucket_sql_duckdb
 from trefoil_spark.operators.lm import (
     ppl_bucket_col,
-    ppl_bucket_sql_duckdb,
     ppl_tercile_cuts,
     score_perplexity,
     train_bigram_lm,

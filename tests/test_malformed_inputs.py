@@ -186,7 +186,8 @@ class TestWarcMalformedStatusLine:
     def test_bad_record_skipped_not_fatal(self, spark, tmp_path):
         """A shard mixing one malformed-status record with a good one
         yields the good one (per-record fault tolerance contract)."""
-        from trefoil_spark.sources.warc import warc_to_records, write_warc
+        from tests.reference import write_warc
+        from trefoil_spark.sources.warc import warc_to_records
 
         good = write_warc(
             [("response", "http://ex.com/ok", b"<html>fine</html>")],

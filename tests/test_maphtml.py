@@ -41,7 +41,7 @@ def test_write_map_preview(spark, tmp_path):
     files = set(os.listdir(tmp_path))
     assert {"index.html", "synth_0.png", "synth_1.png", "synth_legend.png"} <= files
     # the stitched frame PNG decodes to the full grid
-    from trefoil_spark.functions.png import decode_palette_png
+    from tests.reference import decode_palette_png
 
     idx, _, _ = decode_palette_png(open(tmp_path / "synth_0.png", "rb").read())
     assert idx.shape == (SPEC.height, SPEC.width)

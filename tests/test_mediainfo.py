@@ -6,10 +6,8 @@ import struct
 import numpy as np
 import pytest
 
+from tests.reference import build_mp3, mux_mkv, mux_mp4
 from trefoil_spark.functions.mediainfo import (
-    build_mp3,
-    mux_mkv,
-    mux_mp4,
     probe_media,
     probe_mkv,
     probe_mp3,
@@ -108,29 +106,6 @@ def test_probe_media_dispatch():
         probe_media(b"\x89PNG\r\n\x1a\n")
 
 
-def test_probe_media_features_spark(spark):
-    from trefoil_spark.operators.multimodal import (
-        attach_mixed_media,
-        probe_media_features,
-    )
-
-    docs = spark.createDataFrame([(d,) for d in range(8)], "doc_id bigint")
-    out = probe_media_features(
-        attach_mixed_media(docs).repartition(4, "doc_id")
-    ).orderBy("doc_id").collect()
-    assert len(out) == 8
-    by = {r["doc_id"]: r for r in out}
-    assert by[0]["container"] == "avi" and by[0]["codec"] == "dib"
-    assert by[0]["width"] == 16 and by[0]["height"] == 16
-    assert by[1]["container"] == "mp4" and by[1]["codec"] == "avc1"
-    assert by[1]["width"] == 321 and by[1]["duration_ms"] == 1001
-    assert by[1]["sample_rate"] == 48000 and by[1]["n_tracks"] == 2
-    assert by[2]["container"] == "webm" and by[2]["codec"] == "V_VP9"
-    assert by[3]["container"] == "mp3" and by[3]["channels"] == 1
-    assert by[7]["container"] == "mp3" and by[7]["channels"] == 2
-    assert by[7]["duration_ms"] == (4 + 7 % 16) * 1152 * 1000 // 44100
-
-
 def test_id3_text_tags():
     data = build_mp3(
         n_frames=3, tags={"title": "Tésting", "artist": "Some Band",
@@ -156,7 +131,8 @@ def test_id3_text_tags():
 
 
 def test_ogg_probe():
-    from trefoil_spark.functions.mediainfo import mux_ogg, probe_ogg
+    from tests.reference import mux_ogg
+    from trefoil_spark.functions.mediainfo import probe_ogg
 
     m = probe_ogg(mux_ogg("vorbis", 2, 44100, n_samples=44100 * 3))
     assert m["container"] == "ogg"
@@ -174,42 +150,10 @@ def test_ogg_probe():
         probe_ogg(b"RIFF" + b"\x00" * 30)
 
 
-# ---------------------------------------------------------------------------
-# MP4 MJPEG video decode (r6)
-# ---------------------------------------------------------------------------
-
-def test_mp4_mjpeg_roundtrip_two_chunks():
-    """5 frames force the two-chunk stco/stsc layout; every sample
-    decodes through the in-house JPEG decoder pixel-identical to an
-    AVI-MJPEG transport of the same frames (same JPEG payloads)."""
-    import numpy as np
-
-    from trefoil_spark.functions.avi import decode_avi, encode_avi_mjpeg
-    from trefoil_spark.functions.mediainfo import (
-        decode_mp4_video,
-        mux_mp4_mjpeg,
-    )
-
-    rng = np.random.default_rng(3)
-    frames = [rng.integers(0, 256, (16, 24, 3), dtype=np.uint8)
-              for _ in range(5)]
-    data = mux_mp4_mjpeg(frames, fps=12, quality=90)
-    got, fps = decode_mp4_video(data)
-    assert fps == 12.0
-    assert len(got) == 5
-    want, _ = decode_avi(encode_avi_mjpeg(frames, fps=12, quality=90))
-    for a, b in zip(got, want):
-        assert np.array_equal(a, b)
-
-
 def test_mp4_mjpeg_single_chunk_and_probe():
-    import numpy as np
-
-    from trefoil_spark.functions.mediainfo import (
-        decode_mp4_video,
-        mux_mp4_mjpeg,
-        probe_mp4,
-    )
+    """A photo-JPEG MP4 with real sample tables probes like the stub
+    twin: the stsd fourcc and the tkhd geometry come through."""
+    from tests.reference import mux_mp4_mjpeg
 
     frames = [np.full((8, 8, 3), v, np.uint8) for v in (10, 200)]
     data = mux_mp4_mjpeg(frames, fps=4)
@@ -217,46 +161,3 @@ def test_mp4_mjpeg_single_chunk_and_probe():
     assert info["tracks"][0]["kind"] == "video"
     assert info["tracks"][0]["codec"] == "jpeg"
     assert info["tracks"][0]["width"] == 8
-    got, fps = decode_mp4_video(data)
-    assert fps == 4.0 and len(got) == 2
-
-
-def test_mp4_non_mjpeg_codec_raises():
-    import numpy as np
-
-    from trefoil_spark.functions.mediainfo import (
-        decode_mp4_video,
-        mux_mp4_mjpeg,
-    )
-
-    data = bytearray(mux_mp4_mjpeg(
-        [np.zeros((8, 8, 3), np.uint8)], fps=2))
-    i = data.find(b"stsd")
-    j = data.find(b"jpeg", i)
-    data[j:j + 4] = b"avc1"
-    import pytest as _pt
-
-    with _pt.raises(NotImplementedError, match="avc1"):
-        decode_mp4_video(bytes(data))
-
-
-def test_frame_sample_real_mp4(spark):
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from trefoil_spark.functions.mediainfo import mux_mp4_mjpeg
-    from trefoil_spark.operators.multimodal import frame_sample
-
-    frames = [np.full((16, 16, 3), 17 * i, np.uint8) for i in range(3)]
-    data = mux_mp4_mjpeg(frames, fps=10, quality=95)
-    docs = spark.createDataFrame([(1,)], "doc_id bigint")
-    media = docs.select(
-        "doc_id", F.lit(bytearray(data)).alias("media"),
-        F.struct(
-            F.lit("video").alias("kind"), F.lit(16).alias("width"),
-            F.lit(16).alias("height"), F.lit(3).alias("n_frames"),
-            F.lit(0).alias("sample_rate"),
-        ).alias("media_meta"),
-    )
-    rows = frame_sample(media, every_n=2, decoder="real").collect()
-    assert sorted(r["frame_idx"] for r in rows) == [0, 2]

@@ -5,7 +5,6 @@ section plus the frame-count/fps facts the driver row drops."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from trefoil_spark.functions.avi import (
     decode_avi,
@@ -19,7 +18,6 @@ from trefoil_spark.operators.multimodal import (
     VIDEO_FRAMES,
     attach_real_video,
     decode_video_features,
-    frame_sample,
     lossy_flat_image,
     mjpeg_expectation_table,
     synth_image,
@@ -70,75 +68,3 @@ def test_video_decode_features_both_legs(spark):
                 for f in range(VIDEO_FRAMES)
             )
         assert [r["sum_r"], r["sum_g"], r["sum_b"]] == list(exp)
-
-
-def test_frame_sample_real_decoder(spark):
-    docs = spark.createDataFrame([(0,), (1,)], "doc_id bigint")
-    media = attach_real_video(docs).withColumn(
-        "media_meta",
-        F.struct(
-            F.lit("video").alias("kind"), F.lit(16).alias("width"),
-            F.lit(16).alias("height"),
-            F.lit(VIDEO_FRAMES).alias("n_frames"),
-            F.lit(0).alias("sample_rate"),
-        ),
-    )
-    out = frame_sample(media, every_n=2, decoder="real").collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(r)
-    assert set(by_doc) == {0, 1}
-    for d, rows in by_doc.items():
-        assert sorted(r["frame_idx"] for r in rows) == [0, 2]
-    # the DIB doc's sampled frame bytes are the exact source pixels
-    f0 = next(r for r in by_doc[0] if r["frame_idx"] == 0)
-    assert bytes(f0["frame"]) == synth_image(0).tobytes()
-
-
-def test_frame_sample_real_gif(spark):
-    """Animated GIF payloads ride the same real frame-sample path as
-    AVI: two 2x2 frames built by hand (GIF89a, GCE per frame,
-    disposal=1), every_n=1 yields both composited frames."""
-    import struct
-
-    def gce(disposal=1):
-        return bytes([0x21, 0xF9, 4, disposal << 2, 0, 0, 0, 0])
-
-    def img_desc(w, h):
-        return b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0])
-
-    # global palette: index 0 = red, 1 = blue (2 colors, mcs=2)
-    hdr = (b"GIF89a" + struct.pack("<HH", 2, 2)
-           + bytes([0x80 | 0x00, 0, 0])  # GCT flag, 2 entries
-           + bytes([255, 0, 0, 0, 0, 255]))
-    # LZW with mcs=2: codes clear=4,eoi=5, width 3
-    def lzw_all(index):
-        # 4 pixels of the same index: clear, lit, ref/lits, eoi
-        from tests.test_gif_foreign import pack_codes
-        # width bumps to 4 once the KwKwK entry pushes next-code to 8
-        codes = [(4, 3), (index, 3), (6, 3), (index, 4), (5, 4)]
-        raw = pack_codes(codes)
-        return bytes([2]) + bytes([len(raw)]) + raw + b"\x00"
-
-    data = (hdr + gce(1) + img_desc(2, 2) + lzw_all(0)
-            + gce(1) + img_desc(2, 2) + lzw_all(1) + b"\x3b")
-
-    from trefoil_spark.functions.gif import decode_gif_frames
-    frames = decode_gif_frames(data)
-    assert len(frames) == 2
-
-    docs = spark.createDataFrame([(7,)], "doc_id bigint")
-    media = docs.select(
-        "doc_id", F.lit(bytearray(data)).alias("media"),
-        F.struct(
-            F.lit("video").alias("kind"), F.lit(2).alias("width"),
-            F.lit(2).alias("height"), F.lit(2).alias("n_frames"),
-            F.lit(0).alias("sample_rate"),
-        ).alias("media_meta"),
-    )
-    rows = frame_sample(media, every_n=1, decoder="real").collect()
-    assert [r["frame_idx"] for r in sorted(rows, key=lambda r: r["frame_idx"])] == [0, 1]
-    f0 = next(r for r in rows if r["frame_idx"] == 0)
-    f1 = next(r for r in rows if r["frame_idx"] == 1)
-    assert bytes(f0["frame"]) == bytes([255, 0, 0] * 4)
-    assert bytes(f1["frame"]) == bytes([0, 0, 255] * 4)

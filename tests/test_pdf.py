@@ -6,7 +6,8 @@ import zlib
 
 import pytest
 
-from trefoil_spark.functions.pdf import extract_pdf_text, write_pdf
+from tests.reference import write_pdf
+from trefoil_spark.functions.pdf import extract_pdf_text
 
 
 def test_roundtrip_multipage_escapes():
@@ -64,7 +65,7 @@ def test_crlf_stream_framing():
 
 def test_warc_pdf_curation_leg(spark, tmp_path):
     from trefoil_spark.operators.curation import curate_from_warc
-    from trefoil_spark.sources.warc import write_warc
+    from tests.reference import write_warc
 
     good = " ".join(f"delta{i} the echo{i} of fox{i}" for i in range(20))
     pdf_bytes = write_pdf([good])

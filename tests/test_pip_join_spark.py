@@ -384,9 +384,10 @@ def test_zonal_of_pip_join_empty_inputs(spark, sf_dir, how):
 
 
 def test_fast_cell_builders_match_per_bit_in_spark(spark):
-    """r8: spread-bits cell_fast_sql equals the fingerprint-frozen
-    per-bit morton_sql_expr for every engine resolution, on
-    clamp-exercising out-of-domain coords."""
+    """r8: the form the engine runs — ix_sql_expr/iy_sql_expr into
+    coordinate columns, then the spread-bits morton_fast_sql — equals the
+    fingerprint-frozen per-bit morton_sql_expr for every engine
+    resolution, on clamp-exercising out-of-domain coords."""
     from pyspark.sql import functions as F
 
     from trefoil_spark.grid import cells as C
@@ -396,13 +397,13 @@ def test_fast_cell_builders_match_per_bit_in_spark(spark):
         "CAST((id * 40503 + 9973) % 999979 AS DOUBLE) / 999979 * 190 - 95 AS lat",
     )
     for res in (6, 7, 9, 14, 24):
-        slow = (
-            f"({C.morton_sql_expr('_px', '_py', res)})"
-            .replace("_px", f"({C.ix_sql_expr('lon', res)})")
-            .replace("_py", f"({C.iy_sql_expr('lat', res)})")
+        coords = pts.select(
+            F.expr(C.ix_sql_expr("lon", res)).alias("_qx"),
+            F.expr(C.iy_sql_expr("lat", res)).alias("_qy"),
         )
-        fast = C.cell_fast_sql("lon", "lat", res)
-        bad = pts.select(
+        slow = C.morton_sql_expr("_qx", "_qy", res)
+        fast = C.morton_fast_sql("_qx", "_qy", res)
+        bad = coords.select(
             F.expr(slow).alias("a"), F.expr(fast).alias("b")
         ).filter("a <> b").count()
         assert bad == 0, res

@@ -56,7 +56,6 @@ def test_lsh_ann_subset_of_exact_ranking(spark, sf_dir):
 
 def test_dedup_finds_planted_duplicates(spark, sf_dir):
     from trefoil_spark.operators.dedup import (
-        drop_exact_duplicates,
         exact_duplicate_groups,
         minhash_near_duplicates,
         simhash_near_duplicates,
@@ -73,10 +72,7 @@ def test_dedup_finds_planted_duplicates(spark, sf_dir):
     groups = exact_duplicate_groups(planted).collect()
     assert len(groups) == n_planted
     assert all(g["n_dups"] == 2 for g in groups)
-
-    kept = drop_exact_duplicates(planted)
-    assert kept.count() == docs.count()
-    assert kept.filter(F.col("doc_id") >= 1000000).count() == 0  # min-id wins
+    assert all(g["keep_id"] < 1000000 for g in groups)  # min-id wins
 
     near = minhash_near_duplicates(planted, threshold=0.99).toPandas()
     found = set(zip(near.id_a, near.id_b))
@@ -108,31 +104,33 @@ def test_interval_statistic_tiles(spark):
     assert np.allclose(got0, want[0].filled(np.nan), equal_nan=True, atol=1e-4)
 
 
-def test_linear_regression_tiles_matches_lstsq(spark):
-    """A11 parity: tile-grain OLS equals numpy lstsq per pixel
-    (reference timeseries.py:79-133 semantics)."""
+def test_linear_regression_rows_matches_lstsq(spark):
+    """A11 parity: the row-grain OLS over pixel rows equals numpy lstsq
+    per pixel (reference timeseries.py:79-133 semantics)."""
     from trefoil_spark.grid.bbox import BBox
     from trefoil_spark.raster.gridspec import GridSpec
-    from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.timeseries import linear_regression_tiles
+    from trefoil_spark.raster.synth import block_values
+    from trefoil_spark.raster.timeseries import linear_regression_rows
 
     spec = GridSpec.from_bbox(BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 256, 256)
-    tiles = synthetic_tiles(spark, spec, timesteps=4)
-    out = linear_regression_tiles(tiles).collect()
-    assert len(out) == 1
-    slope = np.frombuffer(out[0]["slope_block"], dtype=np.float32).reshape(256, 256)
-
     cube = np.stack([block_values(spec, t, 0, 0) for t in range(4)]).astype(np.float64)
-    ok = ~np.isnan(cube[0, 0, 0])
-    # pixel (0,0): plain lstsq oracle
+    pixels = [(0, 0), (5, 7), (100, 200)]
+    rows = [
+        (i, t, None if np.isnan(cube[t, py, px]) else float(cube[t, py, px]))
+        for i, (py, px) in enumerate(pixels) for t in range(4)
+    ]
+    df = spark.createDataFrame(rows, "pix int, t int, v double")
+    out = {r["pix"]: r for r in linear_regression_rows(df, "pix", "t", "v").collect()}
+
     ts = np.arange(4, dtype=np.float64)
-    for (py, px) in [(0, 0), (5, 7), (100, 200)]:
+    for i, (py, px) in enumerate(pixels):
         vals = cube[:, py, px]
         if np.isnan(vals).any():
             continue
         A = np.vstack([ts, np.ones(4)]).T
-        want_slope = np.linalg.lstsq(A, vals, rcond=None)[0][0]
-        assert slope[py, px] == pytest.approx(want_slope, rel=1e-4)
+        want_slope, want_icpt = np.linalg.lstsq(A, vals, rcond=None)[0]
+        assert out[i]["slope"] == pytest.approx(want_slope, rel=1e-9)
+        assert out[i]["intercept"] == pytest.approx(want_icpt, rel=1e-9, abs=1e-9)
 
 
 def test_calculate_delta(spark):

@@ -47,7 +47,7 @@ def test_checkpointed_write_and_resume(spark, sf_dir):
 
 
 def test_salted_aggregation_matches_plain(spark, sf_dir):
-    from trefoil_spark.plans.salting import detect_hot_keys, salted_sum_count
+    from trefoil_spark.plans.salting import salted_sum_count
     from trefoil_spark.sources.pages import build_pages
 
     pages = build_pages(spark, sf_dir, with_html=False).withColumn(
@@ -63,13 +63,10 @@ def test_salted_aggregation_matches_plain(spark, sf_dir):
     p = {r["cell"]: (r["sum"], r["count"]) for r in plain.collect()}
     assert s == p  # integer-valued doubles → exact
 
-    hot = detect_hot_keys(pages, "cell", threshold_rows=50, sample_fraction=1.0)
-    assert len(hot) >= 1  # the urban cluster cell(s)
-
 
 def test_streaming_matches_batch(spark, sf_dir):
+    from tests.reference import batch_interval_stats
     from trefoil_spark.streaming.interval import (
-        batch_interval_stats,
         run_available_now,
         streaming_interval_stats,
     )
@@ -92,7 +89,6 @@ def test_multimodal_plumbing(spark, sf_dir):
     from trefoil_spark.operators.multimodal import (
         attach_fake_media,
         extract_features,
-        frame_sample,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
@@ -108,11 +104,6 @@ def test_multimodal_plumbing(spark, sf_dir):
     f1 = {r["doc_id"]: r["features"] for r in feats}
     assert f1 == f2
 
-    frames = frame_sample(media, every_n=1)
-    assert frames.count() == docs.count()  # n_frames=1 each
-    row = frames.first()
-    assert isinstance(bytes(row["frame"]), bytes) and len(bytes(row["frame"])) > 0
-
     # real decoder is an explicit stub
     with pytest.raises(Exception):
         extract_features(media, decoder="real").collect()
@@ -127,7 +118,8 @@ def test_streaming_zonal_equals_batch(spark, sf_dir):
     from trefoil_spark.sources.pages import build_pages
     from trefoil_spark.sources.zones import ZONE_LAYER
     from trefoil_spark.streaming.interval import run_available_now
-    from trefoil_spark.streaming.zonal import batch_zonal_twin, streaming_zonal_stats
+    from tests.reference import batch_zonal_twin
+    from trefoil_spark.streaming.zonal import streaming_zonal_stats
 
     slim = build_pages(spark, sf_dir, with_html=False).select(
         "lon", "lat", F.length("text").cast("bigint").alias("n_chars")

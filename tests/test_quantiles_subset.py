@@ -1,28 +1,9 @@
-"""quantile_breaks (F4 scale path) + get_window_for_subset (P6)."""
+"""get_window_for_subset (P6)."""
 
 import numpy as np
 
 from trefoil_spark.grid.coords import CoordinateVariable, SpatialCoordinates
 from trefoil_spark.grid.window import Window
-from trefoil_spark.raster.classify import quantile_breaks
-
-
-def test_quantile_breaks_exact_and_sketch(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_quantity")
-    exact = quantile_breaks(li, "l_quantity", 4, relative_error=0.0)
-    vals = np.sort(np.array([r["l_quantity"] for r in li.collect()], dtype=float))
-    assert len(exact) == 4
-    assert exact[-1] == vals[-1]  # 100th percentile = max
-    # each exact break is within one rank of the numpy order statistic
-    n = len(vals)
-    for i, b in enumerate(exact[:-1], start=1):
-        target = i / 4
-        rank = np.searchsorted(vals, b, side="right")
-        assert abs(rank / n - target) < 0.02
-
-    sketch = quantile_breaks(li, "l_quantity", 4, relative_error=0.01)
-    for e, s in zip(exact, sketch):
-        assert abs(e - s) <= (vals[-1] - vals[0]) * 0.05
 
 
 def test_get_window_for_subset():

@@ -6,7 +6,7 @@ import hashlib
 import numpy as np
 
 from trefoil_spark.functions.color import Color, interpolate_linear
-from trefoil_spark.functions.png import decode_palette_png
+from tests.reference import decode_palette_png
 from trefoil_spark.raster.render import (
     ClassifiedRenderer,
     StretchedRenderer,
@@ -145,7 +145,7 @@ def test_render_image_png_scale_flip():
     import numpy as np
 
     from trefoil_spark.functions.color import Color
-    from trefoil_spark.functions.png import decode_palette_png
+    from tests.reference import decode_palette_png
     from trefoil_spark.raster.render import UniqueValuesRenderer, render_image_png
 
     r = UniqueValuesRenderer([(1, Color(255, 0, 0)), (2, Color(0, 255, 0))])

@@ -3,11 +3,8 @@ DuckDB twin parity."""
 import duckdb
 import pytest
 
-from trefoil_spark.operators.robots import (
-    gate_disallowed_urls,
-    parse_robots_rules,
-    robots_rules_sql_duckdb,
-)
+from tests.reference import robots_rules_sql_duckdb
+from trefoil_spark.operators.robots import gate_disallowed_urls, parse_robots_rules
 
 ROBOTS = [
     ("a.com",
@@ -94,23 +91,3 @@ def test_duckdb_twin(robots_df, tmp_path):
             for r in parse_robots_rules(robots_df, agent=agent).collect()
         }
         assert got == oracle, agent
-
-
-def test_robots_from_pages(spark):
-    from trefoil_spark.operators.robots import robots_from_pages
-
-    pages = spark.createDataFrame(
-        [
-            (0, "http://a.com/robots.txt", "User-agent: *\nDisallow: /x/"),
-            (1, "http://a.com/robots.txt",
-             "User-agent: *\nDisallow: /x/\nDisallow: /y/"),  # newer/longer
-            (2, "http://a.com/page", "not robots"),
-            (3, "http://b.com/robots.txt", "User-agent: *\nDisallow: /z/"),
-        ],
-        "doc_id bigint, url string, text string",
-    )
-    got = {r["host"]: r["body"]
-           for r in robots_from_pages(pages).collect()}
-    assert set(got) == {"a.com", "b.com"}
-    assert "/y/" in got["a.com"]  # longest-body winner
-    assert got["b.com"].endswith("/z/")

@@ -69,11 +69,12 @@ def test_bbox_pushdown_skips_payload():
 
 
 def test_shapefile_layer_df(spark, tmp_path):
-    from trefoil_spark.sources.shapefile import shapefile_layer_df
+    from trefoil_spark.sources.shapefile import read_polygon_layer
+    from trefoil_spark.sources.zones import zone_layer_df
 
     path = str(tmp_path / "zones.shp")
     write_polygon_shapefile(path, ZONE_LAYER)
-    df = shapefile_layer_df(spark, path)
+    df = zone_layer_df(spark, read_polygon_layer(path))
     rows = {r["zone_value"]: r for r in df.collect()}
     assert set(rows) == {"west", "east", "urban"}
     assert rows["urban"]["xmin"] == -118.3503  # exact double round-trip

@@ -1,22 +1,56 @@
-"""Own Student-t tail + regression `full` outputs (A11 tail closure;
+"""Student-t tail + regression `full` outputs (A11 tail closure;
 reference trefoil/analysis/timeseries.py:110-127 via scipy — scipy is
 absent here, so ground truth = closed forms for df=1/2, the standard
-t-table quantiles, and exactness properties of the A&S finite sums."""
+t-table quantiles, and exactness properties of the A&S finite sums).
 
+The subject is the p-value the engine ships: the SQL stage chain of
+raster/timeseries.py (`_t_p_stage_exprs`), run here in DuckDB from a
+given t-statistic and df, and end to end through `regression_sql` and
+`linear_regression_rows`."""
+
+import math
+
+import duckdb
 import numpy as np
-import pytest
+import pandas as pd
 
-from trefoil_spark.functions.stats import regression_full_from_sums, t_sf_twosided
+from trefoil_spark.raster.timeseries import (
+    DF_EXACT_MAX,
+    _t_p_stage_exprs,
+    linear_regression_rows,
+    regression_sql,
+)
+
+
+def t_sf_twosided(t, df) -> np.ndarray:
+    """Two-sided p = P(|T| >= t) from the shipped DuckDB stage chain,
+    entered at the t-statistic (t >= 0, integer df >= 1)."""
+    t = np.asarray(t, np.float64)
+    df = np.asarray(df)
+    stages = _t_p_stage_exprs("duckdb")
+    tail = stages[[n for n, _ in stages].index("is_exact"):]
+    rows = ", ".join(
+        f"({i}, CAST({float(tv)!r} AS DOUBLE), {int(d)})"
+        for i, (tv, d) in enumerate(zip(t, df))
+    )
+    ctes = [
+        "s0 AS (SELECT i, tstat, CAST(k AS DOUBLE) AS dfree, "
+        f"CAST(k AS BIGINT) AS idf, TRUE AS good FROM (VALUES {rows}) v(i, tstat, k))"
+    ]
+    for j, (name, expr) in enumerate(tail):
+        ctes.append(f"s{j + 1} AS (SELECT *, {expr} AS {name} FROM s{j})")
+    sql = "WITH " + ",\n".join(ctes) + f" SELECT p FROM s{len(tail)} ORDER BY i"
+    return duckdb.sql(sql).fetchnumpy()["p"].astype(np.float64)
 
 
 def test_t_sf_closed_forms_df1_df2():
     t = np.array([0.0, 0.3, 1.0, 2.5, 12.7062047362])
     # df=1 (Cauchy): p = 1 - (2/pi) atan t
-    got = t_sf_twosided(t, np.full_like(t, 1))
+    got = t_sf_twosided(t, np.full(t.shape, 1))
     want = 1 - (2 / np.pi) * np.arctan(t)
     assert np.allclose(got, want, rtol=0, atol=1e-14)
     # df=2: p = 1 - t/sqrt(2+t^2)
-    got = t_sf_twosided(t, np.full_like(t, 2))
+    got = t_sf_twosided(t, np.full(t.shape, 2))
     want = 1 - t / np.sqrt(2 + t * t)
     assert np.allclose(got, want, rtol=0, atol=1e-14)
 
@@ -27,33 +61,83 @@ def test_t_sf_known_quantiles():
         1: 12.7062047362, 2: 4.30265272991, 5: 2.57058183661,
         10: 2.22813885196, 30: 2.04227245630, 100: 1.98397151845,
     }
-    for df, tq in knowns.items():
-        p = t_sf_twosided(np.array([tq]), np.array([df]))[0]
-        assert abs(p - 0.05) < 1e-9, (df, p)
+    p = t_sf_twosided(list(knowns.values()), list(knowns))
+    for (df, _), pv in zip(knowns.items(), p):
+        assert abs(pv - 0.05) < 1e-9, (df, pv)
 
 
 def test_t_sf_properties():
     rng = np.random.default_rng(5)
-    t = rng.uniform(0, 6, 50)
+    t = np.sort(rng.uniform(0, 6, 50))
     for df in (1, 2, 3, 8, 33, 240):
-        p = t_sf_twosided(np.sort(t), np.full(50, df))
+        p = t_sf_twosided(t, np.full(50, df))
         assert np.all(np.diff(p) <= 1e-15)  # decreasing in |t|
         assert np.all((p >= 0) & (p <= 1))
-    assert t_sf_twosided(np.array([0.0]), np.array([9]))[0] == 1.0
+    assert t_sf_twosided([0.0], [9])[0] == 1.0
     # df→∞ approaches the normal tail: p(1.96, df=100000) ≈ 0.05
-    assert abs(t_sf_twosided(np.array([1.959964]), np.array([100000]))[0] - 0.05) < 1e-3
-    assert np.isnan(t_sf_twosided(np.array([np.nan]), np.array([5]))[0])
-    assert np.isnan(t_sf_twosided(np.array([1.0]), np.array([0]))[0])
+    assert abs(t_sf_twosided([1.959964], [100000])[0] - 0.05) < 1e-3
 
 
-def test_regression_full_from_sums_reference_chain():
+def test_t_sf_asymptotic_branch():
+    """df > DF_EXACT_MAX takes the O(1) moment-matching normal branch;
+    accuracy vs the exact finite sums at the cut ≤ ~2e-7 absolute, and
+    the branch transition is continuous to that tolerance."""
+    t = np.linspace(0.05, 5.0, 40)
+    exact = t_sf_twosided(t, np.full(t.shape, DF_EXACT_MAX))       # exact side
+    asym = t_sf_twosided(t, np.full(t.shape, DF_EXACT_MAX + 1))    # asymptotic
+    assert np.max(np.abs(asym - exact)) < 5e-4  # df-step + approx error
+    # against libm erfc ground truth for the big-df formula itself
+    df = 10_000.0
+    z = t * (1 - 1 / (4 * df)) / np.sqrt(1 + t * t / (2 * df))
+    want = np.vectorize(math.erfc)(z / np.sqrt(2))
+    got = t_sf_twosided(t, np.full(t.shape, int(df)))
+    assert np.max(np.abs(got - want)) < 2e-7  # A&S 7.1.26 bound
+    # a huge df takes the O(1) branch (no fold over df/2 terms)
+    p = t_sf_twosided([2.0], [10**9])[0]
+    assert abs(p - 0.0455) < 1e-3  # ~normal two-sided at z=2
+
+
+def test_t_sf_crossover_continuity_property():
+    """Across arbitrary t the exact-sum branch at df=DF_EXACT_MAX and the
+    asymptotic branch at df=DF_EXACT_MAX+1 agree within the documented
+    error budget, and p is monotone non-increasing in df through the
+    crossover (no branch seam a regression query could fall into)."""
+    rng = np.random.default_rng(9)
+    t = np.concatenate([[0.0, 40.0], rng.uniform(0.0, 40.0, 148)])
+    dfs = np.array(
+        [DF_EXACT_MAX - 1, DF_EXACT_MAX, DF_EXACT_MAX + 1, DF_EXACT_MAX * 4]
+    )
+    p = t_sf_twosided(np.repeat(t, 4), np.tile(dfs, len(t))).reshape(-1, 4)
+    # branch seam: |p(2000 exact) - p(2001 asym)| within budget
+    assert np.all(np.abs(p[:, 1] - p[:, 2]) < 5e-7)
+    # monotone non-increasing in df (tolerance = seam budget)
+    assert np.all(p[:, 0] >= p[:, 1] - 1e-12)
+    assert np.all(p[:, 1] >= p[:, 2] - 5e-7)
+    assert np.all(p[:, 2] >= p[:, 3] - 1e-12)
+    # valid probabilities
+    assert ((p >= 0.0) & (p <= 1.0)).all()
+
+
+def _duckdb_regression(df: pd.DataFrame, exact_ints=False) -> pd.DataFrame:
+    con = duckdb.connect()
+    con.register("obs", df)
+    sql = regression_sql("g", "t", "v", "obs", exact_ints=exact_ints, full=True)
+    return con.execute(sql + " ORDER BY g").df().set_index("g")
+
+
+def test_regression_sql_full_reference_chain():
     """Matches the reference chain on a hand-checked fixture: y = 2x+1
     plus symmetric noise (n=4, df=2 → exact closed-form p)."""
     t = np.array([0.0, 1.0, 2.0, 3.0])
     v = np.array([1.0, 3.4, 4.6, 7.0])  # 2x+1 ± 0.2 symmetric
-    n = np.array(4.0)
-    sums = (n, t.sum(), (t * t).sum(), v.sum(), (v * v).sum(), (t * v).sum())
-    r2, p = regression_full_from_sums(*sums)
+    obs = pd.DataFrame({
+        "g": [0] * 4 + [1] * 4 + [2] * 4,
+        "t": np.tile(t, 3),
+        # group 1: perfect fit; group 2: constant y
+        "v": np.concatenate([v, 2 * t + 1, np.full(4, 5.0)]),
+    })
+    out = _duckdb_regression(obs)
+    r2, p = out.loc[0, "r2"], out.loc[0, "p"]
     # independent recompute via Pearson correlation
     r_direct = np.corrcoef(t, v)[0, 1]
     assert abs(r2 - r_direct**2) < 1e-12
@@ -63,121 +147,41 @@ def test_regression_full_from_sums_reference_chain():
     assert abs(p - p_closed) < 1e-14
 
     # perfect fit: r2 == 1, p == 0
-    v2 = 2 * t + 1
-    r2p, pp = regression_full_from_sums(
-        n, t.sum(), (t * t).sum(), v2.sum(), (v2 * v2).sum(), (t * v2).sum()
-    )
-    assert r2p == 1.0 and pp == 0.0
-
-    # degenerate: constant y → syy == 0 → NaN outputs
-    v3 = np.full(4, 5.0)
-    r2n, pn = regression_full_from_sums(
-        n, t.sum(), (t * t).sum(), v3.sum(), (v3 * v3).sum(), (t * v3).sum()
-    )
-    assert np.isnan(r2n) and np.isnan(pn)
+    assert out.loc[1, "r2"] == 1.0 and out.loc[1, "p"] == 0.0
+    # degenerate: constant y → syy == 0 → NULL outputs
+    assert pd.isna(out.loc[2, "r2"]) and pd.isna(out.loc[2, "p"])
 
 
-def test_linear_regression_tiles_full(spark):
-    """Tile-grain full=True: r²/p blocks match the sums-level recompute
-    per pixel, NaN-masked pixels drop their timesteps (per-pixel df)."""
-    import pandas as pd
-
-    h, w, nt = 4, 5, 12
+def test_linear_regression_rows_full(spark):
+    """Row-grain full=True over integer values (exact_ints, so the sums
+    are order-free): Spark's r²/p equal the DuckDB twin bit for bit and
+    r² equals the Pearson recompute per group; NULL values drop
+    their timesteps (per-group df); groups with fewer than 3 values get
+    NULL outputs."""
+    nt, ng = 12, 20
     rng = np.random.default_rng(11)
-    data = np.empty((nt, h, w), dtype=np.float32)
-    yy, xx = np.mgrid[0:h, 0:w]
-    for t in range(nt):
-        data[t] = (1.5 * t * (1 + yy) + xx + rng.normal(0, 2.0, (h, w))).astype(
-            np.float32
-        )
-    data[3, 1, 1] = np.nan  # one masked timestep for one pixel
-    data[:, 2, 2] = np.nan  # fully masked pixel
-    rows = [
-        ("v", t, 0, 0, 0, data[t].tobytes(), h, w) for t in range(nt)
-    ]
-    tiles = spark.createDataFrame(
-        rows, "var string, t int, ty int, tx int, cell bigint, block binary, h int, w int"
-    )
-    from trefoil_spark.raster.timeseries import linear_regression_tiles
+    ts = np.arange(nt, dtype=np.float64)
+    rows = []
+    for g in range(ng):
+        vals = np.round(15 * ts * (1 + g % 4) + g + rng.normal(0, 20.0, nt))
+        for t in range(nt):
+            masked = (g == 1 and t == 3) or (g == 2 and t > 1)
+            rows.append((g, t, None if masked else int(vals[t])))
+    pdf = pd.DataFrame(rows, columns=["g", "t", "v"]).astype({"v": "Int64"})
+    got = linear_regression_rows(
+        spark.createDataFrame(rows, "g int, t int, v bigint"),
+        "g", "t", "v", exact_ints=True, full=True,
+    ).toPandas().set_index("g").sort_index()
+    want = _duckdb_regression(pdf, exact_ints=True)
 
-    out = linear_regression_tiles(tiles, full=True).collect()[0]
-    r2 = np.frombuffer(out["r2_block"], dtype=np.float32).reshape(h, w)
-    p = np.frombuffer(out["p_block"], dtype=np.float32).reshape(h, w)
-
-    for py in range(h):
-        for px in range(w):
-            series = data[:, py, px].astype(np.float64)
-            ok = ~np.isnan(series)
-            if ok.sum() < 3:
-                assert np.isnan(r2[py, px]) and np.isnan(p[py, px])
-                continue
-            ts = np.arange(nt, dtype=np.float64)[ok]
-            vs = series[ok]
-            n = float(ok.sum())
-            wr2, wp = regression_full_from_sums(
-                np.array(n), ts.sum(), (ts * ts).sum(),
-                vs.sum(), (vs * vs).sum(), (ts * vs).sum(),
-            )
-            assert abs(r2[py, px] - wr2) < 1e-6, (py, px)
-            assert abs(p[py, px] - wp) < 1e-6, (py, px)
-    # high-signal pixels should be significant
-    assert p[3, 0] < 0.001 and r2[3, 0] > 0.9
-
-
-def test_t_sf_asymptotic_branch():
-    """df > DF_EXACT_MAX takes the O(1) moment-matching normal branch;
-    accuracy vs the exact finite sums at the cut ≤ ~2e-7 absolute, and
-    the branch transition is continuous to that tolerance."""
-    import math
-
-    from trefoil_spark.functions.stats import DF_EXACT_MAX, t_sf_twosided
-
-    t = np.linspace(0.05, 5.0, 40)
-    exact = t_sf_twosided(t, np.full_like(t, DF_EXACT_MAX))       # exact side
-    asym = t_sf_twosided(t, np.full_like(t, DF_EXACT_MAX + 1))    # asymptotic
-    assert np.max(np.abs(asym - exact)) < 5e-4  # df-step + approx error
-    # against libm erfc ground truth for the big-df formula itself
-    df = 10_000.0
-    z = t * (1 - 1 / (4 * df)) / np.sqrt(1 + t * t / (2 * df))
-    want = np.vectorize(math.erfc)(z / np.sqrt(2))
-    got = t_sf_twosided(t, np.full_like(t, df))
-    assert np.max(np.abs(got - want)) < 2e-7  # A&S 7.1.26 bound
-    # big-df work is O(1): a huge df must return instantly
-    import time
-
-    t0 = time.time()
-    p = t_sf_twosided(np.array([2.0]), np.array([10**9]))[0]
-    assert time.time() - t0 < 0.1
-    assert abs(p - 0.0455) < 1e-3  # ~normal two-sided at z=2
-
-
-def test_t_sf_crossover_continuity_property():
-    """Hypothesis property (VERDICT r4 item 9): across arbitrary t the
-    exact-sum branch at df=DF_EXACT_MAX and the asymptotic branch at
-    df=DF_EXACT_MAX+1 agree within the documented error budget, and p is
-    monotone non-increasing in df through the crossover (no branch
-    seam a regression query could fall into)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from trefoil_spark.functions.stats import DF_EXACT_MAX, t_sf_twosided
-
-    @given(st.floats(min_value=0.0, max_value=40.0, allow_nan=False))
-    @settings(max_examples=150, deadline=None)
-    def check(tval):
-        t = np.array([tval], dtype=np.float64)
-        dfs = np.array(
-            [DF_EXACT_MAX - 1, DF_EXACT_MAX, DF_EXACT_MAX + 1, DF_EXACT_MAX * 4],
-            dtype=np.float64,
-        )
-        p = t_sf_twosided(np.repeat(t, 4), dfs)
-        # branch seam: |p(2000 exact) - p(2001 asym)| within budget
-        assert abs(p[1] - p[2]) < 5e-7
-        # monotone non-increasing in df (tolerance = seam budget)
-        assert p[0] >= p[1] - 1e-12
-        assert p[1] >= p[2] - 5e-7
-        assert p[2] >= p[3] - 1e-12
-        # valid probabilities
-        assert ((p >= 0.0) & (p <= 1.0)).all()
-
-    check()
+    assert pd.isna(got.loc[2, "r2"]) and pd.isna(got.loc[2, "p"])
+    for g in range(ng):
+        if g == 2:
+            continue
+        assert got.loc[g, "r2"] == want.loc[g, "r2"], g
+        assert got.loc[g, "p"] == want.loc[g, "p"], g
+        sub = pdf[(pdf.g == g) & pdf.v.notna()]
+        r = np.corrcoef(sub.t.astype(float), sub.v.astype(float))[0, 1]
+        assert abs(got.loc[g, "r2"] - r * r) < 1e-9, g
+    # high-signal groups are significant
+    assert got.loc[3, "p"] < 0.001 and got.loc[3, "r2"] > 0.9

@@ -8,7 +8,7 @@ import pytest
 from trefoil_spark.grid.bbox import BBox
 from trefoil_spark.raster.gridspec import GridSpec
 from trefoil_spark.raster.synth import block_values, synthetic_tiles
-from trefoil_spark.raster.window_ops import save_window_npy, stitch_window
+from trefoil_spark.raster.window_ops import stitch_window
 
 SPEC = GridSpec.from_bbox(BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256)
 QBOX = BBox((-122.3, 33.1, -115.7, 36.9), "EPSG:4326")
@@ -36,15 +36,3 @@ def test_stitch_pixel_cap(spark):
     tiles = synthetic_tiles(spark, SPEC)
     with pytest.raises(ValueError, match="max_pixels"):
         stitch_window(tiles, SPEC, QBOX, max_pixels=10)
-
-
-def test_save_window_npy(spark, tmp_path):
-    tiles = synthetic_tiles(spark, SPEC)
-    path = str(tmp_path / "win.npy")
-    meta = save_window_npy(path, tiles, SPEC, QBOX)
-    w = SPEC.window_for_bbox(QBOX)
-    want = _full(SPEC)[w.y_slice, w.x_slice]
-    assert np.array_equal(np.load(path), want, equal_nan=True)
-    assert meta["crs"] == "EPSG:4326"
-    assert meta["x0"] == SPEC.x0 + w.x_slice.start * SPEC.dx
-    assert (meta["height"], meta["width"]) == want.shape

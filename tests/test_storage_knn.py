@@ -141,6 +141,38 @@ def test_adaptive_knn_exact_on_adversarial_layouts(spark, name):
     )
 
 
+def test_knn_kernels_drop_null_coordinates(spark):
+    """Every kernel skips an unlocated point (its distance is NULL, which
+    the ranking window would otherwise order first) and returns nothing
+    for an unlocated query."""
+    from trefoil_spark.operators.knn import (
+        knn_join_adaptive,
+        knn_join_bruteforce,
+        knn_join_cells,
+    )
+
+    schema = "doc_id bigint, lon double, lat double"
+    points = spark.createDataFrame(
+        [(1, 0.0, 0.0), (2, 0.1, 0.1), (3, 0.2, 0.2), (4, None, 5.0)], schema
+    )
+    for queries in (
+        points.filter("doc_id = 1"),
+        points.filter("doc_id = 1 OR doc_id = 4").unionByName(
+            spark.createDataFrame([(5, 1.0, None)], schema)
+        ),
+    ):
+        for run in (
+            lambda q: knn_join_bruteforce(points, q, k=2),
+            lambda q: knn_join_cells(points, q, k=2, res=6, ring=1),
+            lambda q: knn_join_adaptive(points, q, k=2, res=6),
+        ):
+            got = sorted(
+                (r["query_id"], r["rank"], r["neighbor_id"])
+                for r in run(queries).collect()
+            )
+            assert got == [(1, 1, 2), (1, 2, 3)]
+
+
 def test_adaptive_knn_job_count_is_fixed(spark):
     """One pass: the same number of Spark jobs whether every query finds
     its neighbours in its own cell or needs a wide ring."""

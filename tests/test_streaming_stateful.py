@@ -50,122 +50,3 @@ def test_streaming_dedup_across_batches(spark, sf_dir):
         got = spark.read.parquet(out)
         assert got.count() == n_docs
         assert got.filter(F.col("doc_id") >= 1000000).count() == 0
-
-
-def test_streaming_clean_stack(spark):
-    """C4 + PII + stateful dedup on a file stream: spam pages never
-    reach the sink, PII is redacted in-flight, and a cross-batch
-    duplicate (identical post-redaction) is dropped by the recovered
-    state."""
-    from trefoil_spark.streaming.stateful import streaming_clean
-
-    good = ("A first sentence with plenty of words.\n"
-            "A second sentence with plenty of words.\n"
-            "Write to jane@ex.com with plenty of words.")
-    dup = good.replace("jane@ex.com", "bob@other.org")  # same post-PII
-    spam = "buy\nnow\ncheap"
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        cp = os.path.join(tmp, "cp")
-        spark.createDataFrame(
-            [(0, good), (1, spam)], "doc_id long, text string"
-        ).write.parquet(src)
-
-        def run():
-            stream = (
-                spark.readStream.schema("doc_id long, text string")
-                .option("maxFilesPerTrigger", "4").parquet(src)
-            )
-            q = (
-                streaming_clean(stream)
-                .writeStream.format("parquet")
-                .option("path", out).option("checkpointLocation", cp)
-                .outputMode("append").trigger(availableNow=True).start()
-            )
-            q.awaitTermination(180)
-
-        run()
-        got = spark.read.parquet(out).collect()
-        assert [r["doc_id"] for r in got] == [0]
-        assert "<EMAIL>" in got[0]["text"]
-        assert "jane" not in got[0]["text"]
-        # second wave: the PII-variant duplicate arrives post-restart
-        spark.createDataFrame(
-            [(2, dup)], "doc_id long, text string"
-        ).write.mode("append").parquet(src)
-        run()
-        assert spark.read.parquet(out).count() == 1
-
-
-def test_streaming_clean_gopher_full_gate(spark):
-    """gopher='full' composes the complete A1.1 gate (a stateless
-    Catalyst filter) onto the stream. The fixture doc passes the BASE
-    gate (self-checked in batch below) but repeats one 4-gram enough
-    to trip only the r7 top-4-gram repetition rule — so its drop
-    proves the streaming path runs the full rule set, not base."""
-    from trefoil_spark.operators.textstats import (
-        gopher_full_pass_col,
-        gopher_pass_col,
-    )
-    from trefoil_spark.streaming.stateful import streaming_clean
-
-    healthy_words = (
-        "the quick brown fox jumps over a lazy dog and then runs be "
-        "far away to have a quiet nap with all of that energy spent "
-        "while birds sing songs near an old barn door every morning "
-        "as the sun rises over hills and light filled the valley so "
-        "people walking past would often pause and look up in wonder"
-    ).split()
-    healthy = "\n".join(
-        " ".join(healthy_words[i:i + 10]) + " ."
-        for i in range(0, len(healthy_words), 10)
-    )
-    # one 4-gram repeated on four otherwise-unique lines: each
-    # occurrence has distinct neighbors, so no 5-gram (or longer)
-    # duplicates and no line duplicates — only top_4gram fires
-    uniq = iter(f"w{i:02d}rd" for i in range(100))
-    core = "aaa bbb ccc ddd"
-    lines = [
-        " ".join([next(uniq), next(uniq), core,
-                  next(uniq), next(uniq), next(uniq)]) + " ."
-        for _ in range(4)
-    ]
-    lines.append("the band played with energy that night .")
-    lines.append("of course more unique words follow here .")
-    repeated = "\n".join(lines)
-
-    # fixture self-check in batch: base keeps both, full drops doc 1
-    batch = spark.createDataFrame(
-        [(0, healthy), (1, repeated)], "doc_id long, text string"
-    )
-    verdicts = {
-        r.doc_id: (r.base, r.full)
-        for r in batch.select(
-            "doc_id",
-            gopher_pass_col("text").alias("base"),
-            gopher_full_pass_col("text").alias("full"),
-        ).collect()
-    }
-    assert verdicts[0] == (True, True)
-    assert verdicts[1] == (True, False)
-
-    with tempfile.TemporaryDirectory() as tmp:
-        src = os.path.join(tmp, "src")
-        out = os.path.join(tmp, "out")
-        cp = os.path.join(tmp, "cp")
-        batch.write.parquet(src)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "4").parquet(src)
-        )
-        q = (
-            streaming_clean(stream, gopher="full")
-            .writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", cp)
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination(180)
-        got = spark.read.parquet(out).collect()
-        assert [r["doc_id"] for r in got] == [0]

@@ -17,8 +17,6 @@ from trefoil_spark.raster.classify import (
     classify_block,
     classify_sql,
     equal_interval_breaks,
-    stretch_block,
-    stretch_sql,
 )
 from trefoil_spark.sources.zones import ZONE_LAYER
 
@@ -145,16 +143,20 @@ def test_classify_and_stretch_parity():
     want_cls[np.isnan(v)] = np.nan
     assert np.array_equal(cls, want_cls, equal_nan=True)
 
-    st = stretch_block(v, 0.0, 100.0, 256)
-    want_st = ((v - 0.0) * (255 / 100.0)).astype(np.int64).clip(0, 255).astype(float)
-    want_st[np.isnan(v)] = np.nan
-    assert np.array_equal(st, want_st, equal_nan=True)
+    # the stretch the renderer runs (stretched.py:106-121: trunc, clip)
+    from trefoil_spark.functions.color import Color
+    from trefoil_spark.raster.render import StretchedRenderer
 
-    # SQL twins on DuckDB == numpy
+    r = StretchedRenderer(
+        [(0.0, Color(0, 0, 0)), (100.0, Color(255, 255, 255))],
+        colorspace="rgb", palette_size=255,
+    )
+    ok = ~np.isnan(v)
+    want_st = ((v[ok] - 0.0) * (254 / 100.0)).astype(np.int64).clip(0, 254)
+    assert np.array_equal(r._indices(v)[ok], want_st)
+
+    # SQL twin on DuckDB == numpy
     con = duckdb.connect()
     con.register("t", pd.DataFrame({"v": v}))
-    got_sql = con.execute(
-        f"SELECT {classify_sql('v', breaks)} AS c, {stretch_sql('v', 0.0, 100.0, 256)} AS s FROM t"
-    ).df()
+    got_sql = con.execute(f"SELECT {classify_sql('v', breaks)} AS c FROM t").df()
     assert np.array_equal(got_sql["c"].to_numpy(dtype=float), want_cls, equal_nan=True)
-    assert np.array_equal(got_sql["s"].to_numpy(dtype=float), want_st, equal_nan=True)

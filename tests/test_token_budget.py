@@ -7,10 +7,8 @@ import duckdb
 import pytest
 import pyspark.sql.functions as F
 
-from trefoil_spark.operators.seqpack import (
-    sample_to_token_budget,
-    token_budget_sql_duckdb,
-)
+from tests.reference import token_budget_sql_duckdb
+from trefoil_spark.operators.seqpack import sample_to_token_budget
 
 
 def _mk_docs(n):

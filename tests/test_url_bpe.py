@@ -5,13 +5,13 @@ extensions)."""
 import duckdb
 import pandas as pd
 
+from tests.reference import url_sql_duckdb
 from trefoil_spark.operators.textstats import (
     bpe_token_count_col,
     bpe_token_count_sql_duckdb,
     url_domain_col,
     url_host_col,
     url_path_col,
-    url_sql_duckdb,
 )
 
 TEXTS = [

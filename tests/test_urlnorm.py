@@ -3,10 +3,8 @@ Spark/DuckDB twin parity over an adversarial URL set."""
 import duckdb
 import pytest
 
-from trefoil_spark.operators.urlnorm import (
-    canonical_url_col,
-    canonical_url_sql_duckdb,
-)
+from tests.reference import canonical_url_sql_duckdb
+from trefoil_spark.operators.urlnorm import canonical_url_col
 
 URLS = [
     # tracking params drop; survivors sort; host/scheme lowercase

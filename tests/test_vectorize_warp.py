@@ -130,7 +130,8 @@ def test_vectorize_tiles_and_merge(spark):
 
 def test_warp_identity_and_3857(spark):
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -293,7 +294,7 @@ def test_warp_bilinear_exact_on_linear_field(spark):
     property); nearest is not. Dst grid = src grid shifted 1/4 pixel."""
     import pandas as pd
 
-    from trefoil_spark.raster.warp import warp_tile_numpy
+    from tests.reference import warp_tile_numpy
 
     spec = GridSpec.from_bbox(BBox((0.0, 0.0, 64.0, 64.0), "EPSG:4326"), 64, 64, tile=64)
     y, x = np.mgrid[0:64, 0:64]
@@ -312,7 +313,8 @@ def test_warp_tiles_bilinear_matches_numpy(spark):
     """Distributed bilinear warp (mosaic gather + 1px halo) equals the
     full-array kernel on every tile of the 3857 warp."""
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -341,7 +343,7 @@ def test_warp_mode_majority_and_ties():
     """Mode downsample 2x: each dst pixel = majority class of its 2x2
     box; ties break to the SMALLEST class; all-nodata boxes → NaN;
     nodata candidates don't vote."""
-    from trefoil_spark.raster.warp import warp_tile_numpy
+    from tests.reference import warp_tile_numpy
 
     spec = GridSpec.from_bbox(BBox((0.0, 0.0, 8.0, 8.0), "EPSG:4326"), 8, 8, tile=8)
     dst = GridSpec.from_bbox(BBox((0.0, 0.0, 8.0, 8.0), "EPSG:4326"), 4, 4, tile=4)
@@ -362,7 +364,8 @@ def test_warp_tiles_mode_matches_numpy(spark):
     classified grid downsampled 2x (the categorical use case)."""
     from trefoil_spark.raster.classify import classify_block, equal_interval_breaks
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -407,7 +410,8 @@ def test_warp_tiles_lcc_matches_numpy(spark):
     the gather kernel the numpy twin) equals the full-array kernel."""
     from trefoil_spark.grid import proj
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -442,7 +446,7 @@ def test_warp_tiles_lcc_matches_numpy(spark):
 def test_warp_cubic_exact_on_cubic_polys():
     """Keys a=-0.5 reproduces constants and linear surfaces exactly and
     beats bilinear by orders of magnitude on a smooth field."""
-    from trefoil_spark.raster.warp import warp_tile_numpy
+    from tests.reference import warp_tile_numpy
 
     spec = GridSpec.from_bbox(BBox((0.0, 0.0, 64.0, 64.0), "EPSG:4326"), 64, 64, tile=64)
     dst = GridSpec(x0=spec.x0 + spec.dx / 4, y0=spec.y0 - spec.dy / 4,
@@ -471,7 +475,8 @@ def test_warp_tiles_cubic_matches_numpy(spark):
     """Distributed cubic warp (mosaic gather + 2px halo) equals the
     full-array kernel on every tile of the 3857 warp."""
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -496,7 +501,7 @@ def test_warp_tiles_cubic_matches_numpy(spark):
 def test_warp_lanczos_kernel_quality():
     """Lanczos-3: constants exact (normalized weights), linear surfaces
     near-exact in the interior, and a smooth field beats bilinear."""
-    from trefoil_spark.raster.warp import warp_tile_numpy
+    from tests.reference import warp_tile_numpy
 
     spec = GridSpec.from_bbox(BBox((0.0, 0.0, 64.0, 64.0), "EPSG:4326"), 64, 64, tile=64)
     dst = GridSpec(x0=spec.x0 + spec.dx / 4, y0=spec.y0 - spec.dy / 4,
@@ -524,7 +529,8 @@ def test_warp_tiles_lanczos_matches_numpy(spark):
     full-array kernel on every tile of the 3857 warp — proves the halo
     covers the 6x6 support across tile borders."""
     from trefoil_spark.raster.synth import block_values, synthetic_tiles
-    from trefoil_spark.raster.warp import warp_tile_numpy, warp_tiles
+    from tests.reference import warp_tile_numpy
+    from trefoil_spark.raster.warp import warp_tiles
 
     src_spec = GridSpec.from_bbox(
         BBox((-125.0, 32.0, -113.0, 38.0), "EPSG:4326"), 512, 256
@@ -551,7 +557,7 @@ def test_mode_kernel_at_cap_memory():
     cap) over a 256-wide tile must not materialize a (H,W,K,K) tensor."""
     import tracemalloc
 
-    from trefoil_spark.raster.warp import warp_tile_numpy
+    from tests.reference import warp_tile_numpy
 
     src = GridSpec.from_bbox(BBox((0.0, 0.0, 256.0, 256.0), "EPSG:4326"),
                              256, 256, tile=256)

@@ -32,7 +32,7 @@ import struct
 
 import numpy as np
 
-__all__ = ["decode_aiff", "encode_aiff", "encode_aifc"]
+__all__ = ["decode_aiff", "encode_aiff"]
 
 
 def _f80_encode(value: int) -> bytes:
@@ -79,56 +79,6 @@ def encode_aiff(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
         return cc + struct.pack(">I", len(payload)) + payload + pad
 
     form = b"AIFF" + chunk(b"COMM", comm) + chunk(b"SSND", ssnd)
-    return b"FORM" + struct.pack(">I", len(form)) + form
-
-
-_AIFC_NAMES = {
-    b"sowt": b"\x00",
-    b"raw ": b"\x00",
-    b"fl32": b"\x0532-bit floating point",  # pascal strings
-    b"fl64": b"\x0564-bit floating point",
-    b"NONE": b"\x0enot compressed\x00",
-}
-
-
-def encode_aifc(samples: np.ndarray, rate: int,
-                compression: bytes = b"sowt") -> bytes:
-    """Twin writer for the exactly-invertible AIFC forms: 'sowt'
-    (little-endian int16), 'raw ' (offset-binary uint8), 'fl32'/'fl64'
-    (big-endian IEEE float), 'NONE' (big-endian int16). Emits the
-    spec-required FVER chunk (version timestamp 0xA2805140) and an
-    AIFC-extended COMM."""
-    s = np.asarray(samples)
-    if s.ndim == 1:
-        s = s[:, None]
-    n, ch = s.shape
-    if compression == b"sowt":
-        bits, body = 16, s.astype("<i2").tobytes()
-    elif compression == b"raw ":
-        bits, body = 8, (s.astype(np.int32) + 128).astype(np.uint8).tobytes()
-    elif compression == b"fl32":
-        bits, body = 32, s.astype(">f4").tobytes()
-    elif compression == b"fl64":
-        bits, body = 64, s.astype(">f8").tobytes()
-    elif compression == b"NONE":
-        bits, body = 16, s.astype(">i2").tobytes()
-    else:
-        raise NotImplementedError(
-            f"AIFC twin for compression {compression!r}"
-        )
-    name = _AIFC_NAMES[compression]
-    if (len(name)) & 1:
-        name += b"\x00"
-    comm = (struct.pack(">hIh", ch, n, bits) + _f80_encode(rate)
-            + compression + name)
-    ssnd = struct.pack(">II", 0, 0) + body
-
-    def chunk(cc: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) & 1 else b""
-        return cc + struct.pack(">I", len(payload)) + payload + pad
-
-    form = (b"AIFC" + chunk(b"FVER", struct.pack(">I", 0xA2805140))
-            + chunk(b"COMM", comm) + chunk(b"SSND", ssnd))
     return b"FORM" + struct.pack(">I", len(form)) + form
 
 

@@ -254,56 +254,6 @@ def _parse_hdrl(data, pos, end):
     return None
 
 
-def decode_avi_audio(data: bytes) -> tuple[np.ndarray, int]:
-    """AVI bytes → (int16 samples shaped (n, channels), sample_rate)
-    from the first 'auds' stream (PCM WAVEFORMATEX only — anything
-    else raises NotImplementedError naming the format tag)."""
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not a RIFF/AVI file")
-    riff_end = 8 + struct.unpack("<I", data[4:8])[0]
-    stream_no = None
-    channels = rate = bits = None
-    chunks: list[bytes] = []
-
-    def scan_movi(pos, end):
-        want = b"%02dwb" % stream_no
-        for cc, p, sz in _walk_chunks(data, pos, end):
-            if cc == b"LIST" and data[p : p + 4] == b"rec ":
-                scan_movi(p + 4, p + sz)
-            elif cc == want and sz > 0:
-                chunks.append(data[p : p + sz])
-
-    for cc, p, sz in _walk_chunks(data, 12, riff_end):
-        if cc != b"LIST":
-            continue
-        kind = data[p : p + 4]
-        if kind == b"hdrl":
-            for sidx, ftype, _sc, _rt, strf in _iter_strl(data, p + 4, p + sz):
-                if ftype == b"auds" and stream_no is None:
-                    if strf is None or len(strf) < 16:
-                        raise ValueError("AVI audio stream missing strf")
-                    tag, channels, rate, _br, _ba, bits = struct.unpack(
-                        "<HHIIHH", strf[:16]
-                    )
-                    if tag != 1 or bits != 16:
-                        raise NotImplementedError(
-                            f"AVI audio format tag={tag} bits={bits} "
-                            "(only 16-bit PCM here)"
-                        )
-                    stream_no = sidx
-        elif kind == b"movi":
-            if stream_no is None:
-                raise ValueError("AVI has no audio ('auds') stream")
-            scan_movi(p + 4, p + sz)
-    if stream_no is None:
-        raise ValueError("AVI has no audio ('auds') stream")
-    raw = b"".join(chunks)
-    samples = np.frombuffer(raw, "<i2")
-    if channels > 1:
-        samples = samples[: len(samples) - len(samples) % channels]
-    return samples.reshape(-1, channels), rate
-
-
 def decode_avi(data: bytes) -> tuple[list[np.ndarray], float]:
     """AVI bytes → (list of (h, w, 3) uint8 RGB frames, fps).
 

@@ -13,8 +13,8 @@ F12 — legend: the reference composites PIL images with TrueType labels
 (/root/reference/trefoil/render/renderers/legend.py:7-78). PIL/fonts are
 absent here, so the legend surfaces as (a) structured rows — label,
 color, tick position — the JSON a web client actually wants, and (b) a
-color-strip PNG via the engine's own encoder. Text rasterization stays
-a declared non-goal (SURVEY §7.3).
+composited PNG (patches, ticks and labels in the engine's own 5×7 bitmap
+font) via the engine's own encoder.
 """
 
 from __future__ import annotations
@@ -73,18 +73,6 @@ def legend_elements(renderer) -> list[dict]:
             }
         )
     return out
-
-
-def legend_strip_png(renderer, width: int = 20, patch_height: int = 16) -> bytes:
-    """Vertical color-strip legend image (first colormap entry at the
-    top, matching the reference's composite order) — own PNG encoder,
-    byte-stable."""
-    colors = [c for _v, c in renderer.colormap]
-    n = len(colors)
-    idx = np.repeat(np.arange(n, dtype=np.uint8), patch_height)[:, None]
-    img = np.broadcast_to(idx, (n * patch_height, width))
-    palette = [c.to_tuple()[:3] for c in colors]
-    return encode_palette_png(np.ascontiguousarray(img), palette)
 
 
 def legend_image_png(

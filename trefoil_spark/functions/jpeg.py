@@ -1236,220 +1236,3 @@ def _decode_progressive(
             full = np.repeat(np.repeat(full, vmax // vi, axis=0), hmax // hi, axis=1)
         chans.append(full[:h, :w])
     return _color_out(chans, adobe_transform)
-
-
-# ---------------------------------------------------------------------------
-# EXIF orientation (r6). Crawl JPEGs from phone cameras routinely carry
-# a rotated sensor image plus an APP1 Exif orientation tag; a pipeline
-# that ignores it feeds sideways pixels to training. Public layout:
-# APP1 payload = "Exif\0\0" + a little TIFF file (II/MM byte order,
-# IFD0 entries of 12 bytes); tag 0x0112 SHORT holds orientation 1-8
-# (TIFF 6.0 / JEITA CP-3451 semantics).
-# ---------------------------------------------------------------------------
-
-
-def exif_orientation(data: bytes) -> int:
-    """JPEG bytes → EXIF orientation 1-8 (1 = normal; also returned
-    when there is no APP1/Exif segment or no orientation tag). Both
-    TIFF byte orders are handled; a malformed Exif block degrades to 1
-    rather than failing the decode."""
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            break
-        marker = data[pos + 1]
-        if marker in (0xD9, 0xDA):  # EOI / SOS: no more table segments
-            break
-        ln = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        if marker == 0xE1 and data[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            tiff = data[pos + 10 : pos + 2 + ln]
-            try:
-                return _tiff_orientation(tiff)
-            except (IndexError, struct.error, ValueError):
-                return 1
-        pos += 2 + ln
-    return 1
-
-
-def _tiff_orientation(tiff: bytes) -> int:
-    if tiff[:2] == b"II":
-        e = "<"
-    elif tiff[:2] == b"MM":
-        e = ">"
-    else:
-        return 1
-    if struct.unpack(e + "H", tiff[2:4])[0] != 42:
-        return 1
-    (ifd,) = struct.unpack(e + "I", tiff[4:8])
-    (n,) = struct.unpack(e + "H", tiff[ifd : ifd + 2])
-    for i in range(n):
-        base = ifd + 2 + 12 * i
-        tag, ty, cnt = struct.unpack(e + "HHI", tiff[base : base + 8])
-        if tag == 0x0112 and ty == 3 and cnt >= 1:
-            o = struct.unpack(e + "H", tiff[base + 8 : base + 10])[0]
-            return o if 1 <= o <= 8 else 1
-    return 1
-
-
-def apply_exif_orientation(img: np.ndarray, orientation: int) -> np.ndarray:
-    """Undo EXIF orientation 1-8 → upright pixels (TIFF 6.0 semantics:
-    the tag says where the stored row 0 / column 0 sit in the scene)."""
-    if orientation == 1:
-        return img
-    if orientation == 2:
-        return img[:, ::-1]
-    if orientation == 3:
-        return img[::-1, ::-1]
-    if orientation == 4:
-        return img[::-1]
-    t = img.swapaxes(0, 1)
-    if orientation == 5:
-        return t
-    if orientation == 6:
-        return t[:, ::-1]
-    if orientation == 7:
-        return t[::-1, ::-1]
-    if orientation == 8:
-        return t[::-1]
-    raise ValueError(f"EXIF orientation must be 1-8, got {orientation}")
-
-
-def decode_jpeg_oriented(data: bytes) -> np.ndarray:
-    """decode_jpeg + EXIF orientation correction: always returns the
-    scene upright regardless of how the camera stored the sensor rows."""
-    return np.ascontiguousarray(
-        apply_exif_orientation(decode_jpeg(data), exif_orientation(data))
-    )
-
-
-# ---------------------------------------------------------------------------
-# EXIF GPS (late r6). Phone-camera crawl JPEGs carry a GPS IFD (tag
-# 0x8825 in IFD0 points at it; EXIF 2.3 §4.6.6): latitude/longitude as
-# degree/minute/second RATIONAL triplets plus N/S/E/W reference ASCII
-# tags. This is the geospatial handle on a web crawl — extracted
-# coordinates feed the engine's PIP join / zonal operators directly.
-# ---------------------------------------------------------------------------
-
-
-def _exif_tiff(data: bytes) -> bytes | None:
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            break
-        marker = data[pos + 1]
-        if marker in (0xD9, 0xDA):
-            break
-        ln = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        if marker == 0xE1 and data[pos + 4 : pos + 10] == b"Exif\x00\x00":
-            return data[pos + 10 : pos + 2 + ln]
-        pos += 2 + ln
-    return None
-
-
-def exif_gps(data: bytes):
-    """JPEG bytes → (lat, lon) decimal degrees from the EXIF GPS IFD,
-    or None when absent. Malformed GPS blocks degrade to None rather
-    than failing the decode (same contract as exif_orientation)."""
-    tiff = _exif_tiff(data)
-    if tiff is None:
-        return None
-    try:
-        return _tiff_gps(tiff)
-    except (IndexError, struct.error, ValueError, ZeroDivisionError):
-        return None
-
-
-def _tiff_gps(tiff: bytes):
-    if tiff[:2] == b"II":
-        e = "<"
-    elif tiff[:2] == b"MM":
-        e = ">"
-    else:
-        return None
-    if struct.unpack(e + "H", tiff[2:4])[0] != 42:
-        return None
-    (ifd,) = struct.unpack(e + "I", tiff[4:8])
-    (n,) = struct.unpack(e + "H", tiff[ifd : ifd + 2])
-    gps_ifd = None
-    for i in range(n):
-        base = ifd + 2 + 12 * i
-        tag, ty, cnt = struct.unpack(e + "HHI", tiff[base : base + 8])
-        if tag == 0x8825 and ty == 4:
-            (gps_ifd,) = struct.unpack(e + "I", tiff[base + 8 : base + 12])
-    if gps_ifd is None:
-        return None
-
-    def rational3(off: int):
-        vals = []
-        for k in range(3):
-            num, den = struct.unpack(e + "II", tiff[off + 8 * k :
-                                                    off + 8 * k + 8])
-            vals.append(num / den if den else 0.0)
-        return vals
-
-    (gn,) = struct.unpack(e + "H", tiff[gps_ifd : gps_ifd + 2])
-    lat = lon = None
-    lat_sign = lon_sign = 1.0
-    for i in range(gn):
-        base = gps_ifd + 2 + 12 * i
-        tag, ty, cnt = struct.unpack(e + "HHI", tiff[base : base + 8])
-        val = tiff[base + 8 : base + 12]
-        if tag == 0x0001 and ty == 2:  # GPSLatitudeRef
-            lat_sign = -1.0 if val[:1] == b"S" else 1.0
-        elif tag == 0x0003 and ty == 2:  # GPSLongitudeRef
-            lon_sign = -1.0 if val[:1] == b"W" else 1.0
-        elif tag == 0x0002 and ty == 5 and cnt == 3:  # GPSLatitude
-            (off,) = struct.unpack(e + "I", val)
-            d, m, s = rational3(off)
-            lat = d + m / 60.0 + s / 3600.0
-        elif tag == 0x0004 and ty == 5 and cnt == 3:  # GPSLongitude
-            (off,) = struct.unpack(e + "I", val)
-            d, m, s = rational3(off)
-            lon = d + m / 60.0 + s / 3600.0
-    if lat is None or lon is None:
-        return None
-    return lat_sign * lat, lon_sign * lon
-
-
-def embed_exif_gps(jpeg: bytes, lat: float, lon: float) -> bytes:
-    """Twin writer: insert an APP1/Exif segment with a GPS IFD (dms
-    RATIONAL triplets, 1e6 denominators on seconds) right after SOI.
-    Round-trips through exif_gps to ~1e-7 degrees."""
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-
-    def dms(v: float):
-        v = abs(v)
-        d = int(v)
-        m = int((v - d) * 60)
-        s = (v - d - m / 60.0) * 3600.0
-        return [(d, 1), (m, 1), (int(round(s * 1_000_000)), 1_000_000)]
-
-    # TIFF: header(8) + IFD0 (1 entry + next ptr) + GPS IFD (4 entries
-    # + next ptr) + 2 rational triplets (24 bytes each)
-    ifd0 = 8
-    gps_ifd = ifd0 + 2 + 12 + 4
-    lat_off = gps_ifd + 2 + 4 * 12 + 4
-    lon_off = lat_off + 24
-    t = bytearray()
-    t += b"II" + struct.pack("<HI", 42, ifd0)
-    t += struct.pack("<H", 1)
-    t += struct.pack("<HHII", 0x8825, 4, 1, gps_ifd)
-    t += struct.pack("<I", 0)  # next IFD
-    t += struct.pack("<H", 4)
-    lat_ref = b"S\x00\x00\x00" if lat < 0 else b"N\x00\x00\x00"
-    lon_ref = b"W\x00\x00\x00" if lon < 0 else b"E\x00\x00\x00"
-    t += struct.pack("<HHI", 0x0001, 2, 2) + lat_ref
-    t += struct.pack("<HHII", 0x0002, 5, 3, lat_off)
-    t += struct.pack("<HHI", 0x0003, 2, 2) + lon_ref
-    t += struct.pack("<HHII", 0x0004, 5, 3, lon_off)
-    t += struct.pack("<I", 0)  # next IFD
-    for num, den in dms(lat) + dms(lon):
-        t += struct.pack("<II", num, den)
-    payload = b"Exif\x00\x00" + bytes(t)
-    app1 = b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
-    return jpeg[:2] + app1 + jpeg[2:]

@@ -15,9 +15,8 @@ header tables (ISO 11172-3 / 13818-3). Decode of the streams inside
 (H.264, VP9, Vorbis, MP3 audio...) stays honestly out of scope —
 `NotImplementedError` names the codec.
 
-Encoder twins (`mux_mp4`, `mux_mkv`, `build_mp3`) exist so tests can
-build foreign-layout fixtures without shipping binary blobs; they emit
-spec-layout containers with stub media data.
+The encoder twins that build foreign-layout test fixtures (spec-layout
+containers with stub media data) live in tests/reference.py.
 
 Reference context: the reference delegates all media IO to PIL and has
 no container probe at all (trefoil/cli/utilities.py:16-34); this is a
@@ -30,7 +29,6 @@ import struct
 
 __all__ = [
     "probe_media", "probe_mp4", "probe_mkv", "probe_mp3", "probe_ogg",
-    "mux_mp4", "mux_mkv", "build_mp3", "mux_ogg",
 ]
 
 
@@ -148,71 +146,6 @@ def probe_mp4(data: bytes) -> dict:
     return out
 
 
-def mux_mp4(tracks: list, duration_ms: int = 0, brand: str = "isom") -> bytes:
-    """Spec-layout MP4 twin with stub media: each track is a dict with
-    kind ('video'/'audio'), codec fourcc, and width/height or
-    sample_rate/channels. Emits ftyp + moov(mvhd + trak per entry) +
-    empty mdat."""
-    def box(t: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", len(payload) + 8) + t + payload
-
-    ts = 1000
-    mvhd = box(
-        b"mvhd",
-        b"\x00\x00\x00\x00" + struct.pack(
-            ">IIII", 0, 0, ts, duration_ms
-        ) + struct.pack(">IHHII", 0x00010000, 0x0100, 0, 0, 0)
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24 + struct.pack(">I", len(tracks) + 1),
-    )
-    traks = b""
-    for i, tr in enumerate(tracks):
-        w = tr.get("width") or 0
-        h = tr.get("height") or 0
-        tkhd = box(
-            b"tkhd",
-            b"\x00\x00\x00\x07" + struct.pack(
-                ">IIII", 0, 0, i + 1, 0
-            ) + struct.pack(">I", duration_ms) + b"\x00" * 8
-            + struct.pack(">HHHH", 0, 0, 0x0100 if tr["kind"] == "audio" else 0, 0)
-            + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0,
-                          0x40000000)
-            + struct.pack(">II", w << 16, h << 16),
-        )
-        mdhd = box(
-            b"mdhd",
-            b"\x00\x00\x00\x00" + struct.pack(
-                ">IIII", 0, 0, tr.get("sample_rate") or ts,
-                (tr.get("sample_rate") or ts) * duration_ms // 1000,
-            ) + struct.pack(">HH", 0x55C4, 0),
-        )
-        hk = b"vide" if tr["kind"] == "video" else b"soun"
-        hdlr = box(b"hdlr", b"\x00" * 8 + hk + b"\x00" * 12 + b"stub\x00")
-        fourcc = tr["codec"].ljust(4)[:4].encode("latin-1")
-        if tr["kind"] == "audio":
-            entry = box(
-                fourcc,
-                b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 8
-                + struct.pack(">HHHH", tr.get("channels") or 2, 16, 0, 0)
-                + struct.pack(">I", (tr.get("sample_rate") or 44100) << 16),
-            )
-        else:
-            entry = box(
-                fourcc,
-                b"\x00" * 6 + struct.pack(">H", 1) + b"\x00" * 16
-                + struct.pack(">HH", w, h) + b"\x00" * 50,
-            )
-        stsd = box(b"stsd", b"\x00" * 4 + struct.pack(">I", 1) + entry)
-        stbl = box(b"stbl", stsd)
-        minf = box(b"minf", stbl)
-        mdia = box(b"mdia", mdhd + hdlr + minf)
-        traks += box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + traks)
-    ftyp = box(b"ftyp", brand.encode("latin-1") + struct.pack(">I", 0x200)
-               + b"isommp41")
-    return ftyp + moov + box(b"mdat", b"")
-
-
 # ---------------------------------------------------------------------------
 # Matroska / WebM (EBML, RFC 8794)
 # ---------------------------------------------------------------------------
@@ -319,70 +252,6 @@ def probe_mkv(data: bytes) -> dict:
     if duration_ticks is not None:
         out["duration_ms"] = int(duration_ticks * ts_scale / 1_000_000)
     return out
-
-
-def _ebml_el(eid_bytes: bytes, payload: bytes) -> bytes:
-    n = len(payload)
-    if n < 0x7F:
-        size = bytes([0x80 | n])
-    else:
-        size = bytes([0x40 | (n >> 8), n & 0xFF])
-    return eid_bytes + size + payload
-
-
-def _ebml_uint(v: int) -> bytes:
-    out = b"" if v else b"\x00"
-    while v:
-        out = bytes([v & 0xFF]) + out
-        v >>= 8
-    return out
-
-
-def mux_mkv(tracks: list, duration_ms: int = 0,
-            webm: bool = False) -> bytes:
-    """Spec-layout Matroska/WebM twin with stub media (no Clusters)."""
-    doctype = b"webm" if webm else b"matroska"
-    header = _ebml_el(
-        _EBML_MAGIC,
-        _ebml_el(b"\x42\x86", b"\x01")       # EBMLVersion
-        + _ebml_el(b"\x42\xf7", b"\x01")     # EBMLReadVersion
-        + _ebml_el(b"\x42\x82", doctype)     # DocType
-        + _ebml_el(b"\x42\x87", b"\x04")     # DocTypeVersion
-        + _ebml_el(b"\x42\x85", b"\x02"),
-    )
-    info = _ebml_el(
-        b"\x15\x49\xa9\x66",
-        _ebml_el(b"\x2a\xd7\xb1", _ebml_uint(1_000_000))
-        + _ebml_el(b"\x44\x89", struct.pack(">d", float(duration_ms))),
-    )
-    entries = b""
-    for i, tr in enumerate(tracks):
-        fields = (
-            _ebml_el(b"\xd7", _ebml_uint(i + 1))        # TrackNumber
-            + _ebml_el(b"\x73\xc5", _ebml_uint(i + 1))  # TrackUID
-            + _ebml_el(
-                b"\x83", _ebml_uint(1 if tr["kind"] == "video" else 2)
-            )
-            + _ebml_el(b"\x86", tr["codec"].encode("latin-1"))
-        )
-        if tr["kind"] == "video":
-            fields += _ebml_el(
-                b"\xe0",
-                _ebml_el(b"\xb0", _ebml_uint(tr["width"]))
-                + _ebml_el(b"\xba", _ebml_uint(tr["height"])),
-            )
-        else:
-            fields += _ebml_el(
-                b"\xe1",
-                _ebml_el(
-                    b"\xb5", struct.pack(">d", float(tr["sample_rate"]))
-                )
-                + _ebml_el(b"\x9f", _ebml_uint(tr.get("channels") or 2)),
-            )
-        entries += _ebml_el(b"\xae", fields)
-    tracks_el = _ebml_el(b"\x16\x54\xae\x6b", entries)
-    segment = _ebml_el(b"\x18\x53\x80\x67", info + tracks_el)
-    return header + segment
 
 
 # ---------------------------------------------------------------------------
@@ -508,39 +377,6 @@ def probe_mp3(data: bytes) -> dict:
     }
 
 
-def build_mp3(n_frames: int = 10, kbps: int = 128, rate: int = 44100,
-              mono: bool = False, id3_bytes: int = 0,
-              tags: dict | None = None) -> bytes:
-    """MP3 twin: valid MPEG-1 Layer III frame headers with zero-fill
-    payloads (probe-parseable, not decodable audio), optional ID3v2
-    (v2.3 text frames from ``tags`` {title/artist/album/...} followed
-    by ``id3_bytes`` of padding)."""
-    bridx = _BITRATES_V1L3.index(kbps)
-    sridx = _RATES[3].index(rate)
-    out = bytearray()
-    if id3_bytes or tags:
-        frames_b = bytearray()
-        rev = {v: k for k, v in _ID3_TEXT.items() if k != "TDRC"}
-        for name, val in (tags or {}).items():
-            body = b"\x03" + val.encode("utf-8")  # enc 3 = UTF-8
-            frames_b += (rev[name].encode() + struct.pack(">I", len(body))
-                         + b"\x00\x00" + body)
-        sz = len(frames_b) + id3_bytes
-        out += b"ID3\x03\x00\x00" + bytes(
-            [(sz >> 21) & 0x7F, (sz >> 14) & 0x7F, (sz >> 7) & 0x7F,
-             sz & 0x7F]
-        ) + frames_b + b"\x00" * id3_bytes
-    for _ in range(n_frames):
-        frame_len = 144 * kbps * 1000 // rate
-        hdr = bytes([
-            0xFF, 0xFB,  # MPEG1 Layer III, no CRC
-            (bridx << 4) | (sridx << 2),
-            0xC0 if mono else 0x00,
-        ])
-        out += hdr + b"\x00" * (frame_len - 4)
-    return bytes(out)
-
-
 # ---------------------------------------------------------------------------
 # Dispatch
 # ---------------------------------------------------------------------------
@@ -630,243 +466,3 @@ def probe_ogg(data: bytes) -> dict:
             duration_ms = max(duration_ms or 0, ms)
     return {"container": "ogg", "duration_ms": duration_ms,
             "tracks": list(tracks.values())}
-
-
-def mux_ogg(codec: str = "vorbis", channels: int = 2, rate: int = 44100,
-            n_samples: int = 0) -> bytes:
-    """Ogg twin: a BOS page with a Vorbis/Opus ident header plus one
-    EOS data page whose granule position encodes ``n_samples``."""
-    def page(serial, seqno, body, flags, granule):
-        segs = []
-        rem = len(body)
-        while rem >= 255:
-            segs.append(255)
-            rem -= 255
-        segs.append(rem)
-        hdr = (b"OggS\x00" + bytes([flags])
-               + struct.pack("<qI", granule, serial)
-               + struct.pack("<II", seqno, 0)
-               + bytes([len(segs)]) + bytes(segs))
-        return hdr + body
-
-    if codec == "vorbis":
-        ident = (b"\x01vorbis" + struct.pack("<IB", 0, channels)
-                 + struct.pack("<IiiI", rate, 0, 0, 0) + b"\x01")
-    elif codec == "opus":
-        ident = (b"OpusHead\x01" + bytes([channels])
-                 + struct.pack("<HIhB", 312, rate, 0, 0))
-    else:
-        raise ValueError("twin supports vorbis/opus")
-    bos = page(1, 0, ident, 0x02, 0)
-    eos = page(1, 1, b"\x00" * 10, 0x04, n_samples)
-    return bos + eos
-
-
-# ---------------------------------------------------------------------------
-# MP4 video decode (r6): the sample-table walk. Photo-JPEG ('jpeg') and
-# Motion-JPEG A ('mjpa') tracks hold one interchange-format JPEG per
-# sample (QuickTime File Format spec), so with the sample tables
-# resolved every frame decodes through the in-house T.81 decoder.
-# Anything else (avc1/hev1/vp09...) raises naming the codec — real
-# inter-frame video stays honestly ffmpeg-bound.
-# ---------------------------------------------------------------------------
-
-_MP4_JPEG_CODECS = (b"jpeg", b"mjpa")
-
-
-def _stbl_tables(data: bytes, stbl: tuple) -> dict:
-    """Parse the sample tables a sequential decode needs: stsd fourcc,
-    stts (timing), stsc (sample→chunk), stsz (sizes), stco/co64
-    (chunk offsets)."""
-    t: dict = {}
-    sp, se = stbl
-    stsd = _find(data, sp, se, b"stsd")
-    if stsd is None:
-        raise ValueError("MP4 stbl has no stsd")
-    for st, p2, _e2 in _boxes(data, stsd[0] + 8, stsd[1]):
-        t["codec"] = st
-        break
-    stts = _find(data, sp, se, b"stts")
-    if stts is not None:
-        p, _ = stts
-        (n,) = struct.unpack(">I", data[p + 4 : p + 8])
-        t["stts"] = [
-            struct.unpack(">II", data[p + 8 + 8 * i : p + 16 + 8 * i])
-            for i in range(n)
-        ]
-    p, _ = _find(data, sp, se, b"stsz") or (None, None)
-    if p is None:
-        raise ValueError("MP4 stbl has no stsz")
-    fixed, count = struct.unpack(">II", data[p + 4 : p + 12])
-    t["sizes"] = (
-        [fixed] * count
-        if fixed
-        else [
-            struct.unpack(">I", data[p + 12 + 4 * i : p + 16 + 4 * i])[0]
-            for i in range(count)
-        ]
-    )
-    stco = _find(data, sp, se, b"stco")
-    if stco is not None:
-        p, _ = stco
-        (n,) = struct.unpack(">I", data[p + 4 : p + 8])
-        t["offsets"] = [
-            struct.unpack(">I", data[p + 8 + 4 * i : p + 12 + 4 * i])[0]
-            for i in range(n)
-        ]
-    else:
-        co64 = _find(data, sp, se, b"co64")
-        if co64 is None:
-            raise ValueError("MP4 stbl has no stco/co64")
-        p, _ = co64
-        (n,) = struct.unpack(">I", data[p + 4 : p + 8])
-        t["offsets"] = [
-            struct.unpack(">Q", data[p + 8 + 8 * i : p + 16 + 8 * i])[0]
-            for i in range(n)
-        ]
-    stsc = _find(data, sp, se, b"stsc")
-    if stsc is None:
-        raise ValueError("MP4 stbl has no stsc")
-    p, _ = stsc
-    (n,) = struct.unpack(">I", data[p + 4 : p + 8])
-    t["stsc"] = [
-        struct.unpack(">III", data[p + 8 + 12 * i : p + 20 + 12 * i])
-        for i in range(n)
-    ]
-    return t
-
-
-def _samples_per_chunk(stsc, n_chunks: int) -> list[int]:
-    """Expand the run-length stsc table to one entry per chunk."""
-    out = []
-    for i, (first, per, _desc) in enumerate(stsc):
-        last = stsc[i + 1][0] - 1 if i + 1 < len(stsc) else n_chunks
-        out.extend([per] * (last - first + 1))
-    if len(out) != n_chunks:
-        raise ValueError("MP4 stsc does not cover every chunk")
-    return out
-
-
-def decode_mp4_video(data: bytes):
-    """MP4/QuickTime bytes → (list of (h, w, 3) uint8 RGB frames, fps)
-    for the first video track. MJPEG flavors only (see module note)."""
-    import numpy as np
-
-    from .jpeg import decode_jpeg
-
-    moov = _find(data, 0, len(data), b"moov")
-    if moov is None:
-        raise ValueError("MP4 has no moov box")
-    for t, p, e in _boxes(data, *moov):
-        if t != b"trak":
-            continue
-        mdia = _find(data, p, e, b"mdia")
-        if mdia is None:
-            continue
-        hdlr = _find(data, *mdia, b"hdlr")
-        if hdlr is None or data[hdlr[0] + 8 : hdlr[0] + 12] != b"vide":
-            continue
-        minf = _find(data, *mdia, b"minf")
-        stbl = _find(data, *minf, b"stbl") if minf else None
-        if stbl is None:
-            raise ValueError("MP4 video trak has no stbl")
-        tables = _stbl_tables(data, stbl)
-        if tables["codec"] not in _MP4_JPEG_CODECS:
-            raise NotImplementedError(
-                f"MP4 video codec {tables['codec'].decode('latin-1')!r} "
-                "needs ffmpeg (only jpeg/mjpa here)"
-            )
-        mdhd = _find(data, *mdia, b"mdhd")
-        fps = 0.0
-        if mdhd is not None and tables.get("stts"):
-            mp = mdhd[0]
-            ver = data[mp]
-            ts = struct.unpack(
-                ">I", data[mp + (20 if ver == 1 else 12) :][:4]
-            )[0]
-            delta = tables["stts"][0][1]
-            fps = ts / delta if delta else 0.0
-        sizes = tables["sizes"]
-        offsets = tables["offsets"]
-        per_chunk = _samples_per_chunk(tables["stsc"], len(offsets))
-        frames = []
-        si = 0
-        for ci, off in enumerate(offsets):
-            pos = off
-            for _ in range(per_chunk[ci]):
-                if si >= len(sizes):
-                    break
-                raw = data[pos : pos + sizes[si]]
-                img = decode_jpeg(raw)
-                if img.ndim == 2:
-                    img = np.stack([img] * 3, -1)
-                frames.append(img)
-                pos += sizes[si]
-                si += 1
-        if not frames:
-            raise ValueError("MP4 video track has no samples")
-        return frames, fps
-    raise ValueError("MP4 has no video track")
-
-
-def mux_mp4_mjpeg(frames, fps: int = 10, quality: int = 90) -> bytes:
-    """Twin writer: (h, w, 3) uint8 RGB frames → self-contained
-    photo-JPEG MP4 (mdat before moov so stco offsets are absolute;
-    full stts/stsc/stsz/stco sample tables; two chunks when there are
-    4+ samples so the stsc expansion is exercised)."""
-    import numpy as np
-
-    from .jpeg import encode_jpeg
-
-    def box(t: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + t + payload
-
-    payloads = [encode_jpeg(np.asarray(f, np.uint8), quality)
-                for f in frames]
-    h, w = frames[0].shape[:2]
-    n = len(payloads)
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isomiso2")
-    # split samples into two chunks when possible
-    c1 = n if n < 4 else (n + 1) // 2
-    mdat_body = b"".join(payloads)
-    mdat_off = len(ftyp) + 8
-    off1 = mdat_off
-    off2 = mdat_off + sum(len(p) for p in payloads[:c1])
-    ts = int(fps)
-    mvhd = box(b"mvhd", b"\x00" * 4 + struct.pack(
-        ">IIII", 0, 0, ts, n) + b"\x00" * 80)
-    tkhd = box(b"tkhd", b"\x00\x00\x00\x07" + struct.pack(
-        ">IIIII", 0, 0, 1, 0, n) + b"\x00" * 52
-        + struct.pack(">II", w << 16, h << 16))
-    mdhd = box(b"mdhd", b"\x00" * 4 + struct.pack(
-        ">IIII", 0, 0, ts, n) + b"\x00" * 4)
-    hdlr = box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12 + b"mjpeg\x00")
-    entry = (b"\x00" * 6 + struct.pack(">H", 1)      # SampleEntry
-             + b"\x00" * 16
-             + struct.pack(">HH", w, h)
-             + struct.pack(">II", 0x480000, 0x480000)
-             + b"\x00" * 4 + struct.pack(">H", 1)
-             + b"\x00" * 32
-             + struct.pack(">Hh", 24, -1))
-    stsd = box(b"stsd", b"\x00" * 4 + struct.pack(">I", 1)
-               + box(b"jpeg", entry))
-    stts = box(b"stts", b"\x00" * 4 + struct.pack(">III", 1, n, 1))
-    if n < 4:
-        stsc = box(b"stsc", b"\x00" * 4 + struct.pack(">I", 1)
-                   + struct.pack(">III", 1, n, 1))
-        stco = box(b"stco", b"\x00" * 4 + struct.pack(">II", 1, off1))
-    else:
-        stsc = box(b"stsc", b"\x00" * 4 + struct.pack(">I", 2)
-                   + struct.pack(">III", 1, c1, 1)
-                   + struct.pack(">III", 2, n - c1, 1))
-        stco = box(b"stco", b"\x00" * 4 + struct.pack(">I", 2)
-                   + struct.pack(">II", off1, off2))
-    stsz = box(b"stsz", b"\x00" * 4 + struct.pack(">II", 0, n)
-               + b"".join(struct.pack(">I", len(p)) for p in payloads))
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    minf = box(b"minf", box(b"vmhd", b"\x00\x00\x00\x01" + b"\x00" * 8)
-               + stbl)
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    trak = box(b"trak", tkhd + mdia)
-    moov = box(b"moov", mvhd + trak)
-    return ftyp + box(b"mdat", mdat_body) + moov

@@ -7,9 +7,9 @@
   (reference utilities.py:13-26) — constants, not imported.
 - resolve_dataset_variable: 'file.nc:var' split (utilities.py:419-440).
 
-Packing columns: ``pack_col``/``unpack_col`` are plain Catalyst
-expressions; Parquet dictionary+ZSTD mostly obsoletes packing at rest,
-but the operator exists for parity and for wire formats.
+Packing column: ``pack_col`` is a plain Catalyst expression; Parquet
+dictionary+ZSTD mostly obsoletes packing at rest, but the operator exists
+for parity and for wire formats.
 """
 
 from __future__ import annotations
@@ -51,11 +51,6 @@ def pack_col(value_col: str, scale: float, offset: float) -> Column:
     """(v - offset) / scale rounded to the packed integer; NULL stays NULL."""
     v = F.col(value_col)
     return F.when(v.isNotNull(), F.round((v - F.lit(offset)) / F.lit(scale)).cast("bigint"))
-
-
-def unpack_col(packed_col: str, scale: float, offset: float) -> Column:
-    p = F.col(packed_col)
-    return F.when(p.isNotNull(), p.cast("double") * F.lit(scale) + F.lit(offset))
 
 
 def resolve_dataset_variable(path: str) -> tuple[str, str | None]:

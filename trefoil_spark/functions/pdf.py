@@ -28,7 +28,7 @@ from __future__ import annotations
 import re
 import zlib
 
-__all__ = ["extract_pdf_text", "write_pdf"]
+__all__ = ["extract_pdf_text"]
 
 _STREAM_RE = re.compile(
     rb"<<(.*?)>>\s*stream\r?\n(.*?)endstream", re.S
@@ -132,61 +132,3 @@ def extract_pdf_text(data: bytes) -> tuple[str, dict]:
     # collapse the coarse layout newlines: runs of blank lines → one
     text = re.sub(r"\n{2,}", "\n", text).strip("\n")
     return text, meta
-
-
-def write_pdf(pages: list[str], compress: bool = True) -> bytes:
-    """Twin writer: list of page texts (lines separated by \\n) → a
-    complete single-font PDF with a correct xref table. Each line
-    becomes one Tj run followed by T*."""
-    objs: list[bytes] = []
-
-    def esc(s: str) -> str:
-        return s.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
-
-    n_pages = len(pages)
-    kids = " ".join(f"{4 + 2 * i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(
-        f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    )
-    objs.append(
-        b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    )
-    for i, text in enumerate(pages):
-        content = b"BT /F1 11 Tf 50 780 Td 14 TL\n"
-        for line in text.split("\n"):
-            content += b"(" + esc(line).encode("latin-1") + b") Tj T*\n"
-        content += b"ET"
-        if compress:
-            stream = zlib.compress(content, 6)
-            sdict = (
-                b"<< /Filter /FlateDecode /Length "
-                + str(len(stream)).encode() + b" >>"
-            )
-        else:
-            stream = content
-            sdict = b"<< /Length " + str(len(stream)).encode() + b" >>"
-        objs.append(
-            (
-                f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-                f"/Resources << /Font << /F1 3 0 R >> >> "
-                f"/Contents {5 + 2 * i} 0 R >>"
-            ).encode()
-        )
-        objs.append(sdict + b"\nstream\n" + stream + b"\nendstream")
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, obj in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += f"{i} 0 obj\n".encode() + obj + b"\nendobj\n"
-    xref_pos = len(out)
-    out += f"xref\n0 {len(objs) + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += f"{off:010d} 00000 n \n".encode()
-    out += (
-        b"trailer\n<< /Size " + str(len(objs) + 1).encode()
-        + b" /Root 1 0 R >>\nstartxref\n" + str(xref_pos).encode()
-        + b"\n%%EOF\n"
-    )
-    return bytes(out)

@@ -64,36 +64,6 @@ def encode_palette_png(
     return b"".join(out)
 
 
-def decode_palette_png(data: bytes):
-    """Minimal decoder for round-trip tests: returns (indices, palette,
-    transparent_index). Only reads PNGs produced by encode_palette_png."""
-    assert data[:8] == _SIGNATURE
-    pos = 8
-    pal = None
-    trans = None
-    idat = b""
-    w = h = None
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        tag = data[pos + 4 : pos + 8]
-        payload = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length
-        if tag == b"IHDR":
-            w, h, depth, ctype = struct.unpack(">IIBB", payload[:10])
-            assert depth == 8 and ctype == 3
-        elif tag == b"PLTE":
-            pal = np.frombuffer(payload, dtype=np.uint8).reshape(-1, 3)
-        elif tag == b"tRNS":
-            alphas = np.frombuffer(payload, dtype=np.uint8)
-            zero = np.flatnonzero(alphas == 0)
-            trans = int(zero[0]) if zero.size else None
-        elif tag == b"IDAT":
-            idat += payload
-    raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, w + 1)
-    assert (raw[:, 0] == 0).all(), "only filter 0 supported"
-    return raw[:, 1:].copy(), pal, trans
-
-
 def encode_rgb_png(img: np.ndarray, compress_level: int = 6) -> bytes:
     """uint8 (H, W, 3) RGB or (H, W, 4) RGBA → truecolor PNG bytes.
 

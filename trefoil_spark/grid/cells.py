@@ -17,8 +17,9 @@ bit 2b, iy bit b -> Morton bit 2b+1). Properties used by the engine:
   sorted or partitioned by cell.
 - *SQL-expressible*: the encode is pure integer arithmetic, so the hot
   path runs as Catalyst expressions (whole-stage codegen, no Python) —
-  see :func:`cell_sql_expr`. The numpy forms below are for tile-grain
-  UDFs and tests.
+  :func:`ix_sql_expr` / :func:`iy_sql_expr` into coordinate columns, then
+  :func:`morton_fast_sql` (Spark) or the per-bit :func:`morton_sql_expr`
+  (oracle SQL). The numpy forms below are for tile-grain UDFs and tests.
 
 Everything here is deterministic and engine-agnostic: the identical
 formula is used for the Spark column expression and the DuckDB oracle SQL.
@@ -249,27 +250,4 @@ def morton_fast_sql(ix_col: str, iy_col: str, res: int) -> str:
     return (
         f"(({spread_bits_sql(ix_col)} + ({spread_bits_sql(iy_col)} * 2))"
         f" * 32 + {res})"
-    )
-
-
-def cell_fast_sql(lon_col: str, lat_col: str, res: int) -> str:
-    """One-shot Spark-side cell id (bit-trick morton over inlined coords).
-
-    The coord exprs are duplicated ~32× textually, but whole-stage
-    codegen's subexpression elimination evaluates each once; use
-    :func:`morton_fast_sql` over precomputed coord COLUMNS when the
-    expression feeds further derivation (e.g. the pip_join ladder).
-    """
-    return morton_fast_sql(ix_sql_expr(lon_col, res), iy_sql_expr(lat_col, res), res)
-
-
-def cell_sql_expr(lon_col: str, lat_col: str, res: int) -> str:
-    """One-shot SQL expression computing the same cell id as latlon_to_cell.
-
-    Inlines ix/iy (re-evaluated per term) — fine for small res; for
-    res > 8 compute ix/iy once in a CTE and use morton_sql_expr.
-    """
-    body = morton_sql_expr("_qx", "_qy", res)
-    return body.replace("_qx", ix_sql_expr(lon_col, res)).replace(
-        "_qy", iy_sql_expr(lat_col, res)
     )

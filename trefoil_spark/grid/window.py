@@ -64,14 +64,3 @@ class Window:
         tx0 = self.x_slice.start // tile_size
         tx1 = max(self.x_slice.stop - 1, self.x_slice.start) // tile_size
         return ty0, ty1, tx0, tx1
-
-
-def union_windows(windows) -> Window:
-    """Smallest window containing all inputs (reference: rasterio.windows
-    union used at trefoil/cli/convert.py:150-152 for data autocrop)."""
-    ys = [w.y_slice for w in windows]
-    xs = [w.x_slice for w in windows]
-    return Window(
-        (min(s.start for s in ys), max(s.stop for s in ys)),
-        (min(s.start for s in xs), max(s.stop for s in xs)),
-    )

@@ -35,9 +35,7 @@ from pyspark.sql import functions as F
 
 from .lm import BROADCAST_THRESHOLD, _model_bytes, tokens_col
 
-__all__ = ["train_nb_quality", "score_nb_quality", "nb_sql_duckdb",
-           "train_nb_multiclass", "score_nb_multiclass",
-           "predict_nb_multiclass", "nb_multiclass_sql_duckdb"]
+__all__ = ["train_nb_quality", "score_nb_quality"]
 
 
 def train_nb_quality(pos: DataFrame, neg: DataFrame,
@@ -122,246 +120,3 @@ def score_nb_quality(docs: DataFrame, model: DataFrame, meta: DataFrame,
             "score",
         )
     )
-
-
-def nb_sql_duckdb(pos_rel: str, neg_rel: str, docs_rel: str,
-                  text_col: str = "text") -> str:
-    """Exact DuckDB twin of train+score: SELECT doc_id, n_tokens,
-    score with the identical IEEE expression trees."""
-    def toks(rel: str, cols: str = "") -> str:
-        return (
-            f"SELECT {cols}unnest(list_filter(string_split_regex("
-            f"lower({text_col}), '\\s+'), x -> length(x) > 0)) AS w "
-            f"FROM {rel}"
-        )
-
-    return f"""
-        WITH cp AS (
-            SELECT w, CAST(COUNT(*) AS BIGINT) AS cp
-            FROM ({toks(pos_rel)}) GROUP BY w
-        ), cn AS (
-            SELECT w, CAST(COUNT(*) AS BIGINT) AS cn
-            FROM ({toks(neg_rel)}) GROUP BY w
-        ), j AS (
-            SELECT COALESCE(cp.w, cn.w) AS w,
-                   COALESCE(cp, 0) AS cp, COALESCE(cn, 0) AS cn
-            FROM cp FULL OUTER JOIN cn ON cp.w = cn.w
-        ), meta AS (
-            SELECT CAST(SUM(cp) AS BIGINT) AS np,
-                   CAST(SUM(cn) AS BIGINT) AS nn,
-                   CAST(COUNT(*) AS BIGINT) AS v,
-                   ln(CAST(1 AS DOUBLE) / CAST(CAST(SUM(cp) AS BIGINT) + COUNT(*) AS DOUBLE))
-                   - ln(CAST(1 AS DOUBLE) / CAST(CAST(SUM(cn) AS BIGINT) + COUNT(*) AS DOUBLE))
-                   AS llr0
-            FROM j
-        ), model AS (
-            SELECT w,
-                   ln(CAST(cp + 1 AS DOUBLE) / CAST(np + v AS DOUBLE))
-                   - ln(CAST(cn + 1 AS DOUBLE) / CAST(nn + v AS DOUBLE))
-                   AS llr
-            FROM j, meta
-        ), dt AS (
-            {toks(docs_rel, "doc_id, ")}
-        ), per_doc AS (
-            SELECT dt.doc_id,
-                   CAST(COUNT(*) AS BIGINT) AS n_tokens,
-                   SUM(COALESCE(model.llr, meta.llr0)) AS score
-            FROM dt LEFT JOIN model ON dt.w = model.w, meta
-            GROUP BY dt.doc_id
-        )
-        SELECT d.doc_id,
-               COALESCE(per_doc.n_tokens, 0) AS n_tokens,
-               per_doc.score AS score
-        FROM (SELECT doc_id FROM {docs_rel}) d
-        LEFT JOIN per_doc ON d.doc_id = per_doc.doc_id
-    """
-
-
-# ---------------------------------------------------------------------------
-# Multiclass NB (late r7) — the fasttext-style supervised lang-id /
-# topic classifier over a LABELED corpus (the pages table carries a
-# `lang` column; published pipelines train lang-id on labeled seeds
-# and apply it to unlabeled crawl). Same closed-form training as the
-# binary gate above; the model is DENSE over (label, token) —
-# vocab x L rows, L = #labels (tens) — so scoring needs no per-label
-# sparse backoff join: one token join fans out L rows, one keyed agg
-# per (doc, label), plus an unseen-token correction computed from per
-# -doc token counts. argmax per doc is a max_by (map-side combining).
-# ---------------------------------------------------------------------------
-
-
-def train_nb_multiclass(labeled: DataFrame, label_col: str = "lang",
-                        text_col: str = "text",
-                        ) -> tuple[DataFrame, DataFrame]:
-    """labeled corpus → (model, meta). model: dense (label, w, logp)
-    with add-one smoothing, logp = ln((c(l,w)+1)/(N_l+V)). meta: one
-    row per label (label, n_l, v, log_prior, log_unseen) where
-    log_prior = ln(docs_l) - ln(docs) and log_unseen =
-    ln(1/(N_l+V)) is the per-label score of a token absent from the
-    whole vocab-for-that-label. Degenerate labels whose every training
-    doc tokenizes to empty contribute no counts and drop out of the
-    model (they could never win argmax anyway); the label survives in
-    the doc-count prior denominators."""
-    toks = labeled.select(
-        F.col(label_col).alias("label"),
-        F.explode(tokens_col(text_col)).alias("w"),
-    )
-    counts = toks.groupBy("label", "w").agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    vocab = toks.select("w").distinct()
-    v1 = vocab.agg(F.count(F.lit(1)).alias("v"))
-    per_label = counts.groupBy("label").agg(F.sum("c").alias("n_l"))
-    docs_l = labeled.groupBy(F.col(label_col).alias("label")).agg(
-        F.count(F.lit(1)).alias("docs_l")
-    )
-    docs_n = labeled.agg(F.count(F.lit(1)).alias("docs"))
-    meta = (
-        per_label.join(docs_l, "label")
-        .crossJoin(F.broadcast(v1))
-        .crossJoin(F.broadcast(docs_n))
-        .select(
-            "label", "n_l", "v",
-            (F.log(F.col("docs_l").cast("double"))
-             - F.log(F.col("docs").cast("double"))).alias("log_prior"),
-            F.log(
-                F.lit(1).cast("double")
-                / (F.col("n_l") + F.col("v")).cast("double")
-            ).alias("log_unseen"),
-        )
-    )
-    dense = (
-        vocab.crossJoin(meta.select("label", "n_l", "v"))
-        .join(counts, ["label", "w"], "left")
-        .select(
-            "label", "w",
-            F.log(
-                (F.coalesce("c", F.lit(0)) + F.lit(1)).cast("double")
-                / (F.col("n_l") + F.col("v")).cast("double")
-            ).alias("logp"),
-        )
-    )
-    return dense, meta
-
-
-def score_nb_multiclass(docs: DataFrame, model: DataFrame,
-                        meta: DataFrame, id_col: str = "doc_id",
-                        text_col: str = "text",
-                        broadcast: bool | None = None,
-                        broadcast_threshold: int = BROADCAST_THRESHOLD,
-                        ) -> DataFrame:
-    """docs → (doc_id, label, score) for every label (argmax is one
-    max_by away; keeping the full matrix lets callers threshold on
-    margin). score = log_prior + Σ_seen logp + n_unseen*log_unseen,
-    n_unseen = doc tokens absent from the training vocab. Empty docs
-    score prior-only."""
-    if broadcast is None:
-        broadcast = _model_bytes(model, "w") <= broadcast_threshold
-    hint = F.broadcast if broadcast else (lambda d: d)
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_col(text_col)).alias("w"),
-    )
-    n_toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.size(tokens_col(text_col)).cast("bigint").alias("n_tokens"),
-    )
-    seen = (
-        toks.join(hint(model), "w")
-        .groupBy("doc_id", "label")
-        .agg(
-            F.sum("logp").alias("seen_sum"),
-            F.count(F.lit(1)).cast("bigint").alias("n_seen"),
-        )
-    )
-    return (
-        n_toks.crossJoin(hint(meta.select("label", "log_prior", "log_unseen")))
-        .join(seen, ["doc_id", "label"], "left")
-        .select(
-            "doc_id", "label",
-            (
-                F.col("log_prior")
-                + F.coalesce("seen_sum", F.lit(0).cast("double"))
-                + (F.col("n_tokens") - F.coalesce("n_seen", F.lit(0)))
-                .cast("double") * F.col("log_unseen")
-            ).alias("score"),
-        )
-    )
-
-
-def predict_nb_multiclass(scores: DataFrame) -> DataFrame:
-    """(doc_id, label, score) matrix → (doc_id, label) argmax; ties
-    break to the LARGER label string so the winner is deterministic
-    under any partitioning (max_by on (score, label) struct — combines
-    partially map-side, no window)."""
-    return scores.groupBy("doc_id").agg(
-        F.max_by("label", F.struct("score", "label")).alias("label")
-    )
-
-
-def nb_multiclass_sql_duckdb(labeled_rel: str, docs_rel: str,
-                             label_col: str = "lang",
-                             text_col: str = "text") -> str:
-    """Exact DuckDB twin of train+score: SELECT doc_id, label, score
-    (full matrix, same IEEE trees)."""
-    def toks(rel: str, cols: str) -> str:
-        return (
-            f"SELECT {cols}unnest(list_filter(string_split_regex("
-            f"lower({text_col}), '\\s+'), x -> length(x) > 0)) AS w "
-            f"FROM {rel}"
-        )
-
-    return f"""
-        WITH lt AS (
-            {toks(labeled_rel, f"{label_col} AS label, ")}
-        ), counts AS (
-            SELECT label, w, CAST(COUNT(*) AS BIGINT) AS c
-            FROM lt GROUP BY label, w
-        ), vocab AS (
-            SELECT DISTINCT w FROM lt
-        ), v1 AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS v FROM vocab
-        ), per_label AS (
-            SELECT label, CAST(SUM(c) AS BIGINT) AS n_l
-            FROM counts GROUP BY label
-        ), dl AS (
-            SELECT {label_col} AS label, CAST(COUNT(*) AS BIGINT) AS docs_l
-            FROM {labeled_rel} GROUP BY {label_col}
-        ), dn AS (
-            SELECT CAST(COUNT(*) AS BIGINT) AS docs FROM {labeled_rel}
-        ), meta AS (
-            SELECT per_label.label, n_l, v,
-                   ln(CAST(docs_l AS DOUBLE)) - ln(CAST(docs AS DOUBLE))
-                       AS log_prior,
-                   ln(CAST(1 AS DOUBLE) / CAST(n_l + v AS DOUBLE))
-                       AS log_unseen
-            FROM per_label JOIN dl ON per_label.label = dl.label, v1, dn
-        ), dense AS (
-            SELECT m.label, vocab.w,
-                   ln(CAST(COALESCE(counts.c, 0) + 1 AS DOUBLE)
-                      / CAST(m.n_l + m.v AS DOUBLE)) AS logp
-            FROM vocab CROSS JOIN meta m
-            LEFT JOIN counts
-              ON counts.label = m.label AND counts.w = vocab.w
-        ), dt AS (
-            {toks(docs_rel, "doc_id, ")}
-        ), nt AS (
-            SELECT doc_id, CAST(len(list_filter(string_split_regex(
-                       lower({text_col}), '\\s+'),
-                       x -> length(x) > 0)) AS BIGINT) AS n_tokens
-            FROM {docs_rel}
-        ), seen AS (
-            SELECT dt.doc_id, dense.label,
-                   SUM(dense.logp) AS seen_sum,
-                   CAST(COUNT(*) AS BIGINT) AS n_seen
-            FROM dt JOIN dense ON dt.w = dense.w
-            GROUP BY dt.doc_id, dense.label
-        )
-        SELECT nt.doc_id, meta.label,
-               meta.log_prior + COALESCE(seen.seen_sum, CAST(0 AS DOUBLE))
-               + CAST(nt.n_tokens - COALESCE(seen.n_seen, 0) AS DOUBLE)
-                 * meta.log_unseen AS score
-        FROM nt CROSS JOIN meta
-        LEFT JOIN seen
-          ON seen.doc_id = nt.doc_id AND seen.label = meta.label
-    """

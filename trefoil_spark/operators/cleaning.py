@@ -83,7 +83,11 @@ def c4_page_pass_col(text_col: str = "text",
     """C4 page rule: drop pages whose ORIGINAL text contains '{' or
     'lorem ipsum' (case-insensitive), or that retain < 3 lines after
     the line rules. cleaned_col may name a column already produced by
-    c4_clean_col to avoid recomputing the line pass."""
+    c4_clean_col to avoid recomputing the line pass.
+
+    NULL text is FALSE (the CASE below), so c4_clean drops the row; the
+    DuckDB twin in c4_sql_duckdb is FALSE as well. c4_clean_col itself
+    returns NULL for NULL text where the twin's cleaned text is ''."""
     raw = F.col(text_col)
     cleaned = (F.col(cleaned_col) if cleaned_col is not None
                else c4_clean_col(text_col))
@@ -128,7 +132,12 @@ def c4_clean(df: DataFrame, text_col: str = "text") -> DataFrame:
 def c4_sql_duckdb(text_col: str = "text") -> dict[str, str]:
     """DuckDB twins of c4_clean_col / c4_page_pass_col (list lambdas
     mirror the Catalyst higher-order functions; same trim/word-split
-    semantics)."""
+    semantics).
+
+    NULL text: ``cleaned`` is '' (the coalesce) where c4_clean_col gives
+    NULL, and ``page_pass`` is FALSE (NULL AND ... AND 0 >= 3) as in
+    Spark, so both filters drop the row. The oracle SQL is built from
+    this text, so it stays as it is."""
     lines = f"string_split({text_col}, chr(10))"
     keep = (
         "x -> length(x) > 0 "
@@ -294,24 +303,6 @@ def dedup_paragraphs(docs: DataFrame, id_col: str = "doc_id",
 # needs — new crawl shards arrive against an existing curated corpus.
 # ---------------------------------------------------------------------------
 
-def dedup_incremental(new_docs: DataFrame, seen_digests: DataFrame,
-                      text_col: str = "text") -> DataFrame:
-    """Drop new documents whose content digest already exists in the
-    historical corpus. seen_digests is a (digest string) table — the
-    running pipeline's ledger, typically millions-to-billions of
-    32-char rows. Plan: one left_anti hash join on the digest; the new
-    shard also self-dedups first (min doc_id winner) so a batch can't
-    insert its own duplicates."""
-    digested = new_docs.withColumn(
-        "digest", F.md5(F.encode(text_col, "UTF-8"))
-    )
-    winners = digested.groupBy("digest").agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    fresh = digested.join(winners, ["digest", "doc_id"], "inner")
-    return fresh.join(seen_digests, "digest", "left_anti").drop("digest")
-
-
 def sample_deterministic(docs: DataFrame, fraction: float,
                          id_col: str = "doc_id",
                          salt: str = "sample") -> DataFrame:
@@ -398,46 +389,3 @@ def remove_host_boilerplate(docs: DataFrame, url_col: str = "url",
         ).alias(text_col)
     )
     return docs.drop(text_col).join(rebuilt, id_col)
-
-
-def boilerplate_sql_duckdb(rel: str, url_col: str = "url",
-                           min_frac_num: int = 1,
-                           min_frac_den: int = 2,
-                           min_pages: int = 4) -> str:
-    """DuckDB twin of :func:`remove_host_boilerplate` for the default
-    newline split/join (the twin joins with chr(10)). SELECT doc_id,
-    text."""
-    from .textstats import url_sql_duckdb
-
-    host = f"lower({url_sql_duckdb(url_col)['host']})"
-    return f"""
-        WITH b AS (
-            SELECT doc_id, {host} AS h, text FROM {rel}
-        ), l AS (
-            SELECT doc_id, h,
-                   unnest(string_split_regex(text, '\n+')) AS line,
-                   unnest(range(1, len(string_split_regex(text, '\n+')) + 1))
-                       AS line_idx
-            FROM b
-        ), d AS (
-            SELECT doc_id, h, line, line_idx, md5(line) AS digest
-            FROM l WHERE length(trim(line)) > 0
-        ), pl AS (
-            SELECT h, digest, COUNT(DISTINCT doc_id) AS n_pages
-            FROM d GROUP BY h, digest
-        ), ph AS (
-            SELECT h, COUNT(DISTINCT doc_id) AS n_docs
-            FROM b GROUP BY h
-        ), boiler AS (
-            SELECT pl.h, pl.digest FROM pl JOIN ph ON pl.h = ph.h
-            WHERE ph.n_docs >= {min_pages}
-              AND pl.n_pages * {min_frac_den} >= ph.n_docs * {min_frac_num}
-        ), kept AS (
-            SELECT d.doc_id, d.line, d.line_idx
-            FROM d LEFT JOIN boiler
-              ON d.h = boiler.h AND d.digest = boiler.digest
-            WHERE boiler.digest IS NULL
-        )
-        SELECT doc_id, string_agg(line, chr(10) ORDER BY line_idx) AS text
-        FROM kept GROUP BY doc_id
-    """

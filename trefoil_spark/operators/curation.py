@@ -28,8 +28,7 @@ from pyspark.sql import functions as F
 from ..sources.warc import warc_to_documents
 from .textstats import extract_text_col, gopher_pass_col
 
-__all__ = ["curate_from_warc", "curate_documents",
-           "curate_training_corpus", "probe_warc_media"]
+__all__ = ["curate_from_warc", "curate_documents", "probe_warc_media"]
 
 
 def probe_warc_media(spark, paths) -> DataFrame:
@@ -161,55 +160,3 @@ def curate_from_warc(spark, paths, include_pdf: bool = True,
         pdf_winners, on=["digest", "doc_id"], how="inner"
     ).select("doc_id", "url", "text", F.length("text").alias("n_chars"))
     return docs.unionByName(pdf_docs)
-
-
-def curate_training_corpus(docs: DataFrame, html_col: str = "html",
-                           eval_df: DataFrame | None = None,
-                           ngram_n: int = 13,
-                           gopher: str = "base") -> DataFrame:
-    """The full published-pipeline stack over raw HTML documents:
-
-      extract → Gopher gate → C4 line/page rules → PII redaction →
-      exact dedup → cross-corpus paragraph dedup →
-      (optional) eval-set decontamination
-
-    Stage order matters: quality gates run FIRST so the shuffling
-    stages (exact + paragraph dedup) only ever see the surviving
-    fraction; PII redaction runs BEFORE dedup so two documents that
-    differ only in redacted spans collapse. Everything up to the exact
-    dedup is one narrow codegen stage; then one digest shuffle, two
-    paragraph-dedup shuffles, and (if decontaminating) the
-    broadcast-only contamination pass — the corpus is never exploded
-    into an exchange. Returns (doc_id, url, text, n_chars)."""
-    from .cleaning import (
-        c4_clean,
-        dedup_paragraphs,
-        decontaminate,
-        redact_pii_col,
-    )
-
-    extracted = docs.withColumn(
-        "text", extract_text_col(html_col)
-    ).drop(html_col)
-    gate = _gopher_gate(gopher)
-    kept = extracted.filter(gate("text")) if gate else extracted
-    kept = c4_clean(kept, "text")
-    kept = kept.withColumn("text", redact_pii_col("text"))
-    digested = kept.withColumn("digest", F.md5(F.encode("text", "UTF-8")))
-    winners = digested.groupBy("digest").agg(
-        F.min("doc_id").alias("doc_id")
-    )
-    deduped = digested.join(winners, on=["digest", "doc_id"], how="inner")
-    # C4 rejoined retained lines with single newlines, so corpus-wide
-    # exact dedup here is LINE-level (RefinedWeb-style)
-    paras = dedup_paragraphs(
-        deduped.select("doc_id", "text"), "doc_id", "text",
-        split_pat=r"\n+", join_sep="\n",
-    )
-    # paragraph dedup reassembles text, so re-attach url by doc_id
-    out = paras.join(deduped.select("doc_id", "url"), "doc_id")
-    if eval_df is not None:
-        out = decontaminate(out, eval_df, n=ngram_n)
-    return out.select(
-        "doc_id", "url", "text", F.length("text").alias("n_chars")
-    )

@@ -24,7 +24,6 @@ engines.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,13 +58,6 @@ def exact_duplicate_groups(df: DataFrame, text_col: str = "text", id_col: str = 
     )
 
 
-def drop_exact_duplicates(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep the min-id row per distinct text (deterministic winner)."""
-    w = df.select(F.md5(F.col(text_col)).alias("_h"), F.col(id_col).alias("_id"))
-    keep = w.groupBy("_h").agg(F.min("_id").alias(id_col))
-    return df.join(keep, on=id_col, how="left_semi")
-
-
 def dedup_latest(df: DataFrame, key_col: str = "url",
                  ts_col: str = "warc_ts",
                  tiebreak_col: str = "doc_id") -> DataFrame:
@@ -86,18 +78,6 @@ def dedup_latest(df: DataFrame, key_col: str = "url",
             F.struct(F.col(ts_col), F.col(tiebreak_col)),
         ).alias("_r")
     ).select(key_col, "_r.*").select(*cols)
-
-
-def dedup_latest_sql_duckdb(rel: str, key_col: str = "url",
-                            ts_col: str = "warc_ts",
-                            tiebreak_col: str = "doc_id") -> str:
-    """DuckDB twin: the QUALIFY row_number formulation — equivalence
-    with the Spark max_by plan is what the parity test checks."""
-    return (
-        f"SELECT * FROM {rel} QUALIFY row_number() OVER ("
-        f"PARTITION BY {key_col} "
-        f"ORDER BY {ts_col} DESC, {tiebreak_col} DESC) = 1"
-    )
 
 
 # --- minhash / LSH ---
@@ -441,244 +421,6 @@ def embedding_near_duplicates(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-# ---------------------------------------------------------------------------
-# Exact-substring dedup (r6) — Lee et al. 2022, "Deduplicating Training
-# Data Makes Language Models Better". The paper's ExactSubstr builds a
-# corpus-wide suffix array; at 100 TB the distributed design here is the
-# CANDIDATE-BOUNDED variant: MinHash LSH proposes document pairs (work
-# bounded by the banded-join + hot-key caps above), each pair is scanned
-# with a verified Rabin-Karp window intersection — exact at min_len
-# granularity, since every duplicated span of length >= min_len is the
-# union of its shared min_len-grams — and covered spans are removed from
-# the HIGHER doc_id, so the first occurrence always survives. Spans from
-# ALL of a document's pairs are merged before removal (one shuffle on
-# doc_id). Within-document repeats and cross-pairs the LSH never
-# proposes are out of scope (documented recall trade, same contract as
-# the near-dup operators).
-# ---------------------------------------------------------------------------
-
-_RK_BASE = 257
-_RK_MOD = (1 << 61) - 1
-
-
-def _covered_spans(text_a: str, text_b: str, k: int) -> list:
-    """Merged [start, end) char spans of text_b covered by k-length
-    windows that also occur in text_a (Rabin-Karp with literal
-    verification — no collision false positives)."""
-    if len(text_a) < k or len(text_b) < k:
-        return []
-    pow_k = pow(_RK_BASE, k - 1, _RK_MOD)
-    positions: dict = {}
-    h = 0
-    for i, c in enumerate(text_a[:k]):
-        h = (h * _RK_BASE + ord(c)) % _RK_MOD
-    positions.setdefault(h, []).append(0)
-    for i in range(1, len(text_a) - k + 1):
-        h = ((h - ord(text_a[i - 1]) * pow_k) * _RK_BASE
-             + ord(text_a[i + k - 1])) % _RK_MOD
-        positions.setdefault(h, []).append(i)
-    spans = []
-    h = 0
-    for c in text_b[:k]:
-        h = (h * _RK_BASE + ord(c)) % _RK_MOD
-    for j in range(len(text_b) - k + 1):
-        if j:
-            h = ((h - ord(text_b[j - 1]) * pow_k) * _RK_BASE
-                 + ord(text_b[j + k - 1])) % _RK_MOD
-        hits = positions.get(h)
-        if hits:
-            win = text_b[j:j + k]
-            if any(text_a[i:i + k] == win for i in hits):
-                if spans and j <= spans[-1][1]:
-                    spans[-1][1] = j + k
-                else:
-                    spans.append([j, j + k])
-    return [(s, e) for s, e in spans]
-
-
-def _remove_spans(text: str, spans: list) -> str:
-    """Drop merged-span characters (spans may arrive unmerged and
-    overlapping across pairs)."""
-    spans = sorted(spans)
-    merged = []
-    for s, e in spans:
-        if merged and s <= merged[-1][1]:
-            merged[-1][1] = max(merged[-1][1], e)
-        else:
-            merged.append([s, e])
-    out = []
-    pos = 0
-    for s, e in merged:
-        out.append(text[pos:s])
-        pos = e
-    out.append(text[pos:])
-    return "".join(out)
-
-
-def anchor_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 6,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Winnowing-anchor candidate channel (Schleimer et al. 2003,
-    "Winnowing: Local Algorithms for Document Fingerprinting") — the
-    second candidate source for exact-substring dedup (r7, VERDICT r6
-    item 5). LSH bands recall candidates by WHOLE-document similarity,
-    so two documents sharing one long span inside otherwise-disjoint
-    text can miss every band. Winnowing is local: hash every k-token
-    gram, then select the minimum hash of each w-gram window. The
-    classic guarantee: two documents sharing a run of >= k + w - 1
-    whitespace tokens select at least one identical anchor, regardless
-    of the surrounding text.
-
-    Plan: narrow per-doc anchor selection (pure Catalyst higher-order
-    exprs, ~2n/w distinct anchors per doc) → explode → hot-key-capped
-    self equi-join on the anchor → distinct pairs. Same shuffle shape
-    as the LSH band join; degenerate anchors (boilerplate) are bounded
-    by the same _cap_hot_keys guard."""
-    toks = f"split({text_col}, ' ')"
-    gram = f"concat_ws(' ', slice({toks}, i, {k}))"
-    gram_hash = _token_hash_for_anchor().replace("__TOK__", gram)
-    gh = (
-        f"transform(sequence(1, size({toks}) - {k - 1}), "
-        f"i -> {gram_hash})"
-    )
-    anchors = (
-        f"CASE WHEN size({toks}) < {k} THEN array() "
-        f"WHEN size({gh}) < {w} THEN array(array_min({gh})) "
-        f"ELSE array_distinct(transform(sequence(1, size({gh}) - {w - 1}), "
-        f"j -> array_min(slice({gh}, j, {w})))) END"
-    )
-    exploded = docs.select(
-        F.col(id_col), F.explode(F.expr(anchors)).alias("anchor")
-    )
-    exploded = _cap_hot_keys(exploded, ["anchor"], max_bucket, id_col)
-    left = exploded.alias("l")
-    right = exploded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.anchor") == F.col("r.anchor"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def _token_hash_for_anchor() -> str:
-    """Portable gram hash with a __TOK__ placeholder (md5-based, engine
-    neutral like textstats.token_hash_expr)."""
-    return "CAST(CONV(SUBSTR(MD5(__TOK__), 1, 15), 16, 10) AS BIGINT)"
-
-
-def dedup_substrings(
-    docs: DataFrame,
-    min_len: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    rows_per_band: int = 4,
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-    anchor_grams: bool = True,
-) -> DataFrame:
-    """Remove cross-document duplicated spans >= min_len chars from
-    every occurrence but the first (smallest doc_id). Returns the full
-    corpus with text rewritten where spans were removed.
-
-    Plan: candidate pairs from TWO channels — LSH bands (whole-doc
-    similarity) plus, when anchor_grams (default), winnowing anchors
-    (local k-token-gram fingerprints; see anchor_candidate_pairs) —
-    unioned and distinct'ed; texts attached by two id joins →
-    Arrow-batched pair scan emitting (doc_id, start, end) span rows →
-    one doc_id shuffle merging a document's spans → removal. Only
-    candidate-pair texts ever reach Python; untouched documents pass
-    through the final left join unmodified.
-
-    Recall contract (r7): with anchor_grams, any shared span covering
-    >= k + w - 1 = 9 whole whitespace tokens is guaranteed a candidate
-    pair (winnowing guarantee; measured recall 1.0 in
-    tests/test_cleaning.py::test_substring_recall_banding_resistant).
-    LSH-only recall is bounded by band collisions and can be 0 for
-    spans inside otherwise-disjoint documents — the same test measures
-    it."""
-    import pandas as pd
-
-    sigs = minhash_signatures(
-        docs.select(id_col, text_col), text_col, num_hashes=num_hashes
-    )
-    pairs = lsh_candidate_pairs(
-        sigs, id_col, bands=bands, rows_per_band=rows_per_band,
-        max_bucket=max_bucket,
-    )
-    if anchor_grams:
-        pairs = pairs.unionByName(
-            anchor_candidate_pairs(
-                docs.select(id_col, text_col), id_col, text_col,
-                max_bucket=max_bucket,
-            )
-        ).distinct()
-    texts = docs.select(
-        F.col(id_col).alias("_tid"), F.col(text_col).alias("_ttext")
-    )
-    with_texts = (
-        pairs.join(texts, pairs["id_a"] == texts["_tid"])
-        .select("id_a", "id_b", F.col("_ttext").alias("text_a"))
-        .join(texts, F.col("id_b") == texts["_tid"])
-        .select("id_a", "id_b", "text_a", F.col("_ttext").alias("text_b"))
-    )
-
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for _, r in pdf.iterrows():
-                for s, e in _covered_spans(r["text_a"], r["text_b"],
-                                           min_len):
-                    rows.append((int(r["id_b"]), s, e))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "start", "end"]
-            ).astype({"doc_id": "int64", "start": "int64", "end": "int64"})
-
-    spans = with_texts.mapInPandas(
-        scan, schema="doc_id bigint, start bigint, end bigint"
-    )
-    merged = spans.groupBy("doc_id").agg(
-        F.collect_list(F.struct("start", "end")).alias("_spans")
-    ).withColumnRenamed("doc_id", "_sid")
-
-    joined = docs.join(
-        merged, docs[id_col] == merged["_sid"], "left"
-    ).drop("_sid")
-
-    def rewrite(batches):
-        for pdf in batches:
-            out_text = []
-            for _, r in pdf.iterrows():
-                sp = r["_spans"]
-                if sp is None or (hasattr(sp, "__len__") and len(sp) == 0):
-                    out_text.append(r[text_col])
-                else:
-                    out_text.append(_remove_spans(
-                        r[text_col],
-                        [(int(x["start"]), int(x["end"])) for x in sp],
-                    ))
-            res = pdf.drop(columns=["_spans"])
-            res[text_col] = out_text
-            yield res
-
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in docs.schema.fields
-    )
-    return joined.mapInPandas(rewrite, schema=schema)
 
 
 def semdedup(

@@ -45,14 +45,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .lm import tokens_col
-from .textstats import token_hash_expr, token_hash_expr_duckdb
+from .textstats import token_hash_expr
 
 __all__ = [
     "featurize_dsir",
     "train_dsir",
     "score_dsir",
     "resample_dsir",
-    "dsir_sql_duckdb",
 ]
 
 DSIR_BUCKETS = 10_000  # Xie 2023 use 10k hash buckets
@@ -169,61 +168,3 @@ def resample_dsir(scored: DataFrame, k: int,
     return out.orderBy(
         F.desc("gumbel_key"), F.asc("doc_id")
     ).limit(k)
-
-
-def dsir_sql_duckdb(target_rel: str, raw_rel: str,
-                    buckets: int = DSIR_BUCKETS,
-                    alpha: int = 1,
-                    text_col: str = "text") -> str:
-    """DuckDB twin: one query (raw_rel doc -> n_grams, logw) replaying
-    featurize -> train -> score. Relations are named tables/CTEs with
-    (doc_id, text)."""
-    h = token_hash_expr_duckdb("g.g")
-    toks = (
-        f"list_filter(string_split_regex(lower({text_col}), '\\s+'), "
-        "x -> length(x) > 0)"
-    )
-    grams = (
-        f"list_concat({toks}, "
-        f"list_transform(generate_series(1, len({toks}) - 1), "
-        f"i -> ({toks})[i] || ' ' || ({toks})[i + 1]))"
-    )
-    buckets_of = (
-        "SELECT doc_id, {h} % {b} AS bucket "
-        "FROM (SELECT doc_id, unnest({grams}) AS g FROM {rel}) g"
-    )
-
-    def b_of(rel: str) -> str:
-        return buckets_of.format(h=h, b=buckets, grams=grams, rel=rel)
-
-    return f"""
-        WITH tb AS ({b_of(target_rel)}),
-        rb AS ({b_of(raw_rel)}),
-        tcnt AS (SELECT bucket, COUNT(*) AS ct FROM tb GROUP BY bucket),
-        rcnt AS (SELECT bucket, COUNT(*) AS cr FROM rb GROUP BY bucket),
-        tot AS (
-            SELECT (SELECT CAST(SUM(ct) AS BIGINT) FROM tcnt) AS nt,
-                   (SELECT CAST(SUM(cr) AS BIGINT) FROM rcnt) AS nr
-        ),
-        w AS (
-            SELECT COALESCE(tcnt.bucket, rcnt.bucket) AS bucket,
-                   ln(CAST(COALESCE(ct, 0) AS DOUBLE) + CAST({alpha} AS DOUBLE))
-                 - ln(CAST(nt AS DOUBLE) + CAST({alpha * buckets} AS DOUBLE))
-                 - ln(CAST(COALESCE(cr, 0) AS DOUBLE) + CAST({alpha} AS DOUBLE))
-                 + ln(CAST(nr AS DOUBLE) + CAST({alpha * buckets} AS DOUBLE))
-                   AS logratio
-            FROM tcnt FULL OUTER JOIN rcnt ON tcnt.bucket = rcnt.bucket
-            CROSS JOIN tot
-        ),
-        sc AS (
-            SELECT rb.doc_id, COUNT(*) AS n_grams,
-                   SUM(logratio) AS logw
-            FROM rb LEFT JOIN w USING (bucket)
-            GROUP BY rb.doc_id
-        )
-        SELECT d.doc_id,
-               CAST(COALESCE(sc.n_grams, 0) AS BIGINT) AS n_grams,
-               sc.logw
-        FROM (SELECT DISTINCT doc_id FROM {raw_rel}) d
-        LEFT JOIN sc USING (doc_id)
-    """

@@ -50,12 +50,17 @@ def _rank(cand: DataFrame, k: int) -> DataFrame:
     )
 
 
+# Both sides drop rows with a NULL coordinate: an unlocated point is no
+# one's neighbour (its distance is NULL, which the window would rank
+# first) and an unlocated query has no neighbourhood. One rule for every
+# kernel.
+
 def _points(points: DataFrame, id_col: str, lon_col: str, lat_col: str) -> DataFrame:
     return points.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(lon_col).alias("_plon"),
         F.col(lat_col).alias("_plat"),
-    )
+    ).filter(F.col("_plon").isNotNull() & F.col("_plat").isNotNull())
 
 
 def _queries(queries: DataFrame, id_col: str, lon_col: str, lat_col: str) -> DataFrame:
@@ -63,7 +68,7 @@ def _queries(queries: DataFrame, id_col: str, lon_col: str, lat_col: str) -> Dat
         F.col(id_col).alias("query_id"),
         F.col(lon_col).alias("_qlon"),
         F.col(lat_col).alias("_qlat"),
-    )
+    ).filter(F.col("_qlon").isNotNull() & F.col("_qlat").isNotNull())
 
 
 def knn_join_bruteforce(
@@ -125,10 +130,8 @@ def _ring_join(p: DataFrame, q: DataFrame, k: int, res: int) -> DataFrame:
 def _cell_queries(
     queries: DataFrame, id_col: str, lon_col: str, lat_col: str, res: int
 ) -> DataFrame:
-    """Queries with located coordinates and their cell coords _ix/_iy."""
-    return _queries(queries, id_col, lon_col, lat_col).filter(
-        F.col("_qlon").isNotNull() & F.col("_qlat").isNotNull()
-    ).withColumns({
+    """Queries with their cell coords _ix/_iy."""
+    return _queries(queries, id_col, lon_col, lat_col).withColumns({
         "_ix": F.expr(_cells.ix_sql_expr("_qlon", res)),
         "_iy": F.expr(_cells.iy_sql_expr("_qlat", res)),
     })

@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["tokens_col", "train_bigram_lm", "score_perplexity",
-           "ppl_tercile_cuts", "ppl_bucket_col", "ppl_bucket_sql_duckdb"]
+           "ppl_tercile_cuts", "ppl_bucket_col"]
 
 
 def tokens_col(text_col: str = "text"):
@@ -193,8 +193,8 @@ def ppl_tercile_cuts(scored: DataFrame, sample_frac: float = 1.0,
 def ppl_bucket_col(cuts: tuple[float, float],
                    ppl_col: str = "ppl"):
     """ppl → 'head' | 'middle' | 'tail' (NULL ppl → NULL): narrow
-    comparison against constant thresholds. Twin:
-    ppl_bucket_sql_duckdb with the same cuts injected."""
+    comparison against constant thresholds. Its DuckDB twin (same cuts
+    injected) lives in tests/reference.py."""
     c1, c2 = cuts
     p = F.col(ppl_col)
     return (
@@ -202,17 +202,4 @@ def ppl_bucket_col(cuts: tuple[float, float],
         .when(p <= F.lit(float(c1)).cast("double"), F.lit("head"))
         .when(p <= F.lit(float(c2)).cast("double"), F.lit("middle"))
         .otherwise(F.lit("tail"))
-    )
-
-
-def ppl_bucket_sql_duckdb(cuts: tuple[float, float],
-                          ppl_col: str = "ppl") -> str:
-    """Exact DuckDB twin of :func:`ppl_bucket_col` (cuts injected as
-    hex-exact float literals via repr)."""
-    c1, c2 = float(cuts[0]), float(cuts[1])
-    return (
-        f"CASE WHEN {ppl_col} IS NULL THEN NULL "
-        f"WHEN {ppl_col} <= CAST({c1!r} AS DOUBLE) THEN 'head' "
-        f"WHEN {ppl_col} <= CAST({c2!r} AS DOUBLE) THEN 'middle' "
-        f"ELSE 'tail' END"
     )

@@ -1,8 +1,8 @@
 """Multimodal column plumbing (training-data pipeline op).
 
 Image/audio/video ride as opaque ``binary`` columns + typed metadata
-structs; decode / feature-extract / resize / frame-sample run as
-Arrow-batched pandas UDFs over mapInPandas.
+structs; decode / feature-extract / route run as Arrow-batched pandas
+UDFs over mapInPandas.
 
 IMAGE decode is REAL as of round 3: the engine ships its own PNG, JPEG
 and WebP codecs (functions/png.py, jpeg.py, webp.py), and
@@ -14,10 +14,11 @@ VIDEO decode is REAL as of round 6 for the two codec-free AVI flavors:
 own RIFF/AVI container parser (functions/avi.py) with MJPG (in-house
 T.81 frames) and uncompressed BI_RGB DIB payloads, driver-checked via
 `video_decode`. COMPRESSED audio (MP3/AAC) and compressed video
-(H.264/VP9/AV1) remain stubbed (ffmpeg-bound — clearly marked):
+(H.264/VP9/AV1) are probe-only (ffmpeg-bound): ``route_media_records``
+sends them to metadata without decode. In ``extract_features``,
 ``decoder='fake'`` produces a deterministic pseudo-decode so that
-plumbing is still tested end-to-end; ``decoder='real'`` on such
-payloads raises NotImplementedError where ffmpeg would go.
+plumbing is still tested end-to-end; ``decoder='real'`` raises
+NotImplementedError where PIL/ffmpeg would go.
 
 Schema convention:
     media: binary                      -- opaque payload
@@ -115,70 +116,6 @@ def extract_features(
 
     ftype = "array<double>" if method == "digest" else "array<float>"
     return df.mapInPandas(gen, schema=f"doc_id bigint, features {ftype}")
-
-
-def frame_sample(df: DataFrame, every_n: int = 2, decoder: str = "fake") -> DataFrame:
-    """Video-style frame sampling: one row per sampled frame.
-
-    ``decoder='real'`` (r6) decodes the ``media`` column as an actual
-    video payload — an AVI container (functions/avi.py — MJPG / BI_RGB
-    streams) or an animated GIF (functions/gif.py — full disposal-
-    method compositing; the web's accidental video format) — and emits
-    every ``every_n``-th frame's raw RGB bytes; ``media_meta`` is not
-    consulted (the payloads are self-describing). Truly compressed
-    video inside a container still raises NotImplementedError from
-    the codec dispatch (ffmpeg-bound). With the fake decoder each
-    'frame' is a deterministic slice of the pseudo-decode; either way
-    the row-explosion shape (doc_id, frame_idx, frame binary) is the
-    real contract a video pipeline needs."""
-
-    def gen(batches):
-        from ..functions.avi import decode_avi
-        from ..functions.gif import decode_gif_frames
-        from ..functions.png import decode_apng_frames
-        from ..functions.webp import decode_webp_frames
-
-        for pdf in batches:
-            rows = []
-            for doc_id, payload, meta in zip(
-                pdf["doc_id"], pdf["media"], pdf["media_meta"]
-            ):
-                if decoder == "real":
-                    raw = bytes(payload)
-                    if raw[:6] in (b"GIF87a", b"GIF89a"):
-                        # RGBA composites → drop alpha for the frame
-                        # contract (GIF transparency is already
-                        # composited into the canvas walk)
-                        frames = [
-                            fr[..., :3] for fr in decode_gif_frames(raw)
-                        ]
-                    elif raw[:8] == b"\x89PNG\r\n\x1a\n":
-                        frames = [
-                            fr[..., :3] for fr in decode_apng_frames(raw)
-                        ]
-                    elif raw[:4] == b"RIFF" and raw[8:12] == b"WEBP":
-                        frames = [
-                            fr[..., :3] for fr in decode_webp_frames(raw)
-                        ]
-                    elif raw[4:8] == b"ftyp":
-                        from ..functions.mediainfo import decode_mp4_video
-
-                        frames, _fps = decode_mp4_video(raw)
-                    else:
-                        frames, _fps = decode_avi(raw)
-                    for f in range(0, len(frames), every_n):
-                        rows.append(
-                            (int(doc_id), f,
-                             np.ascontiguousarray(frames[f]).tobytes())
-                        )
-                    continue
-                n = max(int(meta["n_frames"]), 1)
-                img = _fake_decode(bytes(payload), meta["width"], meta["height"])
-                for f in range(0, n, every_n):
-                    rows.append((int(doc_id), f, img.tobytes()))
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_idx", "frame"])
-
-    return df.mapInPandas(gen, schema="doc_id bigint, frame_idx int, frame binary")
 
 
 # ---------------------------------------------------------------------------
@@ -499,8 +436,7 @@ def decode_audio_features(df: DataFrame) -> DataFrame:
 # REAL video decode (r6): own AVI container (functions/avi.py) carrying
 # MJPG (in-house T.81 frames, incl. the no-DHT MJPEG convention) and
 # uncompressed BI_RGB DIB payloads. Truly compressed video (H.264/VP9)
-# remains honestly ffmpeg-stubbed (decoder='real' in frame_sample on
-# non-AVI payloads raises).
+# is probe-only (route_media_payload routes it away from decode).
 # ---------------------------------------------------------------------------
 
 VIDEO_FRAMES = 4
@@ -601,97 +537,11 @@ def decode_video_features(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Container-metadata probe (r6): filter media by resolution / duration /
-# codec BEFORE any decode. At 100 TB the probe pass is scan-bound
-# (header reads only — functions/mediainfo.py), so the expensive decode
-# stage runs on survivors, not the whole crawl.
+# Container-metadata probe (r6): route media by codec BEFORE any decode.
+# At 100 TB the probe pass is scan-bound (header reads only —
+# functions/mediainfo.py), so the expensive decode stage runs on
+# survivors, not the whole crawl.
 # ---------------------------------------------------------------------------
-
-def attach_mixed_media(df: DataFrame) -> DataFrame:
-    """doc_id → deterministic container-twin payloads cycling by
-    doc_id%4: AVI (real frames) / MP4 stub / WebM stub / MP3 frame
-    stream — the shape of an unfiltered crawl media column."""
-    from ..functions.avi import encode_avi_dib
-    from ..functions.mediainfo import build_mp3, mux_mkv, mux_mp4
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                m = d % 4
-                if m == 0:
-                    payload = encode_avi_dib(
-                        [synth_image(d)] * 2, fps=VIDEO_FPS
-                    )
-                elif m == 1:
-                    payload = mux_mp4(
-                        [{"kind": "video", "codec": "avc1",
-                          "width": 320 + d % 1600, "height": 240 + d % 900},
-                         {"kind": "audio", "codec": "mp4a",
-                          "sample_rate": 48000, "channels": 2}],
-                        duration_ms=1000 + d % 60000,
-                    )
-                elif m == 2:
-                    payload = mux_mkv(
-                        [{"kind": "video", "codec": "V_VP9",
-                          "width": 426 + d % 1280, "height": 240 + d % 720}],
-                        duration_ms=500 + d % 30000, webm=True,
-                    )
-                else:
-                    payload = build_mp3(
-                        n_frames=4 + d % 16, kbps=128, rate=44100,
-                        mono=bool(d % 8 == 3), id3_bytes=d % 64,
-                    )
-                rows.append((d, payload))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
-
-    return df.mapInPandas(gen, schema="doc_id bigint, media binary")
-
-
-def probe_media_features(df: DataFrame) -> DataFrame:
-    """media binary → header-only container probe → one row per doc
-    with first-video-track geometry and first-audio-track layout.
-    No decode happens: this is the cheap pre-filter stage."""
-    from ..functions.mediainfo import probe_media
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["media"]):
-                meta = probe_media(bytes(payload))
-                tracks = meta.get("tracks", [])
-                vid = next(
-                    (t for t in tracks if t.get("kind") == "video"), {}
-                )
-                aud = next(
-                    (t for t in tracks if t.get("kind") == "audio"), {}
-                )
-                if meta["container"] == "mp3":
-                    aud = meta
-                    codec = "mp3"
-                else:
-                    codec = vid.get("codec") or aud.get("codec")
-                rows.append((
-                    int(doc_id), meta["container"], codec,
-                    vid.get("width"), vid.get("height"),
-                    aud.get("sample_rate"), aud.get("channels"),
-                    meta.get("duration_ms"), len(tracks) or 1,
-                ))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "container", "codec", "width", "height",
-                         "sample_rate", "channels", "duration_ms",
-                         "n_tracks"],
-            )
-
-    return df.mapInPandas(
-        gen,
-        schema="doc_id bigint, container string, codec string, "
-        "width int, height int, sample_rate int, channels int, "
-        "duration_ms bigint, n_tracks int",
-    )
-
 
 # codecs the engine can fully decode in-house (no ffmpeg); everything
 # else is probe-only at crawl scale — metadata without decode. Lossy
@@ -767,30 +617,4 @@ def route_media_records(df: DataFrame, payload_col: str = "body",
         gen,
         schema="doc_id bigint, kind string, container string, "
         "codec string, route string",
-    )
-
-
-def image_gps(df: DataFrame, payload_col: str = "media",
-              id_col: str = "doc_id") -> DataFrame:
-    """(id, jpeg binary) → (id, lat, lon) from the EXIF GPS IFD — the
-    geospatial handle on a crawled image corpus. Header-only parse (no
-    pixel decode) in an Arrow-batched stage; rows without a GPS IFD
-    (or non-JPEG payloads) are dropped. The output feeds pip_join /
-    zonal_statistics directly: crawl images → regions."""
-    def gen(batches):
-        from ..functions.jpeg import exif_gps
-
-        for pdf in batches:
-            rows = []
-            for did, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                if raw[:2] != b"\xff\xd8":
-                    continue
-                gps = exif_gps(raw)
-                if gps is not None:
-                    rows.append((int(did), float(gps[0]), float(gps[1])))
-            yield pd.DataFrame(rows, columns=[id_col, "lat", "lon"])
-
-    return df.mapInPandas(
-        gen, schema=f"{id_col} bigint, lat double, lon double"
     )

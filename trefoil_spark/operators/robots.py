@@ -30,8 +30,7 @@ from pyspark.sql.window import Window
 
 from .textstats import url_host_col, url_path_col
 
-__all__ = ["parse_robots_rules", "gate_disallowed_urls",
-           "robots_rules_sql_duckdb", "robots_from_pages"]
+__all__ = ["parse_robots_rules", "gate_disallowed_urls"]
 
 
 def parse_robots_rules(robots: DataFrame, agent: str = "*",
@@ -131,88 +130,3 @@ def gate_disallowed_urls(docs: DataFrame, rules: DataFrame,
         F.col("__url").alias(url_col)
     )
     return docs.join(blocked, url_col, "left_anti")
-
-
-def robots_rules_sql_duckdb(rel: str, agent: str = "*",
-                            host_col: str = "host",
-                            body_col: str = "body") -> str:
-    """DuckDB twin of :func:`parse_robots_rules`: SELECT host, allow,
-    prefix."""
-    agent = agent.lower().replace("'", "''")
-    return f"""
-        WITH lines AS (
-            SELECT {host_col} AS host,
-                   unnest(string_split_regex({body_col}, '\\r?\\n')) AS raw,
-                   unnest(range(1, len(string_split_regex({body_col},
-                       '\\r?\\n')) + 1)) AS idx
-            FROM {rel}
-        ), parsed0 AS (
-            SELECT host, idx,
-                   trim(regexp_replace(raw, '#.*$', '')) AS line
-            FROM lines
-        ), parsed AS (
-            SELECT host, idx,
-                   lower(coalesce(regexp_extract(line,
-                       '^([A-Za-z-]+)\\s*:', 1), '')) AS key,
-                   trim(coalesce(regexp_extract(line,
-                       '^[A-Za-z-]+\\s*:(.*)$', 1), '')) AS val
-            FROM parsed0
-            WHERE lower(coalesce(regexp_extract(line,
-                '^([A-Za-z-]+)\\s*:', 1), ''))
-                IN ('user-agent', 'allow', 'disallow')
-        ), lagged AS (
-            SELECT *,
-                   CASE WHEN key = 'user-agent' THEN 1 ELSE 0 END AS ua,
-                   COALESCE(LAG(CASE WHEN key = 'user-agent' THEN 1
-                       ELSE 0 END) OVER (PARTITION BY host ORDER BY idx),
-                       0) AS prev_ua
-            FROM parsed
-        ), grouped AS (
-            SELECT host, idx, key, val,
-                   SUM(CASE WHEN ua = 1 AND prev_ua = 0 THEN 1 ELSE 0
-                       END)
-                   OVER (PARTITION BY host ORDER BY idx
-                         ROWS BETWEEN UNBOUNDED PRECEDING
-                         AND CURRENT ROW) AS grp
-            FROM lagged
-        ), agents AS (
-            SELECT host, grp,
-                   MAX(CASE WHEN lower(val) = '{agent}' THEN 1 ELSE 0
-                       END) AS has_agent,
-                   MAX(CASE WHEN val = '*' THEN 1 ELSE 0 END) AS has_star
-            FROM grouped WHERE key = 'user-agent' GROUP BY host, grp
-        ), hha AS (
-            SELECT host, MAX(has_agent) AS host_has_agent
-            FROM agents GROUP BY host
-        ), selected AS (
-            SELECT agents.host, grp FROM agents JOIN hha
-              ON agents.host = hha.host
-            WHERE (host_has_agent = 1 AND has_agent = 1)
-               OR (host_has_agent = 0 AND has_star = 1)
-        )
-        SELECT DISTINCT grouped.host, key = 'allow' AS allow,
-               val AS prefix
-        FROM grouped JOIN selected
-          ON grouped.host = selected.host AND grouped.grp = selected.grp
-        WHERE key IN ('allow', 'disallow') AND val <> ''
-    """
-
-
-def robots_from_pages(pages: DataFrame, url_col: str = "url",
-                      text_col: str = "text") -> DataFrame:
-    """Pull (host, body) robots tables out of the crawl itself: pages
-    whose path is exactly /robots.txt (the capture every crawler
-    fetches first). Newest capture wins per host via the same
-    map-side-combining max_by as dedup_latest (tie-break: longer body,
-    then lexicographic, fully deterministic even without a timestamp
-    column). Narrow filter + one host-keyed aggregation."""
-    host = F.lower(url_host_col(url_col))
-    path = url_path_col(url_col)
-    cand = pages.filter(path == "/robots.txt").select(
-        host.alias("host"), F.col(text_col).alias("body")
-    )
-    return cand.groupBy("host").agg(
-        F.max_by(
-            "body", F.struct(F.length("body").alias("l"), F.col("body"))
-        ).alias("body")
-    )

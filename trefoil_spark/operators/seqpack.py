@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 __all__ = ["pack_sequences", "cap_per_domain", "domain_col",
-           "sample_to_token_budget", "token_budget_sql_duckdb"]
+           "sample_to_token_budget"]
 
 EOS = "<eos>"
 
@@ -291,32 +291,3 @@ def sample_to_token_budget(docs: DataFrame, budget: int,
     return docs.join(
         kept.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
     )
-
-
-def token_budget_sql_duckdb(rel: str, budget: int,
-                            by: str | None = None,
-                            text_col: str = "text") -> str:
-    """DuckDB twin of :func:`sample_to_token_budget`: the kept doc_id
-    set via the direct single-window formulation (the oracle runs at
-    small scale, so the one-task funnel the Spark side avoids is fine
-    here — and the equivalence of the two formulations is exactly what
-    the parity test checks)."""
-    toks = (
-        f"list_filter(string_split_regex({text_col}, '\\s+'), "
-        "x -> length(x) > 0)"
-    )
-    key = by if by else "''"
-    return f"""
-        SELECT doc_id FROM (
-            SELECT doc_id,
-                   COALESCE(SUM(n) OVER (
-                       PARTITION BY k ORDER BY doc_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
-                   ), 0) AS off, n
-            FROM (
-                SELECT {key} AS k, doc_id,
-                       CAST(len({toks}) AS BIGINT) AS n
-                FROM {rel}
-            )
-        ) WHERE off + n <= {budget}
-    """

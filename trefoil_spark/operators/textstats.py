@@ -280,14 +280,6 @@ def gopher_pass_sql_duckdb(text_col: str = "text") -> str:
     )
 
 
-def gopher_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """All Gopher features + verdict in one codegen pass."""
-    e = gopher_exprs(text_col)
-    return df.select(
-        "*", *[c.alias(n) for n, c in e.items()]
-    ).withColumn("gopher_pass", gopher_pass_col(text_col))
-
-
 def gopher_sql_duckdb(text_col: str = "text") -> dict[str, str]:
     """Exact DuckDB twins of gopher_exprs (list lambdas mirror the
     Catalyst higher-order functions; same tie-break for the bigram)."""
@@ -626,18 +618,6 @@ def gopher_full_pass_sql_duckdb(text_col: str = "text") -> str:
     )
 
 
-def gopher_repetition_stats(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """All repetition features + verdict in one codegen pass."""
-    e = gopher_repetition_exprs(text_col)
-    return df.select(
-        "*", *[c.alias(n) for n, c in e.items()]
-    ).withColumn(
-        "gopher_repetition_pass", gopher_repetition_pass_col(text_col)
-    )
-
-
 # ---------------------------------------------------------------------------
 # BPE-style token counting + URL ops (r6). The token-count regex is the
 # public GPT-2 pre-tokenizer pattern (contractions / letter runs /
@@ -706,25 +686,3 @@ def url_domain_col(url_col: str = "url") -> Column:
         F.element_at(parts, -1)
     )
     return F.when(n <= 2, host).when(three, last3).otherwise(last2)
-
-
-def url_sql_duckdb(url_col: str = "url") -> dict[str, str]:
-    """Exact DuckDB twins of the URL ops."""
-    host = f"coalesce(regexp_extract({url_col}, '{_URL_HOST_RE}', 1), '')"
-    parts = f"string_split({host}, '.')"
-    n = f"len({parts})"
-    sld_list = ", ".join(f"'{s}'" for s in _SLD_EXT)
-    last2 = f"({parts}[-2] || '.' || {parts}[-1])"
-    last3 = f"({parts}[-3] || '.' || {parts}[-2] || '.' || {parts}[-1])"
-    return {
-        "host": host,
-        "path": (
-            f"coalesce(regexp_extract({url_col}, "
-            f"'{_URL_PATH_RE}', 1), '')"
-        ),
-        "domain": (
-            f"CASE WHEN {n} <= 2 THEN {host} "
-            f"WHEN {n} >= 3 AND {parts}[-2] IN ({sld_list}) THEN {last3} "
-            f"ELSE {last2} END"
-        ),
-    }

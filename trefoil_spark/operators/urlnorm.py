@@ -38,8 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = ["canonical_url_col", "canonical_url_sql_duckdb",
-           "TRACKING_PARAM_RE"]
+__all__ = ["canonical_url_col", "TRACKING_PARAM_RE"]
 
 # name(=value)? of analytics/click-tracking params; anchored, shared
 # Java/RE2 dialect ('(=|$)' so 'refresh=1' survives while 'ref=x' and
@@ -90,36 +89,3 @@ def canonical_url_col(url_col: str = "url") -> Column:
         ),
     )
     return F.when(scheme == "", u).otherwise(rebuilt)
-
-
-def canonical_url_sql_duckdb(url_col: str = "url") -> str:
-    """String-equal DuckDB twin of :func:`canonical_url_col`."""
-    u = f"regexp_replace({url_col}, '#.*$', '')"
-    scheme = f"lower(coalesce(regexp_extract({u}, '{_SCHEME_RE}', 1), ''))"
-    rest = f"regexp_replace({u}, '{_SCHEME_RE}', '')"
-    authority = f"coalesce(regexp_extract({rest}, '^([^/?]*)', 1), '')"
-    host_port = f"regexp_replace({authority}, '^[^@]*@', '')"
-    host = (
-        "lower(regexp_replace(coalesce(regexp_extract("
-        f"{host_port}, '{_HOST_IN_HP_RE}', 1), ''), '\\.$', ''))"
-    )
-    port = f"coalesce(regexp_extract({host_port}, '{_PORT_RE}', 1), '')"
-    keep_port = (
-        f"CASE WHEN ({scheme} = 'http' AND {port} = ':80') "
-        f"OR ({scheme} = 'https' AND {port} = ':443') "
-        f"THEN '' ELSE {port} END"
-    )
-    path = f"coalesce(regexp_extract({rest}, '^[^/?]*([^?]*)', 1), '')"
-    path = f"CASE WHEN {path} = '' THEN '/' ELSE {path} END"
-    query = f"coalesce(regexp_extract({rest}, '\\?(.*)$', 1), '')"
-    params = (
-        # coalesce: DuckDB array_to_string(empty list) is NULL
-        "coalesce(array_to_string(list_sort(list_filter(string_split("
-        f"{query}, '&'), p -> p <> '' AND NOT regexp_matches(p, "
-        f"'{TRACKING_PARAM_RE}'))), '&'), '')"
-    )
-    rebuilt = (
-        f"{scheme} || '://' || {host} || {keep_port} || {path} || "
-        f"CASE WHEN {params} = '' THEN '' ELSE '?' || {params} END"
-    )
-    return f"CASE WHEN {scheme} = '' THEN {u} ELSE {rebuilt} END"

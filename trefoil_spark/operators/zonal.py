@@ -115,19 +115,6 @@ def weighted_statistics_timeseries(
     )
 
 
-ZONAL_CSV_COLUMNS = ["filename", "variable", "t", "zone"]
-
-
-def write_zonal_csv(df: DataFrame, path: str, has_time: bool = True) -> None:
-    """S7 zonal-stats CSV sink — row layout per reference docs/cli.md:420-425
-    and cli/zones.py:306-332: filename, variable, [t,] zone, stat columns."""
-    lead = [c for c in ZONAL_CSV_COLUMNS if has_time or c != "t"]
-    stats = [c for c in df.columns if c not in lead]
-    df.select(*[c for c in lead if c in df.columns], *stats).write.option(
-        "header", True
-    ).mode("overwrite").csv(path)
-
-
 def mean_of_file_means(df: DataFrame, file_col: str, value_col: str) -> DataFrame:
     """A7 (utilities.py:336-365): global min/max but 'mean' = unweighted mean
     of per-file means — the reference quirk, preserved for parity.

@@ -8,30 +8,15 @@ task (the hot cell / hot domain). Two-phase:
     stage 1: groupBy(key, salt = pmod(hash(row-identity), k)) partial agg
     stage 2: groupBy(key) final agg of the partials
 
-The salt decision is driven by a cheap count sketch (``detect_hot_keys``)
-so only genuinely hot keys pay the extra phase — cold keys keep the
-single-shuffle plan.
+The caller salts an aggregation whose key is known to be skewed (the
+declared ``salted_agg`` query salts the hot urban cell cluster); cold
+aggregations keep the single-shuffle plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def detect_hot_keys(
-    df: DataFrame, key_cols, threshold_rows: int, sample_fraction: float = 0.01
-) -> list:
-    """Sampled count sketch → keys estimated above threshold_rows."""
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    est = (
-        df.sample(fraction=sample_fraction, seed=42)
-        .groupBy(*key_cols)
-        .count()
-        .filter(F.col("count") * (1.0 / sample_fraction) > threshold_rows)
-    )
-    return [tuple(r[c] for c in key_cols) for r in est.collect()]
 
 
 def salted_sum_count(

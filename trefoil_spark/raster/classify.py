@@ -8,13 +8,8 @@ Reference semantics:
 - Equal-interval break generation: ``linspace(min+step, max, n)``
   (cli/utilities.py:97-107).
 - Quantile breaks: absent in the reference (TODO at render_netcdf.py:181);
-  north_star requires them — Spark ``approxQuantile`` / exact via
-  ``percentile`` for small grids.
-- Stretched index: ``((v - min) * (n-1)/(max-min)).astype(int).clip(0, n-1)``
-  (render/renderers/stretched.py:106-121). astype(int) truncates toward
-  zero; after the clip to [0, n-1] this is indistinguishable from FLOOR,
-  which is what the SQL twin uses (valid for the whole domain since
-  negatives clip to 0 either way).
+  the declared ``quantile_classify`` query ranks with ``ntile``.
+- Stretched index: raster/render.py ``StretchedRenderer._indices``.
 
 Each operator exists in two equivalent forms: numpy block fn (tile UDFs)
 and SQL twin (DuckDB oracle).
@@ -23,7 +18,6 @@ and SQL twin (DuckDB oracle).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
 
 
 # --- numpy block forms (bit-exact reference semantics) ---
@@ -35,28 +29,10 @@ def classify_block(values: np.ndarray, breaks) -> np.ndarray:
     return out
 
 
-def stretch_block(values: np.ndarray, vmin: float, vmax: float, ncolors: int) -> np.ndarray:
-    factor = 1.0 if vmax == vmin else float(ncolors - 1) / float(vmax - vmin)
-    nan = np.isnan(values)
-    safe = np.where(nan, vmin, values)
-    idx = ((safe - vmin) * factor).astype(np.int64).clip(0, ncolors - 1).astype(np.float64)
-    idx[nan] = np.nan
-    return idx
-
-
 def equal_interval_breaks(vmin: float, vmax: float, n: int) -> list[float]:
     """linspace(min+step, max, n) — reference cli/utilities.py:97-107."""
     step = (vmax - vmin) / float(n)
     return list(np.linspace(vmin + step, vmax, n))
-
-
-# --- Spark DataFrame forms ---
-
-def quantile_breaks(df: DataFrame, value_col: str, n: int, relative_error: float = 0.0):
-    """Quantile classification breaks (north_star F4). relative_error=0 →
-    exact (more memory); >0 uses Greenwald-Khanna sketch, the scale path."""
-    qs = [i / n for i in range(1, n + 1)]
-    return df.approxQuantile(value_col, qs, relative_error)
 
 
 # --- SQL twins (DuckDB oracle; identical IEEE expression trees) ---
@@ -67,14 +43,3 @@ def classify_sql(value_col: str, breaks) -> str:
         for b in breaks
     )
     return f"(CASE WHEN {value_col} IS NOT NULL THEN ({terms}) END)"
-
-
-def stretch_sql(value_col: str, vmin: float, vmax: float, ncolors: int) -> str:
-    factor = 1.0 if vmax == vmin else float(ncolors - 1) / float(vmax - vmin)
-    idx = (
-        f"FLOOR(({value_col} - CAST({float(vmin)!r} AS DOUBLE)) * CAST({factor!r} AS DOUBLE))"
-    )
-    return (
-        f"(CASE WHEN {value_col} IS NOT NULL THEN "
-        f"CAST(LEAST(GREATEST({idx}, 0), {ncolors - 1}) AS BIGINT) END)"
-    )

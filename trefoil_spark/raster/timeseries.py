@@ -13,9 +13,10 @@ Spark mapping:
   blocks — ONE shuffle of tile rows keyed (interval, ty, tx). At scale the
   shuffle moves each tile once; partial intervals are filtered out first
   (JVM predicate), mirroring bin_ts truncation.
-- regression: same grouping by (ty, tx) over all t; closed-form OLS from
-  per-tile accumulated Σt, Σt², Σv, Σtv, n — numpy-vectorized per pixel,
-  no per-row Python, algebraically identical to lstsq for 1-D X.
+- regression: one hash aggregate of the OLS sufficient statistics
+  (n, Σt, Σt², Σv, Σtv) per group, then closed-form slope/intercept —
+  algebraically identical to lstsq for 1-D X — and, with ``full``, r²
+  and the exact Student-t p-value as SQL expressions (scipy is absent).
 - delta: equi-join of two tile tables on (t, ty, tx) + vectorized block
   arithmetic (broadcast if one side is small, else sort-merge co-keyed).
 """
@@ -27,7 +28,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.stats import DF_EXACT_MAX
+# The p-value uses exact finite sums for df <= DF_EXACT_MAX and an O(1)
+# normal asymptotic above it (see _t_p_stage_exprs).
+DF_EXACT_MAX = 2000
 
 
 def statistic_by_interval(
@@ -83,71 +86,6 @@ def statistic_by_interval(
     )
 
 
-def linear_regression_tiles(
-    tiles: DataFrame,
-    timesteps: list[float] | None = None,
-    full: bool = False,
-) -> DataFrame:
-    """Per-pixel OLS over the time axis (SURVEY.md A11).
-
-    Returns tile rows with slope + intercept blocks. Closed form:
-    slope = (nΣtv − ΣtΣv) / (nΣt² − (Σt)²); intercept = v̄ − slope·t̄ —
-    identical to lstsq for one regressor. Reference masks from the t=0
-    slice (timeseries.py:105-108): pixels masked at ANY t contribute
-    nothing; here a pixel uses exactly the timesteps where it's unmasked.
-
-    ``full=True`` adds r² and two-sided p blocks — the reference's
-    ``linear_regression(..., full=True)`` tail (timeseries.py:115-127),
-    scipy replaced by the own exact integer-df Student-t survival
-    function (functions/stats.py).
-    """
-
-    def reg(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        first = pdf.iloc[0]
-        h, w = int(first["h"]), int(first["w"])
-        n = np.zeros((h, w))
-        st = np.zeros((h, w))
-        stt = np.zeros((h, w))
-        sv = np.zeros((h, w))
-        svv = np.zeros((h, w))
-        stv = np.zeros((h, w))
-        for t, blk in zip(pdf["t"], pdf["block"]):
-            tv = float(t) if timesteps is None else float(timesteps[int(t)])
-            v = np.frombuffer(blk, dtype=np.float32).reshape(h, w).astype(np.float64)
-            ok = ~np.isnan(v)
-            vv = np.where(ok, v, 0.0)
-            n += ok
-            st += ok * tv
-            stt += ok * tv * tv
-            sv += vv
-            svv += vv * vv
-            stv += vv * tv
-        denom = n * stt - st * st
-        good = (n >= 2) & (denom != 0)
-        slope = np.where(good, (n * stv - st * sv) / np.where(good, denom, 1), np.nan)
-        intercept = np.where(good, (sv - slope * st) / np.where(good, n, 1), np.nan)
-        row = [
-            int(first["ty"]), int(first["tx"]), int(first["cell"]),
-            slope.astype(np.float32).tobytes(),
-            intercept.astype(np.float32).tobytes(),
-        ]
-        if full:
-            from ..functions.stats import regression_full_from_sums
-
-            r2, p = regression_full_from_sums(n, st, stt, sv, svv, stv)
-            row += [r2.astype(np.float32).tobytes(), p.astype(np.float32).tobytes()]
-        cols = ["ty", "tx", "cell", "slope_block", "intercept_block"]
-        extra = ["r2_block", "p_block"] if full else []
-        return pd.DataFrame([tuple(row + [h, w])], columns=cols + extra + ["h", "w"])
-
-    schema = (
-        "ty int, tx int, cell bigint, slope_block binary, intercept_block binary, "
-        + ("r2_block binary, p_block binary, " if full else "")
-        + "h int, w int"
-    )
-    return tiles.groupBy("ty", "tx").applyInPandas(reg, schema=schema)
-
-
 def _t_p_stage_exprs(dialect: str) -> list[tuple[str, str]]:
     """Staged (name, expression) list computing r², t-statistic and the
     EXACT two-sided Student-t p-value from the OLS sufficient statistics
@@ -155,8 +93,19 @@ def _t_p_stage_exprs(dialect: str) -> list[tuple[str, str]]:
 
     The reference chain (trefoil/analysis/timeseries.py:115-127):
     r = √r², tiny = 1e-20, t = r·√(df/((1−r+tiny)(1+r+tiny))),
-    p = 2·t_sf(|t|, df). The tail probability uses the A&S 26.7.3/26.7.4
-    finite sums for integer df (see functions/stats.py), emitted as a
+    p = 2·t_sf(|t|, df); scipy's ``t.sf`` is absent here. For integer
+    df ≤ DF_EXACT_MAX the tail uses the exact finite sums of Abramowitz &
+    Stegun 26.7.3/26.7.4 (θ = atan(t/√ν), A = P(|T| ≤ t), p = 1 − A):
+
+        ν even: A = sinθ · Σ_{j=0}^{ν/2-1} c_j cos^{2j}θ,
+                c_0 = 1, c_j = c_{j-1}·(2j-1)/(2j)
+        ν odd:  A = (2/π)[θ + sinθ · Σ_{j=1}^{(ν-1)/2} d_j cos^{2j-1}θ],
+                d_1 = 1, d_j = d_{j-1}·(2j-2)/(2j-1)
+
+    Above the cut the fold length would grow with the group size, so p
+    takes the moment-matching normal asymptotic z = t(1−1/(4ν))/√(1+t²/(2ν)),
+    p = erfc(z/√2), with erfc from the A&S 7.1.26 polynomial (|ε| ≤
+    1.5e-7). The finite sums are emitted as a
     FOLD — Spark `aggregate(sequence(...))` ≡ DuckDB
     `list_reduce(list_prepend(...))` — with identical IEEE arithmetic per
     step, so both engines produce the p-value bit-for-bit."""
@@ -253,7 +202,7 @@ def _t_p_stage_exprs(dialect: str) -> list[tuple[str, str]]:
         ("a_t",
          "CASE WHEN idf % 2 = 0 THEN sin_t * s_e "
          "ELSE (CAST(2 AS DOUBLE) / PI()) * (theta + sin_t * s_o) END"),
-        # moment-matching normal asymptotic (stats.DF_EXACT_MAX notes):
+        # moment-matching normal asymptotic (see the docstring):
         # z = t(1-1/(4df))/sqrt(1+t^2/(2df)); p = erfc(z/sqrt(2)) via the
         # A&S 7.1.26 polynomial — identical scalar text in both dialects
         ("z_n",

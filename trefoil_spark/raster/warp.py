@@ -299,19 +299,6 @@ def _separable(a: str, b: str) -> bool:
         return False
 
 
-def warp_tile_numpy(
-    src: np.ndarray,
-    src_spec: GridSpec,
-    dst_spec: GridSpec,
-    ty: int,
-    tx: int,
-    method: str = "nearest",
-) -> np.ndarray:
-    """Single-process kernel: one dst tile gathered from a full src array
-    (unit-test oracle + small-grid path)."""
-    return sample_tile(src, (0, 0), src_spec, dst_spec, ty, tx, method)
-
-
 def warp_tiles(
     spark: SparkSession,
     src_tiles: DataFrame,

@@ -151,8 +151,8 @@ def stitch_window(
 ) -> np.ndarray:
     """Window → one dense float32 array (S10: the tiles→raster export
     slice; reference conversion.py:72-136 writes the variable out as a
-    raster file — GDAL is absent, so the sink surface is the array +
-    ``save_window_npy`` below).
+    raster file — GDAL is absent, so the sink surface is the array, which
+    cli ``render_tif`` writes out through sources/geotiff.write_geotiff).
 
     Driver-side BY DESIGN: a raster *file* is a single-machine artifact.
     ``max_pixels`` (default ~256 MB float32) guards against exporting an
@@ -174,23 +174,3 @@ def stitch_window(
         y, x = int(row["oy"]) - oy0, int(row["ox"]) - ox0
         out[y : y + row["h"], x : x + row["w"]] = blk
     return out
-
-
-def save_window_npy(
-    path: str, tiles: DataFrame, spec: GridSpec, bbox: BBox, t: int = 0
-) -> dict:
-    """Raster-file sink stand-in (.npy + sidecar dict of grid metadata —
-    the affine/crs payload a GTiff would carry)."""
-    arr = stitch_window(tiles, spec, bbox, t=t)
-    np.save(path, arr)
-    window = spec.window_for_bbox(bbox)
-    return {
-        "path": path,
-        "crs": spec.crs,
-        "x0": spec.x0 + window.x_slice.start * spec.dx,
-        "y0": spec.y0 - window.y_slice.start * spec.dy,
-        "dx": spec.dx,
-        "dy": spec.dy,
-        "height": arr.shape[0],
-        "width": arr.shape[1],
-    }

@@ -503,21 +503,6 @@ def decode_tiff(buf: bytes):
     return arr.copy(), meta
 
 
-def save_window_geotiff(path, tiles, spec, bbox, t: int = 0,
-                        nodata: float = -9999.0) -> dict:
-    """S6 sink: distributed window stitch → GeoTIFF file (NaN → nodata)."""
-    from ..raster.window_ops import stitch_window
-
-    arr = stitch_window(tiles, spec, bbox, t=t)
-    out = np.where(np.isnan(arr), np.float32(nodata), arr).astype(np.float32)
-    window = spec.window_for_bbox(bbox)
-    x0 = spec.x0 + window.x_slice.start * spec.dx
-    y0 = spec.y0 - window.y_slice.start * spec.dy
-    write_geotiff(path, out, x0, y0, spec.dx, spec.dy, crs=spec.crs, nodata=nodata)
-    return {"path": path, "height": out.shape[0], "width": out.shape[1],
-            "x0": x0, "y0": y0, "crs": spec.crs, "nodata": nodata}
-
-
 def geotiff_to_tiles(spark, path: str, var: str = "ingest", t: int = 0,
                      tile: int = 256):
     """S2 scan: GeoTIFF file → (GridSpec, tile DataFrame). The file read

@@ -49,12 +49,6 @@ HDF5_MAGIC = b"\x89HDF\r\n\x1a\n"
 UNDEF = 0xFFFFFFFFFFFFFFFF
 
 
-def is_hdf5(path: str) -> bool:
-    with open(path, "rb") as f:
-        head = f.read(8)
-    return head == HDF5_MAGIC
-
-
 def _find_superblock(d) -> int:
     off = 0
     while off <= min(len(d) - 8, 65536):

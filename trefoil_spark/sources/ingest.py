@@ -1,94 +1,20 @@
-"""Raster ingestion (SURVEY.md S2/S9/S11/S12) without GDAL.
+"""Dataset description over the tile table (SURVEY.md F21/F23/A8).
 
-The reference ingests GeoTIFF/NetCDF via rasterio/netCDF4 (conversion.py:
-17-69, cli/convert.py:42-195); neither library exists here, so the
-ingestion source is the public .npy format (trivially parseable with
-numpy): ``spark.read.format('binaryFile')`` over a glob → per-file tile
-cutting in one mapInPandas pass. This is the real distributed ingestion
-shape — swap the payload parser for a GeoTIFF decoder on a cluster that
-has one; everything else (glob scan, filename → timestamp parse, tile
-cutting, stacking along t) is identical.
-
-- S4 multi-file glob: native to binaryFile.
-- S11 filename time parse: ``(\\d{4}-\\d{2}-\\d{2})`` (or a custom regex)
-  extracted from the path and sorted into the t axis — mirrors
-  convert.py:78-82.
-- S12 concat along a new dimension: ingest twice with different ``var``
-  labels and unionByName.
+- describe (F23/A8, reference describe.py:29-150): per-variable time
+  extent, value min/max and valid-pixel count as one DataFrame —
+  per-tile numpy partials plus one exact final aggregation.
+- geo-dimension heuristic (F21, reference describe.py:10-16,95-105):
+  classify dimension names into x / y / time roles for the NetCDF-3 and
+  HDF5 readers.
 """
 
 from __future__ import annotations
 
-import io
-import re
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
-from ..grid import cells
 from ..raster.gridspec import GridSpec
-from ..raster.synth import CELL_RES, TILE_SCHEMA
-
-
-def ingest_npy(
-    spark: SparkSession,
-    path_glob: str,
-    spec: GridSpec,
-    var: str = "ingested",
-    date_regex: str = r"(\d{4}-\d{2}-\d{2})",
-) -> DataFrame:
-    """Glob of .npy 2-D arrays → tile DataFrame; t = rank of the date
-    parsed from each filename (sorted ascending, reference S11 rule)."""
-    files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
-
-    # driver-side: date per file → t index (file list is metadata-small)
-    paths = [r["path"] for r in files.select("path").collect()]
-    def datekey(p: str) -> str:
-        m = re.search(date_regex, p)
-        return m.group(1) if m else p
-    order = {p: i for i, p in enumerate(sorted(paths, key=datekey))}
-    order_items = list(order.items())
-
-    tile = spec.tile
-    nty, ntx = spec.ntiles_y, spec.ntiles_x
-
-    def cut(batches):
-        t_of = dict(order_items)
-        for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                arr = np.load(io.BytesIO(bytes(content)))
-                if arr.shape != (spec.height, spec.width):
-                    raise ValueError(
-                        f"{path}: shape {arr.shape} != grid {(spec.height, spec.width)}"
-                    )
-                t = int(t_of[path])
-                a32 = arr.astype(np.float32)
-                for ty in range(nty):
-                    for tx in range(ntx):
-                        blk = np.ascontiguousarray(
-                            a32[ty * tile : (ty + 1) * tile, tx * tile : (tx + 1) * tile]
-                        )
-                        h, w = blk.shape
-                        lat_c = spec.y0 - (ty * tile + h / 2.0) * spec.dy
-                        lon_c = spec.x0 + (tx * tile + w / 2.0) * spec.dx
-                        cell = int(cells.latlon_to_cell(lat_c, lon_c, CELL_RES))
-                        rows.append((var, t, ty, tx, cell, blk.tobytes(), h, w))
-            yield pd.DataFrame(
-                rows, columns=["var", "t", "ty", "tx", "cell", "block", "h", "w"]
-            )
-
-    return files.mapInPandas(cut, schema=TILE_SCHEMA)
-
-
-def concat_variables(*tile_dfs: DataFrame) -> DataFrame:
-    """S12: concat along the variable dimension = unionByName (each input
-    already labels its rows via ``var``)."""
-    out = tile_dfs[0]
-    for df in tile_dfs[1:]:
-        out = out.unionByName(df)
-    return out
 
 
 def describe_tiles_df(tiles: DataFrame) -> DataFrame:
@@ -96,8 +22,6 @@ def describe_tiles_df(tiles: DataFrame) -> DataFrame:
     value min/max, valid-pixel count — per-tile numpy partials + one
     exact final agg (min/max of integer-valued floats, bigint count)."""
     from pyspark.sql import functions as F
-
-    import numpy as np  # noqa: F811
 
     def stats(batches):
         for pdf in batches:
@@ -187,16 +111,3 @@ def detect_geo_dims(
             if dim_sizes.get(name, 2) > 1:
                 out["time"] = name
     return out
-
-
-def get_interval(data) -> float | None:
-    """Uniform-spacing detector (reference describe.py:19-26): the single
-    unique consecutive delta, else None."""
-    import numpy as np
-
-    data = np.asarray(data)
-    if data.shape[0] > 1:
-        uniq = np.unique(data[1:] - data[:-1])
-        if uniq.shape[0] == 1:
-            return float(abs(uniq[0]))
-    return None

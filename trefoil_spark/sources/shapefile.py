@@ -208,17 +208,6 @@ def read_polygon_layer(
     return polys
 
 
-def shapefile_layer_df(spark, shp_path: str, value_field: str | None = None,
-                       bbox=None):
-    """Vector source: .shp → the engine's ZONE_SCHEMA DataFrame (the
-    broadcast side of pip_join/zonal/mask), with bbox pushdown applied
-    before geometry decode."""
-    from .zones import zone_layer_df
-
-    polys = read_polygon_layer(shp_path, value_field=value_field, bbox=bbox)
-    return zone_layer_df(spark, polys)
-
-
 # ---------------------------------------------------------------------------
 # writer (fixtures + S7-style vector sink)
 # ---------------------------------------------------------------------------

@@ -29,7 +29,7 @@ from __future__ import annotations
 import zlib
 
 __all__ = [
-    "iter_warc_records", "parse_http_response", "write_warc",
+    "iter_warc_records", "parse_http_response",
     "warc_to_documents", "warc_to_records",
 ]
 
@@ -153,37 +153,6 @@ def _dechunk(body: bytes) -> bytes:
             raise ValueError("chunked body: chunk overruns payload")
         out += body[pos : pos + size]
         pos += size + 2  # skip chunk-terminating CRLF
-
-
-def write_warc(records: list, gzip_members: bool = True) -> bytes:
-    """Twin writer: list of (record_type, target_uri, payload bytes) →
-    WARC bytes (one gzip member per record when gzip_members — the
-    splittable layout real crawls use)."""
-    out = bytearray()
-    for i, (rtype, uri, payload) in enumerate(records):
-        if rtype == "response":
-            body = (
-                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                + b"Content-Length: " + str(len(payload)).encode() + b"\r\n"
-                + b"\r\n" + payload
-            )
-        else:
-            body = payload
-        rec = (
-            b"WARC/1.0\r\n"
-            + b"WARC-Type: " + rtype.encode() + b"\r\n"
-            + b"WARC-Record-ID: <urn:uuid:rec-" + str(i).encode() + b">\r\n"
-            + b"WARC-Target-URI: " + uri.encode() + b"\r\n"
-            + b"WARC-Date: 2026-01-01T00:00:00Z\r\n"
-            + b"Content-Length: " + str(len(body)).encode() + b"\r\n"
-            + b"\r\n" + body + b"\r\n\r\n"
-        )
-        if gzip_members:
-            co = zlib.compressobj(6, zlib.DEFLATED, 31)
-            out += co.compress(bytes(rec)) + co.flush()
-        else:
-            out += rec
-    return bytes(out)
 
 
 _CHARSET_ALIASES = {

@@ -76,22 +76,3 @@ def run_available_now(
     )
     q.awaitTermination(timeout_sec)
     return stream_df.sparkSession.table(query_name)
-
-
-def batch_interval_stats(
-    df: DataFrame, ts_col: str = "ts", value_col: str = "value", window: str = "6 hours"
-) -> DataFrame:
-    """The batch twin (same expressions) for equivalence tests."""
-    return (
-        df.groupBy(F.window(F.col(ts_col), window).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("count"),
-            F.sum(F.col(value_col).cast("double")).alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "count",
-            "value_sum",
-        )
-    )

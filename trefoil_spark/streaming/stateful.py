@@ -8,8 +8,9 @@ hash group = a single "seen" flag persisted in the state store, so
 memory is O(distinct keys) and re-partitioning by key is handled by the
 engine (groupBy before the stateful map).
 
-At 10^12-doc scale this is the streaming twin of drop_exact_duplicates:
-the state store shards by the same hash key the batch job shuffles on.
+At 10^12-doc scale this is the streaming twin of the batch exact dedup
+(operators/dedup.exact_duplicate_groups, keep the min id): the state
+store shards by the same hash key the batch job shuffles on.
 """
 
 from __future__ import annotations
@@ -69,71 +70,3 @@ def streaming_dedup(stream: DataFrame, id_col: str = "doc_id", text_col: str = "
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def streaming_clean(stream: "DataFrame", text_col: str = "text",
-                    id_col: str = "doc_id",
-                    gopher: str | None = None) -> "DataFrame":
-    """The cleaning stack on a stream (late r6): C4 line/page rules +
-    PII redaction are STATELESS per-row Catalyst expressions, so they
-    compose directly onto any streaming source; the cross-batch (and
-    cross-restart) exact dedup then rides the stateful operator above.
-    One micro-batch = narrow codegen → keyed state lookup; no
-    streaming-specific code paths in the cleaning expressions at all —
-    the same plan fragment a batch run uses. r7: pass gopher='base' or
-    'full' to prepend the (equally stateless, so stream-composable)
-    Gopher quality gate — 'full' is every Rae 2021 A1.1 rule including
-    the repetition set."""
-    from ..operators.cleaning import c4_clean, redact_pii_col
-    from ..operators.curation import _gopher_gate
-
-    gate = _gopher_gate(gopher) if gopher else None
-    gated = stream.filter(gate(text_col)) if gate else stream
-    cleaned = c4_clean(gated, text_col).withColumn(
-        text_col, redact_pii_col(text_col)
-    )
-    return streaming_dedup(cleaned, id_col=id_col, text_col=text_col)
-
-
-def streaming_classify(stream: "DataFrame", model: "DataFrame",
-                       meta: "DataFrame", cut: float = 0.0,
-                       text_col: str = "text") -> "DataFrame":
-    """NB quality gate on a stream (late r7): the batch-trained
-    classifier (operators/classifier.py) applied per micro-batch with
-    ZERO shuffle and zero state — the batch scorer's explode→join→agg
-    reshape is replaced by an Arrow-batched pandas scorer over a
-    driver-collected model dict, because a streaming aggregation would
-    force update/complete output mode onto an otherwise append-only
-    pipeline. The collect is vocab-sized (the same boundedness the
-    batch broadcast relies on); tokenization (lower + whitespace split,
-    empties dropped) matches lm.tokens_col exactly, so the kept set
-    equals the batch filter's. Emits the input rows + a `score` double
-    column for rows with score > cut (empty docs score None and drop —
-    no evidence, same contract as the batch side)."""
-    from pyspark.sql.types import DoubleType, StructField
-
-    llr = {r["w"]: r["llr"] for r in model.collect()}
-    llr0 = meta.select("llr0").first()["llr0"]
-    schema = StructType(
-        stream.schema.fields + [StructField("score", DoubleType())]
-    )
-
-    def gate(batches):
-        for pdf in batches:
-            # r8 (VERDICT r7 §What's wrong #2): vectorized inside the
-            # Arrow batch — explode/map/fillna/groupby-sum replaces the
-            # per-token Python loop (the repo's no-per-row-Python
-            # invariant, SURVEY §7.0). explode emits one NaN row for
-            # empty/None docs; those pick up a spurious llr0 via fillna
-            # but are dropped by the n_tokens>0 mask, exactly like the
-            # old `else None` branch.
-            toks = pdf[text_col].str.lower().str.split()
-            n_tokens = toks.str.len()
-            flat = toks.explode()
-            scores = flat.map(llr).fillna(llr0).groupby(level=0).sum()
-            out = pdf.assign(
-                score=scores.reindex(pdf.index).where(n_tokens > 0)
-            )
-            yield out[out["score"].notna() & (out["score"] > cut)]
-
-    return stream.mapInPandas(gate, schema)

@@ -40,19 +40,3 @@ def streaming_zonal_stats(
         F.count(F.lit(1)).cast("bigint").alias("count"),
         F.sum(F.col(value_col).cast("bigint")).cast("bigint").alias("value_sum"),
     )
-
-
-def batch_zonal_twin(
-    df: DataFrame,
-    polygons: list[Polygon],
-    value_col: str = "n_chars",
-    lon_col: str = "lon",
-    lat_col: str = "lat",
-) -> DataFrame:
-    """Batch twin with identical expressions (streaming/batch unification
-    check in tests)."""
-    joined = pip_join(df, polygons, lon_col=lon_col, lat_col=lat_col)
-    return joined.groupBy("zone_value").agg(
-        F.count(F.lit(1)).cast("bigint").alias("count"),
-        F.sum(F.col(value_col).cast("bigint")).cast("bigint").alias("value_sum"),
-    )
